@@ -7,10 +7,13 @@ import org.apache.spark.storage.StorageLevel
 
 /** Flagship end-to-end pipeline, shaped for 100 TB:
   *
-  *  1. ONE narrow NLP pass (extract→chunk→coref→extract relations) —
-  *     no shuffle, whole corpus scanned exactly once;
-  *  2. triple dedup — the first unavoidable shuffle, keyed
-  *     (url, subj, pred, obj);
+  *  1. ONE narrow NLP pass (extract→chunk→coref→extract relations,
+  *     with the (url, subj, pred, obj) dedup done in-row per page by
+  *     `Kg.extractTriplesFused`) — no shuffle, whole corpus scanned
+  *     exactly once;
+  *  2. the vocabulary rollup — the ONE big-table shuffle: every
+  *     distinct entity surface with its (type, slug), combined map-side
+  *     before the exchange;
   *  3. linking over DISTINCT SURFACE STRINGS, not (url, surface):
   *     link results depend only on the surface (the reference's
   *     per-name lookup, entity_linker.rs:486-499, has no document
@@ -19,8 +22,13 @@ import org.apache.spark.storage.StorageLevel
   *     and the join-back is a broadcast;
   *  4. graph dedup by IRI / edge key.
   *
-  * Total shuffles: 3 fixed-size (dedup, nodes, edges) + vocabulary-sized
-  * linking; zero shuffle of raw text after step 1.
+  * Shuffles of the graph build: the big-table rollup exchange; one
+  * vocabulary-sized exchange that lays the rollup out at one partition
+  * per core (see `surfaceRollup`); the vocabulary-sized linking
+  * exchanges; the node reduce on iri. Edges are a projection of the
+  * already-deduped triples through broadcast joins (a salted shuffle
+  * join only above the broadcast vocabulary limit). Zero shuffle of raw
+  * text.
   */
 object Pipeline {
 
@@ -197,7 +205,13 @@ object Pipeline {
     * the link joins per consumer (guide §2.4 — two operations keyed
     * the same way share one build). Returns (surfaceIri, vocabN,
     * release); callers must invoke release after their terminal
-    * action. */
+    * action.
+    *
+    * Both persisted tables hold one partition per core: a cached plan
+    * keeps its output partitioning, so the layout is set where the
+    * rollup ends (`surfaceRollup`'s repartition), and `surfaceIri`
+    * inherits it through `mintIris`' broadcast link join (on the
+    * broadcast vocabulary tier). */
   def surfaceIriReleasable(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
       broadcastVocabLimit: Long = defaultBroadcastVocabLimit,
       broadcastKbLimit: Long = defaultBroadcastKbLimit,
@@ -226,8 +240,23 @@ object Pipeline {
   }
 
   /** The ONE big-table rollup of the graph build: every distinct entity
-    * surface with its deterministic (type, slug) representative. */
-  def surfaceRollup(trip: DataFrame): DataFrame =
+    * surface with its deterministic (type, slug) representative.
+    *
+    * Ends with a vocabulary-sized repartition to
+    * min(defaultParallelism, spark.sql.shuffle.partitions) partitions.
+    * Callers persist this table, and a cached plan keeps its output
+    * partitioning (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
+    * is false by default), so without it the vocabulary would be cached
+    * at the big-table exchange's partition count (128 under graft.Main:
+    * a few rows per partition on a small vocabulary), and every link /
+    * mint / node / edge job over it would run that many tasks. The
+    * big-table exchange keeps its map-side partial aggregate and its
+    * AQE coalescing; only the layout of the (small) result changes,
+    * never its rows. */
+  def surfaceRollup(trip: DataFrame): DataFrame = {
+    val spark = trip.sparkSession
+    val parts = math.min(spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
     trip
       .select(col("subj_surface").as("surface"), col("subj_type").as("entity_type"),
         col("subj").as("slug"))
@@ -238,6 +267,8 @@ object Pipeline {
       .agg(min_by(struct(col("entity_type"), col("slug")),
         struct(col("entity_type"), col("slug"))).as("i"))
       .select(col("surface"), col("i.entity_type").as("entity_type"), col("i.slug").as("slug"))
+      .repartition(parts, col("surface"))
+  }
 
   /** Attach link URIs and mint IRIs for unlinked surfaces (md5 prefix —
     * portable: identical in DuckDB, so the whole graph build stays

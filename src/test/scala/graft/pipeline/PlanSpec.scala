@@ -56,6 +56,63 @@ class PlanSpec extends SparkTestBase {
       "partial agg should be below (before) the exchange in the plan tree")
   }
 
+  /** Runs `f` with `spark.sql.shuffle.partitions` at `n`, then restores
+    * it (the suite's session runs at 4, which hides partition-count
+    * effects that appear at graft.Main's 128). */
+  private def withShufflePartitions[T](n: Int)(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try f finally spark.conf.set(key, old)
+  }
+
+  test("vocabulary tables are cached at one partition per core; rollup still combines map-side") {
+    withShufflePartitions(128) {
+      val want = math.min(spark.sparkContext.defaultParallelism, 128)
+      val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4))
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val (_, _, release) = Pipeline.surfaceIriReleasable(trip, Corpus.kb(spark, 500))
+      try {
+        val cached = sc.getPersistentRDDs.collect { case (id, rdd) if !before(id) => rdd }
+        assert(cached.size == 2, s"expected the rollup and surfaceIri caches: $cached")
+        assert(cached.map(_.getNumPartitions).toSeq == Seq(want, want),
+          "a cached plan keeps its output partitioning: the vocabulary must be " +
+            "cached at min(defaultParallelism, shuffle partitions), not at the " +
+            "big-table exchange's partition count")
+      } finally release()
+      assert(sc.getPersistentRDDs.keySet == before, "release must drop both caches")
+
+      val plan = executedPlan(Pipeline.surfaceRollup(trip.toDF))
+      val layout = s"Exchange hashpartitioning\\(surface#\\d+, $want\\), REPARTITION_BY_NUM".r
+        .findFirstMatchIn(plan).map(_.start)
+      val big = "Exchange hashpartitioning\\(surface#\\d+, 128\\), ENSURE_REQUIREMENTS".r
+        .findFirstMatchIn(plan).map(_.start)
+      assert(layout.isDefined && big.isDefined, plan.take(1500))
+      assert(layout.get < big.get, "the layout exchange must sit above the big-table one")
+      assert(plan.indexOf("partial_min_by") > big.get,
+        "partial min_by must run below (before) the big-table exchange:\n" + plan.take(1500))
+    }
+  }
+
+  test("graph rows do not depend on spark.sql.shuffle.partitions") {
+    val trip = Kg.pagesToTriples(Corpus.pages(spark, 120, 4))
+    val kb = Corpus.kb(spark, 500)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(df.columns.map(col).toSeq: _*).collect().map(_.toSeq).toSeq
+    def build(n: Int) = withShufflePartitions(n) {
+      val (nodes, edges, release) = Pipeline.graphFromTriplesReleasable(trip, kb)
+      try (sorted(nodes), sorted(edges)) finally release()
+    }
+    val (n4, e4) = build(4)
+    assert(n4.nonEmpty && e4.nonEmpty)
+    Seq(1, 128).foreach { n =>
+      val (nN, eN) = build(n)
+      assert(nN == n4, s"nodes differ at $n shuffle partitions")
+      assert(eN == e4, s"edges differ at $n shuffle partitions")
+    }
+  }
+
   test("forced large-vocab tier: join-back shuffles with salt, no vocab broadcast") {
     val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4))
     val (_, edges) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 500),
