@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.pipeline.{Corpus, Pipeline}
+import graft.pipeline.{Corpus, Kg, Pipeline, TripleRow}
 
 /** North-rule scaling benchmark: the SAME job (pages → triples → linked
   * graph materialized to parquet) on the SAME input (identical page
@@ -31,6 +31,7 @@ object ScalingBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
 
     val kb = Corpus.kb(spark)
 
@@ -39,9 +40,14 @@ object ScalingBench {
     def runN(tag: String, nRun: Long): (Double, Long, Long, Long) = {
       val t0 = System.nanoTime()
       val pages = Corpus.pages(spark, nRun, partitions = 128)
-      val (trip, nodes, edges) = Pipeline.graphCheckpointed(pages, kb, outDir)
-      nodes.write.mode("overwrite").parquet(s"$outDir/nodes")
-      edges.write.mode("overwrite").parquet(s"$outDir/edges")
+      // the NLP pass writes the triples once; the graph reads the file
+      Kg.pagesToTriples(pages).write.mode("overwrite").parquet(s"$outDir/triples")
+      val trip = spark.read.parquet(s"$outDir/triples").as[TripleRow]
+      val (nodes, edges, release) = Pipeline.graphFromTriples(trip, kb)
+      try {
+        nodes.write.mode("overwrite").parquet(s"$outDir/nodes")
+        edges.write.mode("overwrite").parquet(s"$outDir/edges")
+      } finally release()
       // counts from the written files — no recompute of the plan
       val nt = trip.count()
       val nn = spark.read.parquet(s"$outDir/nodes").count()

@@ -34,7 +34,7 @@ object SparkEntry {
 
   // --- per-JVM checkpoint of the fused NLP pass -------------------------
   // The flagship architecture is "extract once, query many": the triples
-  // table is a parquet CHECKPOINT (Pipeline.graphCheckpointed's resume
+  // table is a parquet CHECKPOINT (Checkpointed.runAll's resume
   // boundary) and every downstream query reads the file. The kg_*
   // queries follow the same contract here: the first query that needs
   // the extraction (or the resolved-chunk table) writes it under a
@@ -55,22 +55,14 @@ object SparkEntry {
   // map-wide lock would serialize.
   private val ckDone = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.FutureTask[String]]()
-  private def checkpointed(s: SparkSession, key: String)(make: => DataFrame): DataFrame = {
-    val task = new java.util.concurrent.FutureTask[String](() => {
-      val p = s"$ckDir/$key"
-      make.write.mode("overwrite").parquet(p)
-      p
-    })
-    val prev = ckDone.putIfAbsent(key, task)
-    val winner = if (prev == null) { task.run(); task } else prev
-    s.read.parquet(winner.get())
-  }
 
-  /** checkpointed() for builds that hand back a release handle (the
-    * graphFromTriplesReleasable contract): release fires right after
-    * the checkpoint write, so the build's internal persisted tables
-    * never outlive the write. */
-  private def checkpointedRelease(s: SparkSession, key: String)(
+  /** Writes `make`'s frame under `key` once per JVM and reads it back;
+    * the build's release handle (the surfaceIriReleasable contract)
+    * fires right after the write, so its internal persisted tables never
+    * outlive it. A build that throws is NOT memoized: its key is dropped
+    * so the next call rebuilds, and callers see the build's own
+    * exception rather than the FutureTask wrapper. */
+  private[graft] def checkpointedBuild(s: SparkSession, key: String)(
       make: => (DataFrame, () => Unit)): DataFrame = {
     val task = new java.util.concurrent.FutureTask[String](() => {
       val (df, release) = make
@@ -80,8 +72,18 @@ object SparkEntry {
     })
     val prev = ckDone.putIfAbsent(key, task)
     val winner = if (prev == null) { task.run(); task } else prev
-    s.read.parquet(winner.get())
+    val path =
+      try winner.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException =>
+          ckDone.remove(key, winner)
+          throw e.getCause
+      }
+    s.read.parquet(path)
   }
+
+  private def checkpointed(s: SparkSession, key: String)(make: => DataFrame): DataFrame =
+    checkpointedBuild(s, key)((make, () => ()))
 
   /** Checkpointed KB link table over the corpus's distinct entity
     * surfaces (surface, uri, link_confidence) — the exact+fuzzy-JW
@@ -104,7 +106,7 @@ object SparkEntry {
     * joins run once per JVM instead of once per consumer (the links
     * themselves come from the shared linksFor checkpoint). */
   def surfaceIriFor(s: SparkSession, dir: String): DataFrame =
-    checkpointedRelease(s, s"surface_iri_${pagesFor(dir)}") {
+    checkpointedBuild(s, s"surface_iri_${pagesFor(dir)}") {
       import s.implicits._
       val (df, _, release) = Pipeline.surfaceIriReleasable(
         triplesFor(s, dir).as[TripleRow], Corpus.kb(s), kbCountHint = kbCountHint,
@@ -193,9 +195,9 @@ object SparkEntry {
     * never pays a count() job per call (VERDICT r03 #1). */
   private lazy val kbCountHint: Option[Long] = Some(Corpus.kbSize())
 
-  /** Checkpointed edge table of the corpus graph at this sf (the same
-    * graphFromTriples build kg_nodes_edges runs, written once and
-    * reused by the graph-analytics queries). */
+  /** Checkpointed edge table of the corpus graph at this sf (the
+    * graphFromTriples edge build over the shared vocabulary, written
+    * once and reused by the graph-analytics queries). */
   def edgesFor(s: SparkSession, dir: String): DataFrame =
     checkpointed(s, s"edges_${pagesFor(dir)}") {
       val siri = surfaceIriFor(s, dir)
@@ -465,13 +467,12 @@ object SparkEntry {
     "kg_entity_props" -> ((s, dir) => {
       Kg.entityProps(triplesFor(s, dir))
     }),
-    // A3 on the NODE table: per-IRI props map (graphFromTriples
-    // includeProps tier), exploded for the oracle
+    // A3 on the NODE table: per-IRI props map, exploded for the oracle
     "kg_node_props" -> ((s, dir) => {
-      // the includeProps node tier against the SHARED vocabulary
-      // checkpoint: the original left-join onto the full node table
-      // then props-not-null filter keeps exactly the byIri rows, so
-      // nodePropsFromVocab alone is row-identical (oracle-verified)
+      // props against the SHARED vocabulary checkpoint: a left-join onto
+      // the full node table then a props-not-null filter would keep
+      // exactly the byIri rows, so nodePropsFromVocab alone is
+      // row-identical (oracle-verified)
       Pipeline.nodePropsFromVocab(triplesFor(s, dir), surfaceIriFor(s, dir))
         .filter(col("props").isNotNull)
         .select(col("iri"), explode(col("props")).as(Seq("pred", "last_obj")))

@@ -257,7 +257,7 @@ object Dedup {
     * bucket checkpoint. Call it AFTER the terminal action on all three
     * returned frames (including the `lshIndexAppendBuckets` write) —
     * the per-micro-batch recrawl-dedup loop must release per batch
-    * (graphFromTriplesReleasable is the sibling pattern). */
+    * (Pipeline.graphFromTriples is the sibling pattern). */
   def lshIndexProbeReleasable(newDocs: DataFrame, idCol: String, textCol: String,
       dir: String, n: Int = 3, k: Int = 32, bands: Int = 8)
       : (DataFrame, DataFrame, DataFrame, () => Unit) = {

@@ -201,51 +201,55 @@ object Checkpointed {
     val tripIn =
       if (hadGraph && !reextracted) tripAll.filter(col("pk").isin(pending: _*))
       else tripAll
-    val (nodesFresh, edgesAll) =
+    val (nodesFresh, edgesAll, release) =
       Pipeline.graphFromTriples(tripIn.drop("pk").as[TripleRow], kb)
-    // on the rebuild path only the pending buckets' edge partitions are
-    // (re)written — old-bucket edge files stay untouched either way
-    val edgesFresh =
-      if (hadGraph && reextracted)
-        edgesAll.withColumn("__pk", bucketOf(col("url"), nBuckets))
-          .filter(col("__pk").isin(pending: _*)).drop("__pk")
-      else edgesAll
+    // the build's two vocabulary caches live until the edges write, the
+    // last action over them
+    try {
+      // on the rebuild path only the pending buckets' edge partitions are
+      // (re)written — old-bucket edge files stay untouched either way
+      val edgesFresh =
+        if (hadGraph && reextracted)
+          edgesAll.withColumn("__pk", bucketOf(col("url"), nBuckets))
+            .filter(col("__pk").isin(pending: _*)).drop("__pk")
+        else edgesAll
 
-    // nodes: vocabulary-sized associative merge on the append-only path;
-    // full rebuild (nodesFresh already spans ALL triples) on re-extraction
-    val nodesMerged =
-      if (!hadGraph || reextracted) nodesFresh
-      else Pipeline.reduceNodes(
-        spark.read.parquet(s"$baseDir/nodes").unionByName(nodesFresh))
-    // materialize BEFORE overwriting the directory being read
-    val tmpNodes = s"$baseDir/_nodes_next"
-    nodesMerged.write.mode("overwrite").parquet(tmpNodes)
-    spark.read.parquet(tmpNodes).write.mode("overwrite").parquet(s"$baseDir/nodes")
-    // drop the staging dir (left in place it triggers spurious
-    // "All paths were ignored" warnings on later reads of baseDir)
-    val tmpPath = Paths.get(tmpNodes)
-    if (Files.exists(tmpPath)) {
-      val s0 = Files.list(tmpPath)
-      try s0.iterator().asScala.toList.foreach(Files.delete) finally s0.close()
-      Files.delete(tmpPath)
-    }
-
-    // edges: dynamic overwrite replaces ONLY the fresh pk partitions.
-    // Pre-delete the pending buckets' partitions first: dynamic
-    // overwrite cannot clear a rebuilt bucket that now yields ZERO edge
-    // rows, which would otherwise freeze stale edges in place behind a
-    // fresh graph marker (review finding r03).
-    if (hadGraph) pending.foreach { pk =>
-      val d = Paths.get(baseDir, "edges", s"pk=$pk")
-      if (Files.exists(d)) {
-        val s = Files.list(d)
-        try s.iterator().asScala.toList.foreach(Files.delete) finally s.close()
-        Files.delete(d)
+      // nodes: vocabulary-sized associative merge on the append-only path;
+      // full rebuild (nodesFresh already spans ALL triples) on re-extraction
+      val nodesMerged =
+        if (!hadGraph || reextracted) nodesFresh
+        else Pipeline.reduceNodes(
+          spark.read.parquet(s"$baseDir/nodes").unionByName(nodesFresh))
+      // materialize BEFORE overwriting the directory being read
+      val tmpNodes = s"$baseDir/_nodes_next"
+      nodesMerged.write.mode("overwrite").parquet(tmpNodes)
+      spark.read.parquet(tmpNodes).write.mode("overwrite").parquet(s"$baseDir/nodes")
+      // drop the staging dir (left in place it triggers spurious
+      // "All paths were ignored" warnings on later reads of baseDir)
+      val tmpPath = Paths.get(tmpNodes)
+      if (Files.exists(tmpPath)) {
+        val s0 = Files.list(tmpPath)
+        try s0.iterator().asScala.toList.foreach(Files.delete) finally s0.close()
+        Files.delete(tmpPath)
       }
-    }
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    edgesFresh.withColumn("pk", bucketOf(col("url"), nBuckets))
-      .write.mode("overwrite").partitionBy("pk").parquet(s"$baseDir/edges")
+
+      // edges: dynamic overwrite replaces ONLY the fresh pk partitions.
+      // Pre-delete the pending buckets' partitions first: dynamic
+      // overwrite cannot clear a rebuilt bucket that now yields ZERO edge
+      // rows, which would otherwise freeze stale edges in place behind a
+      // fresh graph marker (review finding r03).
+      if (hadGraph) pending.foreach { pk =>
+        val d = Paths.get(baseDir, "edges", s"pk=$pk")
+        if (Files.exists(d)) {
+          val s = Files.list(d)
+          try s.iterator().asScala.toList.foreach(Files.delete) finally s.close()
+          Files.delete(d)
+        }
+      }
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      edgesFresh.withColumn("pk", bucketOf(col("url"), nBuckets))
+        .write.mode("overwrite").partitionBy("pk").parquet(s"$baseDir/edges")
+    } finally release()
 
     // graph markers LAST, each stamped with its bucket's TRIPLE-manifest
     // run_id: a crash anywhere above leaves the bucket pending and the

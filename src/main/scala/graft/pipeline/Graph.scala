@@ -3,16 +3,11 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Graph materialization: enriched triples → node/edge tables with
-  * deterministic IRI minting (north rule). IRI = KB uri when linked,
-  * else https://kg.local/e/<slug>-<md5[0,8)> of the canonical surface
-  * (collision-safe mint, SURVEY.md §7.3#4; md5 so DuckDB oracles can
-  * recompute the mint). */
+/** Graph analytics over the built edge table: degrees, components,
+  * k-hop neighbourhoods, PageRank, triangles and basic graph patterns.
+  * The node/edge tables themselves are built by
+  * `Pipeline.graphFromTriples`. */
 object Graph {
-
-  /** md5 hex prefix as a Column expression (codegen'd, no UDF). */
-  private def mintIri(slugCol: org.apache.spark.sql.Column, surfaceCol: org.apache.spark.sql.Column) =
-    concat(lit("https://kg.local/e/"), slugCol, lit("-"), substring(md5(surfaceCol), 1, 8))
 
   /** Degree centrality over the edge table: per-node in/out ENTITY-edge
     * counts (literal edges excluded; multiplicity kept — one count per
@@ -340,42 +335,5 @@ object Graph {
     // "distinct" must still collapse to ≤1 row) — keep the distinct
     // exactly there.
     if (anyZeroVar) joined.distinct() else joined
-  }
-
-  /** Enriched triples (from Linking.enrich) → (nodes, edges). */
-  def materialize(enriched: DataFrame): (DataFrame, DataFrame) = {
-    val withIris = enriched
-      .withColumn("subj_iri", coalesce(col("subj_kb_uri"), mintIri(col("subj"), col("subj_surface"))))
-      .withColumn("obj_iri",
-        when(col("obj_is_entity"), coalesce(col("obj_kb_uri"), mintIri(col("obj_slug"), col("obj"))))
-          .otherwise(lit(null)))
-
-    val subjNodes = withIris.select(
-      col("subj_iri").as("iri"), col("subj_type").as("entity_type"),
-      col("subj_surface").as("name"), col("subj").as("slug"))
-    val objNodes = withIris.filter(col("obj_is_entity")).select(
-      col("obj_iri").as("iri"), col("obj_type").as("entity_type"),
-      col("obj").as("name"), col("obj_slug").as("slug"))
-    // One node per IRI; deterministic representative via min_by on
-    // (name, entity_type) — never a nondeterministic first().
-    val nodes = subjNodes.unionByName(objNodes)
-      .groupBy(col("iri"))
-      .agg(min_by(struct(col("entity_type"), col("name"), col("slug")),
-        struct(col("name"), col("entity_type"))).as("n"))
-      .select(col("iri"), col("n.entity_type").as("entity_type"),
-        col("n.name").as("name"), col("n.slug").as("slug"))
-
-    // deterministic dedup: min(confidence) pins the survivor (a bare
-    // dropDuplicates keeps an arbitrary row for non-key columns)
-    val edges = withIris.select(
-        col("subj_iri").as("src_iri"), col("pred"),
-        when(col("obj_is_entity"), col("obj_iri")).otherwise(lit(null)).as("dst_iri"),
-        when(!col("obj_is_entity"), col("obj")).otherwise(lit(null)).as("obj_literal"),
-        (!col("obj_is_entity")).as("is_literal"),
-        col("url"), col("confidence"))
-      .groupBy(col("src_iri"), col("pred"), col("dst_iri"), col("obj_literal"),
-        col("is_literal"), col("url"))
-      .agg(min(col("confidence")).as("confidence"))
-    (nodes, edges)
   }
 }

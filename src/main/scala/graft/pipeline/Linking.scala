@@ -1,29 +1,19 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
-/** Entity linking (Stage 3) as set-oriented joins — the reference's
-  * per-name lookup loop (entity_linker.rs:486-499) becomes ONE join of
-  * distinct mentions against the KB (SURVEY.md §2.3 J1-J5).
-  *
-  * Three physical strategies, same semantics:
-  *  - broadcast: KB fits in memory → broadcast hash join, zero shuffle
-  *    of the big side (the analogue of the reference's 1h response cache,
-  *    entity_linker.rs:505-510);
-  *  - salted shuffle: huge KB + Zipfian head mentions → explicit salt on
-  *    the mention key, KB side replicated per salt (north rule; AQE skew
-  *    join can't fire on broadcast joins, so this is the shuffle-path
-  *    insurance);
-  *  - fuzzy: token-blocked equi-join + Jaro-Winkler filter (J2) — never
-  *    a cartesian.
+/** Entity-linking constants and join shapes (Stage 3). The linker itself
+  * is `Pipeline.linkSurfaces`: the reference's per-name lookup loop
+  * (entity_linker.rs:486-499) has no document input, so it becomes ONE
+  * join of the corpus's DISTINCT SURFACES against the KB (SURVEY.md §2.3
+  * J1-J5), size-tiered between a broadcast KB and shuffle joins.
   *
   * Scoring replicates entity_linker.rs:367-401: exact (case-insensitive)
   * match ⇒ 0.95; fuzzy ⇒ JW similarity, kept if ≥ fuzzyThreshold (0.8);
   * retain ≥ confidenceThreshold (0.5, the EntityLinker config default,
   * entity_linker.rs:64 — currently inert because exact=0.95 and fuzzy
-  * candidates are pre-filtered at ≥0.8); top-1 per (url, surface) by
+  * candidates are pre-filtered at ≥0.8); top-1 per surface by
   * (confidence desc, uri asc) — the uri tie-break is our determinism
   * pin (the reference's sort leaves ties nondeterministic,
   * SURVEY.md §7.0).
@@ -52,128 +42,15 @@ object Linking {
   private[pipeline] def kbTokenBlocked(kb: DataFrame): DataFrame =
     kb.withColumn("block", explode(array_distinct(split(col("label_lc"), " "))))
 
-  /** The large-KB blocked fuzzy join shape, shared by linkFuzzy, link
-    * and Pipeline.linkSurfaces: the KB side (column `label_lc`, with a
-    * `block` key) is SPLIT across salts by label hash; the mention side
-    * (with the same `block` key) is replicated per salt — replicate the
-    * small side, split the big side, so a Zipfian-hot block never lands
-    * on one reducer. */
+  /** The large-KB blocked fuzzy join shape of Pipeline.linkSurfaces: the
+    * KB side (column `label_lc`, with a `block` key) is SPLIT across
+    * salts by label hash; the surface side (with the same `block` key)
+    * is replicated per salt — replicate the small side, split the big
+    * side, so a Zipfian-hot block never lands on one reducer. */
   private[pipeline] def saltedBlockJoin(m: DataFrame, k: DataFrame,
       salts: Int = fuzzyBlockSalts): DataFrame = {
     val ks = k.withColumn("salt", pmod(hash(col("label_lc")), lit(salts)).cast("int"))
     val ms = m.withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
     ms.join(ks, Seq("block", "salt")).drop("salt")
-  }
-
-  // native codegen Expression, not a UDF — stays inside whole-stage
-  // codegen at the fuzzy-join scoring step
-  private def jw(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    graft.functions.JaroWinklerExpression.jaroWinkler(a, b)
-
-  /** Distinct (url, surface, surface_lc) mention keys — dedup before the
-    * join so each document's repeated mentions hit the KB once. */
-  def mentionKeys(mentions: Dataset[MentionRow]): DataFrame =
-    mentions.select(col("url"), col("surface")).distinct()
-      .withColumn("surface_lc", lower(col("surface")))
-
-  private def top1(cands: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("url"), col("surface"))
-      .orderBy(col("confidence").desc, col("uri").asc)
-    cands
-      .filter(col("confidence") >= confidenceThreshold)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-  }
-
-  /** J1 exact linking, broadcast KB. */
-  def linkBroadcast(mentions: Dataset[MentionRow], kb: Dataset[KbEntry]): DataFrame = {
-    val cands = mentionKeys(mentions)
-      .join(broadcast(kb.toDF), col("surface_lc") === col("label_lc"))
-      .withColumn("confidence", lit(exactConfidence))
-      .select("url", "surface", "uri", "confidence")
-    top1(cands)
-  }
-
-  /** J1 exact linking via salted shuffle join: mentions get a
-    * deterministic salt from the url hash; the KB side is replicated
-    * across all salt values (explode), so one hot label key becomes S
-    * shuffle keys. Use when the KB is too large to broadcast. */
-  def linkSalted(mentions: Dataset[MentionRow], kb: Dataset[KbEntry], salts: Int = 16): DataFrame = {
-    val m = mentionKeys(mentions)
-      .withColumn("salt", pmod(hash(col("url")), lit(salts)))
-    val k = kb.toDF
-      .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-    val cands = m.join(k,
-        m("surface_lc") === k("label_lc") && m("salt") === k("salt"))
-      .withColumn("confidence", lit(exactConfidence))
-      .select(m("url"), m("surface"), k("uri"), col("confidence"))
-    top1(cands)
-  }
-
-  /** J2 fuzzy linking with the reference's CONTAINS candidate semantics
-    * (entity_linker.rs:296-312): candidates are labels CONTAINING the
-    * lowercased surface, scored by Jaro-Winkler ≥ fuzzyThreshold. Made
-    * joinable by token blocking — KB exploded per distinct label token,
-    * surface blocks on its first token, exact `contains` post-filter.
-    * `broadcastKb = false` switches to the large-KB shape: the KB side
-    * is SPLIT across salts by label hash and the mention side replicated
-    * per salt, so one Zipfian-hot block never lands on one reducer. */
-  def linkFuzzy(mentions: Dataset[MentionRow], kb: Dataset[KbEntry],
-      broadcastKb: Boolean = true, salts: Int = 16): DataFrame = {
-    val m = mentionKeys(mentions)
-      .withColumn("block", split(col("surface_lc"), " ").getItem(0))
-    val k = kbTokenBlocked(kb.toDF)
-    val cands0 =
-      if (broadcastKb) m.join(broadcast(k), "block")
-      else saltedBlockJoin(m, k, salts)
-    val cands = cands0
-      .filter(col("label_lc").contains(col("surface_lc")))
-      .withColumn("confidence", jw(col("label_lc"), col("surface_lc")))
-      .filter(col("confidence") >= fuzzyThreshold)
-      .select(col("url"), col("surface"), col("uri"), col("confidence"))
-    top1(cands)
-  }
-
-  /** Exact-first, fuzzy-fallback linking (the reference tries exact then
-    * fuzzy per its use_fuzzy_matching config; we take exact wins and only
-    * fuzzy-match the leftovers — same top-1 result, less work).
-    * SIZE-TIERED on the measured KB count (or caller hint): broadcast
-    * under the limit; above it exact goes through the salted shuffle
-    * (`linkSalted`) and fuzzy through the salted blocked join. */
-  def link(mentions: Dataset[MentionRow], kb: Dataset[KbEntry],
-      broadcastKbLimit: Long = defaultBroadcastKbLimit,
-      kbCountHint: Option[Long] = None): DataFrame = {
-    val kbN = kbCountHint.getOrElse(kb.count())
-    val useBroadcast = kbN <= broadcastKbLimit
-    val exact = if (useBroadcast) linkBroadcast(mentions, kb) else linkSalted(mentions, kb)
-    val misses = mentionKeys(mentions)
-      .join(exact.select("url", "surface"), Seq("url", "surface"), "left_anti")
-    val fuzzy = {
-      val k = kbTokenBlocked(kb.toDF)
-      val m = misses.withColumn("block", split(col("surface_lc"), " ").getItem(0))
-      val cands0 =
-        if (useBroadcast) m.join(broadcast(k), "block")
-        else saltedBlockJoin(m, k)
-      val cands = cands0
-        .filter(col("label_lc").contains(col("surface_lc")))
-        .withColumn("confidence", jw(col("label_lc"), col("surface_lc")))
-        .filter(col("confidence") >= fuzzyThreshold)
-        .select(col("url"), col("surface"), col("uri"), col("confidence"))
-      top1(cands)
-    }
-    exact.unionByName(fuzzy)
-  }
-
-  /** J6 enrichment: triples join linked subjects/objects; unlinked
-    * entities fall back to deterministically minted IRIs
-    * (slug + md5-prefix, SURVEY.md §7.3#4) — done at materialization. */
-  def enrich(triples: Dataset[TripleRow], linked: DataFrame): DataFrame = {
-    val l = linked
-    triples.toDF
-      .join(l.select(col("url"), col("surface").as("subj_surface"),
-        col("uri").as("subj_kb_uri")), Seq("url", "subj_surface"), "left")
-      .join(l.select(col("url"), col("surface").as("obj"),
-        col("uri").as("obj_kb_uri")), Seq("url", "obj"), "left")
   }
 }

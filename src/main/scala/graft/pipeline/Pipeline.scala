@@ -67,7 +67,7 @@ object Pipeline {
     * reference's character-level CONTAINS admits that token blocking
     * still cannot reach — a surface starting mid-token or whose first
     * token is a strict PREFIX of a label token ("franc" in "san
-    * francisco") — is pinned by LinkingSpec's deviation test; such
+    * francisco") — is pinned by PipelineSpec's deviation test; such
     * surfaces also fail JW ≥ 0.8 against much-longer labels in all but
     * adversarial cases.
     *
@@ -110,31 +110,6 @@ object Pipeline {
       .withColumnRenamed("confidence", "link_confidence")
   }
 
-  /** pages → nodes/edges via a CHECKPOINTED triples table: the NLP pass
-    * writes `workDir/triples` once; everything downstream reads the
-    * file. This is both the resume boundary (M7: a killed job rerun
-    * skips the NLP pass) and the fix for cache-miss recompute — a
-    * persist()ed Dataset referenced from several union/broadcast
-    * branches races its own cache population and can silently recompute
-    * the whole NLP lineage per branch (observed: 2× pipeline cost per
-    * downstream action). A parquet boundary cannot be recomputed. */
-  def graphCheckpointed(pages: Dataset[Page], kb: Dataset[KbEntry], workDir: String)
-      : (Dataset[TripleRow], DataFrame, DataFrame) = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    Kg.pagesToTriples(pages).write.mode("overwrite").parquet(s"$workDir/triples")
-    val trip = spark.read.parquet(s"$workDir/triples").as[TripleRow]
-    val (nodes, edges) = graphFromTriples(trip, kb)
-    (trip, nodes, edges)
-  }
-
-  def graph(pages: Dataset[Page], kb: Dataset[KbEntry]): (Dataset[TripleRow], DataFrame, DataFrame) = {
-    val trip = Kg.pagesToTriples(pages)
-      .persist(StorageLevel.MEMORY_AND_DISK) // one NLP pass, reused by every action
-    val (nodes, edges) = graphFromTriples(trip, kb)
-    (trip, nodes, edges)
-  }
-
   /** Vocabulary row count under which the join-back side is broadcast.
     * Above it (open-vocabulary web crawl: 10^8-10^9 distinct surfaces)
     * broadcasting would OOM every executor, so the join-back switches
@@ -146,8 +121,13 @@ object Pipeline {
     * surface key over this many shuffle partitions). */
   val joinBackSalts = 16
 
-  /** Linking + enrichment + materialization from a (cached or
-    * file-backed) triples Dataset.
+  /** The graph build: (nodes, edges, release) from a file-backed (or
+    * cached) triples Dataset. `release` unpersists the two internal
+    * vocabulary-sized caches; every caller MUST call it after its last
+    * action on the returned frames — a long-running caller (a stream's
+    * per-batch build, a resumable build in a long-lived JVM) would
+    * otherwise leak two persisted tables per call for the JVM lifetime
+    * (the pageRank leak pattern, review finding r03).
     *
     * Cost model (the part that must survive 100 TB): exactly ONE
     * aggregation over the big table (the vocabulary rollup —
@@ -161,36 +141,18 @@ object Pipeline {
     * side is replicated across salts, so a Zipfian-hot surface never
     * lands on one reducer. Edges stay a projection — upstream dedup on
     * (url, subj, pred, obj) already makes edge rows unique, so there is
-    * no additional dedup shuffle either way. */
+    * no additional dedup shuffle either way. Per-IRI properties are a
+    * separate aggregation (`nodePropsFromVocab`) over the same
+    * vocabulary table. */
   def graphFromTriples(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
       broadcastVocabLimit: Long = defaultBroadcastVocabLimit,
-      includeProps: Boolean = false,
-      broadcastKbLimit: Long = defaultBroadcastKbLimit,
-      kbCountHint: Option[Long] = None): (DataFrame, DataFrame) =
-    graphFromTriplesReleasable(trip, kb, broadcastVocabLimit, includeProps,
-      broadcastKbLimit, kbCountHint) match { case (n, e, _) => (n, e) }
-
-  /** Like graphFromTriples, plus a RELEASE handle that unpersists the
-    * two internal vocabulary-sized caches. Per-micro-batch callers
-    * (StreamIngest.runLinked) MUST call it after their terminal action
-    * on the returned frames — a long-running stream on the plain
-    * variant would leak two persisted tables per micro-batch for the
-    * JVM lifetime (the pageRank leak pattern, review finding r03; an
-    * eager-localCheckpoint variant trades the cache leak for a
-    * checkpoint-RDD leak, caught by StreamIngestSpec's leak guard). */
-  def graphFromTriplesReleasable(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
-      broadcastVocabLimit: Long = defaultBroadcastVocabLimit,
-      includeProps: Boolean = false,
       broadcastKbLimit: Long = defaultBroadcastKbLimit,
       kbCountHint: Option[Long] = None): (DataFrame, DataFrame, () => Unit) = {
     val (surfaceIri, vocabN, release) = surfaceIriReleasable(trip, kb,
       broadcastVocabLimit, broadcastKbLimit, kbCountHint)
     val useBroadcast = vocabN <= broadcastVocabLimit
-    val nodes0 = reduceNodes(surfaceIri.select(col("iri"), col("entity_type"),
+    val nodes = reduceNodes(surfaceIri.select(col("iri"), col("entity_type"),
       col("surface").as("name"), col("slug")))
-    // A3 on the node table (opt-in: one extra big-table aggregation)
-    val nodes = if (!includeProps) nodes0
-      else nodes0.join(nodePropsFromVocab(trip.toDF, surfaceIri), Seq("iri"), "left")
     val edges = edgesFromVocab(trip.toDF, surfaceIri, useBroadcast)
     (nodes, edges, release)
   }
@@ -285,8 +247,8 @@ object Pipeline {
   }
 
   /** Per-IRI property map, last-write-wins per property key: the props
-    * MAP<STRING,STRING> of the includeProps node tier, factored out so
-    * it can run against a CHECKPOINTED surfaceIri table. The reference
+    * MAP<STRING,STRING> of a node, keyed on the surfaceIri table the
+    * graph build uses (or a CHECKPOINTED copy of it). The reference
     * buffer is per-document; across documents the write order is
     * pinned by (url, chunk_id, sent_idx) — url ascending as the
     * deterministic crawl-order stand-in (SURVEY.md §1 data model). */

@@ -140,8 +140,7 @@ object StreamIngest {
   def runLinked(spark: SparkSession, pagesDir: String, outDir: String,
       checkpointDir: String, kb: Dataset[graft.pipeline.KbEntry],
       kbCountHint: Option[Long] = None, nBuckets: Int = 16,
-      maxFilesPerTrigger: Option[Int] = None,
-      batchVocabBroadcastable: Boolean = true): StreamingQuery = {
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     import spark.implicits._
     val reader = spark.readStream
       .schema(implicitly[org.apache.spark.sql.Encoder[Page]].schema)
@@ -165,39 +164,26 @@ object StreamIngest {
         // batch). Batch-sized, released in the finally below (the
         // checkpoint-RDD leak the StreamIngestSpec guard watches for).
         val trip = Kg.dedup(batch).localCheckpoint(true)
-        // Per-batch graph build. Default: the LEAN batch-bounded path —
-        // a micro-batch's surface vocabulary is bounded by the batch
+        // Per-batch graph build, LEAN because it is batch-bounded: a
+        // micro-batch's surface vocabulary is bounded by the batch
         // (maxFilesPerTrigger), so the vocabulary→IRI table is built in
         // ONE eager materialization (no per-batch persist+count pair to
         // size the broadcast tier — the bound IS the tier decision) and
         // the link/join-back sides broadcast. Identical rows to
-        // graphFromTriplesReleasable (same rollup, same linkSurfaces,
+        // Pipeline.graphFromTriples (same rollup, same linkSurfaces,
         // same mint — StreamIngestSpec's streamed==batch law pins it);
-        // measured ~2 fewer driver-planned jobs per batch. A caller
-        // whose batches are NOT vocabulary-bounded (no file cap, jumbo
-        // backfills) passes batchVocabBroadcastable=false to keep the
-        // size-tiered build.
-        val (nodes, edges, release) =
-          if (!batchVocabBroadcastable)
-            graft.pipeline.Pipeline
-              .graphFromTriplesReleasable(trip, kb, kbCountHint = kbCountHint)
-          else {
-            val surfaceInfo = graft.pipeline.Pipeline.surfaceRollup(trip.toDF)
-            val links = graft.pipeline.Pipeline.linkSurfaces(
-              surfaceInfo.select(col("surface")), kb, kbCountHint = kbCountHint)
-            val surfaceIri = graft.pipeline.Pipeline
-              .mintIris(surfaceInfo, links, useBroadcast = true)
-              .localCheckpoint(true)
-            val nodes0 = graft.pipeline.Pipeline.reduceNodes(
-              surfaceIri.select(col("iri"), col("entity_type"),
-                col("surface").as("name"), col("slug")))
-            val edges0 = graft.pipeline.Pipeline
-              .edgesFromVocab(trip.toDF, surfaceIri, useBroadcast = true)
-            (nodes0, edges0, () => {
-              org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(surfaceIri)
-              ()
-            })
-          }
+        // measured ~2 fewer driver-planned jobs per batch.
+        val surfaceInfo = graft.pipeline.Pipeline.surfaceRollup(trip.toDF)
+        val links = graft.pipeline.Pipeline.linkSurfaces(
+          surfaceInfo.select(col("surface")), kb, kbCountHint = kbCountHint)
+        val surfaceIri = graft.pipeline.Pipeline
+          .mintIris(surfaceInfo, links, useBroadcast = true)
+          .localCheckpoint(true)
+        val nodes = graft.pipeline.Pipeline.reduceNodes(
+          surfaceIri.select(col("iri"), col("entity_type"),
+            col("surface").as("name"), col("slug")))
+        val edges = graft.pipeline.Pipeline
+          .edgesFromVocab(trip.toDF, surfaceIri, useBroadcast = true)
         try {
           batch.sparkSession.conf
             .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -221,7 +207,7 @@ object StreamIngest {
             .write.mode("overwrite").partitionBy("batch")
             .parquet(s"$outDir/nodes")
         } finally {
-          release()
+          org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(surfaceIri)
           org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(trip)
           ()
         }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** North-rule skew demonstration (BASELINE.json: "salted hash joins for
   * head-entity skew ... skew handled explicitly"; VERDICT r04 ask #5):
   * measure the forced-large-tier vocabulary join-back with and without
-  * the salting Pipeline.joinBackEdges applies, on a Zipfian mention
+  * the salting Pipeline.edgesFromVocab applies, on a Zipfian mention
   * table where ONE hot surface carries 30% of all mentions (the
   * "every page mentions Google" shape of a real crawl).
   *
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * broadcast is off (the forced-large tier: a 10^8-surface vocabulary
   * does not broadcast). The unsalted plan shuffles both sides on
   * `surface`, so the hot key lands on one reducer; the salted plan
-  * (identical to joinBackEdges' non-broadcast tier) keys on
+  * (identical to edgesFromVocab's non-broadcast tier) keys on
   * (surface, salt = crc32(row-key) % 16) with the vocabulary exploded
   * 16×, splitting the hot key across 16 reducers.
   *

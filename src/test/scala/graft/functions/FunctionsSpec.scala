@@ -49,9 +49,8 @@ class FunctionsSpec extends SparkTestBase {
 
   test("fuzzy linking plan uses the native expression, not a ScalaUDF") {
     import spark.implicits._
-    val ments = Seq(graft.pipeline.MentionRow(
-      "https://d.example.org/x", 0, "Acme Corporation", "Organization", 0, 16, 0.9)).toDS
-    val df = graft.pipeline.Linking.linkFuzzy(ments, graft.pipeline.Corpus.kb(spark, 50))
+    val surfaces = Seq("Acme Corporation").toDF("surface")
+    val df = graft.pipeline.Pipeline.linkSurfaces(surfaces, graft.pipeline.Corpus.kb(spark, 50))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF"), "fuzzy scoring should be the native expression")
     assert(plan.toLowerCase.contains("jaro_winkler"), plan.take(600))

@@ -204,12 +204,14 @@ class CheckpointedSpec extends SparkTestBase {
     // triples — no stale rows from the victim's previous extraction
     import spark.implicits._
     val trip = spark.read.parquet(s"$dir/triples").drop("pk").as[TripleRow]
-    val (expectNodes, expectEdges) = Pipeline.graphFromTriples(trip, kb)
+    val (expectNodes, expectEdges, release) = Pipeline.graphFromTriples(trip, kb)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).sortBy(_.toString).toSeq
-    assert(canon(spark.read.parquet(s"$dir/nodes")) == canon(expectNodes))
-    // edges stay per-bucket consistent too
-    assert(canon(spark.read.parquet(s"$dir/edges").drop("pk")) == canon(expectEdges))
+    try {
+      assert(canon(spark.read.parquet(s"$dir/nodes")) == canon(expectNodes))
+      // edges stay per-bucket consistent too
+      assert(canon(spark.read.parquet(s"$dir/edges").drop("pk")) == canon(expectEdges))
+    } finally release()
     // and the rebuild actually removed something (the scenario is real):
     // bucket[victim] of pagesA had triples that pagesB lacks
     val aCount = Kg.pagesToTriples(pagesA)
@@ -223,7 +225,13 @@ class CheckpointedSpec extends SparkTestBase {
   test("runAll produces graph tables partitioned by domain bucket") {
     val dir = freshDir()
     val pages = Corpus.pages(spark, 200, 4)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     Checkpointed.runAll(pages, Corpus.kb(spark, 500), dir, nBuckets = 8, runId = 1)
+    // the graph build's vocabulary caches are released once the tables
+    // are written: a long-lived JVM running many builds must not keep them
+    val leaked = (spark.sparkContext.getPersistentRDDs -- cachedBefore).values
+      .filter(_.getStorageLevel.useMemory)
+    assert(leaked.isEmpty, s"${leaked.size} leaked caches, rdd ids ${leaked.map(_.id).mkString(", ")}")
     assert(Files.exists(Paths.get(dir, "nodes")))
     val edges = spark.read.parquet(s"$dir/edges")
     assert(edges.count() > 0)

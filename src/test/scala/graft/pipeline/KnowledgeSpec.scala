@@ -59,19 +59,21 @@ class KnowledgeSpec extends SparkTestBase {
     assert(rows == Map("foundedyear" -> "1976", "locat" -> "Austin"))
   }
 
-  test("A3 props exposed on the node table via includeProps") {
-    val pages = Corpus.pages(spark, 80, 4)
-    val trip = Kg.pagesToTriples(pages)
-    val (nodes, _) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 200))
-    val (nodesP, edgesP) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 200),
-      includeProps = true)
-    assert(nodesP.columns.contains("props"))
-    // props never reduce the node set; node keys identical
-    assert(nodesP.select("iri").orderBy("iri").collect().toSeq ==
-      nodes.select("iri").orderBy("iri").collect().toSeq)
-    // every subject node with triples carries a non-empty props map
-    val withProps = nodesP.filter(col("props").isNotNull && size(col("props")) > 0).count()
-    assert(withProps > 0)
-    assert(edgesP.count() > 0)
+  test("A3 props exposed on the node table via nodePropsFromVocab") {
+    val trip = Kg.pagesToTriples(Corpus.pages(spark, 80, 4))
+    val (nodes, _, releaseGraph) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 200))
+    // kg_node_props' shape: props keyed on the build's vocabulary table
+    val (surfaceIri, _, releaseVocab) =
+      Pipeline.surfaceIriReleasable(trip, Corpus.kb(spark, 200))
+    try {
+      val nodesP = nodes.join(Pipeline.nodePropsFromVocab(trip.toDF, surfaceIri),
+        Seq("iri"), "left")
+      // props never reduce the node set; node keys identical
+      assert(nodesP.select("iri").orderBy("iri").collect().toSeq ==
+        nodes.select("iri").orderBy("iri").collect().toSeq)
+      // every subject node with triples carries a non-empty props map
+      val withProps = nodesP.filter(col("props").isNotNull && size(col("props")) > 0).count()
+      assert(withProps > 0)
+    } finally { releaseVocab(); releaseGraph() }
   }
 }

@@ -4,8 +4,8 @@ import graft.SparkTestBase
 import graft.kernel.HtmlText
 
 /** End-to-end pipeline gates on the synthesized corpus (SURVEY.md §7.1
-  * M2/M3/M6): byte-identity, triple P/R ≥ 0.95 vs gold, linking parity
-  * between broadcast and salted strategies. */
+  * M2/M3/M6): byte-identity, triple P/R ≥ 0.95 vs gold, KB coverage of
+  * the built graph, and the reference's fuzzy-candidate semantics. */
 class PipelineSpec extends SparkTestBase {
 
   private val N = 400L
@@ -45,34 +45,24 @@ class PipelineSpec extends SparkTestBase {
     assert(t.filter(r => nonEnUrls.contains(r.url)).count() == 0L)
   }
 
-  test("linking: salted shuffle join == broadcast join result") {
-    val pages = Corpus.pages(spark, 100, 4)
-    val ments = Kg.mentions(Kg.resolve(Kg.chunk(Kg.extractText(pages))))
-    val kb = Corpus.kb(spark, nDistractors = 500)
-    val a = Linking.linkBroadcast(ments, kb).orderBy("url", "surface")
-      .collect().map(_.toSeq).toSeq
-    val b = Linking.linkSalted(ments, kb, salts = 8).orderBy("url", "surface")
-      .collect().map(_.toSeq).toSeq
-    assert(a == b)
-    assert(a.nonEmpty)
-  }
-
   test("linking covers most triple subjects with KB uris; rest minted deterministically") {
-    val pages = Corpus.pages(spark, 200, 4)
-    val resolved = Kg.resolve(Kg.chunk(Kg.extractText(pages)))
-    val trip = Kg.dedup(Kg.triples(resolved))
-    val ments = Kg.mentions(resolved)
-    val kb = Corpus.kb(spark, nDistractors = 500)
-    val linked = Linking.link(ments, kb)
-    val enriched = Linking.enrich(trip, linked)
-    val (nodes, edges) = Graph.materialize(enriched)
-    val total = enriched.count()
-    val kbLinked = enriched.filter(enriched("subj_kb_uri").isNotNull).count()
-    info(s"triples=$total subjKbLinked=$kbLinked nodes=${nodes.count()} edges=${edges.count()}")
-    assert(kbLinked.toDouble / total > 0.95) // world entities are all in the KB
-    assert(nodes.count() > 0 && edges.count() > 0)
-    // every node IRI unique
-    assert(nodes.count() == nodes.select("iri").distinct().count())
+    import org.apache.spark.sql.functions._
+    val trip = Kg.pagesToTriples(Corpus.pages(spark, 200, 4))
+    val (nodes, edges, release) =
+      Pipeline.graphFromTriples(trip, Corpus.kb(spark, nDistractors = 500))
+    try {
+      val minted = "https://kg.local/e/"
+      val total = edges.count()
+      val kbLinked = edges.filter(!col("src_iri").startsWith(minted)).count()
+      info(s"edges=$total srcKbLinked=$kbLinked nodes=${nodes.count()}")
+      assert(kbLinked.toDouble / total > 0.95) // world entities are all in the KB
+      // an unlinked node's IRI is the slug + md5 prefix of its surface
+      val mintedNodes = nodes.filter(col("iri").startsWith(minted))
+      assert(mintedNodes.filter(col("iri") =!= concat(lit(minted), col("slug"), lit("-"),
+        substring(md5(col("name")), 1, 8))).count() == 0L)
+      // every node IRI unique
+      assert(nodes.count() == nodes.select("iri").distinct().count())
+    } finally release()
   }
 
   test("J2 fuzzy candidates follow reference CONTAINS semantics (entity_linker.rs:296-312)") {

@@ -25,8 +25,8 @@ class PlanSpec extends SparkTestBase {
 
   test("KB linking joins are broadcast, never shuffled large-side or cartesian") {
     val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4))
-    val (nodes, edges) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 500))
-    val plan = executedPlan(edges)
+    val (_, edges, release) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 500))
+    val plan = try executedPlan(edges) finally release()
     assert(plan.contains("BroadcastHashJoin"), "edges join-back should broadcast")
     assert(!plan.contains("CartesianProduct"), "no cartesian anywhere")
     assert(!plan.contains("SortMergeJoin"),
@@ -101,7 +101,7 @@ class PlanSpec extends SparkTestBase {
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(df.columns.map(col).toSeq: _*).collect().map(_.toSeq).toSeq
     def build(n: Int) = withShufflePartitions(n) {
-      val (nodes, edges, release) = Pipeline.graphFromTriplesReleasable(trip, kb)
+      val (nodes, edges, release) = Pipeline.graphFromTriples(trip, kb)
       try (sorted(nodes), sorted(edges)) finally release()
     }
     val (n4, e4) = build(4)
@@ -115,9 +115,9 @@ class PlanSpec extends SparkTestBase {
 
   test("forced large-vocab tier: join-back shuffles with salt, no vocab broadcast") {
     val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4))
-    val (_, edges) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 500),
+    val (_, edges, release) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 500),
       broadcastVocabLimit = 0L) // force the open-vocabulary path
-    val plan = executedPlan(edges)
+    val plan = try executedPlan(edges) finally release()
     assert(!plan.contains("CartesianProduct"))
     // the triple-side join keys must carry the salt (crc32 % S)
     assert(plan.contains("crc32"), "salt term missing from the shuffle join-back:\n" + plan.take(1200))
@@ -131,12 +131,14 @@ class PlanSpec extends SparkTestBase {
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("url", "src_iri", "pred", "dst_iri", "obj_literal")
         .collect().map(_.toSeq).toSeq
-    val (nB, eB) = Pipeline.graphFromTriples(trip, kb)
-    val (nS, eS) = Pipeline.graphFromTriples(trip, kb, broadcastVocabLimit = 0L)
-    assert(sorted(eB) == sorted(eS))
-    assert(nB.orderBy("iri").collect().map(_.toSeq).toSeq ==
-      nS.orderBy("iri").collect().map(_.toSeq).toSeq)
-    assert(eB.count() > 0)
+    val (nB, eB, releaseB) = Pipeline.graphFromTriples(trip, kb)
+    val (nS, eS, releaseS) = Pipeline.graphFromTriples(trip, kb, broadcastVocabLimit = 0L)
+    try {
+      assert(sorted(eB) == sorted(eS))
+      assert(nB.orderBy("iri").collect().map(_.toSeq).toSeq ==
+        nS.orderBy("iri").collect().map(_.toSeq).toSeq)
+      assert(eB.count() > 0)
+    } finally { releaseB(); releaseS() }
   }
 
   test("entityProps: map-side partial aggregate, single exchange") {
@@ -215,26 +217,13 @@ class PlanSpec extends SparkTestBase {
     def sortedE(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("url", "src_iri", "pred", "dst_iri", "obj_literal")
         .collect().map(_.toSeq).toSeq
-    val (nB, eB) = Pipeline.graphFromTriples(trip, kb)
-    val (nS, eS) = Pipeline.graphFromTriples(trip, kb, broadcastKbLimit = 0L)
-    assert(sortedE(eB) == sortedE(eS))
-    assert(nB.orderBy("iri").collect().map(_.toSeq).toSeq ==
-      nS.orderBy("iri").collect().map(_.toSeq).toSeq)
-  }
-
-  test("size-tiered operator-form link: tiers identical, large tier salts the KB") {
-    import spark.implicits._
-    val ments = (0 until 300).map(i =>
-      MentionRow(s"https://d${i % 40}.example.org/p$i", 0,
-        if (i % 3 == 0) "Acme Corp" else if (i % 3 == 1) "Acme Crop" else s"Entity $i",
-        "Organization", 0, 9, 0.9)).toDS
-    val kb = Corpus.kb(spark, 200)
-    def sorted(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("url", "surface", "uri").collect().map(_.toSeq).toSeq
-    val b = Linking.link(ments, kb)
-    val s = Linking.link(ments, kb, broadcastKbLimit = 0L)
-    assert(sorted(b) == sorted(s))
-    assert(b.count() > 0)
+    val (nB, eB, releaseB) = Pipeline.graphFromTriples(trip, kb)
+    val (nS, eS, releaseS) = Pipeline.graphFromTriples(trip, kb, broadcastKbLimit = 0L)
+    try {
+      assert(sortedE(eB) == sortedE(eS))
+      assert(nB.orderBy("iri").collect().map(_.toSeq).toSeq ==
+        nS.orderBy("iri").collect().map(_.toSeq).toSeq)
+    } finally { releaseB(); releaseS() }
   }
 
   test("jwSimilarityJoin plans a hash join on the length bucket, never a cartesian") {
@@ -394,19 +383,5 @@ class PlanSpec extends SparkTestBase {
     assert(!ajPlan.contains("CartesianProduct") && !ajPlan.contains("BroadcastNestedLoopJoin"),
       "as-of join must not cross-join:\n" + ajPlan.take(1000))
     assert(ajPlan.contains("Window"), "as-of join is one ordered window")
-  }
-
-  test("salted join variant spreads one hot key across all salts") {
-    import spark.implicits._
-    // one very hot mention key joined against the KB
-    val hot = (0 until 2000).map(i =>
-      MentionRow(s"https://d$i.example.org/x", 0, "Acme Corp", "Organization", 0, 9, 0.9))
-    val ments = hot.toDS
-    val df = Linking.linkSalted(ments, Corpus.kb(spark, 100), salts = 8)
-    // correctness: every url still links
-    assert(df.count() == 2000)
-    val plan = executedPlan(df)
-    assert(plan.contains("pmod") || plan.toLowerCase.contains("salt"),
-      "salt term must appear in the physical plan")
   }
 }

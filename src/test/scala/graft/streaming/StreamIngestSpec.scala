@@ -51,7 +51,7 @@ class StreamIngestSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"leaked caches: ${leaked.map(_.name).mkString(", ")}")
     val streamed = spark.read.parquet(s"$work/out/edges").drop("batch", "pk")
     val (batchNodes, batchEdges, releaseRef) = graft.pipeline.Pipeline
-      .graphFromTriplesReleasable(Kg.pagesToTriples(pages), kb)
+      .graphFromTriples(Kg.pagesToTriples(pages), kb)
     // IRI minting/linking is a pure function of (surface, KB), so the
     // per-batch builds must reproduce the all-at-once edges exactly
     def canon(df: org.apache.spark.sql.DataFrame) =
