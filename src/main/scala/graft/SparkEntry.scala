@@ -97,7 +97,7 @@ object SparkEntry {
       val surfaces = trip.select(col("subj_surface").as("surface"))
         .unionByName(trip.filter(col("obj_is_entity")).select(col("obj").as("surface")))
         .distinct()
-      Pipeline.linkSurfaces(surfaces, Corpus.kb(s), kbCountHint = kbCountHint)
+      Pipeline.linkSurfaces(surfaces, Corpus.kb(s))
     }
 
   /** Checkpointed vocabulary→IRI table (the linking+mint stage of the
@@ -109,7 +109,7 @@ object SparkEntry {
     checkpointedBuild(s, s"surface_iri_${pagesFor(dir)}") {
       import s.implicits._
       val (df, _, release) = Pipeline.surfaceIriReleasable(
-        triplesFor(s, dir).as[TripleRow], Corpus.kb(s), kbCountHint = kbCountHint,
+        triplesFor(s, dir).as[TripleRow], Corpus.kb(s),
         precomputedLinks = Some(linksFor(s, dir).select(col("surface"), col("uri"))))
       (df, release)
     }
@@ -190,11 +190,6 @@ object SparkEntry {
       })
     }
 
-  /** Driver-side KB row count (no Spark job — the label list is a local
-    * Seq), passed as the kbCountHint so linking's size-tier decision
-    * never pays a count() job per call (VERDICT r03 #1). */
-  private lazy val kbCountHint: Option[Long] = Some(Corpus.kbSize())
-
   /** Checkpointed edge table of the corpus graph at this sf (the
     * graphFromTriples edge build over the shared vocabulary, written
     * once and reused by the graph-analytics queries). */
@@ -252,7 +247,7 @@ object SparkEntry {
         val slice = s.range(0, pagesFor(dir), 5, 32).map(id => Corpus.genPage(id)._1)
         slice.toDF.write.mode("overwrite").parquet(s"$base/pages")
         val q = graft.streaming.StreamIngest.runLinked(s, s"$base/pages",
-          s"$base/out", s"$base/ck", Corpus.kb(s), kbCountHint = kbCountHint,
+          s"$base/out", s"$base/ck", Corpus.kb(s),
           maxFilesPerTrigger = Some(16))
         q.awaitTermination()
         s"$base/out"

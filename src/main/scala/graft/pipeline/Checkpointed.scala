@@ -113,9 +113,12 @@ object Checkpointed {
       .withColumn("pk", bucketOf(col("url"), nBuckets))
 
     // idempotent per-partition overwrite: a killed run's partial bucket
-    // directories are replaced wholesale on retry
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    trip.write.mode("overwrite").partitionBy("pk").parquet(s"$baseDir/triples")
+    // directories are replaced wholesale on retry. The mode is a
+    // per-write option, never set on the caller's session (a session
+    // left at dynamic makes every later overwrite + partitionBy there
+    // keep the partitions it does not rewrite).
+    trip.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("pk").parquet(s"$baseDir/triples")
 
     // per-bucket lineage from the written files (ground truth, not the
     // plan) — restricted to THIS run's fresh buckets: the pk filter is
@@ -246,9 +249,9 @@ object Checkpointed {
           Files.delete(d)
         }
       }
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       edgesFresh.withColumn("pk", bucketOf(col("url"), nBuckets))
-        .write.mode("overwrite").partitionBy("pk").parquet(s"$baseDir/edges")
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("pk").parquet(s"$baseDir/edges")
     } finally release()
 
     // graph markers LAST, each stamped with its bucket's TRIPLE-manifest

@@ -7,13 +7,17 @@ import org.apache.spark.sql.functions._
   * is `Pipeline.linkSurfaces`: the reference's per-name lookup loop
   * (entity_linker.rs:486-499) has no document input, so it becomes ONE
   * join of the corpus's DISTINCT SURFACES against the KB (SURVEY.md §2.3
-  * J1-J5), size-tiered between a broadcast KB and shuffle joins.
+  * J1-J5), tiered on the vocabulary size: below the broadcast
+  * vocabulary limit the surfaces are broadcast and the KB streams past
+  * them; above it both sides shuffle.
   *
   * Scoring replicates entity_linker.rs:367-401: exact (case-insensitive)
   * match ⇒ 0.95; fuzzy ⇒ JW similarity, kept if ≥ fuzzyThreshold (0.8);
   * retain ≥ confidenceThreshold (0.5, the EntityLinker config default,
   * entity_linker.rs:64 — currently inert because exact=0.95 and fuzzy
-  * candidates are pre-filtered at ≥0.8); top-1 per surface by
+  * candidates are pre-filtered at ≥0.8). Exact matching emits one row
+  * per KB entry whose label matches (the `kg_links` oracle's contract);
+  * a surface with no exact match keeps the top-1 fuzzy candidate by
   * (confidence desc, uri asc) — the uri tie-break is our determinism
   * pin (the reference's sort leaves ties nondeterministic,
   * SURVEY.md §7.0).
@@ -24,11 +28,7 @@ object Linking {
   val fuzzyThreshold = 0.8 // entity_linker.rs config default
   val confidenceThreshold = 0.5 // entity_linker.rs:64 EntityLinker default
 
-  /** KB row count under which linking broadcasts the KB — the single
-    * source of truth (Pipeline forwards it). */
-  val defaultBroadcastKbLimit = 5000000L
-
-  /** Salt count for the large-KB blocked fuzzy join. */
+  /** Salt count for the shuffle-tier blocked fuzzy join. */
   val fuzzyBlockSalts = 16
 
   /** KB side of the fuzzy blocked join: one row per DISTINCT token of
@@ -42,7 +42,7 @@ object Linking {
   private[pipeline] def kbTokenBlocked(kb: DataFrame): DataFrame =
     kb.withColumn("block", explode(array_distinct(split(col("label_lc"), " "))))
 
-  /** The large-KB blocked fuzzy join shape of Pipeline.linkSurfaces: the
+  /** The shuffle-tier blocked fuzzy join shape of Pipeline.linkSurfaces: the
     * KB side (column `label_lc`, with a `block` key) is SPLIT across
     * salts by label hash; the surface side (with the same `block` key)
     * is replicated per salt — replicate the small side, split the big

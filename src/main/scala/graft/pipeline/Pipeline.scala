@@ -18,43 +18,34 @@ import org.apache.spark.storage.StorageLevel
   *     link results depend only on the surface (the reference's
   *     per-name lookup, entity_linker.rs:486-499, has no document
   *     input), so the link table shrinks from O(docs×mentions) to
-  *     O(vocabulary) — Zipfian mention skew collapses into single rows
-  *     and the join-back is a broadcast;
+  *     O(vocabulary) — Zipfian mention skew collapses into single rows,
+  *     the KB streams past the broadcast vocabulary, and the join-back
+  *     is a broadcast;
   *  4. graph dedup by IRI / edge key.
   *
   * Shuffles of the graph build: the big-table rollup exchange; one
   * vocabulary-sized exchange that lays the rollup out at one partition
-  * per core (see `surfaceRollup`); the vocabulary-sized linking
-  * exchanges; the node reduce on iri. Edges are a projection of the
-  * already-deduped triples through broadcast joins (a salted shuffle
-  * join only above the broadcast vocabulary limit). Zero shuffle of raw
-  * text.
+  * per core (see `surfaceRollup`); the fuzzy top-1 window's exchange
+  * over the scored candidates (the KB itself is scanned, never
+  * shuffled, below the broadcast vocabulary limit); the node reduce on
+  * iri. Edges are a projection of the already-deduped triples through
+  * broadcast joins (a salted shuffle join only above the broadcast
+  * vocabulary limit). Zero shuffle of raw text.
   */
 object Pipeline {
 
   private def jw(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     graft.functions.JaroWinklerExpression.jaroWinkler(a, b)
 
-  /** KB row count under which the KB side of linking is broadcast. Above
-    * it (the survey's own KB model: 10^8-10^9 labels, SURVEY §1) a
-    * broadcast would OOM every executor, so linking switches to shuffle
-    * joins: a plain shuffle for the exact match (labels AND surfaces are
-    * both distinct keys — no skew possible) and a salted shuffle for the
-    * token-blocked fuzzy join (blocks are Zipfian — "the", common first
-    * names — so the KB side is SPLIT by label hash and the
-    * vocabulary-sized miss side replicated per salt). ~5M short label
-    * rows ≈ hundreds of MB — tune per executor memory. Single source of
-    * truth lives in Linking (forwarded here for callers). */
-  val defaultBroadcastKbLimit: Long = Linking.defaultBroadcastKbLimit
-
-  /** Salt count for the large-KB fuzzy blocked join (spreads one hot
-    * block's KB labels over this many shuffle keys). */
-  val fuzzyBlockSalts: Int = Linking.fuzzyBlockSalts
-
   /** Link a distinct-surface DataFrame (column `surface`) against the KB:
     * exact (0.95) else CONTAINS-candidate fuzzy JW (≥0.8), threshold
-    * 0.5, top-1 per surface by (confidence desc, uri asc). Returns
-    * (surface, uri, link_confidence).
+    * 0.5. Returns (surface, uri, link_confidence).
+    *
+    * Row contract: exact emits one row per KB entry whose `label_lc`
+    * equals the lower-cased surface (the frozen `kg_links` oracle's
+    * contract — a KB with homonym labels yields several exact rows for
+    * one surface); a surface with no exact row gets at most one fuzzy
+    * row, the top-1 by (confidence desc, uri asc).
     *
     * Fuzzy candidates replicate the reference's substring pre-filter
     * (entity_linker.rs:296-312: CONTAINS(LCASE(label), LCASE(name)))
@@ -71,32 +62,47 @@ object Pipeline {
     * surfaces also fail JW ≥ 0.8 against much-longer labels in all but
     * adversarial cases.
     *
-    * SIZE-TIERED on the measured KB count (or a caller hint, so repeated
-    * calls don't re-count): broadcast under `broadcastKbLimit`, shuffle
-    * joins above — exact unsalted (unique keys both sides), fuzzy salted
-    * on the block key with the KB side split by `hash(label_lc) % S` and
-    * the miss side exploded across salts (replicate the small side,
-    * split the big side). Both tiers are result-identical (PlanSpec). */
+    * TIERED on the VOCABULARY size, which the graph build already
+    * measures (the same decision `mintIris` and `edgesFromVocab` take),
+    * so no KB count is ever run:
+    *  - broadcast (`useBroadcast`, the default): the surface vocabulary
+    *    is the build side of every join and the KB streams past it —
+    *    exact = KB ⋈ broadcast(surfaces), misses = surfaces ▷
+    *    broadcast(exact hits' surfaces), fuzzy = token-blocked KB ⋈
+    *    broadcast(misses). Nothing KB-sized is ever hashed or held in
+    *    memory (PlanSpec gates every broadcast at ≤ the surface count);
+    *  - shuffle (a vocabulary above the broadcast limit): exact is a
+    *    plain shuffle join (labels and surfaces are both near-distinct
+    *    keys — no skew), fuzzy a salted shuffle on the block key with
+    *    the KB side split by `hash(label_lc) % S` and the miss side
+    *    exploded across salts (replicate the small side, split the big
+    *    side).
+    * Both tiers are result-identical (PlanSpec). A small KB linked
+    * against a vocabulary above the limit takes the shuffle tier,
+    * though broadcasting the KB would fit: no caller has that shape, so
+    * no selector is kept for it. */
   def linkSurfaces(surfaces: DataFrame, kb: Dataset[KbEntry],
-      broadcastKbLimit: Long = defaultBroadcastKbLimit,
-      kbCountHint: Option[Long] = None): DataFrame = {
-    val kbN = kbCountHint.getOrElse(kb.count())
-    val useBroadcast = kbN <= broadcastKbLimit
-    def kbSide(df: DataFrame) = if (useBroadcast) broadcast(df) else df
+      useBroadcast: Boolean = true): DataFrame = {
     val s = surfaces.withColumn("surface_lc", lower(col("surface")))
-    val exact = s.join(kbSide(kb.toDF), col("surface_lc") === col("label_lc"))
-      .select(col("surface"), col("uri"), lit(Linking.exactConfidence).as("confidence"))
-    val misses = s.join(kbSide(kb.toDF.select(col("label_lc"))),
-        col("surface_lc") === col("label_lc"), "left_anti")
-      .withColumn("block", split(col("surface_lc"), " ").getItem(0))
-    // KB labels are unique, so exact matches are already top-1; only the
-    // fuzzy side can produce multiple candidates and needs the window.
+    val kbDf = kb.toDF
+    def exactRows(joined: DataFrame) =
+      joined.select(col("surface"), col("uri"), lit(Linking.exactConfidence).as("confidence"))
+    def block(df: DataFrame) = df.withColumn("block", split(col("surface_lc"), " ").getItem(0))
+    val (exact, fuzzyCands) =
+      if (useBroadcast) {
+        val exact = exactRows(kbDf.join(broadcast(s), col("label_lc") === col("surface_lc")))
+        val misses = s.join(broadcast(exact.select(col("surface"))), Seq("surface"), "left_anti")
+        (exact, Linking.kbTokenBlocked(kbDf).join(broadcast(block(misses)), "block"))
+      } else {
+        val exact = exactRows(s.join(kbDf, col("surface_lc") === col("label_lc")))
+        val misses = s.join(kbDf.select(col("label_lc")),
+          col("surface_lc") === col("label_lc"), "left_anti")
+        (exact, Linking.saltedBlockJoin(block(misses), Linking.kbTokenBlocked(kbDf)))
+      }
+    // only the fuzzy side needs the top-1 window: exact rows are the
+    // contract above, one per matching KB entry
     val w = Window.partitionBy(col("surface"))
       .orderBy(col("confidence").desc, col("uri").asc)
-    val kbBlocked = Linking.kbTokenBlocked(kb.toDF)
-    val fuzzyCands =
-      if (useBroadcast) misses.join(broadcast(kbBlocked), "block")
-      else Linking.saltedBlockJoin(misses, kbBlocked)
     val fuzzy = fuzzyCands
       .filter(col("label_lc").contains(col("surface_lc"))) // reference CONTAINS pre-filter
       .withColumn("confidence", jw(col("label_lc"), col("surface_lc")))
@@ -112,9 +118,9 @@ object Pipeline {
 
   /** Vocabulary row count under which the join-back side is broadcast.
     * Above it (open-vocabulary web crawl: 10^8-10^9 distinct surfaces)
-    * broadcasting would OOM every executor, so the join-back switches
-    * to a salted shuffle join. ~50M short rows ≈ low single-digit GB —
-    * tune per cluster executor memory. */
+    * broadcasting would OOM every executor, so linking, the mint join
+    * and the join-back switch to shuffle joins. ~50M short rows ≈ low
+    * single-digit GB — tune per cluster executor memory. */
   val defaultBroadcastVocabLimit = 50000000L
 
   /** Salt count for the shuffle join-back (spreads one Zipfian-hot
@@ -132,10 +138,11 @@ object Pipeline {
     * Cost model (the part that must survive 100 TB): exactly ONE
     * aggregation over the big table (the vocabulary rollup —
     * surface→(type, slug), Zipfian mentions collapse to single rows);
-    * linking, IRI minting and node dedup are vocabulary-sized. The
-    * join-back is SIZE-TIERED on the measured vocabulary count (we
-    * already force surfaceIri, so the count is free): a closed-world
-    * vocabulary broadcasts (zero shuffle of the big side); an
+    * linking, IRI minting and node dedup are vocabulary-sized. Linking,
+    * the mint join and the join-back are SIZE-TIERED on the measured
+    * vocabulary count (the rollup cache is forced anyway, so the count
+    * is free): a closed-world vocabulary broadcasts (zero shuffle of
+    * the big side); an
     * open-vocabulary crawl falls back to a salted shuffle join — the
     * triple side takes a deterministic url-hash salt and the vocabulary
     * side is replicated across salts, so a Zipfian-hot surface never
@@ -145,11 +152,8 @@ object Pipeline {
     * separate aggregation (`nodePropsFromVocab`) over the same
     * vocabulary table. */
   def graphFromTriples(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
-      broadcastVocabLimit: Long = defaultBroadcastVocabLimit,
-      broadcastKbLimit: Long = defaultBroadcastKbLimit,
-      kbCountHint: Option[Long] = None): (DataFrame, DataFrame, () => Unit) = {
-    val (surfaceIri, vocabN, release) = surfaceIriReleasable(trip, kb,
-      broadcastVocabLimit, broadcastKbLimit, kbCountHint)
+      broadcastVocabLimit: Long = defaultBroadcastVocabLimit): (DataFrame, DataFrame, () => Unit) = {
+    val (surfaceIri, vocabN, release) = surfaceIriReleasable(trip, kb, broadcastVocabLimit)
     val useBroadcast = vocabN <= broadcastVocabLimit
     val nodes = reduceNodes(surfaceIri.select(col("iri"), col("entity_type"),
       col("surface").as("name"), col("slug")))
@@ -176,8 +180,6 @@ object Pipeline {
     * broadcast vocabulary tier). */
   def surfaceIriReleasable(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
       broadcastVocabLimit: Long = defaultBroadcastVocabLimit,
-      broadcastKbLimit: Long = defaultBroadcastKbLimit,
-      kbCountHint: Option[Long] = None,
       precomputedLinks: Option[DataFrame] = None): (DataFrame, Long, () => Unit) = {
     val surfaceInfo = surfaceRollup(trip.toDF)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -185,15 +187,15 @@ object Pipeline {
     val useBroadcast = vocabN <= broadcastVocabLimit
 
     // Linking + IRI minting, all vocabulary-sized. links has unique
-    // surface keys, so the non-broadcast join needs no salt (no skew).
+    // surface keys (barring KB homonym labels, see linkSurfaces), so the
+    // non-broadcast join needs no salt (no skew).
     // A caller that has ALREADY linked this corpus's surface vocabulary
     // (e.g. a checkpointed link table the kg_links query also reads)
     // passes it in and linking runs once per corpus, not once per
     // consumer — the surface set here (subj surfaces ∪ entity objects)
     // is by construction the set linkSurfaces was fed.
     val links = precomputedLinks.getOrElse(
-      linkSurfaces(surfaceInfo.select(col("surface")), kb, broadcastKbLimit,
-        kbCountHint))
+      linkSurfaces(surfaceInfo.select(col("surface")), kb, useBroadcast))
     val surfaceIri = mintIris(surfaceInfo, links, useBroadcast)
       .persist(StorageLevel.MEMORY_AND_DISK)
     surfaceIri.count() // force once; both join-back tiers reuse the cache

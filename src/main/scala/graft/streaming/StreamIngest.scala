@@ -55,12 +55,11 @@ object StreamIngest {
     * twice yields the same rows as writing it once. */
   def writeBatch(batch: Dataset[TripleRow], batchId: Long, outDir: String,
       nBuckets: Int): Unit = {
-    batch.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     Kg.dedup(batch)
       .withColumn("batch", lit(batchId))
       .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets))
-      .write.mode("overwrite").partitionBy("batch", "pk")
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch", "pk")
       .parquet(s"$outDir/triples")
     ()
   }
@@ -139,7 +138,7 @@ object StreamIngest {
     * for long-lived streams. */
   def runLinked(spark: SparkSession, pagesDir: String, outDir: String,
       checkpointDir: String, kb: Dataset[graft.pipeline.KbEntry],
-      kbCountHint: Option[Long] = None, nBuckets: Int = 16,
+      nBuckets: Int = 16,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     import spark.implicits._
     val reader = spark.readStream
@@ -175,7 +174,7 @@ object StreamIngest {
         // measured ~2 fewer driver-planned jobs per batch.
         val surfaceInfo = graft.pipeline.Pipeline.surfaceRollup(trip.toDF)
         val links = graft.pipeline.Pipeline.linkSurfaces(
-          surfaceInfo.select(col("surface")), kb, kbCountHint = kbCountHint)
+          surfaceInfo.select(col("surface")), kb, useBroadcast = true)
         val surfaceIri = graft.pipeline.Pipeline
           .mintIris(surfaceInfo, links, useBroadcast = true)
           .localCheckpoint(true)
@@ -185,8 +184,6 @@ object StreamIngest {
         val edges = graft.pipeline.Pipeline
           .edgesFromVocab(trip.toDF, surfaceIri, useBroadcast = true)
         try {
-          batch.sparkSession.conf
-            .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
           // repartition by the partition column before the write: the
           // edge plan ends with ~32 narrow tasks that would each open a
           // file in every pk directory (~32×nBuckets tiny files per
@@ -196,7 +193,8 @@ object StreamIngest {
           edges.withColumn("batch", lit(batchId))
             .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets))
             .repartition(col("pk"))
-            .write.mode("overwrite").partitionBy("batch", "pk")
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch", "pk")
             .parquet(s"$outDir/edges")
           // node delta: this batch's vocabulary-sized node rows (both
           // writes reuse the build's forced surfaceIri cache). A crash
@@ -204,7 +202,8 @@ object StreamIngest {
           // are partition-idempotent, so the rewrite is byte-identical.
           nodes.withColumn("batch", lit(batchId))
             .repartition(1)
-            .write.mode("overwrite").partitionBy("batch")
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch")
             .parquet(s"$outDir/nodes")
         } finally {
           org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(surfaceIri)

@@ -75,7 +75,6 @@ object BenchExtra {
         timed("stream: runLinked (2 micro-batches)") {
           val q = graft.streaming.StreamIngest.runLinked(spark, s"$base/pages",
             s"$base/out", s"$base/ck", graft.pipeline.Corpus.kb(spark),
-            kbCountHint = Some(graft.pipeline.Corpus.kbSize()),
             maxFilesPerTrigger = Some(16))
           q.awaitTermination()
         }

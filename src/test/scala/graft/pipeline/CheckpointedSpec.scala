@@ -240,4 +240,23 @@ class CheckpointedSpec extends SparkTestBase {
     val pruned = edges.filter(col("pk") === 0)
     assert(pruned.count() >= 0)
   }
+
+  test("runAll and writeBatch leave the session's partitionOverwriteMode alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try {
+      val dir = freshDir()
+      Checkpointed.runAll(Corpus.pages(spark, 60, 2), Corpus.kb(spark, 300), dir,
+        nBuckets = 4, runId = 1)
+      assert(spark.conf.get(key) == "static", "runAll changed the caller's session")
+      val batch = Kg.pagesToTriples(Corpus.pages(spark, 40, 2))
+      graft.streaming.StreamIngest.writeBatch(batch, 1L, s"$dir/stream", nBuckets = 4)
+      graft.streaming.StreamIngest.writeBatch(batch, 2L, s"$dir/stream", nBuckets = 4)
+      assert(spark.conf.get(key) == "static", "writeBatch changed the caller's session")
+      // the writes themselves still overwrite dynamically: batch 2 kept batch 1
+      assert(spark.read.parquet(s"$dir/stream/triples")
+        .select("batch").distinct().count() == 2)
+    } finally spark.conf.set(key, old)
+  }
 }

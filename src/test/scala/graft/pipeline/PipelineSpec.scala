@@ -71,10 +71,13 @@ class PipelineSpec extends SparkTestBase {
       KbEntry("https://kb.local/e/acme", "The Acme Corporation",
         "the acme corporation", Seq("Organization")),
       KbEntry("https://kb.local/e/francisco", "Francisco", "francisco", Seq("Person")),
-      KbEntry("https://kb.local/e/smyth", "John Smyth", "john smyth", Seq("Person"))).toDS()
-    val surfaces = Seq("Acme Corporation", "rancisco", "John Smith").toDF("surface")
-    val got = Pipeline.linkSurfaces(surfaces, kb, kbCountHint = Some(3L))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      KbEntry("https://kb.local/e/smyth", "John Smyth", "john smyth", Seq("Person")),
+      KbEntry("https://kb.local/e/bean", "Alan Bean", "alan bean", Seq("Person")),
+      KbEntry("https://kb.local/e/beane", "Alan Beane", "alan beane", Seq("Person"))).toDS()
+    val surfaces = Seq("Acme Corporation", "rancisco", "John Smith", "Alan Bean").toDF("surface")
+    val rows = Pipeline.linkSurfaces(surfaces, kb).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
+    val got = rows.map { case (s, uri, _) => s -> uri }.toMap
     // 1. surface sharing a NON-FIRST label token: contained in the label
     //    and JW-similar -> candidate the old first-token blocking missed
     assert(graft.kernel.Jaro.jaroWinkler("the acme corporation", "acme corporation") >= 0.8)
@@ -89,6 +92,12 @@ class PipelineSpec extends SparkTestBase {
     //    documented miss class of the scalable re-expression
     assert(graft.kernel.Jaro.jaroWinkler("francisco", "rancisco") >= 0.8)
     assert(!got.contains("rancisco"), got.toString)
+    // 4. EXACT PRECEDENCE: "alan beane" contains "alan bean" and scores
+    //    above the exact confidence, yet an exact match is never also a
+    //    fuzzy candidate — the exact link (0.95) is the surface's only row
+    assert(graft.kernel.Jaro.jaroWinkler("alan beane", "alan bean") > Linking.exactConfidence)
+    assert(rows.filter(_._1 == "Alan Bean") ==
+      Seq(("Alan Bean", "https://kb.local/e/bean", Linking.exactConfidence)), rows.toString)
   }
 
   test("stage-0 engine switch: none/coref/coreference all run; coref recovers the It-facts") {

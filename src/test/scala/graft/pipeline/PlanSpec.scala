@@ -2,12 +2,15 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 
 /** Physical-plan gates: the properties that make the 100 TB story true
   * must be visible in `.explain`, not just intended (builder prompt:
   * "iterate until it's the plan you'd want"). */
-class PlanSpec extends SparkTestBase {
+class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def executedPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.queryExecution.executedPlan.toString
@@ -159,11 +162,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("linkSurfaces: broadcast joins, top-1 window gets the group-limit pushdown") {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4)).toDF
-    val surfaces = trip.select(col("subj_surface").as("surface"))
-      .unionByName(trip.filter(col("obj_is_entity")).select(col("obj").as("surface")))
-      .distinct()
-    val df = Pipeline.linkSurfaces(surfaces, Corpus.kb(spark, 500))
+    val df = Pipeline.linkSurfaces(corpusSurfaces(100), Corpus.kb(spark, 500))
     df.collect() // AQE final plan
     val plan = executedPlan(df)
     assert(!plan.contains("CartesianProduct"))
@@ -172,22 +171,72 @@ class PlanSpec extends SparkTestBase {
       "top-1 per surface should push the rank limit below the window:\n" + plan.take(1000))
   }
 
-  test("forced large-KB tier: linking never broadcasts the KB, fuzzy join is salted") {
-    // kill every auto-broadcast path so the plan shows the honest large-KB shape
+  /** The distinct entity surfaces of `nPages` corpus pages (the set the
+    * graph build links). */
+  private def corpusSurfaces(nPages: Int): org.apache.spark.sql.DataFrame = {
+    val trip = Kg.pagesToTriples(Corpus.pages(spark, nPages, 4)).toDF
+    trip.select(col("subj_surface").as("surface"))
+      .unionByName(trip.filter(col("obj_is_entity")).select(col("obj").as("surface")))
+      .distinct()
+  }
+
+  test("broadcast linking tier: every broadcast is vocabulary-sized, the KB streams") {
+    val surfaces = corpusSurfaces(100).cache()
+    val kb = Corpus.kb(spark) // default distractors: several times the vocabulary
+    try {
+      val nSurfaces = surfaces.count()
+      val nKb = kb.count()
+      assert(nKb >= 3 * nSurfaces, s"KB $nKb should dwarf the vocabulary $nSurfaces")
+      val df = Pipeline.linkSurfaces(surfaces, kb)
+      df.collect() // AQE final plan, metrics filled
+      val broadcasts = collectWithSubqueries(df.queryExecution.executedPlan) {
+        case b: BroadcastExchangeExec => b.metrics("numOutputRows").value
+      }
+      assert(broadcasts.nonEmpty, "the broadcast tier must broadcast")
+      assert(broadcasts.forall(_ <= nSurfaces),
+        s"broadcast rows $broadcasts exceed the $nSurfaces input surfaces: " +
+          "the KB must stream, never be the build side")
+    } finally surfaces.unpersist()
+  }
+
+  test("building the linkSurfaces DataFrame starts no Spark job") {
+    val sc = spark.sparkContext
+    val surfaces = corpusSurfaces(50)
+    val kb = Corpus.kb(spark, 500)
+    val (build, marker) = ("plan-spec-link-build", "plan-spec-marker")
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(build, build)
+      try Pipeline.linkSurfaces(surfaces, kb) finally sc.clearJobGroup()
+      // the listener bus delivers events in order: once the marker job's
+      // start has arrived, every job the build started has too
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(marker), "marker job start never delivered")
+      assert(!groups.contains(build), "linkSurfaces ran a job (a KB count?) while building")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("shuffle vocabulary tier: linking never broadcasts, fuzzy join is salted") {
+    // kill every auto-broadcast path so the plan shows the honest shuffle shape
     val prevStatic = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
-      val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4)).toDF
-      val surfaces = trip.select(col("subj_surface").as("surface"))
-        .unionByName(trip.filter(col("obj_is_entity")).select(col("obj").as("surface")))
-        .distinct()
-      val df = Pipeline.linkSurfaces(surfaces, Corpus.kb(spark, 500),
-        broadcastKbLimit = 0L) // force the huge-KB path
+      val df = Pipeline.linkSurfaces(corpusSurfaces(100), Corpus.kb(spark, 500),
+        useBroadcast = false) // the above-the-vocabulary-limit path
       df.collect() // AQE final plan
       val plan = executedPlan(df)
       assert(!plan.contains("BroadcastExchange"),
-        "large-KB tier must not broadcast the KB:\n" + plan.take(1500))
+        "the shuffle tier must not broadcast:\n" + plan.take(1500))
       assert(!plan.contains("CartesianProduct"))
       // the fuzzy blocked join must carry the salt key and the replicated
       // (exploded) miss side. (The pmod(hash) salt itself gets
@@ -201,7 +250,7 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
-  test("size-tiered KB linking: both tiers produce identical links and graphs") {
+  test("tiered linking: both vocabulary tiers give identical links and graphs") {
     val trip = Kg.pagesToTriples(Corpus.pages(spark, 120, 4))
     val kb = Corpus.kb(spark, 500)
     val surfaces = trip.toDF.select(col("subj_surface").as("surface"))
@@ -210,7 +259,7 @@ class PlanSpec extends SparkTestBase {
     def sortedL(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("surface", "uri").collect().map(_.toSeq).toSeq
     val lB = Pipeline.linkSurfaces(surfaces, kb)
-    val lS = Pipeline.linkSurfaces(surfaces, kb, broadcastKbLimit = 0L)
+    val lS = Pipeline.linkSurfaces(surfaces, kb, useBroadcast = false)
     assert(sortedL(lB) == sortedL(lS))
     assert(lB.count() > 0)
     // and end-to-end through graphFromTriples
@@ -218,7 +267,7 @@ class PlanSpec extends SparkTestBase {
       df.orderBy("url", "src_iri", "pred", "dst_iri", "obj_literal")
         .collect().map(_.toSeq).toSeq
     val (nB, eB, releaseB) = Pipeline.graphFromTriples(trip, kb)
-    val (nS, eS, releaseS) = Pipeline.graphFromTriples(trip, kb, broadcastKbLimit = 0L)
+    val (nS, eS, releaseS) = Pipeline.graphFromTriples(trip, kb, broadcastVocabLimit = 0L)
     try {
       assert(sortedE(eB) == sortedE(eS))
       assert(nB.orderBy("iri").collect().map(_.toSeq).toSeq ==

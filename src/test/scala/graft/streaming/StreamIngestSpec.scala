@@ -35,6 +35,8 @@ class StreamIngestSpec extends SparkTestBase {
     val pages = Corpus.pages(spark, 120, 4)
     val kb = Corpus.kb(spark, nDistractors = 300)
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(overwriteMode, "static")
     // two file drops -> two catch-up runs (two independent link batches)
     pages.limit(60).write.mode("overwrite").parquet(s"$work/pages")
     StreamIngest.runLinked(spark, s"$work/pages", s"$work/out", s"$work/ckpt", kb)
@@ -42,6 +44,7 @@ class StreamIngestSpec extends SparkTestBase {
     pages.write.mode("append").parquet(s"$work/pages")
     StreamIngest.runLinked(spark, s"$work/pages", s"$work/out", s"$work/ckpt", kb)
       .awaitTermination()
+    assert(spark.conf.get(overwriteMode) == "static", "runLinked changed the caller's session")
     // release contract FIRST (before this test's own all-at-once
     // comparison build adds its caches): the per-batch graph builds
     // must not leave NEW persisted tables behind — a long stream would
