@@ -47,40 +47,43 @@ object SparkEntry {
     p.toFile.deleteOnExit()
     p.toString
   }
-  // Per-KEY memoized builds: a FutureTask per key means concurrent
-  // callers of the SAME key share one write (second caller blocks on
-  // get()), while DIFFERENT keys build fully in parallel — the warmup
-  // overlaps independent checkpoint builds from a thread pool (guide
-  // §2.6: back-fill the tail of one job with the next), which a single
-  // map-wide lock would serialize.
-  private val ckDone = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.FutureTask[String]]()
+  // Per-KEY memo: a FutureTask per key means concurrent callers of the
+  // SAME key share one build (second caller blocks on get()), while
+  // DIFFERENT keys build fully in parallel — the warmup overlaps
+  // independent builds from a thread pool (guide §2.6: back-fill the
+  // tail of one job with the next), which a single map-wide lock would
+  // serialize.
+  private val memo = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.FutureTask[Any]]()
+
+  /** `build`'s value under `key`, built once per JVM. A build that
+    * throws is NOT memoized: its key is dropped so the next call
+    * rebuilds, and callers see the build's own exception rather than
+    * the FutureTask wrapper. Keys are unique across value types. */
+  private[graft] def memoized[T](key: String)(build: => T): T = {
+    val task = new java.util.concurrent.FutureTask[Any](() => build)
+    val prev = memo.putIfAbsent(key, task)
+    val winner = if (prev == null) { task.run(); task } else prev
+    try winner.get().asInstanceOf[T]
+    catch {
+      case e: java.util.concurrent.ExecutionException =>
+        memo.remove(key, winner)
+        throw e.getCause
+    }
+  }
 
   /** Writes `make`'s frame under `key` once per JVM and reads it back;
     * the build's release handle (the surfaceIriReleasable contract)
     * fires right after the write, so its internal persisted tables never
-    * outlive it. A build that throws is NOT memoized: its key is dropped
-    * so the next call rebuilds, and callers see the build's own
-    * exception rather than the FutureTask wrapper. */
+    * outlive it. */
   private[graft] def checkpointedBuild(s: SparkSession, key: String)(
-      make: => (DataFrame, () => Unit)): DataFrame = {
-    val task = new java.util.concurrent.FutureTask[String](() => {
+      make: => (DataFrame, () => Unit)): DataFrame =
+    s.read.parquet(memoized(key) {
       val (df, release) = make
       val p = s"$ckDir/$key"
       try df.write.mode("overwrite").parquet(p) finally release()
       p
     })
-    val prev = ckDone.putIfAbsent(key, task)
-    val winner = if (prev == null) { task.run(); task } else prev
-    val path =
-      try winner.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          ckDone.remove(key, winner)
-          throw e.getCause
-      }
-    s.read.parquet(path)
-  }
 
   private def checkpointed(s: SparkSession, key: String)(make: => DataFrame): DataFrame =
     checkpointedBuild(s, key)((make, () => ()))
@@ -154,41 +157,27 @@ object SparkEntry {
     * input dump and the q_knn_ivf_trained query share the exact same
     * doubles inside one JVM (the production analogue: fit once, persist
     * the codebook, every reader loads the table). */
-  private val ivfCache = scala.collection.mutable.HashMap.empty[String, Array[Array[Double]]]
   def ivfCentroidsFor(s: SparkSession, dir: String): Array[Array[Double]] =
-    ivfCache.synchronized {
-      ivfCache.getOrElseUpdate(dir,
-        ops.Similarity.fitCentroids(t(s, dir, "embeddings"), dim = 64, k = 8, iters = 3))
-    }
+    memoized("ivf:" + dir)(
+      ops.Similarity.fitCentroids(t(s, dir, "embeddings"), dim = 64, k = 8, iters = 3))
 
   /** Per-JVM memoized PQ codebooks (same memoization rationale as
     * ivfCentroidsFor: the fit's double sums carry partition-order ulp
     * jitter, so Verify's dump and q_knn_pq must share one fit). */
-  private val pqCache = scala.collection.mutable.HashMap.empty[String, Array[Array[Array[Double]]]]
   def pqCodebooksFor(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.synchronized {
-      pqCache.getOrElseUpdate(dir,
-        ops.Similarity.fitPqCodebooks(t(s, dir, "embeddings"), dim = 64, m = 8, k = 8, iters = 3))
-    }
+    memoized("pq:" + dir)(
+      ops.Similarity.fitPqCodebooks(t(s, dir, "embeddings"), dim = 64, m = 8, k = 8, iters = 3))
 
   /** Per-JVM memoized Bloom seen-set over the src0 document texts
     * (same build-once/probe-many sharing as the codebook fits; the
     * build is deterministic md5 math, so unlike the k-means fits it is
     * bit-reproducible across runs too — memoization here just avoids
-    * re-running the build job per caller). Keyed injectively on the
-    * raw dir (the clustersFor md5-suffix scheme). */
-  private val bloomCache = scala.collection.mutable.HashMap.empty[String, Array[Long]]
+    * re-running the build job per caller). */
   def bloomFor(s: SparkSession, dir: String): Array[Long] =
-    bloomCache.synchronized {
-      val raw = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(4).map(b => f"${b & 0xff}%02x").mkString
-      bloomCache.getOrElseUpdate(s"bloom_$raw", {
-        ops.Sketch.bloomBuild(
-          t(s, dir, "documents").filter(col("source") === "src0"),
-          "text", mBits = 1024, kHashes = 4)
-      })
-    }
+    memoized("bloom:" + dir)(
+      ops.Sketch.bloomBuild(
+        t(s, dir, "documents").filter(col("source") === "src0"),
+        "text", mBits = 1024, kHashes = 4))
 
   /** Checkpointed edge table of the corpus graph at this sf (the
     * graphFromTriples edge build over the shared vocabulary, written
@@ -223,35 +212,32 @@ object SparkEntry {
     * the linked edge table and the per-batch node deltas. kg_stream_parity (edges) and
     * kg_stream_parity_nodes (nodes) read this single run — the run's
     * parquet output IS the checkpoint. Returns the run's out dir. */
-  private val streamRunCache = scala.collection.mutable.HashMap.empty[String, String]
   private def streamParityOutFor(s: SparkSession, dir: String): String =
-    streamRunCache.synchronized {
-      streamRunCache.getOrElseUpdate(s"stream_parity_${pagesFor(dir)}", {
-        val base = java.nio.file.Files
-          .createTempDirectory("graft_stream_parity").toString
-        // the slice is "page id % 5 == 0" and the page is a pure
-        // function of its id, so generate ONLY those ids (range with
-        // step 5) instead of synthesizing the full corpus and filtering
-        // 4/5 of it away — identical page rows, 1/5 the generation work
-        // and no repartition shuffle of the HTML payloads (guide §1.2).
-        // 32 files with maxFilesPerTrigger=16 still forces the SAME two
-        // real micro-batches, but each batch's extraction now runs 16
-        // scan tasks instead of one per file — the 2-file batches left
-        // 30 of 32 cores idle through the whole NLP stage (guide §2.6;
-        // measured via the BenchExtra stage trace). Outputs are
-        // batching-invariant: every page's triples/edges/node rows are
-        // pure functions of (page, KB) and the node fold is associative
-        // (the §2.9 law kg_stream_parity* pins), so WHICH batch a page
-        // lands in cannot change either parity table.
-        import s.implicits._
-        val slice = s.range(0, pagesFor(dir), 5, 32).map(id => Corpus.genPage(id)._1)
-        slice.toDF.write.mode("overwrite").parquet(s"$base/pages")
-        val q = graft.streaming.StreamIngest.runLinked(s, s"$base/pages",
-          s"$base/out", s"$base/ck", Corpus.kb(s),
-          maxFilesPerTrigger = Some(16))
-        q.awaitTermination()
-        s"$base/out"
-      })
+    memoized(s"stream_parity:${pagesFor(dir)}") {
+      val base = java.nio.file.Files
+        .createTempDirectory("graft_stream_parity").toString
+      // the slice is "page id % 5 == 0" and the page is a pure
+      // function of its id, so generate ONLY those ids (range with
+      // step 5) instead of synthesizing the full corpus and filtering
+      // 4/5 of it away — identical page rows, 1/5 the generation work
+      // and no repartition shuffle of the HTML payloads (guide §1.2).
+      // 32 files with maxFilesPerTrigger=16 still forces the SAME two
+      // real micro-batches, but each batch's extraction now runs 16
+      // scan tasks instead of one per file — the 2-file batches left
+      // 30 of 32 cores idle through the whole NLP stage (guide §2.6;
+      // measured via the BenchExtra stage trace). Outputs are
+      // batching-invariant: every page's triples/edges/node rows are
+      // pure functions of (page, KB) and the node fold is associative
+      // (the §2.9 law kg_stream_parity* pins), so WHICH batch a page
+      // lands in cannot change either parity table.
+      import s.implicits._
+      val slice = s.range(0, pagesFor(dir), 5, 32).map(id => Corpus.genPage(id)._1)
+      slice.toDF.write.mode("overwrite").parquet(s"$base/pages")
+      val q = graft.streaming.StreamIngest.runLinked(s, s"$base/pages",
+        s"$base/out", s"$base/ck", Corpus.kb(s),
+        maxFilesPerTrigger = Some(16))
+      q.awaitTermination()
+      s"$base/out"
     }
 
   /** Per-JVM checkpointed near-dup cluster table of the documents
@@ -277,20 +263,11 @@ object SparkEntry {
     * and shared by q_bpe_merges (reports the learned merge list) and
     * q_bpe_encode (applies it to every document), so the corpus
     * tokenize+agg and the driver merge loop run once per JVM, the same
-    * train/apply sharing as ivfCentroidsFor. Keyed injectively on the
-    * raw dir (the clustersFor md5-suffix scheme). */
-  private val bpeFitCache =
-    scala.collection.mutable.HashMap.empty[String, Seq[(Int, String, String, Long)]]
+    * train/apply sharing as ivfCentroidsFor. */
   def bpeFitFor(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    bpeFitCache.synchronized {
-      val raw = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(4).map(b => f"${b & 0xff}%02x").mkString
-      bpeFitCache.getOrElseUpdate(s"bpe_$raw", {
-        ops.TextAnalysis.bpeTrain(
-          ops.TextAnalysis.bpeVocab(t(s, dir, "documents"), "text", 200), 6)
-      })
-    }
+    memoized("bpe:" + dir)(
+      ops.TextAnalysis.bpeTrain(
+        ops.TextAnalysis.bpeVocab(t(s, dir, "documents"), "text", 200), 6))
 
   /** Force every SHARED per-JVM artifact (the extract-once checkpoints
     * and the memoized IVF codebook reused across many queries) so
@@ -302,48 +279,45 @@ object SparkEntry {
     // Independent build CHAINS run concurrently (guide §2.6: the
     // scheduler happily runs several jobs at once; later jobs back-fill
     // executors the current job's stragglers leave idle). Dependencies
-    // stay inside one chain; the per-key FutureTask memo makes a build
-    // shared by two chains run exactly once.
-    val chains: Seq[() => Unit] = Seq(
+    // stay inside one chain; the per-key memo makes a build shared by
+    // two chains run exactly once.
+    //
+    // 4 build slots, chains in START order, longest first: running all
+    // seven at once lets the short fit/gold chains steal cores from the
+    // critical chains (measured: stream_parity 14 s solo → 19 s under
+    // 7-way contention); with 4 slots the short chains back-fill as
+    // slots free up (guide §2.6: "2-3 jobs in flight is plenty")
+    val chains: Seq[(String, () => Unit)] = Seq(
+      // the one REAL streaming run is a SHARED artifact too — BOTH
+      // parity queries read its output (the r4 warmup contract: a
+      // first-touch shared build must never be charged to whichever
+      // query happens to run first), and as its own chain the mostly
+      // driver-bound micro-batch machinery overlaps the CPU-bound
+      // builds below (guide §2.6)
+      "stream_parity" -> (() => { streamParityOutFor(s, dir); () }),
       // critical path: triples → links → vocab IRIs → edges → distinct
       // edges (independent of the resolved chain — triples use the
       // fused pass)
-      () => {
+      "triples+graph" -> (() => {
         triplesFor(s, dir).count()
         linksFor(s, dir).count()
         surfaceIriFor(s, dir).count()
         edgesFor(s, dir).count()
         distinctEdgesFor(s, dir).count()
         ()
-      },
-      () => {
+      }),
+      "clusters" -> (() => { clustersFor(s, dir).count(); () }),
+      "resolved+entities" -> (() => {
         resolvedFor(s, dir).count()
         entityTableFor(s, dir).count() // the mentions pass over resolved
         ()
-      },
-      () => { clustersFor(s, dir).count(); () },
-      () => { ivfCentroidsFor(s, dir); pqCodebooksFor(s, dir); () },
-      () => { bpeFitFor(s, dir); bloomFor(s, dir); () },
-      () => { pagesTsFor(s, dir).count(); goldFor(s, dir).count(); () },
-      // the one REAL streaming run is a SHARED artifact too — BOTH
-      // parity queries read its output (the r4 warmup contract: a
-      // first-touch shared build must never be charged to whichever
-      // query happens to run first), and as its own chain the mostly
-      // driver-bound micro-batch machinery overlaps the CPU-bound
-      // builds above (guide §2.6)
-      () => { streamParityOutFor(s, dir); () })
-    val names = Seq("triples+graph", "resolved+entities", "clusters",
-      "ivf+pq", "bpe+bloom", "pagesTs+gold", "stream_parity")
-    // 4 build slots, longest chains first: running all seven chains at
-    // once lets the short fit/gold chains steal cores from the two
-    // critical chains (measured: stream_parity 14 s solo → 19 s under
-    // 7-way contention); with 4 slots the short chains back-fill as
-    // slots free up (guide §2.6: "2-3 jobs in flight is plenty")
-    val order = Seq(6, 0, 2, 1, 3, 4, 5) // stream, graph, clusters, resolved, then short
-    val ordered = order.map(i => (chains(i), names(i)))
+      }),
+      "ivf+pq" -> (() => { ivfCentroidsFor(s, dir); pqCodebooksFor(s, dir); () }),
+      "bpe+bloom" -> (() => { bpeFitFor(s, dir); bloomFor(s, dir); () }),
+      "pagesTs+gold" -> (() => { pagesTsFor(s, dir).count(); goldFor(s, dir).count(); () }))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     try {
-      val futures = ordered.map { case (c, n) =>
+      val futures = chains.map { case (n, c) =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = {
             val t0 = System.nanoTime()

@@ -1,23 +1,15 @@
 package graft.kernel
 
-/** Classic Porter (1980) English stemmer — public-domain algorithm.
-  *
-  * Used for predicate canonicalization, matching the reference's
-  * `normalize_predicate` (/root/reference/src/normalize.rs:52-71). The
-  * reference lowercases first (so its camelCase branch is dead code) and
-  * stems. Golden values from normalize.rs:178-199 all reproduce under
-  * classic Porter: runs/running→run, ran→ran, serves/serving/served→serv,
-  * graduates/graduating/graduated→graduat, birthdate→birthdat,
-  * almamater→almamat, cityserved→cityserv, location→locat.
-  *
-  * PARITY: the reference actually uses rust-stemmers
-  * `Algorithm::English` — Snowball/Porter2 — so `stemPredicate` now
-  * stems with kernel.Snowball (full Porter2 incl. exceptional forms),
-  * giving open-vocabulary parity (e.g. "ties" → tie, where classic
-  * Porter gives ti). The two algorithms agree on every golden above and
-  * on the whole PredDict-canonicalized vocabulary (pinned exhaustively
-  * by KernelSpec and by the SnowballSpec agreement test); classic
-  * `stem` is kept as the documented 1980 algorithm and cross-check.
+/** Predicate canonicalization stem, matching the reference's
+  * `normalize_predicate` (normalize.rs:52-71): lowercase, then stem with
+  * rust-stemmers `Algorithm::English`, i.e. Snowball/Porter2, which
+  * `kernel.Snowball` implements (incl. the exceptional forms). Golden
+  * values from normalize.rs:178-199 (runs/running→run, ran→ran,
+  * serves/serving/served→serv, graduates/graduating/graduated→graduat,
+  * birthdate→birthdat, almamater→almamat, cityserved→cityserv,
+  * location→locat) are pinned by KernelSpec and SnowballSpec. The
+  * object keeps its historical name because the frozen oracle SQL
+  * builders call `Porter.stemPredicate`.
   */
 object Porter {
 
@@ -37,122 +29,5 @@ object Porter {
       if (memo.size < memoCap) memo.putIfAbsent(pred, v)
       v
     }
-  }
-
-  def stem(word: String): String = {
-    if (word.length <= 2) return word
-    var b = word
-    b = step1a(b); b = step1b(b); b = step1c(b)
-    b = step2(b); b = step3(b); b = step4(b); b = step5(b)
-    b
-  }
-
-  private def isConsonant(w: String, i: Int): Boolean = w.charAt(i) match {
-    case 'a' | 'e' | 'i' | 'o' | 'u' => false
-    case 'y' => if (i == 0) true else !isConsonant(w, i - 1)
-    case _ => true
-  }
-
-  /** Measure m: [C](VC)^m[V]. */
-  private def measure(w: String): Int = {
-    var m = 0; var i = 0; val n = w.length
-    while (i < n && isConsonant(w, i)) i += 1
-    while (i < n) {
-      while (i < n && !isConsonant(w, i)) i += 1
-      if (i < n) { m += 1; while (i < n && isConsonant(w, i)) i += 1 }
-    }
-    m
-  }
-
-  private def containsVowel(w: String): Boolean =
-    (0 until w.length).exists(i => !isConsonant(w, i))
-
-  private def endsDoubleConsonant(w: String): Boolean =
-    w.length >= 2 && w.charAt(w.length - 1) == w.charAt(w.length - 2) &&
-      isConsonant(w, w.length - 1)
-
-  /** *o: stem ends cvc where final c is not w, x, or y. */
-  private def cvc(w: String): Boolean = {
-    val n = w.length
-    if (n < 3) return false
-    val last = w.charAt(n - 1)
-    isConsonant(w, n - 3) && !isConsonant(w, n - 2) && isConsonant(w, n - 1) &&
-      last != 'w' && last != 'x' && last != 'y'
-  }
-
-  private def step1a(w: String): String =
-    if (w.endsWith("sses")) w.dropRight(2)
-    else if (w.endsWith("ies")) w.dropRight(2)
-    else if (w.endsWith("ss")) w
-    else if (w.endsWith("s")) w.dropRight(1)
-    else w
-
-  private def step1b(w: String): String = {
-    if (w.endsWith("eed")) {
-      if (measure(w.dropRight(3)) > 0) w.dropRight(1) else w
-    } else {
-      val stripped =
-        if (w.endsWith("ed") && containsVowel(w.dropRight(2))) Some(w.dropRight(2))
-        else if (w.endsWith("ing") && containsVowel(w.dropRight(3))) Some(w.dropRight(3))
-        else None
-      stripped match {
-        case None => w
-        case Some(s) =>
-          if (s.endsWith("at") || s.endsWith("bl") || s.endsWith("iz")) s + "e"
-          else if (endsDoubleConsonant(s) && !"lsz".contains(s.last)) s.dropRight(1)
-          else if (measure(s) == 1 && cvc(s)) s + "e"
-          else s
-      }
-    }
-  }
-
-  private def step1c(w: String): String =
-    if (w.endsWith("y") && containsVowel(w.dropRight(1))) w.dropRight(1) + "i" else w
-
-  private val step2Pairs = Seq(
-    "ational" -> "ate", "tional" -> "tion", "enci" -> "ence", "anci" -> "ance",
-    "izer" -> "ize", "abli" -> "able", "alli" -> "al", "entli" -> "ent",
-    "eli" -> "e", "ousli" -> "ous", "ization" -> "ize", "ation" -> "ate",
-    "ator" -> "ate", "alism" -> "al", "iveness" -> "ive", "fulness" -> "ful",
-    "ousness" -> "ous", "aliti" -> "al", "iviti" -> "ive", "biliti" -> "ble")
-
-  private val step3Pairs = Seq(
-    "icate" -> "ic", "ative" -> "", "alize" -> "al", "iciti" -> "ic",
-    "ical" -> "ic", "ful" -> "", "ness" -> "")
-
-  private def replaceSuffix(w: String, pairs: Seq[(String, String)], minM: Int): String = {
-    pairs.collectFirst {
-      case (suf, rep) if w.endsWith(suf) && measure(w.dropRight(suf.length)) > minM - 1 =>
-        w.dropRight(suf.length) + rep
-      case (suf, _) if w.endsWith(suf) => w // suffix matched but measure failed: stop
-    }.getOrElse(w)
-  }
-
-  private def step2(w: String): String = replaceSuffix(w, step2Pairs, 1)
-  private def step3(w: String): String = replaceSuffix(w, step3Pairs, 1)
-
-  private val step4Sufs = Seq(
-    "al", "ance", "ence", "er", "ic", "able", "ible", "ant", "ement", "ment",
-    "ent", "ion", "ou", "ism", "ate", "iti", "ous", "ive", "ize")
-
-  private def step4(w: String): String = {
-    step4Sufs.collectFirst {
-      case suf if w.endsWith(suf) =>
-        val stem = w.dropRight(suf.length)
-        val ok = measure(stem) > 1 &&
-          (suf != "ion" || (stem.nonEmpty && (stem.last == 's' || stem.last == 't')))
-        if (ok) stem else w
-    }.getOrElse(w)
-  }
-
-  private def step5(w: String): String = {
-    var b = w
-    if (b.endsWith("e")) {
-      val stem = b.dropRight(1)
-      val m = measure(stem)
-      if (m > 1 || (m == 1 && !cvc(stem))) b = stem
-    }
-    if (b.endsWith("ll") && measure(b) > 1) b = b.dropRight(1)
-    b
   }
 }

@@ -7,8 +7,9 @@ package graft.kernel
   * published Snowball specification (M.F. Porter, snowballstem.org,
   * "The English (Porter2) stemming algorithm"), including the
   * exceptional forms, so open-vocabulary predicates normalize exactly
-  * as the reference does (classic Porter diverges on words like
-  * "ties" → ti vs tie — see kernel/Porter.scala PARITY SCOPE).
+  * as the reference does (e.g. "ties" → tie and "status" → status,
+  * where classic 1980 Porter gives ti and statu). The engine's one
+  * stemmer: `Porter.stemPredicate` is its memoized entry point.
   *
   * Conventions: operates on lowercase input (stem callers lowercase
   * first, as the reference does); 'Y' marks consonant-y internally and

@@ -242,25 +242,10 @@ object Dedup {
     * append step (`lshIndexAppendBuckets`) reuses them instead of
     * re-signing a third time.
     *
-    * One checkpoint RDD is retained per call (batch-bucket-sized);
-    * LONG-RUNNING per-batch callers must use `lshIndexProbeReleasable`
-    * and fire the release after their terminal action, or the
-    * checkpoints accumulate for the JVM lifetime (ADVICE r04). */
+    * The batch-bucket checkpoint lives as long as the three returned
+    * frames (see `Bridge.releaseLocalCheckpoint`). */
   def lshIndexProbe(newDocs: DataFrame, idCol: String, textCol: String, dir: String,
       n: Int = 3, k: Int = 32, bands: Int = 8): (DataFrame, DataFrame, DataFrame) = {
-    val (cross, intra, fresh, _) =
-      lshIndexProbeReleasable(newDocs, idCol, textCol, dir, n, k, bands)
-    (cross, intra, fresh)
-  }
-
-  /** `lshIndexProbe` plus a RELEASE handle that unpersists the batch's
-    * bucket checkpoint. Call it AFTER the terminal action on all three
-    * returned frames (including the `lshIndexAppendBuckets` write) —
-    * the per-micro-batch recrawl-dedup loop must release per batch
-    * (Pipeline.graphFromTriples is the sibling pattern). */
-  def lshIndexProbeReleasable(newDocs: DataFrame, idCol: String, textCol: String,
-      dir: String, n: Int = 3, k: Int = 32, bands: Int = 8)
-      : (DataFrame, DataFrame, DataFrame, () => Unit) = {
     val spark = newDocs.sparkSession
     val fresh = lshBuckets(newDocs, idCol, textCol, n, k, bands).localCheckpoint(true)
     val idx = spark.read.parquet(dir)
@@ -274,8 +259,7 @@ object Dedup {
         Seq("band", "bucket"))
       .filter(col("id1") < col("id2"))
       .select(col("id1"), col("id2")).distinct()
-    (cross, intra, fresh,
-      () => { org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(fresh); () })
+    (cross, intra, fresh)
   }
 
   /** Append a probed batch's ALREADY-SIGNED buckets (lshIndexProbe's
@@ -459,17 +443,11 @@ object Dedup {
     * never even enter the block shuffle (review r05).
     * Returns (id1 < id2, jw rounded 4).
     *
-    * One token-table checkpoint RDD is retained per call (the exploded
-    * lineage feeds three plan branches — CLAUDE.md multi-branch rule);
-    * per-batch loop callers must use `jwContainsJoinReleasable`. */
+    * The exploded lineage feeds three plan branches (the multi-branch
+    * recompute rule), so it is checkpointed; the checkpoint lives as
+    * long as the pairs (see `Bridge.releaseLocalCheckpoint`). */
   def jwContainsJoin(df: DataFrame, idCol: String, strCol: String,
-      threshold: Double): DataFrame =
-    jwContainsJoinReleasable(df, idCol, strCol, threshold)._1
-
-  /** `jwContainsJoin` plus a RELEASE handle for the exploded-token
-    * checkpoint — fire it after the terminal action on the pairs. */
-  def jwContainsJoinReleasable(df: DataFrame, idCol: String, strCol: String,
-      threshold: Double): (DataFrame, () => Unit) = {
+      threshold: Double): DataFrame = {
     val rows = df.select(col(idCol), col(strCol),
       array_distinct(split(col(strCol), " ")).as("toks"))
     // materialized ONCE: three plan branches below would otherwise
@@ -485,7 +463,7 @@ object Dedup {
     val container = exploded
       .join(broadcast(probeKeys), Seq("tok"), "leftsemi")
       .select(col("tok"), col(idCol).as("idb"), col(strCol).as("sb"))
-    val pairs = probe.join(container, Seq("tok"))
+    probe.join(container, Seq("tok"))
       .filter(col("ida") =!= col("idb") && col("sb").contains(col("sa")))
       .select(least(col("ida"), col("idb")).as("id1"),
         greatest(col("ida"), col("idb")).as("id2"),
@@ -493,8 +471,6 @@ object Dedup {
           .as("jw"))
       .filter(col("jw") >= threshold)
       .distinct()
-    (pairs,
-      () => { org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(exploded); () })
   }
 
   /** Scalable token-set Jaccard similarity self-join, same pruning
@@ -698,16 +674,9 @@ object Dedup {
     * shape mirrors MinHash LSH: the only shuffle is the (band, key)
     * bucket join — never all pairs.
     *
-    * One signature-table checkpoint RDD is retained per call;
-    * per-batch loop callers must use `simhashCandidatesReleasable`
-    * (ADVICE r04 — same leak class as lshIndexProbe). */
-  def simhashCandidates(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    simhashCandidatesReleasable(df, idCol, textCol)._1
-
-  /** `simhashCandidates` plus a RELEASE handle for the signature
-    * checkpoint — fire it after the terminal action on the pairs. */
-  def simhashCandidatesReleasable(df: DataFrame, idCol: String, textCol: String)
-      : (DataFrame, () => Unit) = {
+    * The signature-table checkpoint lives as long as the pairs (see
+    * `Bridge.releaseLocalCheckpoint`). */
+  def simhashCandidates(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // the banded lineage feeds BOTH sides of the self-join; the
     // signature pass is a cheap one-pass kernel by design (and Spark's
     // exchange reuse usually collapses the identical subplans), but the
@@ -724,13 +693,11 @@ object Dedup {
       col(idCol).as("id1"), col("simhash").as("s1"))
     val b = banded.select(col("band"), col("key"),
       col(idCol).as("id2"), col("simhash").as("s2"))
-    val pairs = a.join(b, Seq("band", "key"))
+    a.join(b, Seq("band", "key"))
       .filter(col("id1") < col("id2"))
       .select(col("id1"), col("id2"),
         bit_count(col("s1").bitwiseXOR(col("s2"))).as("hamming"))
       .distinct()
-    (pairs,
-      () => { org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(sigs); () })
   }
 
   /** SimHash signatures for a whole table, kernel form (the production

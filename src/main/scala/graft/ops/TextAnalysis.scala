@@ -146,17 +146,11 @@ object TextAnalysis {
     * corpus-sized global window). The count table is materialized
     * ONCE (eager checkpoint): it feeds both the total and the top-K
     * branch, and the corpus tokenize+shuffle must not run per branch
-    * (CLAUDE.md multi-branch rule; review r05). One vocabulary-sized
-    * checkpoint RDD is retained per call — loop callers use
-    * `vocabCoverageReleasable`. Returns
+    * (the multi-branch recompute rule). The vocabulary-sized
+    * checkpoint lives as long as the result (see
+    * `Bridge.releaseLocalCheckpoint`). Returns
     * (token, cnt, rank, coverage rounded 6). */
-  def vocabCoverage(df: DataFrame, textCol: String, k: Int): DataFrame =
-    vocabCoverageReleasable(df, textCol, k)._1
-
-  /** `vocabCoverage` plus a RELEASE handle for the count-table
-    * checkpoint — fire it after the terminal action on the result. */
-  def vocabCoverageReleasable(df: DataFrame, textCol: String, k: Int)
-      : (DataFrame, () => Unit) = {
+  def vocabCoverage(df: DataFrame, textCol: String, k: Int): DataFrame = {
     val toks = df.select(explode(split(col(textCol), " ")).as("token"))
       .filter(length(col("token")) > 0)
     val counts = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
@@ -164,14 +158,12 @@ object TextAnalysis {
     val total = counts.agg(sum(col("cnt")).as("total"))
     val topK = counts.orderBy(col("cnt").desc, col("token").asc).limit(k)
     val w = Window.orderBy(col("cnt").desc, col("token").asc)
-    val out = topK.crossJoin(total)
+    topK.crossJoin(total)
       .withColumn("rank", row_number().over(w))
       .withColumn("coverage",
         round(sum(col("cnt")).over(w.rowsBetween(Window.unboundedPreceding, 0))
           .cast("double") / col("total"), 6))
       .select(col("token"), col("cnt"), col("rank"), col("coverage"))
-    (out,
-      () => { org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(counts); () })
   }
 
   /** BPE-merge tokenizer training (Sennrich et al. 2016, the
@@ -347,15 +339,9 @@ object TextAnalysis {
     * vocabulary-sized (broadcastable by AQE); nothing is all-pairs or
     * global. Returns (idCol, n_bigrams, avg_logp rounded 4).
     *
-    * One bigram-table checkpoint RDD is retained per call; per-batch
-    * loop callers must use `lmScoreReleasable`. */
-  def lmScore(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    lmScoreReleasable(df, idCol, textCol)._1
-
-  /** `lmScore` plus a RELEASE handle for the bigram-table checkpoint —
-    * fire it after the terminal action on the scores. */
-  def lmScoreReleasable(df: DataFrame, idCol: String, textCol: String)
-      : (DataFrame, () => Unit) = {
+    * The two bigram-table checkpoints live as long as the scores (see
+    * `Bridge.releaseLocalCheckpoint`). */
+  def lmScore(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // order-preserving tokenization (same idiom as tfidf: split on ' ',
     // drop empties — but via the higher-order filter so ADJACENCY for
     // bigrams survives)
@@ -383,7 +369,7 @@ object TextAnalysis {
     // (`cur`) of at least one bigram, so the bigram vocabulary covers it
     val vocab = bgCounts.select(substring_index(col("bg"), " ", -1).as("tok"))
       .agg(countDistinct(col("tok")).as("v"))
-    val scores = ex.join(bgCounts, Seq("bg"))
+    ex.join(bgCounts, Seq("bg"))
       .withColumn("ctx", substring_index(col("bg"), " ", 1))
       .join(ctxCounts, Seq("ctx"))
       .crossJoin(vocab)
@@ -391,12 +377,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_bigrams"),
         round(avg(log((col("c_bg") + 1).cast("double") / (col("c_ctx") + col("v")))), 4)
           .as("avg_logp"))
-    (scores,
-      () => {
-        org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(ex)
-        org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(bgCounts)
-        ()
-      })
   }
 
   /** DSIR-shape data selection (Xie et al. 2023, "Data Selection for

@@ -29,6 +29,15 @@ import scala.jdk.CollectionConverters._
   */
 object Checkpointed {
 
+  /** Delete `dir` and the files directly in it; a no-op when it is
+    * absent. Flat only: a non-empty subdirectory makes it throw. */
+  private[graft] def deleteFlatDir(dir: java.nio.file.Path): Unit =
+    if (Files.exists(dir)) {
+      val entries = Files.list(dir)
+      try entries.iterator().asScala.toList.foreach(Files.delete) finally entries.close()
+      Files.delete(dir)
+    }
+
   /** url-domain of a url column (north rule: partition by url-domain). */
   def domainOf(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_extract(url, "^https?://([^/]+)", 1)
@@ -229,26 +238,14 @@ object Checkpointed {
       spark.read.parquet(tmpNodes).write.mode("overwrite").parquet(s"$baseDir/nodes")
       // drop the staging dir (left in place it triggers spurious
       // "All paths were ignored" warnings on later reads of baseDir)
-      val tmpPath = Paths.get(tmpNodes)
-      if (Files.exists(tmpPath)) {
-        val s0 = Files.list(tmpPath)
-        try s0.iterator().asScala.toList.foreach(Files.delete) finally s0.close()
-        Files.delete(tmpPath)
-      }
+      deleteFlatDir(Paths.get(tmpNodes))
 
       // edges: dynamic overwrite replaces ONLY the fresh pk partitions.
       // Pre-delete the pending buckets' partitions first: dynamic
       // overwrite cannot clear a rebuilt bucket that now yields ZERO edge
       // rows, which would otherwise freeze stale edges in place behind a
       // fresh graph marker (review finding r03).
-      if (hadGraph) pending.foreach { pk =>
-        val d = Paths.get(baseDir, "edges", s"pk=$pk")
-        if (Files.exists(d)) {
-          val s = Files.list(d)
-          try s.iterator().asScala.toList.foreach(Files.delete) finally s.close()
-          Files.delete(d)
-        }
-      }
+      if (hadGraph) pending.foreach(pk => deleteFlatDir(Paths.get(baseDir, "edges", s"pk=$pk")))
       edgesFresh.withColumn("pk", bucketOf(col("url"), nBuckets))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("pk").parquet(s"$baseDir/edges")

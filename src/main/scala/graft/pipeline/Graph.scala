@@ -107,19 +107,11 @@ object Graph {
     * GraphSpec). Double-sum order differs between tiers only at the
     * ~1e-19 absolute level — round(6) absorbs it. The 1M default keeps
     * the collected String-pair array well under ~200 MB of driver heap
-    * even for long IRIs (this VM's ≤16g heap rule). */
+    * even for long IRIs (this VM's ≤16g heap rule). The distributed
+    * tier's result checkpoint lives as long as the result (see
+    * `Bridge.releaseLocalCheckpoint`). */
   def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
-      driverEdgeLimit: Long = 1000000L, assumeDistinct: Boolean = false): DataFrame =
-    pageRankReleasable(edges, iters, damping, driverEdgeLimit, assumeDistinct)._1
-
-  /** `pageRank` plus a RELEASE handle for the distributed tier's
-    * result checkpoint (a no-op in the driver tier). Long-running
-    * per-batch callers must fire it after their terminal action on the
-    * result, or one result-sized checkpoint RDD is retained per call
-    * for the JVM lifetime (the lshIndexProbeReleasable contract). */
-  def pageRankReleasable(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
-      driverEdgeLimit: Long = 1000000L, assumeDistinct: Boolean = false)
-      : (DataFrame, () => Unit) = {
+      driverEdgeLimit: Long = 1000000L, assumeDistinct: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e0 = distinctEdges(edges, assumeDistinct)
@@ -143,10 +135,10 @@ object Graph {
         pr = Array.tabulate(n)(v => (1.0 - damping) / n + damping * contrib(v))
       }
       val names = idx.keys.toArray
-      return (spark.createDataset(
+      return spark.createDataset(
         names.indices.map(i => (names(i),
           BigDecimal(pr(i)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
-        .toDF("iri", "pagerank"), () => ())
+        .toDF("iri", "pagerank")
     }
     val nodes = e.select(col("src_iri").as("iri"))
       .unionByName(e.select(col("dst_iri").as("iri"))).distinct()
@@ -171,7 +163,7 @@ object Graph {
     val out = pr.select(col("iri"), round(col("pr"), 6).as("pagerank"))
       .localCheckpoint(true)
     eDeg.unpersist(); nodes.unpersist(); e.unpersist()
-    (out, () => { org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(out); () })
+    out
   }
 
   /** Per-node triangle counts over the UNDIRECTED distinct entity
@@ -192,16 +184,11 @@ object Graph {
     * HIGHER-degree endpoint's lower-ranked partner: a Zipfian hub of
     * degree d contributes its d edges pointing TOWARD it (hub is the
     * ranked-larger endpoint), never d² join fan-out on the hub key.
-    * Both tiers enumerate each triangle exactly once. */
+    * Both tiers enumerate each triangle exactly once; the distributed
+    * tier's result checkpoint lives as long as the result (see
+    * `Bridge.releaseLocalCheckpoint`). */
   def triangleCounts(edges: DataFrame, driverEdgeLimit: Long = 1000000L,
-      assumeDistinct: Boolean = false): DataFrame =
-    triangleCountsReleasable(edges, driverEdgeLimit, assumeDistinct)._1
-
-  /** `triangleCounts` plus a RELEASE handle for the distributed tier's
-    * result checkpoint (no-op in the driver tier) — same contract as
-    * pageRankReleasable. */
-  def triangleCountsReleasable(edges: DataFrame, driverEdgeLimit: Long = 1000000L,
-      assumeDistinct: Boolean = false): (DataFrame, () => Unit) = {
+      assumeDistinct: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val und0 = distinctEdges(edges, assumeDistinct)
@@ -244,9 +231,9 @@ object Graph {
           if (set.contains(w)) { tri(lo) += 1; tri(hi) += 1; tri(w) += 1 }
         }
       }
-      return (spark.createDataset(
+      return spark.createDataset(
         (0 until n).filter(tri(_) > 0L).map(v => (names(v), tri(v))))
-        .toDF("iri", "n_triangles"), () => ())
+        .toDF("iri", "n_triangles")
     }
     // distributed tier: orient each edge lo→hi by (degree, iri) rank
     val degT = und.select(explode(array(col("a"), col("b"))).as("iri"))
@@ -276,7 +263,7 @@ object Graph {
     // RELEASED (Dataset.unpersist would not touch a checkpoint RDD)
     org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(oriented)
     und.unpersist()
-    (out, () => { org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(out); () })
+    out
   }
 
   /** SPARQL-style basic graph pattern (BGP) over the edge table — the

@@ -240,15 +240,7 @@ object StreamIngest {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "static") // replace ALL deltas
       .partitionBy("batch").parquet(s"$outDir/nodes")
-    val p = java.nio.file.Paths.get(tmp)
-    if (java.nio.file.Files.exists(p)) {
-      val s0 = java.nio.file.Files.list(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        s0.iterator().asScala.toList.foreach(java.nio.file.Files.delete)
-      } finally s0.close()
-      java.nio.file.Files.delete(p)
-    }
+    Checkpointed.deleteFlatDir(java.nio.file.Paths.get(tmp))
   }
 
   /** Streaming CONTENT dedup: pages deduplicated across micro-batches

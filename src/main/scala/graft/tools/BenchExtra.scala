@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val mode = args.headOption.getOrElse("stream")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

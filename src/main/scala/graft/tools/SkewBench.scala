@@ -54,7 +54,7 @@ object SkewBench {
     val rows = args.headOption.map(_.toLong).getOrElse(20000000L)
     val tailKeys = 1000000L
     val salts = graft.pipeline.Pipeline.joinBackSalts
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-skew-bench")

@@ -14,12 +14,16 @@ object Bridge {
 
   /** Unpersist the RDD backing an (eager) `localCheckpoint` Dataset.
     * `Dataset.unpersist` goes through the CacheManager and does NOT
-    * touch checkpoint RDDs, so without this a localCheckpoint'd frame
-    * stays persisted for the JVM lifetime (the leak class ADVICE r04
-    * flagged on lshIndexProbe). Returns false when the plan isn't a
-    * checkpoint LogicalRDD (nothing to release). Call only after the
-    * terminal action on every frame derived from the checkpoint —
-    * released partitions recompute from an EMPTY lineage. */
+    * touch checkpoint RDDs.
+    *
+    * Lifetime without this call: a checkpoint stays persisted while any
+    * frame derived from it is reachable; once none is, Spark's
+    * ContextCleaner unpersists it at the next driver GC. Every operator
+    * that checkpoints internally and returns a lazy result relies on
+    * that. Call this only to free a checkpoint early, and only
+    * after the terminal action on every frame derived from it —
+    * released partitions recompute from an EMPTY lineage. Returns false
+    * when the plan isn't a checkpoint LogicalRDD (nothing to release). */
   def releaseLocalCheckpoint(df: org.apache.spark.sql.Dataset[_]): Boolean =
     df match {
       case cd: org.apache.spark.sql.classic.Dataset[_] =>

@@ -228,9 +228,9 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("porter parity is pinned for every canonical predicate") {
-    // The reference stems with Snowball/Porter2; we use classic Porter.
-    // The two agree on the full vocabulary PredDict can emit — pinned
-    // here so any dictionary addition that diverges fails loudly.
+    // The reference stems with Snowball/Porter2, and so does
+    // stemPredicate. Every stem PredDict can emit is pinned here, so
+    // any dictionary addition shows up as an unpinned predicate.
     val vocab = (PredDict.wikidataToSchema.values ++
       PredDict.surfaceToSchema.values).toSeq.distinct.sorted
     val expected = Map(
