@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.pipeline.{Corpus, Kg, Pipeline, TripleRow}
+import graft.pipeline.{Checkpointed, Corpus}
 
-/** North-rule scaling benchmark: the SAME job (pages → triples → linked
-  * graph materialized to parquet) on the SAME input (identical page
-  * corpus, identical 128-way partitioning) at two parallelism levels —
-  * the sandbox analogue of N vs 4N executors. Run:
+/** North-rule scaling benchmark: the SAME job (the production build,
+  * `Checkpointed.runAll`, into a fresh dir) on the SAME input (identical
+  * page corpus, identical 128-way partitioning) at two parallelism
+  * levels — the sandbox analogue of N vs 4N executors. Run:
   *
   *   sbt "runMain graft.ScalingBench 8 40000"
   *   sbt "runMain graft.ScalingBench 32 40000"
@@ -31,35 +31,27 @@ object ScalingBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val kb = Corpus.kb(spark)
 
-    def run(tag: String): (Double, Long, Long, Long) = runN(tag, n)
-
     def runN(tag: String, nRun: Long): (Double, Long, Long, Long) = {
+      // a fresh, empty dir per run: in a used one runAll would resume
+      // and skip every bucket
+      val dir = java.nio.file.Paths.get(outDir, tag)
+      Checkpointed.deleteDir(dir)
       val t0 = System.nanoTime()
-      val pages = Corpus.pages(spark, nRun, partitions = 128)
-      // the NLP pass writes the triples once; the graph reads the file
-      Kg.pagesToTriples(pages).write.mode("overwrite").parquet(s"$outDir/triples")
-      val trip = spark.read.parquet(s"$outDir/triples").as[TripleRow]
-      val (nodes, edges, release) = Pipeline.graphFromTriples(trip, kb)
-      try {
-        nodes.write.mode("overwrite").parquet(s"$outDir/nodes")
-        edges.write.mode("overwrite").parquet(s"$outDir/edges")
-      } finally release()
-      // counts from the written files — no recompute of the plan
-      val nt = trip.count()
-      val nn = spark.read.parquet(s"$outDir/nodes").count()
-      val ne = spark.read.parquet(s"$outDir/edges").count()
+      Checkpointed.runAll(Corpus.pages(spark, nRun, partitions = 128), kb, dir.toString)
       val dt = (System.nanoTime() - t0) / 1e9
+      // counts from the written tables, outside the timed build
+      val Seq(nt, nn, ne) = Seq("triples", "nodes", "edges")
+        .map(t => spark.read.parquet(s"$dir/$t").count())
       System.err.println(f"[scaling] $tag cores=$cores pages=$nRun sec=$dt%.2f")
       (dt, nt, nn, ne)
     }
 
     // JIT/codegen warmup on the same plan shapes at 1/8 the data.
     runN("warmup", math.max(n / 8, 5000L))
-    val (dt, nt, nn, ne) = run("measured")
+    val (dt, nt, nn, ne) = runN("measured", n)
     val docsPerSec = n / dt
     val triplesPerSec = nt / dt
     println(f"""{"bench":"scaling","cores":$cores,"pages":$n,"sec":$dt%.3f,"docs_per_sec":$docsPerSec%.1f,"triples_per_sec":$triplesPerSec%.1f,"triples":$nt,"nodes":$nn,"edges":$ne}""")

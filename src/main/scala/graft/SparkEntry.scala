@@ -331,18 +331,20 @@ object SparkEntry {
         })
       }
       // propagate the FIRST failure loudly (the bench treats a warmup
-      // throw as a failed entry — same contract as the sequential form)
+      // throw as a failed entry — same contract as the sequential form),
+      // interrupting the chains still running behind it
       futures.foreach(_.get())
-    } finally pool.shutdown()
+    } catch { case e: Throwable => pool.shutdownNow(); throw e }
+    finally pool.shutdown()
     ()
   }
 
-  /** Reference WebNLG fixtures (read-only test DATA, cited; the eid/
-    * mtriple/text structure is the public WebNLG corpus format). The
-    * glob reads BOTH corpora (astronaut 72 + airport 301 entries) —
+  /** The repo's WebNLG fixtures (repo-authored, in the public WebNLG
+    * corpus format; see fixtures/README), relative to the repo root. The
+    * glob reads BOTH files (astronaut 6 + airport 4 entries) —
     * wholetext gives one row per file, so the parse parallelizes per
     * file exactly as a many-file corpus would. */
-  val webnlgPath = "/root/reference/tests/fixtures/webnlg-*.xml"
+  val webnlgPath = "fixtures/webnlg-*.xml"
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0: the full
     * pipeline pages→triples→eval, one row of P/R/F1. */
@@ -447,11 +449,11 @@ object SparkEntry {
         .select(col("iri"), explode(col("props")).as(Seq("pred", "last_obj")))
     }),
     // S-family: WebNLG XML corpus ingest + gold denormalization over the
-    // reference's own fixture data (tests/fixtures/webnlg-astronaut.xml)
+    // repo's WebNLG fixtures (webnlgPath)
     "webnlg_triples" -> ((s, dir) => {
       sources.WebNlg.goldTriples(sources.WebNlg.entries(s, webnlgPath))
     }),
-    // J7/A8 on reference data: rule-based extraction from the WebNLG
+    // J7/A8 on WebNLG data: rule-based extraction from the WebNLG
     // lexicalizations vs the mtriple gold, per-category P/R
     "webnlg_eval" -> ((s, dir) => {
       val e = sources.WebNlg.entries(s, webnlgPath)

@@ -268,13 +268,6 @@ object Dedup {
   def lshIndexAppendBuckets(buckets: DataFrame, dir: String): Unit =
     buckets.write.mode("append").partitionBy("band").parquet(dir)
 
-  /** Append a batch's buckets to the index, signing it here. Prefer
-    * probe → lshIndexAppendBuckets when the batch was already probed
-    * (this signs a second time). */
-  def lshIndexAppend(newDocs: DataFrame, idCol: String, textCol: String, dir: String,
-      n: Int = 3, k: Int = 32, bands: Int = 8): Unit =
-    lshIndexAppendBuckets(lshBuckets(newDocs, idCol, textCol, n, k, bands), dir)
-
   /** The buckets lshCandidates capped (band, bucket, bkt_n > cap) —
     * count/log this next to any capped run so truncation is never
     * silent. */

@@ -217,13 +217,6 @@ object Similarity {
       .toDF("centroid", "cvec")
   }
 
-  /** Load a persisted codebook back into the Array form ivfTopKWith
-    * takes (ordered by centroid id). */
-  def centroidsFromDF(df: DataFrame): Array[Array[Double]] =
-    df.select(col("centroid"), col("cvec")).collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
-
   /** Kernel form of ivfProbesWith: scores every centroid with the same
     * ascending-d left-assoc double fold, then takes the top nProbe by
     * (score desc, id desc) — the exact order the columnar

@@ -13,12 +13,6 @@ object TextAnalysis {
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(split(text, " "))
 
-  /** BPE-ish subword estimate: word-boundary pieces + ceil(chars/4)
-    * blend, the common len/4 heuristic (reference P1,
-    * extractor.rs:311-314) refined by punctuation splits. */
-  def tokenEstimate(text: Column): Column =
-    (length(text) / lit(4)).cast("long")
-
   /** Quality scoring: length, punctuation ratio, stopword ratio,
     * mean word length — the standard web-text quality features. */
   def qualityFeatures(df: DataFrame, text: Column): DataFrame = {

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrameWriter, Dataset, Row}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import scala.jdk.CollectionConverters._
 
 /** Resumable, checkpointed batch execution (SURVEY.md §2.9, §7.1 M7;
@@ -22,21 +23,65 @@ import scala.jdk.CollectionConverters._
   * never appended), then commits one manifest per bucket. Manifests are
   * written AFTER the data, so a crash between data and manifest merely
   * re-does that bucket; the deterministic kernel makes the rewrite
-  * byte-identical. This is the Iceberg-commit pattern expressed on plain
-  * partitioned parquet (no Iceberg jars in this sandbox —
-  * `format("iceberg")` + REPLACE PARTITIONS is the one-line swap,
-  * SURVEY.md §7.0).
+  * byte-identical. The graph stage then swaps the node table in by
+  * rename (`swapNodes`), rewrites the pending buckets' edge partitions
+  * and commits their graph markers last. Marker files are replaced by
+  * rename, never truncated in place. This is the Iceberg-commit pattern
+  * expressed on plain partitioned parquet (no Iceberg jars in this
+  * sandbox — `format("iceberg")` + REPLACE PARTITIONS is the one-line
+  * swap, SURVEY.md §7.0).
   */
 object Checkpointed {
 
-  /** Delete `dir` and the files directly in it; a no-op when it is
-    * absent. Flat only: a non-empty subdirectory makes it throw. */
-  private[graft] def deleteFlatDir(dir: java.nio.file.Path): Unit =
+  /** Delete `dir` and everything under it; a no-op when it is absent. */
+  private[graft] def deleteDir(dir: Path): Unit =
     if (Files.exists(dir)) {
-      val entries = Files.list(dir)
-      try entries.iterator().asScala.toList.foreach(Files.delete) finally entries.close()
-      Files.delete(dir)
+      val entries = Files.walk(dir)
+      try entries.iterator().asScala.toList.reverse.foreach(Files.delete) finally entries.close()
     }
+
+  /** Replace the node table under `baseDir` with the one `table` writes.
+    * Spark writes it once, into `_nodes_next` (its commit writes
+    * `_SUCCESS` last); `nodes` is renamed to `_nodes_prev`, `_nodes_next`
+    * to `nodes`, and `_nodes_prev` is deleted. A kill at any step leaves
+    * the old table or the new one, never a partial one, and
+    * `recoverNodes` at the next start puts the old one back where the
+    * swap did not finish. Both renames are atomic on a local (or HDFS)
+    * filesystem, as the marker renames are; an object store would need a
+    * pointer commit instead. */
+  private[graft] def swapNodes(baseDir: String, table: DataFrameWriter[Row]): Unit = {
+    val (nodes, next, prev) = nodeDirs(baseDir)
+    table.parquet(next.toString)
+    if (Files.exists(nodes)) Files.move(nodes, prev, ATOMIC_MOVE)
+    Files.move(next, nodes, ATOMIC_MOVE)
+    deleteDir(prev)
+  }
+
+  /** Undo an unfinished `swapNodes`: put `_nodes_prev` back when `nodes`
+    * is missing, then drop any leftover staging dir. Rolling back is
+    * always sound: graph markers are written after the swap, so the
+    * interrupted run's buckets are still pending and are merged again
+    * (the node reduce is idempotent), and a stream's `_nodes_prev` holds
+    * every delta. */
+  private[graft] def recoverNodes(baseDir: String): Unit = {
+    val (nodes, next, prev) = nodeDirs(baseDir)
+    if (!Files.exists(nodes) && Files.exists(prev)) Files.move(prev, nodes, ATOMIC_MOVE)
+    deleteDir(next)
+    deleteDir(prev)
+  }
+
+  private def nodeDirs(baseDir: String): (Path, Path, Path) =
+    (Paths.get(baseDir, "nodes"), Paths.get(baseDir, "_nodes_next"), Paths.get(baseDir, "_nodes_prev"))
+
+  /** Write a small file by rename: the bytes go to a `.tmp` sibling
+    * whose name `markerBuckets` ignores, which then replaces `file`, so a
+    * kill leaves the old content or the new, never a truncated file. */
+  private def writeAtomically(file: Path, content: String): Unit = {
+    Files.createDirectories(file.getParent)
+    val tmp = file.resolveSibling(s".${file.getFileName}.tmp")
+    Files.write(tmp, content.getBytes("UTF-8"))
+    Files.move(tmp, file, ATOMIC_MOVE, REPLACE_EXISTING)
+  }
 
   /** url-domain of a url column (north rule: partition by url-domain). */
   def domainOf(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -86,22 +131,13 @@ object Checkpointed {
     * it was built from — a graph commit is valid only while those two
     * ids match, so a bucket whose triples were re-extracted (new _done
     * run_id) is pending again even though an old graph marker exists. */
-  private def commitGraphMarker(baseDir: String, pk: Int, tripleRunId: Long): Unit = {
-    val dir = Paths.get(baseDir, "_done_graph")
-    Files.createDirectories(dir)
-    Files.write(dir.resolve(s"pk=$pk.json"),
-      s"""{"pk":$pk,"run_id":$tripleRunId}""".getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-  }
+  private def commitGraphMarker(baseDir: String, pk: Int, tripleRunId: Long): Unit =
+    writeAtomically(Paths.get(baseDir, "_done_graph", s"pk=$pk.json"),
+      s"""{"pk":$pk,"run_id":$tripleRunId}""")
 
-  private def commitManifest(baseDir: String, m: BucketManifest): Unit = {
-    val dir = Paths.get(baseDir, "_done")
-    Files.createDirectories(dir)
-    val json =
-      s"""{"pk":${m.pk},"n_pages":${m.nPages},"n_triples":${m.nTriples},"run_id":${m.runId}}"""
-    Files.write(dir.resolve(s"pk=${m.pk}.json"), json.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-  }
+  private def commitManifest(baseDir: String, m: BucketManifest): Unit =
+    writeAtomically(Paths.get(baseDir, "_done", s"pk=${m.pk}.json"),
+      s"""{"pk":${m.pk},"n_pages":${m.nPages},"n_triples":${m.nTriples},"run_id":${m.runId}}""")
 
   /** Run (or resume) the triple-extraction stage over `pages` into
     * `baseDir/triples`, bucketed by url-domain. Returns the manifests
@@ -149,14 +185,11 @@ object Checkpointed {
   }
 
   private def writeRunMetrics(baseDir: String, runId: Long, ms: Seq[BucketManifest]): Unit = {
-    val dir = Paths.get(baseDir, "_metrics")
-    Files.createDirectories(dir)
     val json = ms.map(m =>
       s"""{"pk":${m.pk},"n_pages":${m.nPages},"n_triples":${m.nTriples}}""")
       .mkString("[", ",", "]")
-    Files.write(dir.resolve(s"run=$runId.json"),
-      s"""{"run_id":$runId,"buckets":${ms.length},"detail":$json}""".getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    writeAtomically(Paths.get(baseDir, "_metrics", s"run=$runId.json"),
+      s"""{"run_id":$runId,"buckets":${ms.length},"detail":$json}""")
   }
 
   /** Full resumable pipeline: triples (resumable by bucket) → graph
@@ -187,6 +220,7 @@ object Checkpointed {
       nBuckets: Int = 64, runId: Long = 0L): Unit = {
     val spark = pages.sparkSession
     import spark.implicits._
+    recoverNodes(baseDir)
     val fresh = runTriples(pages, baseDir, nBuckets, runId)
     val nodesPath = Paths.get(baseDir, "nodes")
     val hadGraph = Files.exists(nodesPath)
@@ -232,20 +266,14 @@ object Checkpointed {
         if (!hadGraph || reextracted) nodesFresh
         else Pipeline.reduceNodes(
           spark.read.parquet(s"$baseDir/nodes").unionByName(nodesFresh))
-      // materialize BEFORE overwriting the directory being read
-      val tmpNodes = s"$baseDir/_nodes_next"
-      nodesMerged.write.mode("overwrite").parquet(tmpNodes)
-      spark.read.parquet(tmpNodes).write.mode("overwrite").parquet(s"$baseDir/nodes")
-      // drop the staging dir (left in place it triggers spurious
-      // "All paths were ignored" warnings on later reads of baseDir)
-      deleteFlatDir(Paths.get(tmpNodes))
+      swapNodes(baseDir, nodesMerged.write)
 
       // edges: dynamic overwrite replaces ONLY the fresh pk partitions.
       // Pre-delete the pending buckets' partitions first: dynamic
       // overwrite cannot clear a rebuilt bucket that now yields ZERO edge
       // rows, which would otherwise freeze stale edges in place behind a
       // fresh graph marker (review finding r03).
-      if (hadGraph) pending.foreach(pk => deleteFlatDir(Paths.get(baseDir, "edges", s"pk=$pk")))
+      if (hadGraph) pending.foreach(pk => deleteDir(Paths.get(baseDir, "edges", s"pk=$pk")))
       edgesFresh.withColumn("pk", bucketOf(col("url"), nBuckets))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("pk").parquet(s"$baseDir/edges")

@@ -36,7 +36,10 @@ object Eval {
     * union the two sides with flag columns and groupBy the key —
     * row-identical to distinct-each-side + full-outer join (a key in
     * pred gets max(in_pred)=1 else null, same for gold) but one
-    * exchange instead of three (two distincts + the join; guide §2.4). */
+    * exchange instead of three (two distincts + the join; guide §2.4).
+    * Precondition: no key column is null. The join never matches a null
+    * key, but groupBy puts nulls in one group, so a null-keyed row in
+    * both sides would count as a hit here and as a miss there. */
   private[graft] def membershipFlags(predicted: DataFrame, gold: DataFrame,
       keys: Seq[String]): DataFrame =
     predicted.select(keys.map(col) :+ lit(1).as("in_pred") :+

@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.kernel.{JsonParser, JVal}
 import graft.pipeline.DocRed.{DocLabel, DocMention}
 
-/** REAL DocRED fixture ingest (S2 pattern, like WebNlg): the reference
-  * ships `tests/fixtures/docred_sample.json` and its evaluation example
-  * parses it (/root/reference/examples/docred_evaluation.rs:529-540).
-  * Read as test DATA (the id/sents/vertexSet/labels structure is the
-  * public DocRED corpus format).
+/** DocRED-format ingest (S2 pattern, like WebNlg), as the reference's
+  * evaluation example parses its `docred_sample.json`
+  * (examples/docred_evaluation.rs:529-540). The repo's fixture is
+  * repo-authored in the public DocRED corpus format
+  * (id/sents/vertexSet/labels; see fixtures/README).
   *
   * wholetext gives one row per file, so the parse runs EXECUTOR-side and
   * parallelizes per file exactly as a many-file corpus would; a
@@ -18,7 +18,8 @@ object DocRedJson {
   final case class RealDoc(id: String, title: String, n_sents: Int,
       vertexSet: Seq[Seq[DocMention]], labels: Seq[DocLabel])
 
-  val fixturePath = "/root/reference/tests/fixtures/docred_sample.json"
+  /** Relative to the repo root. */
+  val fixturePath = "fixtures/docred_sample.json"
 
   def docs(spark: SparkSession, path: String = fixturePath): DataFrame = {
     import spark.implicits._

@@ -141,6 +141,7 @@ object StreamIngest {
       nBuckets: Int = 16,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     import spark.implicits._
+    Checkpointed.recoverNodes(outDir)
     val reader = spark.readStream
       .schema(implicitly[org.apache.spark.sql.Encoder[Page]].schema)
     // bound files per micro-batch so AvailableNow genuinely exercises
@@ -226,21 +227,13 @@ object StreamIngest {
 
   /** Bound the node-delta count for a long-lived stream: replace all
     * deltas with ONE compacted delta under batch=-1 (streaming batchIds
-    * are non-negative, so it can never collide with a live batch).
-    * Run between AvailableNow catch-up runs, never concurrently with
-    * an active stream. Same staging-swap crash contract as
-    * Checkpointed.runAll's node rewrite: the compacted table is fully
-    * materialized to `_nodes_next` BEFORE the directory it was read
-    * from is overwritten. */
+    * are non-negative, so it can never collide with a live batch),
+    * committed by `Checkpointed.swapNodes`. Run between AvailableNow
+    * catch-up runs, never concurrently with an active stream. */
   def compactNodes(spark: SparkSession, outDir: String): Unit = {
-    val tmp = s"$outDir/_nodes_next"
-    streamedNodes(spark, outDir).withColumn("batch", lit(-1L))
-      .write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static") // replace ALL deltas
-      .partitionBy("batch").parquet(s"$outDir/nodes")
-    Checkpointed.deleteFlatDir(java.nio.file.Paths.get(tmp))
+    Checkpointed.recoverNodes(outDir)
+    Checkpointed.swapNodes(outDir,
+      streamedNodes(spark, outDir).withColumn("batch", lit(-1L)).write.partitionBy("batch"))
   }
 
   /** Streaming CONTENT dedup: pages deduplicated across micro-batches

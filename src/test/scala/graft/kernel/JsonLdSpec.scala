@@ -2,11 +2,13 @@ package graft.kernel
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Goldens from the reference's own fixtures
-  * (/root/reference/tests/fixtures/test_cases.json) and flattener tests
-  * (tests/integration_tests.rs:70-110,
+/** Goldens from the repo's fixture fixtures/test_cases.json (the
+  * reference's test_cases.json format, FIXTURES.md A1) and the
+  * reference's flattener tests (tests/integration_tests.rs:70-110,
   * examples/docred_evaluation.rs:251-327). */
 class JsonLdSpec extends AnyFunSuite {
+
+  private val testCases = "fixtures/test_cases.json"
 
   test("flatten: astronaut_birthdate_1 (test_cases.json:1-17)") {
     val json =
@@ -94,12 +96,11 @@ class JsonLdSpec extends AnyFunSuite {
     assert(JsonLd.flatten("{broken") == Vector.empty)
   }
 
-  test("flatten matches the reference fixture file end-to-end") {
-    // Read the reference's own golden fixture as test DATA (cited:
-    // /root/reference/tests/fixtures/test_cases.json) and check that
-    // flatten(expected_jsonld) == expected_triples for every case.
+  test("flatten matches the fixture file end-to-end") {
+    // flatten(expected_jsonld) == expected_triples for every case of the
+    // fixture
     val raw = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/tests/fixtures/test_cases.json")), "UTF-8")
+      java.nio.file.Paths.get(testCases)), "UTF-8")
     val parsed = JsonParser.parse(raw).toOption.get.asInstanceOf[JVal.JArr]
     parsed.items.foreach { case c: JVal.JObj =>
       val id = c.get("id").collect { case JVal.JStr(s) => s }.get
@@ -204,7 +205,7 @@ class JsonLdSpec extends AnyFunSuite {
 
   test("render/parse is an exact inverse on every fixture document") {
     val raw = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/tests/fixtures/test_cases.json")), "UTF-8")
+      java.nio.file.Paths.get(testCases)), "UTF-8")
     val parsed = JsonParser.parse(raw).toOption.get
     assert(JsonParser.parse(JsonLd.render(parsed)) == Right(parsed))
   }

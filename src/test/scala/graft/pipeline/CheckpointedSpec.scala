@@ -1,14 +1,137 @@
 package graft.pipeline
 
-import graft.SparkTestBase
+import graft.{FailCommit, SparkTestBase}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 class CheckpointedSpec extends SparkTestBase {
 
   private def freshDir(): String = {
     val d = Files.createTempDirectory("graft_ckpt").toString
     d
+  }
+
+  private def copyDir(from: Path, to: Path): Unit = {
+    val s = Files.walk(from)
+    try s.iterator().asScala.toList.foreach(p => Files.copy(p, to.resolve(from.relativize(p))))
+    finally s.close()
+  }
+
+  private def names(dir: Path): Set[String] =
+    if (!Files.exists(dir)) Set.empty
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+
+  // the kill fixture: a build of buckets 0-3, resumed with every page
+  private lazy val killPages = Corpus.pages(spark, 250, 4)
+  private lazy val killKb = Corpus.kb(spark, 300)
+  private lazy val priorBuild: Path = {
+    val d = freshDir()
+    Checkpointed.runAll(killPages.filter(Checkpointed.bucketOf(col("url"), 8) < 4), killKb, d,
+      nBuckets = 8, runId = 1)
+    Paths.get(d)
+  }
+  private lazy val oneShot: Path = {
+    val d = freshDir()
+    Checkpointed.runAll(killPages, killKb, d, nBuckets = 8, runId = 1)
+    Paths.get(d)
+  }
+
+  /** A copy of `priorBuild` in a fresh dir. */
+  private def resumable(): Path = {
+    val d = Paths.get(freshDir(), "build")
+    copyDir(priorBuild, d)
+    d
+  }
+
+  /** Resume `dir` to the end, then check it equals the one-shot build
+    * (row multisets, columns sorted) and that no node staging dir is
+    * left. */
+  private def assertResumesToOneShot(dir: Path): Unit = {
+    Checkpointed.runAll(killPages, killKb, dir.toString, nBuckets = 8, runId = 2)
+    def rows(d: Path, name: String) = {
+      val df = spark.read.parquet(s"$d/$name").drop("pk")
+      df.select(df.columns.sorted.map(col): _*).collect().map(_.toSeq).sortBy(_.toString).toSeq
+    }
+    Seq("triples", "nodes", "edges").foreach(t =>
+      assert(rows(dir, t) == rows(oneShot, t), s"$t differs from the one-shot build"))
+    assert(!names(dir).exists(_.startsWith("_nodes_")), names(dir))
+  }
+
+  test("a resume killed at any Spark write resumes to the one-shot build") {
+    for (target <- Seq("triples", "_nodes_next", "nodes", "edges")) {
+      val dir = resumable()
+      val run = FailCommit.during(spark, target) {
+        Checkpointed.runAll(killPages, killKb, dir.toString, nBuckets = 8, runId = 2)
+      }
+      assertResumesToOneShot(dir)
+      // nodes/ is only ever renamed into place, never written by Spark
+      assert(run.isFailure == (target != "nodes"), s"$target: $run")
+    }
+  }
+
+  test("a resume killed between the node swap's steps resumes to the one-shot build") {
+    // each case is the directory state a kill leaves after the triples
+    // and their manifests are committed
+    def killedAt(nodesState: Path => Unit): Path = {
+      val dir = resumable()
+      Checkpointed.runTriples(killPages, dir.toString, nBuckets = 8, runId = 2)
+      nodesState(dir)
+      dir
+    }
+    // after `nodes` -> `_nodes_prev`, before `_nodes_next` -> `nodes`
+    assertResumesToOneShot(killedAt { d =>
+      Files.move(d.resolve("nodes"), d.resolve("_nodes_prev"))
+      copyDir(oneShot.resolve("nodes"), d.resolve("_nodes_next"))
+    })
+    // after both renames, before `_nodes_prev` is deleted
+    assertResumesToOneShot(killedAt { d =>
+      Files.move(d.resolve("nodes"), d.resolve("_nodes_prev"))
+      copyDir(oneShot.resolve("nodes"), d.resolve("nodes"))
+    })
+    // during the staging write: no `_SUCCESS` yet
+    assertResumesToOneShot(killedAt { d =>
+      copyDir(oneShot.resolve("nodes"), d.resolve("_nodes_next"))
+      Files.delete(d.resolve("_nodes_next").resolve("_SUCCESS"))
+    })
+  }
+
+  test("a cold runAll runs 24 Spark jobs") {
+    val sc = spark.sparkContext
+    val pages = Corpus.pages(spark, 200, 4)
+    val kb = Corpus.kb(spark, 300)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      Checkpointed.runAll(pages, kb, freshDir(), nBuckets = 8, runId = 1)
+      org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 24)
+  }
+
+  test("marker files are replaced by rename: a leftover temp file marks nothing done") {
+    val dir = freshDir()
+    val pages = Corpus.pages(spark, 60, 2)
+    Checkpointed.runAll(pages, Corpus.kb(spark, 300), dir, nBuckets = 4, runId = 1)
+    val subs = Seq("_done", "_done_graph", "_metrics").map(Paths.get(dir, _))
+    def leftovers() = subs.flatMap(names).filterNot(_.matches("""(pk|run)=\d+\.json"""))
+    assert(leftovers().isEmpty)
+    // a kill while writing a bucket's first manifest leaves only the
+    // truncated temp file: the bucket is not done, and the rerun redoes it
+    val victim = Checkpointed.doneBuckets(dir).min
+    Files.delete(Paths.get(dir, "_done", s"pk=$victim.json"))
+    Files.write(Paths.get(dir, "_done", s".pk=$victim.json.tmp"), s"""{"pk":$victim,"n_pa""".getBytes("UTF-8"))
+    assert(!Checkpointed.doneBuckets(dir).contains(victim))
+    assert(Checkpointed.runTriples(pages, dir, nBuckets = 4, runId = 2).map(_.pk) == Seq(victim))
+    assert(leftovers().isEmpty)
   }
 
   test("first run processes all buckets and commits manifests") {

@@ -42,7 +42,7 @@ class DocRedSpec extends SparkTestBase {
     assert(g1.size == 50 * 3) // all three labels map
   }
 
-  test("real DocRED fixture: executor-side parse + denorm over reference data") {
+  test("DocRED fixture: executor-side parse + denorm") {
     val docs = graft.sources.DocRedJson.docs(spark)
     assert(docs.count() == 3, "fixture ships three documents")
     val byId = docs.collect().map(r => r.getString(0) -> r.getInt(2)).toMap

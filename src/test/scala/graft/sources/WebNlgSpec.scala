@@ -3,19 +3,19 @@ package graft.sources
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** WebNLG XML ingest over the reference's own fixture corpus
-  * (/root/reference/tests/fixtures/webnlg-astronaut.xml, read as cited
-  * test DATA). */
+/** WebNLG XML ingest over the repo's fixtures (fixtures/README): the
+  * astronaut file holds 6 entries with 10 mtriples, the airport file 4
+  * entries with 5. */
 class WebNlgSpec extends SparkTestBase {
 
-  private val path = "/root/reference/tests/fixtures/webnlg-astronaut.xml"
+  private val path = graft.SparkEntry.webnlgPath.replace("*", "astronaut")
 
   test("parser: entries carry eid/category/size, mtriples and texts, entities unescaped") {
     val xml = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), "UTF-8")
     val es = WebNlg.parseEntries(xml)
     assert(es.nonEmpty)
-    // first fixture entry golden (webnlg-astronaut.xml:4-9)
+    // first fixture entry golden (webnlg-astronaut.xml:4-18)
     val first = es.head
     assert(first.eid == "Id1" && first.category == "Astronaut" && first.size == 1)
     assert(first.mtriples == Vector("Alan_Bean | almaMater | \"UT Austin, B.S. 1955\""))
@@ -43,28 +43,28 @@ class WebNlgSpec extends SparkTestBase {
     assert(r.getString(2) == "Alan_Bean")
     assert(r.getString(3) == "almaMater")
     assert(r.getString(4) == "UT Austin, B.S. 1955") // quotes stripped
-    assert(g.count() == 72) // the astronaut corpus's full mtriple count
+    assert(g.count() == 10) // the astronaut file's full mtriple count
   }
 
   test("multi-file glob reads both corpora; (eid, category) disambiguates colliding eids") {
     val e = WebNlg.entries(spark, graft.SparkEntry.webnlgPath)
-    assert(e.count() == 72 + 301)
+    assert(e.count() == 6 + 4)
     val cats = e.collect().map(_.category).distinct.sorted
     assert(cats.contains("Astronaut") && cats.contains("Airport"))
     // eids collide across files (both have Id1) but (eid, category) is unique
     import org.apache.spark.sql.functions.{col, countDistinct}
     val d = e.toDF
-    assert(d.select(countDistinct(col("eid"), col("category"))).head.getLong(0) == 373L)
+    assert(d.select(countDistinct(col("eid"), col("category"))).head.getLong(0) == 10L)
   }
 
-  test("reference-data eval: extraction recovers gold triples from lexicalizations") {
+  test("fixture eval: extraction recovers gold triples from lexicalizations") {
     val e = WebNlg.entries(spark, path)
     val ev = WebNlg.evalByCategory(WebNlg.predicted(e), WebNlg.normalizedGold(e))
       .collect()
     assert(ev.nonEmpty)
     val tp = ev.map(_.getAs[Long]("tp")).sum
-    // the rule-based patterns genuinely recover reference gold triples
-    // (birthDate / birthPlace / alumniOf phrasings exist in WebNLG)
+    // the rule-based patterns genuinely recover gold triples
+    // (the fixture has birthDate / birthPlace / alumniOf phrasings)
     assert(tp > 0, s"no true positives against WebNLG gold")
   }
 }

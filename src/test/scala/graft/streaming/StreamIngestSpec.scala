@@ -76,6 +76,46 @@ class StreamIngestSpec extends SparkTestBase {
     } finally releaseRef()
   }
 
+  test("node compaction killed at any step loses no delta") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.Paths
+    val work = Files.createTempDirectory("graft_scompact").toString
+    val pages = Corpus.pages(spark, 60, 2)
+    pages.write.mode("overwrite").parquet(s"$work/pages")
+    val kb = Corpus.kb(spark, nDistractors = 300)
+    StreamIngest.runLinked(spark, s"$work/pages", s"$work/out", s"$work/ckpt", kb,
+      maxFilesPerTrigger = Some(1)).awaitTermination()
+    val out = Paths.get(work, "out")
+    def canon() = StreamIngest.streamedNodes(spark, out.toString)
+      .collect().map(_.toSeq).sortBy(_.toString).toSeq
+    def stagingLeft(): Boolean = {
+      val s = Files.list(out)
+      try s.iterator().asScala.exists(_.getFileName.toString.startsWith("_nodes_"))
+      finally s.close()
+    }
+    val before = canon()
+    assert(before.nonEmpty)
+    assert(spark.read.parquet(s"$out/nodes").select("batch").distinct().count() > 1)
+    // a failed commit of the staging table, or of nodes/ in place
+    for (target <- Seq("_nodes_next", "nodes")) {
+      graft.FailCommit.during(spark, target)(StreamIngest.compactNodes(spark, out.toString))
+      assert(canon() == before, s"commit of $target failed")
+    }
+    // a kill between the swap's two renames leaves only `_nodes_prev`;
+    // the next stream run, and the next compaction, put it back
+    def killedMidSwap(): Unit = Files.move(out.resolve("nodes"), out.resolve("_nodes_prev"))
+    killedMidSwap()
+    StreamIngest.runLinked(spark, s"$work/pages", s"$work/out", s"$work/ckpt", kb)
+      .awaitTermination()
+    assert(canon() == before)
+    assert(!stagingLeft())
+    killedMidSwap()
+    StreamIngest.compactNodes(spark, out.toString)
+    assert(canon() == before)
+    assert(!stagingLeft())
+    assert(spark.read.parquet(s"$out/nodes").select("batch").distinct().count() == 1)
+  }
+
   test("replayed foreachBatch batch is idempotent (at-least-once sink)") {
     import spark.implicits._
     val work = Files.createTempDirectory("graft_replay").toString
