@@ -72,49 +72,39 @@ object SparkEntry {
     }
   }
 
-  /** Writes `make`'s frame under `key` once per JVM and reads it back;
-    * the build's release handle (the surfaceIriReleasable contract)
-    * fires right after the write, so its internal persisted tables never
-    * outlive it. */
-  private[graft] def checkpointedBuild(s: SparkSession, key: String)(
-      make: => (DataFrame, () => Unit)): DataFrame =
+  /** Writes `make`'s frame under `key` once per JVM and reads it back. */
+  private[graft] def checkpointed(s: SparkSession, key: String)(make: => DataFrame): DataFrame =
     s.read.parquet(memoized(key) {
-      val (df, release) = make
       val p = s"$ckDir/$key"
-      try df.write.mode("overwrite").parquet(p) finally release()
+      make.write.mode("overwrite").parquet(p)
       p
     })
 
-  private def checkpointed(s: SparkSession, key: String)(make: => DataFrame): DataFrame =
-    checkpointedBuild(s, key)((make, () => ()))
+  /** Checkpointed surface vocabulary of the corpus (surface,
+    * entity_type, slug): the graph build's one big-table rollup, run
+    * ONCE per JVM for both the link table and the vocabulary→IRI table
+    * below. */
+  def vocabFor(s: SparkSession, dir: String): DataFrame =
+    checkpointed(s, s"vocab_${pagesFor(dir)}")(Pipeline.surfaceRollup(triplesFor(s, dir)))
 
   /** Checkpointed KB link table over the corpus's distinct entity
     * surfaces (surface, uri, link_confidence) — the exact+fuzzy-JW
     * linking stage, run ONCE per JVM and consumed by both the kg_links
-    * query and the vocabulary→IRI build below. The surface set (subj
-    * surfaces ∪ entity objects, distinct) is the same set the graph
-    * build's rollup produces. */
+    * query and the vocabulary→IRI build below. */
   def linksFor(s: SparkSession, dir: String): DataFrame =
-    checkpointed(s, s"links_${pagesFor(dir)}") {
-      val trip = triplesFor(s, dir)
-      val surfaces = trip.select(col("subj_surface").as("surface"))
-        .unionByName(trip.filter(col("obj_is_entity")).select(col("obj").as("surface")))
-        .distinct()
-      Pipeline.linkSurfaces(surfaces, Corpus.kb(s))
-    }
+    checkpointed(s, s"links_${pagesFor(dir)}")(
+      Pipeline.linkSurfaces(vocabFor(s, dir).select(col("surface")), Corpus.kb(s)))
 
-  /** Checkpointed vocabulary→IRI table (the linking+mint stage of the
-    * graph build): kg_nodes_edges, kg_node_props and the edge
-    * checkpoint all consume it, so the surface rollup and the KB link
-    * joins run once per JVM instead of once per consumer (the links
-    * themselves come from the shared linksFor checkpoint). */
+  /** Checkpointed vocabulary→IRI table (the mint stage of the graph
+    * build over the shared vocabulary and link checkpoints):
+    * kg_nodes_edges, kg_node_props and the edge checkpoint all consume
+    * it. */
   def surfaceIriFor(s: SparkSession, dir: String): DataFrame =
-    checkpointedBuild(s, s"surface_iri_${pagesFor(dir)}") {
-      import s.implicits._
-      val (df, _, release) = Pipeline.surfaceIriReleasable(
-        triplesFor(s, dir).as[TripleRow], Corpus.kb(s),
-        precomputedLinks = Some(linksFor(s, dir).select(col("surface"), col("uri"))))
-      (df, release)
+    checkpointed(s, s"surface_iri_${pagesFor(dir)}") {
+      val vocab = vocabFor(s, dir)
+      // tier off the checkpoint's size, as edgesFor does
+      Pipeline.mintIris(vocab, linksFor(s, dir),
+        useBroadcast = vocab.count() <= Pipeline.defaultBroadcastVocabLimit)
     }
 
   /** Checkpointed deduped triples of the synthesized corpus at this sf.
@@ -127,7 +117,7 @@ object SparkEntry {
     * measure, don't assume). */
   def triplesFor(s: SparkSession, dir: String): DataFrame =
     checkpointed(s, s"triples_${pagesFor(dir)}")(
-      Kg.pagesToTriples(Corpus.pages(s, pagesFor(dir))).toDF)
+      Kg.extractTriplesFused(Corpus.pages(s, pagesFor(dir))).toDF)
 
   /** Checkpointed resolved chunks (stage-0 output) at this sf. */
   def resolvedFor(s: SparkSession, dir: String): DataFrame =
@@ -250,9 +240,7 @@ object SparkEntry {
     // alias two dirs with the same sf residue (review r05). The md5
     // suffix of the RAW dir makes the key injective: sanitization maps
     // e.g. /a/b and /a_b to the same string (ADVICE r05)
-    val raw = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(4).map(b => f"${b & 0xff}%02x").mkString
+    val raw = graft.kernel.Toolbox.md5Hex(dir, graft.kernel.Toolbox.newMd5()).take(8)
     checkpointed(s,
       s"dedup_clusters_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}_$raw")(
       ops.Dedup.connectedComponents(
@@ -295,11 +283,12 @@ object SparkEntry {
       // driver-bound micro-batch machinery overlaps the CPU-bound
       // builds below (guide §2.6)
       "stream_parity" -> (() => { streamParityOutFor(s, dir); () }),
-      // critical path: triples → links → vocab IRIs → edges → distinct
-      // edges (independent of the resolved chain — triples use the
-      // fused pass)
+      // critical path: triples → vocabulary → links → vocab IRIs →
+      // edges → distinct edges (independent of the resolved chain —
+      // triples use the fused pass)
       "triples+graph" -> (() => {
         triplesFor(s, dir).count()
+        vocabFor(s, dir).count()
         linksFor(s, dir).count()
         surfaceIriFor(s, dir).count()
         edgesFor(s, dir).count()
@@ -350,14 +339,13 @@ object SparkEntry {
     * pipeline pages→triples→eval, one row of P/R/F1. */
   def entry(spark: SparkSession): DataFrame = {
     val n = 2000L
-    val predicted = Kg.pagesToTriples(Corpus.pages(spark, n)).toDF
+    val predicted = Kg.extractTriplesFused(Corpus.pages(spark, n)).toDF
     Eval.prfDf(predicted, Corpus.gold(spark, n).toDF)
   }
 
   // chunk-count estimate (chunking.rs:89-96 arithmetic) as a UDF — the
   // one query-side kernel function without a Column/Expression form
-  private val chunkCountUdf = udf((n: Long) =>
-    if (n <= 3500L) 1L else (n + 3100L - 1L) / 3100L)
+  private val chunkCountUdf = udf((n: Long) => graft.kernel.Chunker.default.estimateChunkCount(n))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---------------- KG pipeline (rows-only checks) ----------------
@@ -405,22 +393,22 @@ object SparkEntry {
     // component's lexicographic min IRI (size-tiered union-find under
     // the hood — the same machinery as near-dup clustering)
     "kg_components" -> ((s, dir) => {
-      Graph.components(distinctEdgesFor(s, dir), assumeDistinct = true)
+      Graph.components(distinctEdgesFor(s, dir))
     }),
     // 2-hop directed neighborhoods of the 3 smallest source IRIs
     "kg_two_hop" -> ((s, dir) => {
       val ge = distinctEdgesFor(s, dir)
       val seeds = ge.select(col("src_iri").as("iri"))
         .distinct().orderBy(col("iri")).limit(3)
-      Graph.twoHopNeighbors(ge, seeds, assumeDistinct = true)
+      Graph.twoHopNeighbors(ge, seeds)
     }),
     // fixed-iteration PageRank (5 iters, d = 0.85) over entity edges
     "kg_pagerank" -> ((s, dir) => {
-      Graph.pageRank(distinctEdgesFor(s, dir), assumeDistinct = true)
+      Graph.pageRank(distinctEdgesFor(s, dir))
     }),
     // per-node triangle counts over the undirected entity graph
     "kg_triangles" -> ((s, dir) => {
-      Graph.triangleCounts(distinctEdgesFor(s, dir), assumeDistinct = true)
+      Graph.triangleCounts(distinctEdgesFor(s, dir))
     }),
     // SPARQL-style BGP: who works where and was born where (two
     // patterns conjoined on ?person; DataFrame joins, Catalyst plans)

@@ -93,12 +93,12 @@ final class Chunker(val maxChunkSize: Int, val overlapChars: Int) extends Serial
 
   def needsChunking(text: String): Boolean = text.length > maxChunkSize
 
-  /** chunking.rs:89-96. */
-  def estimateChunkCount(text: String): Int =
-    if (!needsChunking(text)) 1
+  /** Chunks a text of `length` chars splits into (chunking.rs:89-96). */
+  def estimateChunkCount(length: Long): Long =
+    if (length <= maxChunkSize) 1L
     else {
       val eff = maxChunkSize - overlapChars
-      (text.length + eff - 1) / eff
+      (length + eff - 1) / eff
     }
 }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.kernel.Toolbox
 
 /** Probabilistic membership sketches — the seen-set primitive a crawl
   * pipeline consults before re-fetching/re-ingesting (Bloom 1970). The
@@ -16,26 +17,16 @@ object Sketch {
     * DuckDB oracle re-derives the identical positions. */
   def bloomPositions(key: Column, mBits: Int, kHashes: Int): Column =
     array((0 until kHashes).map { i =>
-      pmod(conv(substring(md5(concat(lit(s"$i:"), key)), 1, 15), 16, 10)
-        .cast("long"), lit(mBits.toLong))
+      pmod(Dedup.md5Long(concat(lit(s"$i:"), key)), lit(mBits.toLong))
     }: _*)
 
   /** Kernel twin of bloomPositions (equivalence-tested in OpsSpec):
-    * the same md5 prefix parsed as 60 bits — used by the probe scan so
-    * the hot path is one digest per hash, not a plan-side expression
-    * re-evaluated per branch. */
+    * the same 60-bit md5 key — used by the probe scan so the hot path is
+    * one digest per hash, not a plan-side expression re-evaluated per
+    * branch. */
   def bloomPositionsKernel(key: String, mBits: Int, kHashes: Int): Array[Long] = {
-    val out = new Array[Long](kHashes)
-    var i = 0
-    while (i < kHashes) {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$i:$key".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val hex = md.take(8).map(b => f"${b & 0xff}%02x").mkString.take(15)
-      val v = java.lang.Long.parseLong(hex, 16) // 60 bits, never negative
-      out(i) = v % mBits
-      i += 1
-    }
-    out
+    val md = Toolbox.newMd5()
+    Array.tabulate(kHashes)(i => Toolbox.md5Long60(s"$i:$key", md) % mBits)
   }
 
   /** Build the filter from a keyset: ONE distinct aggregation of bit
@@ -100,8 +91,7 @@ object Sketch {
   def cmsHeavyHitters(df: DataFrame, textCol: String, w: Int, d: Int,
       k: Int): DataFrame = {
     def pos(i: Int, token: Column): Column =
-      pmod(conv(substring(md5(concat(lit(s"$i#"), token)), 1, 15), 16, 10)
-        .cast("long"), lit(w.toLong))
+      pmod(Dedup.md5Long(concat(lit(s"$i#"), token)), lit(w.toLong))
     val toks = df.select(explode(split(col(textCol), " ")).as("token"))
       .filter(length(col("token")) > 0)
     // ONE corpus-token aggregation: the counter cell (i, pos) holds the
@@ -149,7 +139,7 @@ object Sketch {
     val m = 1 << b
     val bigW = 60 - b
     val alpha = 0.7213 / (1 + 1.079 / m)
-    val v = conv(substring(md5(col(keyCol)), 1, 15), 16, 10).cast("long")
+    val v = Dedup.md5Long(col(keyCol))
     val v2 = shiftright(v, b)
     val rank = when(v2 === 0, lit(bigW + 1))
       .otherwise(lit(bigW + 1) - length(bin(v2)))

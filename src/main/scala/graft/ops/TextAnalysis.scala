@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.kernel.Toolbox
 
 /** Text-analysis operators for a training-data pipeline, all pure Column
   * expressions (codegen'd, no UDFs) so they run at scan speed and push
@@ -60,7 +61,7 @@ object TextAnalysis {
   /** Document fingerprint: md5 of whitespace-normalized lowercase text —
     * the exact-dedup key. md5 is identical in Spark and DuckDB. */
   def fingerprint(text: Column): Column =
-    md5(regexp_replace(lower(text), "\\s+", " "))
+    md5(Dedup.normalized(text))
 
   /** BPE-ish token count: matches of a GPT-style piece pattern (letter
     * runs, single digits, punctuation singletons) — deliberately
@@ -81,8 +82,7 @@ object TextAnalysis {
     * what content-defined chunking builds on; the full-document fold is
     * the dedup key variant. */
   def rollingHash(text: Column): Column = {
-    val norm = regexp_replace(lower(text), "\\s+", " ")
-    aggregate(transform(split(norm, ""), c => ascii(c).cast("long")),
+    aggregate(transform(split(Dedup.normalized(text), ""), c => ascii(c).cast("long")),
       lit(0L), (acc, c) => (acc * rollB + c) % rollP)
   }
 
@@ -122,8 +122,7 @@ object TextAnalysis {
   def assignSplit(df: DataFrame, idCol: String,
       trainPct: Int = 90, valPct: Int = 5): DataFrame = {
     require(trainPct + valPct < 100, "train+val must leave room for test")
-    val bucket = pmod(conv(substring(md5(col(idCol).cast("string")), 1, 15), 16, 10)
-      .cast("long"), lit(100)).cast("int")
+    val bucket = pmod(Dedup.md5Long(col(idCol).cast("string")), lit(100)).cast("int")
     df.select(col(idCol), bucket.as("bucket"))
       .withColumn("split",
         when(col("bucket") < trainPct, "train")
@@ -399,8 +398,7 @@ object TextAnalysis {
         explode(split(col(textCol), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .select(col(idCol), col("is_target"),
-        pmod(conv(substring(md5(col("word")), 1, 15), 16, 10).cast("long"),
-          lit(buckets.toLong)).as("bucket"))
+        pmod(Dedup.md5Long(col("word")), lit(buckets.toLong)).as("bucket"))
       // materialized once: the model lineage (counts → totals → model)
       // and the scoring join would otherwise each re-run the corpus
       // explode + per-token md5 (branch-recompute rule); the checkpoint
@@ -657,7 +655,7 @@ object TextAnalysis {
     * building block; windows shorter than k hash the whole text).
     * O(n) via the rolling update acc' = (acc - c_out*B^(k-1))*B + c_in. */
   def winnowFingerprint(text: String, k: Int): Long = {
-    val s = text.toLowerCase.replaceAll("\\s+", " ")
+    val s = Toolbox.normalize(text)
     if (s.isEmpty) return 0L
     val n = s.length
     if (n <= k) {
@@ -819,19 +817,13 @@ object TextAnalysis {
     df.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, text0) =>
-          val text = if (text0 == null) "" else text0
-          val toks = text.toLowerCase.replaceAll("\\s+", " ").split(" ", -1)
+        val md = Toolbox.newMd5()
+        it.map { case (id, text) =>
+          val toks = Toolbox.tokens(if (text == null) "" else text)
           val vec = new Array[Long](dim)
           var i = 0
           while (i < toks.length) {
-            md.reset()
-            val d = md.digest(toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            var h = 0L
-            var j = 0
-            while (j < 7) { h = (h << 8) | (d(j) & 0xffL); j += 1 }
-            h = (h << 4) | ((d(7) & 0xf0L) >> 4) // 60-bit md5 prefix
+            val h = Toolbox.md5Long60(toks(i), md)
             val idx = (h % dim).toInt
             vec(idx) += (if ((h / dim) % 2 == 0) 1L else -1L)
             i += 1

@@ -154,7 +154,7 @@ object Checkpointed {
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     if (pageCounts.isEmpty) return Seq.empty
 
-    val trip = Kg.pagesToTriples(todo.drop("pk").as[Page](pages.encoder))
+    val trip = Kg.extractTriplesFused(todo.drop("pk").as[Page](pages.encoder))
       .withColumn("pk", bucketOf(col("url"), nBuckets))
 
     // idempotent per-partition overwrite: a killed run's partial bucket

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.ops.Dedup
 
 /** Graph analytics over the built edge table: degrees, components,
   * k-hop neighbourhoods, PageRank, triangles and basic graph patterns.
@@ -22,22 +23,19 @@ object Graph {
         coalesce(col("in_deg"), lit(0L)).as("in_deg"))
   }
 
-  /** The DISTINCT directed entity-edge view (src_iri, dst_iri) every
-    * multi-hop/iterative query consumes. Callers running SEVERAL graph
-    * queries should materialize this once (parquet/checkpoint) and pass
-    * `assumeDistinct = true` below — re-deduplicating an O(corpus) edge
+  /** The DISTINCT directed entity-edge view (src_iri, dst_iri) that
+    * `components`, `twoHopNeighbors`, `pageRank` and `triangleCounts`
+    * take as input. Callers running several graph queries materialize
+    * it once (parquet/checkpoint): re-deduplicating an O(corpus) edge
     * table per query is a repeated shuffle that dominates at scale. */
   def entityEdges(edges: DataFrame): DataFrame =
     edges.filter(!col("is_literal"))
       .select(col("src_iri"), col("dst_iri")).distinct()
 
-  private def distinctEdges(edges: DataFrame, assumeDistinct: Boolean): DataFrame =
-    if (assumeDistinct) edges.select(col("src_iri"), col("dst_iri"))
-    else entityEdges(edges)
-
-  /** Weakly-connected components of the DISTINCT entity graph:
-    * (iri, component) for every vertex, component = the lexicographic
-    * MIN IRI of its component — a meaning-carrying canonical label.
+  /** Weakly-connected components of the entity graph `e` (`entityEdges`
+    * output): (iri, component) for every vertex, component = the
+    * lexicographic MIN IRI of its component — a meaning-carrying
+    * canonical label.
     *
     * IRIs ride the verified md5→60-bit fingerprint through
     * Dedup.connectedComponents, inheriting its size tier: exact driver
@@ -50,15 +48,13 @@ object Graph {
     * would merge two vertices and surface as an oracle hash mismatch,
     * never silently. Vertex- and edge-sized shuffles throughout; the
     * labeled view is recomputed once per branch (cheap narrow join). */
-  def components(edges: DataFrame, assumeDistinct: Boolean = false): DataFrame = {
-    val e = distinctEdges(edges, assumeDistinct)
-    def fp(c: org.apache.spark.sql.Column) =
-      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-    val cc = graft.ops.Dedup.connectedComponents(
-      e.select(fp(col("src_iri")).as("id1"), fp(col("dst_iri")).as("id2")))
+  def components(e: DataFrame): DataFrame = {
+    val cc = Dedup.connectedComponents(
+      e.select(Dedup.md5Long(col("src_iri")).as("id1"),
+        Dedup.md5Long(col("dst_iri")).as("id2")))
     val nodes = e.select(col("src_iri").as("iri"))
       .unionByName(e.select(col("dst_iri").as("iri"))).distinct()
-    val labeled = nodes.withColumn("id", fp(col("iri")))
+    val labeled = nodes.withColumn("id", Dedup.md5Long(col("iri")))
       .join(cc, Seq("id")).select(col("iri"), col("cluster"))
     labeled.join(
         labeled.groupBy(col("cluster")).agg(min(col("iri")).as("component")),
@@ -66,13 +62,12 @@ object Graph {
       .select(col("iri"), col("component"))
   }
 
-  /** Two-hop directed neighborhoods of the seed IRIs over the DISTINCT
-    * entity-edge graph: (seed, iri, hop) with hop = min(1, 2). Two
+  /** Two-hop directed neighborhoods of the seed IRIs over the entity
+    * graph `e` (`entityEdges` output): (seed, iri, hop) with
+    * hop = min(1, 2). Two
     * equi-joins — the standard k-hop expansion; seeds are few, so the
     * frontier side stays tiny and broadcastable by AQE. */
-  def twoHopNeighbors(edges: DataFrame, seeds: DataFrame,
-      assumeDistinct: Boolean = false): DataFrame = {
-    val e = distinctEdges(edges, assumeDistinct)
+  def twoHopNeighbors(e: DataFrame, seeds: DataFrame): DataFrame = {
     val h1 = seeds.select(col("iri").as("seed"))
       .join(e, col("seed") === col("src_iri"))
       .select(col("seed"), col("dst_iri").as("iri")).distinct()
@@ -85,8 +80,8 @@ object Graph {
       .agg(min(col("hop")).as("hop"))
   }
 
-  /** Fixed-iteration PageRank over the DISTINCT entity-edge graph
-    * (damping d, no dangling redistribution — mass from sink nodes
+  /** Fixed-iteration PageRank over the entity graph `edges`
+    * (`entityEdges` output; damping d, no dangling redistribution — mass from sink nodes
     * decays, the common simplified variant; both the engine and the
     * DuckDB oracle implement exactly this formula):
     *   pr_0 = 1/N;  pr_{i+1}(v) = (1-d)/N + d·Σ_{u→v} pr_i(u)/outdeg(u)
@@ -111,11 +106,11 @@ object Graph {
     * tier's result checkpoint lives as long as the result (see
     * `Bridge.releaseLocalCheckpoint`). */
   def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
-      driverEdgeLimit: Long = 1000000L, assumeDistinct: Boolean = false): DataFrame = {
+      driverEdgeLimit: Long = 1000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = distinctEdges(edges, assumeDistinct)
-    val e = e0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = edges.select(col("src_iri"), col("dst_iri"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nEdges = e.count()
     if (nEdges <= driverEdgeLimit) {
       // driver tier: same formula, exact, one collect of the (near-dup-
@@ -166,8 +161,8 @@ object Graph {
     out
   }
 
-  /** Per-node triangle counts over the UNDIRECTED distinct entity
-    * graph — the clustering signal KG-quality audits use (dense
+  /** Per-node triangle counts over the UNDIRECTED entity graph
+    * `edges` (`entityEdges` output) — the clustering signal KG-quality audits use (dense
     * triangle neighborhoods ≈ coherent entity clusters; triangle-free
     * stars ≈ hub spam). Returns (iri, n_triangles), nodes in ≥1
     * triangle.
@@ -187,11 +182,10 @@ object Graph {
     * Both tiers enumerate each triangle exactly once; the distributed
     * tier's result checkpoint lives as long as the result (see
     * `Bridge.releaseLocalCheckpoint`). */
-  def triangleCounts(edges: DataFrame, driverEdgeLimit: Long = 1000000L,
-      assumeDistinct: Boolean = false): DataFrame = {
+  def triangleCounts(edges: DataFrame, driverEdgeLimit: Long = 1000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val und0 = distinctEdges(edges, assumeDistinct)
+    val und0 = edges
       .select(least(col("src_iri"), col("dst_iri")).as("a"),
         greatest(col("src_iri"), col("dst_iri")).as("b"))
       .filter(col("a") =!= col("b"))

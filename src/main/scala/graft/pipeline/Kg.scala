@@ -182,11 +182,6 @@ object Kg {
     } catch { case _: Exception => Iterator.empty } // O4 row tolerance
   }
 
-  /** Full path: pages → deduped normalized triples (dedup is inline,
-    * see extractTriplesFused). */
-  def pagesToTriples(pages: Dataset[Page]): Dataset[TripleRow] =
-    extractTriplesFused(pages)
-
   /** Per-document entity consolidation (A1-A4): first-wins entity table
     * via min_by over (chunk_id, start) — replaces the reference's
     * sequential KnowledgeBuffer (O3 re-architecture, SURVEY.md §7.3#2). */

@@ -179,8 +179,7 @@ object Pipeline {
     * inherits it through `mintIris`' broadcast link join (on the
     * broadcast vocabulary tier). */
   def surfaceIriReleasable(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
-      broadcastVocabLimit: Long = defaultBroadcastVocabLimit,
-      precomputedLinks: Option[DataFrame] = None): (DataFrame, Long, () => Unit) = {
+      broadcastVocabLimit: Long = defaultBroadcastVocabLimit): (DataFrame, Long, () => Unit) = {
     val surfaceInfo = surfaceRollup(trip.toDF)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val vocabN = surfaceInfo.count() // forces the cache; sizes the tier
@@ -189,13 +188,7 @@ object Pipeline {
     // Linking + IRI minting, all vocabulary-sized. links has unique
     // surface keys (barring KB homonym labels, see linkSurfaces), so the
     // non-broadcast join needs no salt (no skew).
-    // A caller that has ALREADY linked this corpus's surface vocabulary
-    // (e.g. a checkpointed link table the kg_links query also reads)
-    // passes it in and linking runs once per corpus, not once per
-    // consumer — the surface set here (subj surfaces ∪ entity objects)
-    // is by construction the set linkSurfaces was fed.
-    val links = precomputedLinks.getOrElse(
-      linkSurfaces(surfaceInfo.select(col("surface")), kb, useBroadcast))
+    val links = linkSurfaces(surfaceInfo.select(col("surface")), kb, useBroadcast)
     val surfaceIri = mintIris(surfaceInfo, links, useBroadcast)
       .persist(StorageLevel.MEMORY_AND_DISK)
     surfaceIri.count() // force once; both join-back tiers reuse the cache

@@ -17,11 +17,6 @@ import graft.pipeline.{Checkpointed, Kg, Page, TripleRow}
   */
 object StreamIngest {
 
-  /** The streaming-safe transform: narrow only (no global dedup —
-    * a streaming groupBy would need full state; dedup is per-batch). */
-  def transform(pages: Dataset[Page]): Dataset[TripleRow] =
-    Kg.extractTriplesFused(pages)
-
   /** File-source ingestion: watch `pagesDir` for parquet page files,
     * extract, write bucketed triples under `outDir/triples`.
     * Trigger.AvailableNow processes the backlog then stops.
@@ -41,7 +36,7 @@ object StreamIngest {
       .schema(implicitly[org.apache.spark.sql.Encoder[Page]].schema)
       .parquet(pagesDir)
       .as[Page]
-    transform(pages).writeStream
+    Kg.extractTriplesFused(pages).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[TripleRow], batchId: Long) =>
@@ -151,7 +146,7 @@ object StreamIngest {
       .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
       .parquet(pagesDir)
       .as[Page]
-    transform(pages).writeStream
+    Kg.extractTriplesFused(pages).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[TripleRow], batchId: Long) =>
@@ -252,18 +247,16 @@ object StreamIngest {
   final case class DomainStats(domain: String, n_triples: Long, n_batches: Long)
 
   /** Custom keyed streaming state (flatMapGroupsWithState): cumulative
-    * per-url-domain triple counts, one updated row emitted per domain
-    * per micro-batch — the monitoring analogue of the reference's
-    * per-run metrics, maintained incrementally instead of recomputed. */
+    * per-url-domain triple counts (`Checkpointed.domainOf`, the
+    * bucketing domain), one updated row emitted per domain per
+    * micro-batch — the monitoring analogue of the reference's per-run
+    * metrics, maintained incrementally instead of recomputed. */
   def domainStats(triples: Dataset[TripleRow]): Dataset[DomainStats] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = triples.sparkSession
     import spark.implicits._
-    def domainOf(url: String): String = {
-      val m = "^https?://([^/]+)".r.findFirstMatchIn(url)
-      m.map(_.group(1)).getOrElse("")
-    }
-    triples.groupByKey(t => domainOf(t.url))
+    triples.select(Checkpointed.domainOf(col("url"))).as[String]
+      .groupByKey(identity)
       .flatMapGroupsWithState[(Long, Long), DomainStats](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (domain, it, state: GroupState[(Long, Long)]) =>

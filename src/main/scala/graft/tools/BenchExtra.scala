@@ -117,7 +117,7 @@ object BenchExtra {
             resolved.as[graft.pipeline.ResolvedRow])).toDF)
         }
         timed("warmup: fused pages->triples (noop)") {
-          noop(graft.pipeline.Kg.pagesToTriples(
+          noop(graft.pipeline.Kg.extractTriplesFused(
             graft.pipeline.Corpus.pages(spark, n)).toDF)
         }
       case "queries" =>

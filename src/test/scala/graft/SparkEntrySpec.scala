@@ -12,16 +12,16 @@ class SparkEntrySpec extends SparkTestBase {
     def build() = {
       builds += 1
       if (builds == 1) throw new IllegalStateException("transient build failure")
-      (spark.range(3).toDF("id"), () => ())
+      spark.range(3).toDF("id")
     }
     // the caller sees the build's own exception, not the FutureTask wrapper
-    val e = intercept[IllegalStateException](SparkEntry.checkpointedBuild(spark, key)(build()))
+    val e = intercept[IllegalStateException](SparkEntry.checkpointed(spark, key)(build()))
     assert(e.getMessage == "transient build failure")
-    val df = SparkEntry.checkpointedBuild(spark, key)(build())
+    val df = SparkEntry.checkpointed(spark, key)(build())
     assert(df.count() == 3L)
     assert(builds == 2)
     // a successful build IS memoized
-    SparkEntry.checkpointedBuild(spark, key)(build())
+    SparkEntry.checkpointed(spark, key)(build())
     assert(builds == 2)
   }
 

@@ -82,9 +82,9 @@ class KernelSpec extends AnyFunSuite {
     val c = new Chunker(100, 20)
     assert(!c.needsChunking("Short text"))
     assert(c.needsChunking("x" * 200))
-    assert(c.estimateChunkCount("Short") == 1)
-    assert(c.estimateChunkCount("x" * 100) == 1)
-    assert(c.estimateChunkCount("x" * 200) == 3)
+    assert(c.estimateChunkCount("Short".length) == 1)
+    assert(c.estimateChunkCount(100) == 1)
+    assert(c.estimateChunkCount(200) == 3)
   }
 
   // --- coref.rs:545-606 ---

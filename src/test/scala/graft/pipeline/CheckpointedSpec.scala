@@ -59,6 +59,17 @@ class CheckpointedSpec extends SparkTestBase {
     Seq("triples", "nodes", "edges").foreach(t =>
       assert(rows(dir, t) == rows(oneShot, t), s"$t differs from the one-shot build"))
     assert(!names(dir).exists(_.startsWith("_nodes_")), names(dir))
+    assert(Checkpointed.graphDoneBuckets(dir.toString) == Checkpointed.doneBuckets(dir.toString))
+  }
+
+  /** A copy of `priorBuild` resumed to the end, and the buckets the
+    * resume added. */
+  private def resumedBuild(): (Path, Seq[Int]) = {
+    val dir = resumable()
+    Checkpointed.runAll(killPages, killKb, dir.toString, nBuckets = 8, runId = 2)
+    val added = Checkpointed.doneBuckets(dir.toString) -- Checkpointed.doneBuckets(priorBuild.toString)
+    assert(added.size >= 2, added)
+    (dir, added.toSeq.sorted)
   }
 
   test("a resume killed at any Spark write resumes to the one-shot build") {
@@ -97,6 +108,38 @@ class CheckpointedSpec extends SparkTestBase {
       copyDir(oneShot.resolve("nodes"), d.resolve("_nodes_next"))
       Files.delete(d.resolve("_nodes_next").resolve("_SUCCESS"))
     })
+  }
+
+  test("a resume killed between its bucket manifests resumes to the one-shot build") {
+    // the manifests are committed in pk order after the triples write:
+    // the kill leaves every resumed bucket's triples but only the first
+    // manifest, and no run metrics
+    val dir = resumable()
+    val resumed = Checkpointed.runTriples(killPages, dir.toString, nBuckets = 8, runId = 2).map(_.pk)
+    assert(resumed.size >= 2, resumed)
+    resumed.tail.foreach(pk => Files.delete(dir.resolve("_done").resolve(s"pk=$pk.json")))
+    Files.delete(dir.resolve("_metrics").resolve("run=2.json"))
+    assertResumesToOneShot(dir)
+  }
+
+  test("a resume killed while deleting the pending edge partitions resumes to the one-shot build") {
+    // a rerun of a resume that wrote its edges but no graph markers
+    // deletes the pending buckets' edge partitions before rewriting
+    // them; the kill lands after the first deletes
+    val (dir, resumed) = resumedBuild()
+    resumed.foreach(pk => Files.delete(dir.resolve("_done_graph").resolve(s"pk=$pk.json")))
+    val edgeDirs = resumed.map(pk => dir.resolve("edges").resolve(s"pk=$pk")).filter(Files.exists(_))
+    assert(edgeDirs.size >= 2, edgeDirs)
+    edgeDirs.take(2).foreach(Checkpointed.deleteDir)
+    assertResumesToOneShot(dir)
+  }
+
+  test("a resume killed between its graph markers resumes to the one-shot build") {
+    // graph markers are committed last, in pk order: the kill leaves
+    // the first resumed bucket's marker only
+    val (dir, resumed) = resumedBuild()
+    resumed.tail.foreach(pk => Files.delete(dir.resolve("_done_graph").resolve(s"pk=$pk.json")))
+    assertResumesToOneShot(dir)
   }
 
   test("a cold runAll runs 24 Spark jobs") {
@@ -142,7 +185,7 @@ class CheckpointedSpec extends SparkTestBase {
     assert(Checkpointed.doneBuckets(dir) == ms.map(_.pk).toSet)
     val total = spark.read.parquet(s"$dir/triples").count()
     assert(total == ms.map(_.nTriples).sum)
-    assert(total == Kg.pagesToTriples(pages).count())
+    assert(total == Kg.extractTriplesFused(pages).count())
   }
 
   test("resume skips completed buckets (their files are NOT rewritten)") {
@@ -337,7 +380,7 @@ class CheckpointedSpec extends SparkTestBase {
     } finally release()
     // and the rebuild actually removed something (the scenario is real):
     // bucket[victim] of pagesA had triples that pagesB lacks
-    val aCount = Kg.pagesToTriples(pagesA)
+    val aCount = Kg.extractTriplesFused(pagesA)
       .withColumn("pk", Checkpointed.bucketOf(col("url"), 8))
       .filter(col("pk") === victim).count()
     val bCount = trip.toDF.withColumn("pk", Checkpointed.bucketOf(col("url"), 8))
@@ -373,7 +416,7 @@ class CheckpointedSpec extends SparkTestBase {
       Checkpointed.runAll(Corpus.pages(spark, 60, 2), Corpus.kb(spark, 300), dir,
         nBuckets = 4, runId = 1)
       assert(spark.conf.get(key) == "static", "runAll changed the caller's session")
-      val batch = Kg.pagesToTriples(Corpus.pages(spark, 40, 2))
+      val batch = Kg.extractTriplesFused(Corpus.pages(spark, 40, 2))
       graft.streaming.StreamIngest.writeBatch(batch, 1L, s"$dir/stream", nBuckets = 4)
       graft.streaming.StreamIngest.writeBatch(batch, 2L, s"$dir/stream", nBuckets = 4)
       assert(spark.conf.get(key) == "static", "writeBatch changed the caller's session")

@@ -21,7 +21,7 @@ class GraphOpsSpec extends SparkTestBase {
   test("components: min-IRI labels; direction ignored; singleton self-loop") {
     // two components: {a,b,c,d} (mixed directions) and {x,y}; z self-loop
     val e = edges(Seq(("b", "a"), ("b", "c"), ("d", "c"), ("x", "y"), ("z", "z")))
-    val got = Graph.components(e).collect()
+    val got = Graph.components(Graph.entityEdges(e)).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",
       "x" -> "x", "y" -> "x", "z" -> "z"), got)
@@ -29,13 +29,12 @@ class GraphOpsSpec extends SparkTestBase {
 
   test("components: driver tier == distributed tier (size-tier identity)") {
     val e = edges(Seq(("b", "a"), ("b", "c"), ("d", "c"), ("x", "y")))
-    val driver = Graph.components(e).collect()
+    val driver = Graph.components(Graph.entityEdges(e)).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     // force the distributed min-label tier through the same wrapper by
     // dropping the pair limit to zero
-    def fp(c: org.apache.spark.sql.Column) =
-      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-    val ed = e.select(col("src_iri"), col("dst_iri"))
+    def fp(c: org.apache.spark.sql.Column) = graft.ops.Dedup.md5Long(c)
+    val ed = Graph.entityEdges(e)
     val cc = graft.ops.Dedup.connectedComponents(
       ed.select(fp(col("src_iri")).as("id1"), fp(col("dst_iri")).as("id2")),
       driverPairLimit = 0L)
@@ -55,7 +54,7 @@ class GraphOpsSpec extends SparkTestBase {
     import spark.implicits._
     val e = edges(Seq(("a", "b"), ("b", "c"), ("a", "c"), ("c", "d")))
     val seeds = Seq("a").toDF("iri")
-    val got = Graph.twoHopNeighbors(e, seeds).collect()
+    val got = Graph.twoHopNeighbors(Graph.entityEdges(e), seeds).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toMap
     // c is reachable at hop 1 (a->c) AND hop 2 (a->b->c): min = 1
     assert(got == Map(("a", "b") -> 1, ("a", "c") -> 1, ("a", "d") -> 2))
@@ -117,12 +116,12 @@ class GraphOpsSpec extends SparkTestBase {
   test("pageRank: sink-heavy node ranks highest; deterministic re-run") {
     // star into "hub": everyone links to hub, hub links to one spoke
     val e = edges(Seq(("s1", "hub"), ("s2", "hub"), ("s3", "hub"), ("hub", "s1")))
-    val pr = Graph.pageRank(e).collect()
+    val pr = Graph.pageRank(Graph.entityEdges(e)).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(pr("hub") > pr("s1") && pr("s1") > pr("s2"))
     assert(pr("s2") == pr("s3")) // symmetric spokes tie exactly
     assert(pr.values.forall(v => v > 0 && v < 1))
-    val again = Graph.pageRank(e).collect()
+    val again = Graph.pageRank(Graph.entityEdges(e)).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(again == pr)
   }
@@ -134,7 +133,7 @@ class GraphOpsSpec extends SparkTestBase {
       ("d", "a"), ("b", "d"),
       // plus a triangle-free star around z
       ("z", "s1"), ("z", "s2"), ("z", "s3")))
-    val got = Graph.triangleCounts(e).collect()
+    val got = Graph.triangleCounts(Graph.entityEdges(e)).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("a" -> 2L, "b" -> 2L, "c" -> 1L, "d" -> 1L), got.toString)
   }
@@ -148,10 +147,10 @@ class GraphOpsSpec extends SparkTestBase {
     val k4 = Seq(("k1", "k2"), ("k1", "k3"), ("k1", "k4"),
       ("k2", "k3"), ("k2", "k4"), ("k3", "k4"))
     val e = edges(hubEdges ++ spokeRing ++ k4)
-    val driver = Graph.triangleCounts(e).collect()
+    val driver = Graph.triangleCounts(Graph.entityEdges(e)).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // driverEdgeLimit = 0 forces the distributed (degree, iri)-ordered plan
-    val dist = Graph.triangleCounts(e, driverEdgeLimit = 0L).collect()
+    val dist = Graph.triangleCounts(Graph.entityEdges(e), driverEdgeLimit = 0L).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(driver == dist, s"driver=$driver dist=$dist")
     // spot-check exact counts: hub sits in all 12 ring triangles;
@@ -163,10 +162,10 @@ class GraphOpsSpec extends SparkTestBase {
     // mixed topology: hub, chain, cycle, dangling sink
     val e = edges(Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"),
       ("d", "a"), ("d", "b"), ("c", "e"), ("e", "f")))
-    val driver = Graph.pageRank(e).collect()
+    val driver = Graph.pageRank(Graph.entityEdges(e)).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     // driverEdgeLimit = 0 forces the distributed chained-shuffle plan
-    val dist = Graph.pageRank(e, driverEdgeLimit = 0L).collect()
+    val dist = Graph.pageRank(Graph.entityEdges(e), driverEdgeLimit = 0L).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(driver == dist, s"driver=$driver dist=$dist")
   }

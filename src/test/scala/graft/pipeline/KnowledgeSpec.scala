@@ -60,7 +60,7 @@ class KnowledgeSpec extends SparkTestBase {
   }
 
   test("A3 props exposed on the node table via nodePropsFromVocab") {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 80, 4))
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 80, 4))
     val (nodes, _, releaseGraph) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 200))
     // kg_node_props' shape: props keyed on the build's vocabulary table
     val (surfaceIri, _, releaseVocab) =

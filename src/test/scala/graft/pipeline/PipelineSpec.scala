@@ -27,7 +27,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("pipeline triples match gold at P/R >= 0.95 (target 1.0)") {
     val pages = Corpus.pages(spark, N, 8)
-    val predicted = Kg.pagesToTriples(pages).toDF
+    val predicted = Kg.extractTriplesFused(pages).toDF
     val gold = Corpus.gold(spark, N, 8)
     val m = Eval.prf(predicted, gold)
     info(s"tp=${m.tp} fp=${m.fp} fn=${m.fn} p=${m.precision} r=${m.recall} f1=${m.f1}")
@@ -41,13 +41,13 @@ class PipelineSpec extends SparkTestBase {
     val pages = Corpus.pages(spark, N, 8)
     val nonEnUrls = pages.filter(_.lang != "en").map(_.url).collect().toSet
     assert(nonEnUrls.nonEmpty) // ~5% of corpus
-    val t = Kg.pagesToTriples(pages)
+    val t = Kg.extractTriplesFused(pages)
     assert(t.filter(r => nonEnUrls.contains(r.url)).count() == 0L)
   }
 
   test("linking covers most triple subjects with KB uris; rest minted deterministically") {
     import org.apache.spark.sql.functions._
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 200, 4))
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 200, 4))
     val (nodes, edges, release) =
       Pipeline.graphFromTriples(trip, Corpus.kb(spark, nDistractors = 500))
     try {
@@ -123,7 +123,7 @@ class PipelineSpec extends SparkTestBase {
   test("O6 span provenance: every triple's span slices its sentence out of the resolved chunk") {
     import spark.implicits._
     val pages = Corpus.pages(spark, 150, 4)
-    val trip = Kg.pagesToTriples(pages).collect()
+    val trip = Kg.extractTriplesFused(pages).collect()
     assert(trip.nonEmpty)
     // provenance columns non-null/meaningful for every rule-based triple
     assert(trip.forall(t => t.method == "rule-based" &&
@@ -157,7 +157,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("JSON-LD emission: every document flattens back to exactly its triples") {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4))
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 100, 4))
     val docs = Pipeline.jsonLdDocuments(trip).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     val want = trip.collect().groupBy(_.url)
@@ -180,7 +180,7 @@ class PipelineSpec extends SparkTestBase {
     // via coref resolution on ~half the org pages)
     val gold = Corpus.gold(spark, N, 8).filter(_.pred == "foundedbi")
     assert(gold.count() > 0)
-    val got = Kg.pagesToTriples(pages).filter(_.pred == "foundedbi")
+    val got = Kg.extractTriplesFused(pages).filter(_.pred == "foundedbi")
     assert(got.count() >= gold.count() * 95 / 100)
   }
 }

@@ -27,7 +27,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("KB linking joins are broadcast, never shuffled large-side or cartesian") {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4))
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 100, 4))
     val (_, edges, release) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 500))
     val plan = try executedPlan(edges) finally release()
     assert(plan.contains("BroadcastHashJoin"), "edges join-back should broadcast")
@@ -44,7 +44,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("pages→triples extraction is completely shuffle-free (dedup is in-row)") {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 50, 2))
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 50, 2))
     val plan = trip.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), "extraction must not shuffle:\n" + plan.take(1000))
   }
@@ -72,7 +72,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("vocabulary tables are cached at one partition per core; rollup still combines map-side") {
     withShufflePartitions(128) {
       val want = math.min(spark.sparkContext.defaultParallelism, 128)
-      val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4))
+      val trip = Kg.extractTriplesFused(Corpus.pages(spark, 100, 4))
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
       val (_, _, release) = Pipeline.surfaceIriReleasable(trip, Corpus.kb(spark, 500))
@@ -99,7 +99,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("graph rows do not depend on spark.sql.shuffle.partitions") {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 120, 4))
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 120, 4))
     val kb = Corpus.kb(spark, 500)
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(df.columns.map(col).toSeq: _*).collect().map(_.toSeq).toSeq
@@ -117,7 +117,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("forced large-vocab tier: join-back shuffles with salt, no vocab broadcast") {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 100, 4))
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 100, 4))
     val (_, edges, release) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 500),
       broadcastVocabLimit = 0L) // force the open-vocabulary path
     val plan = try executedPlan(edges) finally release()
@@ -129,7 +129,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("size-tiered join-back: both tiers produce identical edges") {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 120, 4))
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 120, 4))
     val kb = Corpus.kb(spark, 500)
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("url", "src_iri", "pred", "dst_iri", "obj_literal")
@@ -145,7 +145,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("entityProps: map-side partial aggregate, single exchange") {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 50, 2)).toDF
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 50, 2)).toDF
     val plan = executedPlan(Kg.entityProps(trip))
     assert("Exchange".r.findAllIn(plan.replace("BroadcastExchange", "")).length == 1,
       "A3 last-write rollup should shuffle exactly once:\n" + plan.take(800))
@@ -155,7 +155,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("jsonLdDocuments: exactly one shuffle (the url group), then per-group assembly") {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 50, 2))
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 50, 2))
     val plan = executedPlan(Pipeline.jsonLdDocuments(trip))
     assert("Exchange".r.findAllIn(plan).length == 1, plan.take(800))
     assert(plan.contains("MapGroups"), plan.take(800))
@@ -174,7 +174,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   /** The distinct entity surfaces of `nPages` corpus pages (the set the
     * graph build links). */
   private def corpusSurfaces(nPages: Int): org.apache.spark.sql.DataFrame = {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, nPages, 4)).toDF
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, nPages, 4)).toDF
     trip.select(col("subj_surface").as("surface"))
       .unionByName(trip.filter(col("obj_is_entity")).select(col("obj").as("surface")))
       .distinct()
@@ -251,7 +251,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("tiered linking: both vocabulary tiers give identical links and graphs") {
-    val trip = Kg.pagesToTriples(Corpus.pages(spark, 120, 4))
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 120, 4))
     val kb = Corpus.kb(spark, 500)
     val surfaces = trip.toDF.select(col("subj_surface").as("surface"))
       .unionByName(trip.toDF.filter(col("obj_is_entity")).select(col("obj").as("surface")))

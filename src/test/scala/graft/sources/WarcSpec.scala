@@ -46,8 +46,8 @@ class WarcSpec extends SparkTestBase {
       .map { case (url, ts, html, lang) =>
         graft.pipeline.Page(url, ts, html, graft.kernel.HtmlText.extract(html), lang)
       }
-    val a = Kg.pagesToTriples(restored).collect().map(_.toString).sorted.toSeq
-    val b = Kg.pagesToTriples(pages).collect().map(_.toString).sorted.toSeq
+    val a = Kg.extractTriplesFused(restored).collect().map(_.toString).sorted.toSeq
+    val b = Kg.extractTriplesFused(pages).collect().map(_.toString).sorted.toSeq
     assert(a == b)
   }
 }

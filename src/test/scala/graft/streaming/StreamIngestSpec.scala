@@ -23,7 +23,7 @@ class StreamIngestSpec extends SparkTestBase {
 
     val streamed = spark.read.parquet(s"$work/out/triples")
       .select("url", "subj", "pred", "obj").distinct()
-    val batch = Kg.pagesToTriples(pages).toDF.select("url", "subj", "pred", "obj")
+    val batch = Kg.extractTriplesFused(pages).toDF.select("url", "subj", "pred", "obj")
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
     assert(batch.count() > 0)
@@ -54,7 +54,7 @@ class StreamIngestSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"leaked caches: ${leaked.map(_.name).mkString(", ")}")
     val streamed = spark.read.parquet(s"$work/out/edges").drop("batch", "pk")
     val (batchNodes, batchEdges, releaseRef) = graft.pipeline.Pipeline
-      .graphFromTriples(Kg.pagesToTriples(pages), kb)
+      .graphFromTriples(Kg.extractTriplesFused(pages), kb)
     // IRI minting/linking is a pure function of (surface, KB), so the
     // per-batch builds must reproduce the all-at-once edges exactly
     def canon(df: org.apache.spark.sql.DataFrame) =
@@ -120,7 +120,7 @@ class StreamIngestSpec extends SparkTestBase {
     import spark.implicits._
     val work = Files.createTempDirectory("graft_replay").toString
     val pages = Corpus.pages(spark, 60, 2)
-    val batch = Kg.pagesToTriples(pages)
+    val batch = Kg.extractTriplesFused(pages)
     StreamIngest.writeBatch(batch, 7L, s"$work/out", nBuckets = 4)
     val once = spark.read.parquet(s"$work/out/triples").count()
     // simulate the at-least-once replay: same batchId written again
@@ -141,7 +141,7 @@ class StreamIngestSpec extends SparkTestBase {
     q.awaitTermination()
     val streamed = spark.read.parquet(s"$work/out/triples")
       .select("url", "subj", "pred", "obj")
-    val expected = Kg.pagesToTriples(pages).toDF.select("url", "subj", "pred", "obj")
+    val expected = Kg.extractTriplesFused(pages).toDF.select("url", "subj", "pred", "obj")
     // no duplicates survived; content == the batch path exactly
     assert(streamed.count() == streamed.distinct().count())
     assert(streamed.exceptAll(expected).count() == 0)
@@ -190,7 +190,7 @@ class StreamIngestSpec extends SparkTestBase {
       .schema(implicitly[org.apache.spark.sql.Encoder[graft.pipeline.Page]].schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$work/pages").as[graft.pipeline.Page]
-    val q = StreamIngest.domainStats(StreamIngest.transform(stream))
+    val q = StreamIngest.domainStats(Kg.extractTriplesFused(stream))
       .writeStream
       .option("checkpointLocation", s"$work/ckpt")
       .trigger(Trigger.AvailableNow())
@@ -211,7 +211,7 @@ class StreamIngestSpec extends SparkTestBase {
     }
     // final totals equal the batch-path per-domain counts doubled (two drops)
     val finalTotals = stats.groupBy(_._1).map { case (d, rows) => d -> rows.map(_._2).max }
-    val expected = Kg.pagesToTriples(pages).toDF
+    val expected = Kg.extractTriplesFused(pages).toDF
       .withColumn("domain", regexp_extract(col("url"), "^https?://([^/]+)", 1))
       .groupBy("domain").count().collect()
       .map(r => r.getString(0) -> r.getLong(1) * 2).toMap
