@@ -41,10 +41,11 @@ object SparkEntry {
   // JVM-unique temp dir; the rest read parquet. Results are identical
   // to recomputation (the kernel is deterministic and parquet
   // round-trips exactly); the JVM-unique token means a stale checkpoint
-  // from an older build can never leak in.
+  // from an older build can never leak in. Every scratch dir of this
+  // object lives under it, and it is deleted once, at JVM exit.
   private lazy val ckDir: String = {
     val p = java.nio.file.Files.createTempDirectory("graft_entry_ck")
-    p.toFile.deleteOnExit()
+    sys.addShutdownHook(Checkpointed.deleteDir(p))
     p.toString
   }
   // Per-KEY memo: a FutureTask per key means concurrent callers of the
@@ -204,8 +205,7 @@ object SparkEntry {
     * parquet output IS the checkpoint. Returns the run's out dir. */
   private def streamParityOutFor(s: SparkSession, dir: String): String =
     memoized(s"stream_parity:${pagesFor(dir)}") {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_stream_parity").toString
+      val base = s"$ckDir/stream_parity_${pagesFor(dir)}"
       // the slice is "page id % 5 == 0" and the page is a pure
       // function of its id, so generate ONLY those ids (range with
       // step 5) instead of synthesizing the full corpus and filtering
@@ -566,8 +566,7 @@ object SparkEntry {
     "q_dedup_index_probe" -> ((s, dir) => {
       checkpointed(s, s"dedup_index_probe_${pagesFor(dir)}") {
         val d = t(s, dir, "documents")
-        val idxDir = java.nio.file.Files
-          .createTempDirectory("graft_lshidx").toString + "/idx"
+        val idxDir = s"$ckDir/lshidx_${pagesFor(dir)}"
         ops.Dedup.lshIndexWrite(d.filter(col("doc_id") % 2 === 0), "doc_id", "text", idxDir)
         val (cross, _, _) = ops.Dedup.lshIndexProbe(
           d.filter(col("doc_id") % 2 === 1), "doc_id", "text", idxDir)
@@ -1074,8 +1073,7 @@ object SparkEntry {
     "kg_warc_ingest" -> ((s, dir) => {
       checkpointed(s, s"warc_ingest_${pagesFor(dir)}") {
         import s.implicits._
-        val warcDir = java.nio.file.Files
-          .createTempDirectory("graft_warc").toString + "/warc"
+        val warcDir = s"$ckDir/warc_${pagesFor(dir)}"
         sources.Warc.writeWarcGz(Corpus.pages(s, pagesFor(dir)), warcDir)
         sources.Warc.readPages(s, warcDir)
           .select(col("url"), col("html"))

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrameWriter, Dataset, Row}
+import org.apache.spark.sql.{DataFrameWriter, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.AccumulatorV2
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import scala.jdk.CollectionConverters._
@@ -139,23 +140,42 @@ object Checkpointed {
     writeAtomically(Paths.get(baseDir, "_done", s"pk=${m.pk}.json"),
       s"""{"pk":${m.pk},"n_pages":${m.nPages},"n_triples":${m.nTriples},"run_id":${m.runId}}""")
 
+  /** Per-bucket sums, added up in the tasks that write the buckets. */
+  private final class SumByBucket extends AccumulatorV2[(Int, Long), Map[Int, Long]] {
+    private var sums = Map.empty[Int, Long]
+    def isZero: Boolean = sums.isEmpty
+    def copy(): SumByBucket = { val c = new SumByBucket; c.sums = sums; c }
+    def reset(): Unit = sums = Map.empty
+    def add(v: (Int, Long)): Unit = sums = sums.updated(v._1, sums.getOrElse(v._1, 0L) + v._2)
+    def merge(other: AccumulatorV2[(Int, Long), Map[Int, Long]]): Unit = other.value.foreach(add)
+    def value: Map[Int, Long] = sums
+  }
+
   /** Run (or resume) the triple-extraction stage over `pages` into
     * `baseDir/triples`, bucketed by url-domain. Returns the manifests
     * committed by THIS run (empty when everything was already done). */
   def runTriples(pages: Dataset[Page], baseDir: String, nBuckets: Int = 64,
       runId: Long = 0L): Seq[BucketManifest] = {
     val spark = pages.sparkSession
+    import spark.implicits._
     val done = doneBuckets(baseDir)
-    val withPk = pages.withColumn("pk", bucketOf(col("url"), nBuckets))
-    val todo = withPk.filter(!col("pk").isin(done.toSeq: _*))
+    val todo = pages.select(struct(pages.columns.map(col): _*), bucketOf(col("url"), nBuckets))
+      .toDF("_1", "_2").filter(!col("_2").isin(done.toSeq: _*))
+      .as[(Page, Int)](Encoders.tuple(pages.encoder, Encoders.scalaInt))
 
-    // lineage inputs: pages per remaining bucket (one cheap agg)
-    val pageCounts = todo.groupBy(col("pk")).count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    if (pageCounts.isEmpty) return Seq.empty
-
-    val trip = Kg.extractTriplesFused(todo.drop("pk").as[Page](pages.encoder))
-      .withColumn("pk", bucketOf(col("url"), nBuckets))
+    // lineage counted by the write's own tasks: every page routed to a
+    // pending bucket (non-English ones too) and the triples it yields.
+    // Spark applies a result task's accumulator updates once per
+    // partition, so the counts stay exact under task retry only while no
+    // exchange sits between this flatMap and the writer: add none here.
+    val pageCounts, tripleCounts = new SumByBucket
+    Seq(pageCounts, tripleCounts).foreach(spark.sparkContext.register(_))
+    val trip = todo.flatMap { case (p, pk) =>
+      val ts = Kg.extractPage(p).toVector
+      pageCounts.add((pk, 1L))
+      tripleCounts.add((pk, ts.size.toLong))
+      ts
+    }.withColumn("pk", bucketOf(col("url"), nBuckets))
 
     // idempotent per-partition overwrite: a killed run's partial bucket
     // directories are replaced wholesale on retry. The mode is a
@@ -165,22 +185,11 @@ object Checkpointed {
     trip.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("pk").parquet(s"$baseDir/triples")
 
-    // per-bucket lineage from the written files (ground truth, not the
-    // plan) — restricted to THIS run's fresh buckets: the pk filter is
-    // partition-pruned, so an incremental run with one fresh bucket
-    // reads one bucket directory, never the whole table (at 10^12 docs
-    // a full-table rescan per incremental run would dwarf the run).
-    val freshKeys = pageCounts.keys.toSeq
-    val written = spark.read.parquet(s"$baseDir/triples")
-      .filter(col("pk").isin(freshKeys: _*))
-      .groupBy(col("pk")).count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-
-    val manifests = pageCounts.keys.toSeq.sorted.map { pk =>
-      BucketManifest(pk, pageCounts(pk), written.getOrElse(pk, 0L), runId)
+    val manifests = pageCounts.value.toSeq.sorted.map { case (pk, nPages) =>
+      BucketManifest(pk, nPages, tripleCounts.value(pk), runId)
     }
     manifests.foreach(m => commitManifest(baseDir, m))
-    writeRunMetrics(baseDir, runId, manifests)
+    if (manifests.nonEmpty) writeRunMetrics(baseDir, runId, manifests)
     manifests
   }
 
@@ -243,7 +252,8 @@ object Checkpointed {
     val reextracted = hadGraph && pending.exists(pk => graphRuns.contains(pk))
     // partition-pruned read: only pending buckets (everything, when the
     // graph tables don't exist yet or a re-extraction forces a rebuild)
-    val tripAll = spark.read.parquet(s"$baseDir/triples")
+    val tripAll = spark.read.schema(Encoders.product[TripleRow].schema.add("pk", "int"))
+      .parquet(s"$baseDir/triples")
     val tripIn =
       if (hadGraph && !reextracted) tripAll.filter(col("pk").isin(pending: _*))
       else tripAll
@@ -265,7 +275,8 @@ object Checkpointed {
       val nodesMerged =
         if (!hadGraph || reextracted) nodesFresh
         else Pipeline.reduceNodes(
-          spark.read.parquet(s"$baseDir/nodes").unionByName(nodesFresh))
+          spark.read.schema(Encoders.product[Node].schema).parquet(s"$baseDir/nodes")
+            .unionByName(nodesFresh))
       swapNodes(baseDir, nodesMerged.write)
 
       // edges: dynamic overwrite replaces ONLY the fresh pk partitions.

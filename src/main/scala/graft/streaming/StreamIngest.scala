@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.pipeline.{Checkpointed, Kg, Page, TripleRow}
@@ -30,20 +30,23 @@ object StreamIngest {
     * replaces exactly its own partitions, byte-identical (the kernel is
     * deterministic), never appending twice. */
   def run(spark: SparkSession, pagesDir: String, outDir: String,
-      checkpointDir: String, nBuckets: Int = 16): StreamingQuery = {
-    import spark.implicits._
-    val pages = spark.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[Page]].schema)
-      .parquet(pagesDir)
-      .as[Page]
-    Kg.extractTriplesFused(pages).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[TripleRow], batchId: Long) =>
-        writeBatch(batch, batchId, outDir, nBuckets)
-      }
-      .start()
+      checkpointDir: String, nBuckets: Int = 16): StreamingQuery =
+    catchUp(Kg.extractTriplesFused(pageStream(spark, pagesDir)), checkpointDir)(
+      writeBatch(_, _, outDir, nBuckets))
+
+  /** The parquet page files under `pagesDir` as a stream of pages. */
+  private def pageStream(spark: SparkSession, pagesDir: String,
+      maxFilesPerTrigger: Option[Int] = None): Dataset[Page] = {
+    val reader = spark.readStream.schema(Encoders.product[Page].schema)
+    maxFilesPerTrigger.fold(reader)(reader.option("maxFilesPerTrigger", _))
+      .parquet(pagesDir).as(Encoders.product[Page])
   }
+
+  /** Start `stream` as an AvailableNow catch-up run whose micro-batches go to `sink`. */
+  private def catchUp[T](stream: Dataset[T], checkpointDir: String)(
+      sink: (Dataset[T], Long) => Unit): StreamingQuery =
+    stream.writeStream.option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow()).foreachBatch(sink).start()
 
   /** The idempotent per-batch sink (see `run`). Public so the replay
     * contract is directly testable: writing the same (batch, batchId)
@@ -94,18 +97,9 @@ object StreamIngest {
       checkpointDir: String, delay: String = "20000 hours",
       maxFilesPerTrigger: Int = 1, nBuckets: Int = 16): StreamingQuery = {
     import spark.implicits._
-    val pages = spark.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[Page]].schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(pagesDir)
-      .as[Page]
-    dedupedTriples(pages, delay).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        writeBatch(batch.drop("warc_ts").as[TripleRow], batchId, outDir, nBuckets)
-      }
-      .start()
+    val triples = dedupedTriples(pageStream(spark, pagesDir, Some(maxFilesPerTrigger)), delay)
+    catchUp(triples, checkpointDir)((batch, batchId) =>
+      writeBatch(batch.drop("warc_ts").as[TripleRow], batchId, outDir, nBuckets))
   }
 
   /** Streaming LINKING: the flagship enrichment run continuously — each
@@ -135,21 +129,13 @@ object StreamIngest {
       checkpointDir: String, kb: Dataset[graft.pipeline.KbEntry],
       nBuckets: Int = 16,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import spark.implicits._
     Checkpointed.recoverNodes(outDir)
-    val reader = spark.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[Page]].schema)
     // bound files per micro-batch so AvailableNow genuinely exercises
     // the MULTI-batch path (kg_stream_parity's setup) instead of
     // swallowing the whole backlog in one batch
-    val pages = maxFilesPerTrigger
-      .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-      .parquet(pagesDir)
-      .as[Page]
-    Kg.extractTriplesFused(pages).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[TripleRow], batchId: Long) =>
+    val pages = pageStream(spark, pagesDir, maxFilesPerTrigger)
+    catchUp(Kg.extractTriplesFused(pages), checkpointDir) {
+      (batch, batchId) =>
         // Eagerly materialize the batch's deduped triples ONCE: the
         // graph build references them from four plan branches (the
         // surfaceInfo union twice, nodes, edges), and in a micro-batch
@@ -206,8 +192,7 @@ object StreamIngest {
           org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(trip)
           ()
         }
-      }
-      .start()
+    }
   }
 
   /** The streamed NODE table: every micro-batch delta folded by the

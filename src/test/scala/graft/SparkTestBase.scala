@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import java.nio.file.{Files, Path}
 
 /** Shared local SparkSession for specs (one per suite; cheap reuse via
   * getOrCreate). */
@@ -16,8 +17,21 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp dir, deleted with everything under it after the suite. */
+  def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d.toString
+  }
+
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("WARN")
   }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => graft.pipeline.Checkpointed.deleteDir(d))
+    finally super.afterAll()
 }

@@ -68,7 +68,7 @@ class OpsSpec extends SparkTestBase {
     val base = (1 to 60).map(i => s"token$i").mkString(" ")
     val other = (1 to 60).map(i => s"w$i").mkString(" ")
     val corpusA = docs(Seq((1L, base), (2L, other)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_lshidx").toString + "/idx"
+    val dir = tempDir("graft_lshidx") + "/idx"
     Dedup.lshIndexWrite(corpusA, "doc_id", "text", dir)
     // batch B: a near-dup of doc 1, a fresh doc, and an intra-batch dup
     val nearDup = base.replace("token30", "x30")
@@ -735,7 +735,7 @@ class OpsSpec extends SparkTestBase {
     val base = (1 to 60).map(i => s"token$i").mkString(" ")
     val d = docs(Seq((1L, base), (2L, base.replace("token30", "x30")),
       (3L, (1 to 60).map(i => s"w$i").mkString(" ")), (4L, base)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_lshck").toString
+    val dir = tempDir("graft_lshck")
     def pairs(ck: Option[String]) =
       Dedup.lshCandidates(d, "doc_id", "text", bucketsCheckpoint = ck)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

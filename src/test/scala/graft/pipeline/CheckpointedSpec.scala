@@ -7,10 +7,7 @@ import scala.jdk.CollectionConverters._
 
 class CheckpointedSpec extends SparkTestBase {
 
-  private def freshDir(): String = {
-    val d = Files.createTempDirectory("graft_ckpt").toString
-    d
-  }
+  private def freshDir(): String = tempDir("graft_ckpt")
 
   private def copyDir(from: Path, to: Path): Unit = {
     val s = Files.walk(from)
@@ -142,10 +139,9 @@ class CheckpointedSpec extends SparkTestBase {
     assertResumesToOneShot(dir)
   }
 
-  test("a cold runAll runs 24 Spark jobs") {
+  /** The number of Spark jobs `body` starts. */
+  private def jobsDuring(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val pages = Corpus.pages(spark, 200, 4)
-    val kb = Corpus.kb(spark, 300)
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -154,10 +150,23 @@ class CheckpointedSpec extends SparkTestBase {
     org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
     sc.addSparkListener(listener)
     try {
-      Checkpointed.runAll(pages, kb, freshDir(), nBuckets = 8, runId = 1)
+      body
       org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 24)
+    jobs.get
+  }
+
+  test("a cold runAll runs 18 Spark jobs") {
+    val pages = Corpus.pages(spark, 200, 4)
+    val kb = Corpus.kb(spark, 300)
+    val n = jobsDuring(Checkpointed.runAll(pages, kb, freshDir(), nBuckets = 8, runId = 1))
+    assert(n == 18)
+  }
+
+  test("an append-only resume runs 19 Spark jobs") {
+    val dir = resumable()
+    val n = jobsDuring(Checkpointed.runAll(killPages, killKb, dir.toString, nBuckets = 8, runId = 2))
+    assert(n == 19)
   }
 
   test("marker files are replaced by rename: a leftover temp file marks nothing done") {
@@ -231,30 +240,59 @@ class CheckpointedSpec extends SparkTestBase {
     assert(Checkpointed.runTriples(pages, dir, nBuckets = 8, runId = 3).isEmpty)
   }
 
-  test("incremental lineage count reads ONLY fresh bucket files (partition-pruned)") {
-    import scala.jdk.CollectionConverters._
+  test("runAll's triples read opens ONLY pending bucket files") {
+    // the resume's pending buckets are the ones it adds; the pk filter of
+    // runAll's read of triples/ must prune every other directory.
+    // Execution-truth check: DELETE every other bucket's data files and
+    // leave one unreadable file in each of their directories — a scan
+    // (or a schema inference) that opened them would throw; a pruned
+    // scan never does
+    val dir = resumable()
+    val tripDir = dir.resolve("triples")
+    names(tripDir).filter(_.startsWith("pk=")).map(tripDir.resolve).foreach { bucket =>
+      names(bucket).foreach(n => Files.delete(bucket.resolve(n)))
+      Files.write(bucket.resolve("part-00000-not-parquet.parquet"), "not parquet".getBytes("UTF-8"))
+    }
+    Checkpointed.runAll(killPages, killKb, dir.toString, nBuckets = 8, runId = 2)
+    def rows(d: Path, name: String) =
+      spark.read.parquet(s"$d/$name").drop("pk").collect().map(_.toSeq).sortBy(_.toString).toSeq
+    Seq("nodes", "edges").foreach(t => assert(rows(dir, t) == rows(oneShot, t), s"$t differs"))
+  }
+
+  test("manifests count each bucket's routed pages and written rows") {
+    import spark.implicits._
+    // English pages, plus three German pages on a domain whose bucket no
+    // English page shares: that bucket yields pages but no triples
+    val en = (0L until 60L).map(Corpus.genPage(_)._1).filter(_.lang == "en")
+    val de = Iterator.from(0).map(i => Corpus.genPage(i.toLong)._1).filter(_.lang != "en").take(3).toSeq
+    def buckets(urls: Seq[String]) =
+      urls.toDF("url").select(Checkpointed.bucketOf(col("url"), 16)).as[Int].collect().toSeq
+    val enBuckets = buckets(en.map(_.url)).toSet
+    val deUrls = (0 until 64).map(i => s"https://nur-deutsch-$i.example/")
+    val deRoot = deUrls.zip(buckets(deUrls)).collectFirst { case (u, b) if !enBuckets(b) => u }.get
+    val input = en ++ de.zipWithIndex.map { case (p, i) => p.copy(url = s"${deRoot}seite-$i") }
+    val pages = spark.createDataset(input)
     val dir = freshDir()
-    val pages = Corpus.pages(spark, 200, 4)
-    val ms = Checkpointed.runTriples(pages, dir, nBuckets = 8, runId = 1)
-    // the lineage read runTriples issues for a run that refreshed only
-    // bucket `fresh`: the pk filter must prune every other directory.
-    // Execution-truth check: plan the pruned read, then DELETE every
-    // other bucket's data files — a scan that touched them would throw
-    // FileNotFoundException; a pruned scan never opens them.
-    val fresh = ms.head.pk
-    val pruned = spark.read.parquet(s"$dir/triples")
-      .filter(col("pk").isin(Seq(fresh): _*))
-    val tripDir = Paths.get(dir, "triples")
-    Files.list(tripDir).iterator().asScala.toList
-      .filter(p => p.getFileName.toString.startsWith("pk=") &&
-        p.getFileName.toString != s"pk=$fresh")
-      .foreach { bucket =>
-        Files.list(bucket).iterator().asScala.toList.foreach(Files.delete)
-        Files.delete(bucket)
-      }
-    val n = pruned.groupBy(col("pk")).count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(n == Map(fresh -> ms.head.nTriples))
+    val ms = Checkpointed.runTriples(pages, dir, nBuckets = 16, runId = 1)
+    val routed = buckets(input.map(_.url)).groupBy(identity).map { case (pk, v) => pk -> v.size.toLong }
+    val written = spark.read.parquet(s"$dir/triples").groupBy("pk").count()
+      .as[(Int, Long)].collect().toMap
+    val dePk = buckets(Seq(deRoot)).head
+    assert(ms.map(_.pk) == routed.keys.toSeq.sorted)
+    assert(ms.map(m => m.pk -> m.nPages).toMap == routed)
+    assert(ms.map(m => m.pk -> m.nTriples).toMap == written + (dePk -> 0L))
+    assert(routed(dePk) == 3 && !written.contains(dePk))
+    assert(Checkpointed.doneBuckets(dir) == routed.keySet)
+    // a rerun has nothing pending: no manifest, no run metrics, no bucket
+    // file touched
+    def bucketFiles() = names(Paths.get(dir, "triples")).filter(_.startsWith("pk="))
+      .flatMap(b => names(Paths.get(dir, "triples", b)).map(f => Paths.get(dir, "triples", b, f)))
+      .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toMap
+    val before = bucketFiles()
+    Thread.sleep(1100)
+    assert(Checkpointed.runTriples(pages, dir, nBuckets = 16, runId = 2).isEmpty)
+    assert(!Files.exists(Paths.get(dir, "_metrics", "run=2.json")))
+    assert(bucketFiles() == before)
   }
 
   test("incremental runAll: kept edge partitions untouched; result == full rebuild") {

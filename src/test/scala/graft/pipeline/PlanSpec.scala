@@ -17,7 +17,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("parquet scan: filters and projection push down to the reader") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan").toString
+    val dir = tempDir("graft_plan")
     Corpus.pages(spark, 100, 4).write.parquet(s"$dir/pages")
     val df = spark.read.parquet(s"$dir/pages")
       .filter(col("lang") === "en").select("url", "lang")

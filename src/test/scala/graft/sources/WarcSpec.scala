@@ -27,7 +27,7 @@ class WarcSpec extends SparkTestBase {
   test("warc.gz round-trip: html byte-identical, triples identical") {
     import spark.implicits._
     val pages = Corpus.pages(spark, 150, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc").toString + "/w"
+    val dir = tempDir("graft_warc") + "/w"
     Warc.writeWarcGz(pages, dir)
     // one shard per input partition
     val shards = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".warc.gz"))

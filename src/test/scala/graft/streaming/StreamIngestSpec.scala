@@ -9,7 +9,7 @@ class StreamIngestSpec extends SparkTestBase {
 
   test("streaming ingestion produces the same triples as the batch path") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_stream").toString
+    val work = tempDir("graft_stream")
     val pages = Corpus.pages(spark, 150, 4)
     // stage pages as two file drops (two micro-batches under AvailableNow)
     pages.filter(col("url").isNotNull).limit(75)
@@ -31,7 +31,7 @@ class StreamIngestSpec extends SparkTestBase {
 
   test("streaming linking: per-batch linked edges union to exactly the batch edges") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_slink").toString
+    val work = tempDir("graft_slink")
     val pages = Corpus.pages(spark, 120, 4)
     val kb = Corpus.kb(spark, nDistractors = 300)
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
@@ -79,7 +79,7 @@ class StreamIngestSpec extends SparkTestBase {
   test("node compaction killed at any step loses no delta") {
     import scala.jdk.CollectionConverters._
     import java.nio.file.Paths
-    val work = Files.createTempDirectory("graft_scompact").toString
+    val work = tempDir("graft_scompact")
     val pages = Corpus.pages(spark, 60, 2)
     pages.write.mode("overwrite").parquet(s"$work/pages")
     val kb = Corpus.kb(spark, nDistractors = 300)
@@ -118,7 +118,7 @@ class StreamIngestSpec extends SparkTestBase {
 
   test("replayed foreachBatch batch is idempotent (at-least-once sink)") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_replay").toString
+    val work = tempDir("graft_replay")
     val pages = Corpus.pages(spark, 60, 2)
     val batch = Kg.extractTriplesFused(pages)
     StreamIngest.writeBatch(batch, 7L, s"$work/out", nBuckets = 4)
@@ -131,7 +131,7 @@ class StreamIngestSpec extends SparkTestBase {
 
   test("streaming dedup: a recrawl in a later micro-batch emits nothing new") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_sdedup").toString
+    val work = tempDir("graft_sdedup")
     val pages = Corpus.pages(spark, 80, 2)
     // the same pages dropped twice as two files -> with maxFilesPerTrigger=1
     // the second micro-batch is a pure recrawl
@@ -151,7 +151,7 @@ class StreamIngestSpec extends SparkTestBase {
   test("streaming content dedup: same text under a NEW url is dropped") {
     import spark.implicits._
     import graft.pipeline.Page
-    val work = Files.createTempDirectory("graft_cdedup").toString
+    val work = tempDir("graft_cdedup")
     val pages = Corpus.pages(spark, 60, 2)
     pages.write.mode("overwrite").parquet(s"$work/pages")
     // recrawl batch: IDENTICAL text republished under new urls — the
@@ -182,7 +182,7 @@ class StreamIngestSpec extends SparkTestBase {
   test("flatMapGroupsWithState domain stats accumulate across micro-batches") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val work = Files.createTempDirectory("graft_state").toString
+    val work = tempDir("graft_state")
     val pages = Corpus.pages(spark, 60, 2)
     pages.write.mode("overwrite").parquet(s"$work/pages")
     pages.coalesce(1).write.mode("append").parquet(s"$work/pages")
