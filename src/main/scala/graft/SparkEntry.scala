@@ -94,19 +94,24 @@ object SparkEntry {
     * query and the vocabulary→IRI build below. */
   def linksFor(s: SparkSession, dir: String): DataFrame =
     checkpointed(s, s"links_${pagesFor(dir)}")(
-      Pipeline.linkSurfaces(vocabFor(s, dir).select(col("surface")), Corpus.kb(s)))
+      Pipeline.linkSurfaces(vocabFor(s, dir).select(col("surface")), Corpus.kb(s),
+        useBroadcast(s, dir)))
+
+  /** The graph build's size tier at this sf — link, mint and join-back
+    * broadcast while the vocabulary is within the broadcast limit — the
+    * decision graphFromTriples takes, from one count of the vocabulary
+    * checkpoint. */
+  private def useBroadcast(s: SparkSession, dir: String): Boolean =
+    memoized(s"tier_${pagesFor(dir)}")(
+      vocabFor(s, dir).count() <= Pipeline.defaultBroadcastVocabLimit)
 
   /** Checkpointed vocabulary→IRI table (the mint stage of the graph
     * build over the shared vocabulary and link checkpoints):
     * kg_nodes_edges, kg_node_props and the edge checkpoint all consume
     * it. */
   def surfaceIriFor(s: SparkSession, dir: String): DataFrame =
-    checkpointed(s, s"surface_iri_${pagesFor(dir)}") {
-      val vocab = vocabFor(s, dir)
-      // tier off the checkpoint's size, as edgesFor does
-      Pipeline.mintIris(vocab, linksFor(s, dir),
-        useBroadcast = vocab.count() <= Pipeline.defaultBroadcastVocabLimit)
-    }
+    checkpointed(s, s"surface_iri_${pagesFor(dir)}")(
+      Pipeline.mintIris(vocabFor(s, dir), linksFor(s, dir), useBroadcast(s, dir)))
 
   /** Checkpointed deduped triples of the synthesized corpus at this sf.
     * Stays the FUSED pages pass: measured (BenchExtra `warmup` mode),
@@ -174,13 +179,8 @@ object SparkEntry {
     * graphFromTriples edge build over the shared vocabulary, written
     * once and reused by the graph-analytics queries). */
   def edgesFor(s: SparkSession, dir: String): DataFrame =
-    checkpointed(s, s"edges_${pagesFor(dir)}") {
-      val siri = surfaceIriFor(s, dir)
-      // tier off the checkpoint's size (a metadata-cheap parquet count)
-      // so the join-back keeps the broadcast-vs-salted discipline
-      Pipeline.edgesFromVocab(triplesFor(s, dir), siri,
-        useBroadcast = siri.count() <= Pipeline.defaultBroadcastVocabLimit)
-    }
+    checkpointed(s, s"edges_${pagesFor(dir)}")(
+      Pipeline.edgesFromVocab(triplesFor(s, dir), surfaceIriFor(s, dir), useBroadcast(s, dir)))
 
   /** Checkpointed DISTINCT directed entity-edge view — the multi-hop /
     * iterative graph queries all consume it, and re-deduplicating the
@@ -357,13 +357,10 @@ object SparkEntry {
     }),
     "kg_nodes_edges" -> ((s, dir) => {
       // nodes/edges from the SHARED vocabulary checkpoint (identical
-      // tables: reduceNodes over surfaceIri is the graphFromTriples
-      // node build, and edgesFor is its edge build, checkpointed)
+      // tables: nodesFromVocab is the graphFromTriples node build, and
+      // edgesFor is its edge build, checkpointed)
       val trip = triplesFor(s, dir)
-      val siri = surfaceIriFor(s, dir)
-      val nodes = Pipeline.reduceNodes(siri.select(col("iri"), col("entity_type"),
-        col("surface").as("name"), col("slug")))
-      nodes.agg(count(lit(1)).as("n_nodes"))
+      Pipeline.nodesFromVocab(surfaceIriFor(s, dir)).agg(count(lit(1)).as("n_nodes"))
         .crossJoin(edgesFor(s, dir).agg(count(lit(1)).as("n_edges")))
         .crossJoin(trip.agg(count(lit(1)).as("n_triples"),
           sum(when(col("subj_type") =!= "", 1).otherwise(0)).as("n_typed")))

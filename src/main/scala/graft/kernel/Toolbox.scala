@@ -55,4 +55,9 @@ object Toolbox {
   /** `normalize`d text split on single spaces, trailing empties kept as
     * Spark's split keeps them (`Dedup.tokens`). */
   def tokens(text: String): Array[String] = normalize(text).split(" ", -1)
+
+  /** `x` rounded to 4 places HALF_UP, as Spark's and DuckDB's
+    * round(x, 4). */
+  def round4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 }

@@ -380,17 +380,10 @@ object Dedup {
       threshold: Double): DataFrame = {
     require(threshold > 0.8,
       s"length pruning needs threshold > 0.8 (ratio bound 5c-4 must be positive); got $threshold")
-    val r = 5 * threshold - 4
-    val lnQ = math.log((1.0 / r) * (1 + 1e-9))
-    val bkt = floor(log(greatest(length(col(strCol)), lit(1)).cast("double")) / lnQ)
-    val e = df.select(col(idCol), col(strCol)).withColumn("bkt", bkt)
-    val a = e.select(col("bkt"), col(idCol).as("id1"), col(strCol).as("s1"))
-    val b = e.select(explode(array(col("bkt") - 1, col("bkt"), col("bkt") + 1)).as("bkt"),
-      col(idCol).as("id2"), col(strCol).as("s2"))
-    a.join(b, Seq("bkt"))
-      .filter(col("id1") < col("id2"))
+    lengthBucketPairs(df.select(col(idCol), col(strCol)), idCol, strCol,
+      length(col(strCol)), 5 * threshold - 4)
       .withColumn("jw",
-        graft.functions.JaroWinklerExpression.jaroWinkler(col("s1"), col("s2")))
+        graft.functions.JaroWinklerExpression.jaroWinkler(col("v1"), col("v2")))
       .filter(col("jw") >= threshold)
       .select(col("id1"), col("id2"), col("jw"))
   }
@@ -462,20 +455,28 @@ object Dedup {
   def jaccardSimilarityJoin(df: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame = {
     require(threshold > 0 && threshold < 1, s"threshold in (0,1); got $threshold")
-    val lnQ = math.log((1.0 / threshold) * (1 + 1e-9))
-    val toks = array_distinct(split(col(textCol), " "))
-    val e = df.select(col(idCol), toks.as("toks"))
-      .withColumn("bkt", floor(log(greatest(size(col("toks")), lit(1)).cast("double")) / lnQ))
-    val a = e.select(col("bkt"), col(idCol).as("id1"), col("toks").as("t1"))
-    val b = e.select(explode(array(col("bkt") - 1, col("bkt"), col("bkt") + 1)).as("bkt"),
-      col(idCol).as("id2"), col("toks").as("t2"))
-    a.join(b, Seq("bkt"))
-      .filter(col("id1") < col("id2"))
+    val e = df.select(col(idCol), array_distinct(split(col(textCol), " ")).as("toks"))
+    lengthBucketPairs(e, idCol, "toks", size(col("toks")), threshold)
       .withColumn("jaccard",
-        round(size(array_intersect(col("t1"), col("t2"))).cast("double") /
-          size(array_union(col("t1"), col("t2"))), 4))
+        round(size(array_intersect(col("v1"), col("v2"))).cast("double") /
+          size(array_union(col("v1"), col("v2"))), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), col("jaccard"))
+  }
+
+  /** The length-bucketed self-join both similarity joins share: rows
+    * bucket by floor(log_q size) with q = (1/ratio)(1+1e-9), and one
+    * side probes its ±1 neighbor buckets, so every pair whose size
+    * ratio min/max is ≥ `ratio` meets in exactly one probe. Returns
+    * (bkt, id1, v1, id2, v2) with id1 < id2, `v` being `valCol`. */
+  private def lengthBucketPairs(e: DataFrame, idCol: String, valCol: String,
+      sizeCol: Column, ratio: Double): DataFrame = {
+    val lnQ = math.log((1.0 / ratio) * (1 + 1e-9))
+    val b = e.withColumn("bkt", floor(log(greatest(sizeCol, lit(1)).cast("double")) / lnQ))
+    b.select(col("bkt"), col(idCol).as("id1"), col(valCol).as("v1"))
+      .join(b.select(explode(array(col("bkt") - 1, col("bkt"), col("bkt") + 1)).as("bkt"),
+        col(idCol).as("id2"), col(valCol).as("v2")), Seq("bkt"))
+      .filter(col("id1") < col("id2"))
   }
 
   /** Exact n-gram Jaccard similarity between two text columns. */

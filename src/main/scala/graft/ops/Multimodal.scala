@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.kernel.Toolbox.round4
 
 /** Multimodal columns: image/audio/video treated as opaque `BINARY`
   * columns with typed metadata, decoded batch-wise in mapPartitions
@@ -123,26 +124,30 @@ object Multimodal {
   /** REAL decode → REAL resize → channel means of the RESIZED pixels
     * (fixed outW×outH so the oracle can re-derive the sampled source
     * coordinates). */
-  def bmpResizedMeans(df: DataFrame, outW: Int, outH: Int): DataFrame = {
+  def bmpResizedMeans(df: DataFrame, outW: Int, outH: Int): DataFrame =
+    decodedMeans(df, "bmp", decodeBmp, Some((outW, outH)))
+
+  /** The one decode → optional nearest resize → channel means pass:
+    * (img_id, width/height — out_w/out_h when resized — mean_r, mean_g,
+    * mean_b), means rounded to 4. One narrow mapPartitions pass. */
+  private def decodedMeans(df: DataFrame, imgCol: String,
+      decode: Array[Byte] => BmpPixels, resize: Option[(Int, Int)]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    def r4(x: Double) =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    df.select(col("img_id").cast("long"), col("bmp"))
+    val (wName, hName) = if (resize.isEmpty) ("width", "height") else ("out_w", "out_h")
+    df.select(col("img_id").cast("long"), col(imgCol))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
-        val d = resizeNearest(decodeBmp(bytes), outW, outH)
-        var sr = 0.0; var sg = 0.0; var sb = 0.0
-        var i = 0
-        while (i < d.pixels.length) {
-          val p = d.pixels(i)
-          sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-          i += 1
-        }
-        val n = d.pixels.length.toDouble
-        (id, d.width, d.height, r4(sr / n), r4(sg / n), r4(sb / n))
+        val d0 = decode(bytes)
+        meansRow(id, resize.fold(d0) { case (w, h) => resizeNearest(d0, w, h) })
       })
-      .toDF("img_id", "out_w", "out_h", "mean_r", "mean_g", "mean_b")
+      .toDF("img_id", wName, hName, "mean_r", "mean_g", "mean_b")
+  }
+
+  /** (id, width, height, mean_r, mean_g, mean_b), means rounded to 4. */
+  private def meansRow(id: Long, d: BmpPixels) = {
+    val (mr, mg, mb) = channelMeans(d)
+    (id, d.width, d.height, round4(mr), round4(mg), round4(mb))
   }
 
   /** The shared deterministic pixel formula: pixel (x, y) of image id =
@@ -166,27 +171,8 @@ object Multimodal {
 
   /** REAL decode → per-channel means: dimensions and means computed
     * from the PARSED pixels (one narrow mapPartitions pass). */
-  def bmpChannelMeans(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    def r4(x: Double) =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    df.select(col("img_id").cast("long"), col("bmp"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val d = decodeBmp(bytes)
-        var sr = 0.0; var sg = 0.0; var sb = 0.0
-        var i = 0
-        while (i < d.pixels.length) {
-          val p = d.pixels(i)
-          sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-          i += 1
-        }
-        val n = d.pixels.length.toDouble
-        (id, d.width, d.height, r4(sr / n), r4(sg / n), r4(sb / n))
-      })
-      .toDF("img_id", "width", "height", "mean_r", "mean_g", "mean_b")
-  }
+  def bmpChannelMeans(df: DataFrame): DataFrame =
+    decodedMeans(df, "bmp", decodeBmp, None)
 
   // ---- REAL compressed codecs via the JDK (javax.imageio) ----
   // PNG and GIF round-trip LOSSLESSLY (GIF: the ≤48-pixel formula images
@@ -201,10 +187,15 @@ object Multimodal {
   /** Encode a formula image with a JDK codec ("png" | "gif" | "jpg"). */
   def encodeJdk(width: Int, height: Int, fmt: String,
       rgb: (Int, Int) => (Int, Int, Int)): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(width, height,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    // bulk setRGB: one array store per pixel instead of a per-pixel
-    // ColorModel call — identical TYPE_INT_RGB values
+    val bos = new java.io.ByteArrayOutputStream()
+    require(javax.imageio.ImageIO.write(formulaImage(width, height, rgb), fmt, bos),
+      s"no JDK writer for $fmt")
+    bos.toByteArray
+  }
+
+  /** A formula image's pixels: top-down packed 0xRRGGBB. */
+  private def formulaPixels(width: Int, height: Int,
+      rgb: (Int, Int) => (Int, Int, Int)): BmpPixels = {
     val buf = new Array[Int](width * height)
     var y = 0
     while (y < height) {
@@ -216,27 +207,37 @@ object Multimodal {
       }
       y += 1
     }
-    img.setRGB(0, 0, width, height, buf, 0, width)
-    val bos = new java.io.ByteArrayOutputStream()
-    require(javax.imageio.ImageIO.write(img, fmt, bos), s"no JDK writer for $fmt")
-    bos.toByteArray
+    BmpPixels(width, height, buf)
   }
 
-  /** REAL JDK decode (any ImageIO format) → top-down packed RGB. */
-  def decodeJdk(bytes: Array[Byte]): BmpPixels = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-    require(img != null, "no JDK reader recognized the image bytes")
+  /** A formula image as a TYPE_INT_RGB image, filled by one bulk setRGB
+    * (one array store per pixel instead of a per-pixel ColorModel call
+    * — identical values). */
+  private def formulaImage(width: Int, height: Int,
+      rgb: (Int, Int) => (Int, Int, Int)): java.awt.image.BufferedImage = {
+    val img = new java.awt.image.BufferedImage(width, height,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    img.setRGB(0, 0, width, height, formulaPixels(width, height, rgb).pixels, 0, width)
+    img
+  }
+
+  /** A decoded image's pixels: bulk getRGB (one ColorModel pass), alpha
+    * masked off — top-down packed 0xRRGGBB. */
+  private def pixelsOf(img: java.awt.image.BufferedImage): BmpPixels = {
     val w = img.getWidth
     val h = img.getHeight
-    // bulk getRGB (identical per-pixel values, one ColorModel pass)
     val px = img.getRGB(0, 0, w, h, null, 0, w)
     var i = 0
     while (i < px.length) { px(i) = px(i) & 0xffffff; i += 1 }
     BmpPixels(w, h, px)
   }
 
-  private def r4(x: Double) =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+  /** REAL JDK decode (any ImageIO format) → top-down packed RGB. */
+  def decodeJdk(bytes: Array[Byte]): BmpPixels = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    require(img != null, "no JDK reader recognized the image bytes")
+    pixelsOf(img)
+  }
 
   private def channelMeans(d: BmpPixels): (Double, Double, Double) = {
     var sr = 0.0; var sg = 0.0; var sb = 0.0
@@ -248,6 +249,15 @@ object Multimodal {
     }
     val n = d.pixels.length.toDouble
     (sr / n, sg / n, sb / n)
+  }
+
+  /** Whether each channel mean of `d` lies within `tol` of the formula
+    * image's: the check of a lossy (JPEG) decode. */
+  private def meansNear(d: BmpPixels, rgb: (Int, Int) => (Int, Int, Int),
+      tol: Double): (Boolean, Boolean, Boolean) = {
+    val (mr, mg, mb) = channelMeans(d)
+    val (fr, fg, fb) = channelMeans(formulaPixels(d.width, d.height, rgb))
+    (math.abs(mr - fr) < tol, math.abs(mg - fg) < tol, math.abs(mb - fb) < tol)
   }
 
   /** Deterministic PNG/GIF corpus: formula images encoded with the
@@ -278,36 +288,16 @@ object Multimodal {
 
   /** REAL JDK decode → dimensions + channel means (lossless formats:
     * the formula oracle checks the decode exactly, as with BMP). */
-  def jdkChannelMeans(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("img_id").cast("long"), col("img"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val d = decodeJdk(bytes)
-        val (mr, mg, mb) = channelMeans(d)
-        (id, d.width, d.height, r4(mr), r4(mg), r4(mb))
-      })
-      .toDF("img_id", "width", "height", "mean_r", "mean_g", "mean_b")
-  }
+  def jdkChannelMeans(df: DataFrame): DataFrame =
+    decodedMeans(df, "img", decodeJdk, None)
 
   /** REAL JDK decode → REAL nearest-neighbor resize → channel means of
     * the RESIZED pixels (the bmpResizedMeans shape over the imageio
     * path: lossless PNG decode feeds real pixel decimation, so the
     * formula oracle re-derives the sampled source coordinates and the
     * whole decode+resize chain is under oracle). */
-  def jdkResizedMeans(df: DataFrame, outW: Int, outH: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("img_id").cast("long"), col("img"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val d = resizeNearest(decodeJdk(bytes), outW, outH)
-        val (mr, mg, mb) = channelMeans(d)
-        (id, d.width, d.height, r4(mr), r4(mg), r4(mb))
-      })
-      .toDF("img_id", "out_w", "out_h", "mean_r", "mean_g", "mean_b")
-  }
+  def jdkResizedMeans(df: DataFrame, outW: Int, outH: Int): DataFrame =
+    decodedMeans(df, "img", decodeJdk, Some((outW, outH)))
 
   /** O4 per-row error tolerance on the decode path: a real crawl's
     * image column contains truncated/corrupt blobs, and one bad row
@@ -321,11 +311,7 @@ object Multimodal {
     df.select(col("img_id").cast("long"), col("img"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, bytes) =>
-        scala.util.Try {
-          val d = decodeJdk(bytes)
-          val (mr, mg, mb) = channelMeans(d)
-          (id, d.width, d.height, r4(mr), r4(mg), r4(mb))
-        }.toOption
+        scala.util.Try(meansRow(id, decodeJdk(bytes))).toOption
       })
       .toDF("img_id", "width", "height", "mean_r", "mean_g", "mean_b")
   }
@@ -356,22 +342,8 @@ object Multimodal {
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
         val d = decodeJdk(bytes)
-        val (mr, mg, mb) = channelMeans(d)
-        val f = formulaRgb(id)
-        var fr = 0.0; var fg = 0.0; var fb = 0.0
-        var y = 0
-        while (y < d.height) {
-          var x = 0
-          while (x < d.width) {
-            val (r, g, b) = f(x, y); fr += r; fg += g; fb += b; x += 1
-          }
-          y += 1
-        }
-        val n = (d.width * d.height).toDouble
-        (id, d.width, d.height,
-          math.abs(mr - fr / n) < tol,
-          math.abs(mg - fg / n) < tol,
-          math.abs(mb - fb / n) < tol)
+        val (rOk, gOk, bOk) = meansNear(d, formulaRgb(id), tol)
+        (id, d.width, d.height, rOk, gOk, bOk)
       })
       .toDF("img_id", "width", "height", "r_ok", "g_ok", "b_ok")
   }
@@ -402,20 +374,7 @@ object Multimodal {
     val p = wr.getDefaultWriteParam
     wr.prepareWriteSequence(null)
     frames.foreach { rgb =>
-      val img = new java.awt.image.BufferedImage(width, height,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val buf = new Array[Int](width * height)
-      var y = 0
-      while (y < height) {
-        var x = 0
-        while (x < width) {
-          val (r, g, b) = rgb(x, y)
-          buf(y * width + x) = (r << 16) | (g << 8) | b
-          x += 1
-        }
-        y += 1
-      }
-      img.setRGB(0, 0, width, height, buf, 0, width)
+      val img = formulaImage(width, height, rgb)
       val md = wr.getDefaultImageMetadata(
         new javax.imageio.ImageTypeSpecifier(img), p)
       val fmt = "javax_imageio_gif_image_1.0"
@@ -448,15 +407,7 @@ object Multimodal {
       new java.io.ByteArrayInputStream(bytes)))
     val n = rd.getNumImages(true)
     require(n > 0, "empty GIF container")
-    val frames = Array.tabulate(n) { f =>
-      val img = rd.read(f)
-      val w = img.getWidth
-      val h = img.getHeight
-      val px = img.getRGB(0, 0, w, h, null, 0, w)
-      var i = 0
-      while (i < px.length) { px(i) = px(i) & 0xffffff; i += 1 }
-      BmpPixels(w, h, px)
-    }
+    val frames = Array.tabulate(n)(f => pixelsOf(rd.read(f)))
     val md = rd.getImageMetadata(0)
     val root = md.getAsTree("javax_imageio_gif_image_1.0")
       .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
@@ -500,7 +451,7 @@ object Multimodal {
         (0 until v.frames.length by stride).iterator.map { f =>
           val (mr, mg, mb) = channelMeans(v.frames(f))
           (id, f, v.frames.length, v.width, v.height,
-            f.toLong * v.delayCs, r4(mr), r4(mg), r4(mb))
+            f.toLong * v.delayCs, round4(mr), round4(mg), round4(mb))
         }
       })
       .toDF("video_id", "frame_idx", "n_frames", "width", "height",
@@ -637,23 +588,9 @@ object Multimodal {
       .mapPartitions(_.flatMap { case (id, bytes) =>
         val v = decodeAviMjpeg(bytes)
         (0 until v.frames.length by stride).iterator.map { f =>
-          val d = v.frames(f)
-          val (mr, mg, mb) = channelMeans(d)
-          val frm = formulaRgbFrame(id, f)
-          var fr = 0.0; var fg = 0.0; var fb = 0.0
-          var y = 0
-          while (y < d.height) {
-            var x = 0
-            while (x < d.width) {
-              val (r, g, bl) = frm(x, y); fr += r; fg += g; fb += bl; x += 1
-            }
-            y += 1
-          }
-          val n = (d.width * d.height).toDouble
+          val (rOk, gOk, bOk) = meansNear(v.frames(f), formulaRgbFrame(id, f), tol)
           (id, f, v.frames.length, v.width, v.height, f.toLong * v.usPerFrame,
-            math.abs(mr - fr / n) < tol,
-            math.abs(mg - fg / n) < tol,
-            math.abs(mb - fb / n) < tol)
+            rOk, gOk, bOk)
         }
       })
       .toDF("video_id", "frame_idx", "n_frames", "width", "height", "ts_us",
@@ -706,27 +643,39 @@ object Multimodal {
     df.select(col("audio_id").cast("long"), col("wav"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
-        val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        val f = in.getFormat
-        // mono required: stereo PCM would be silently windowed as
-        // interleaved mono (ADVICE r06); stream closed after the read
-        require(f.getSampleSizeInBits == 16 && !f.isBigEndian &&
-          f.getChannels == 1, "unexpected WAV format")
-        val pcm = try in.readAllBytes() finally in.close()
+        val (f, pcm) = readWav(bytes)
         val ns = pcm.length / 2
-        var sum = 0L
-        var sumSq = 0L
-        var i = 0
-        while (i < ns) {
-          val s = ((pcm(2 * i) & 0xff) | (pcm(2 * i + 1) << 8)).toShort.toLong
-          sum += s; sumSq += s * s
-          i += 1
-        }
-        (id, f.getSampleRate.toInt, f.getChannels, ns.toLong,
-          r4(sum.toDouble / ns), r4(math.sqrt(sumSq.toDouble / ns)))
+        val (mean, rms) = pcmStats(pcm, 0, ns)
+        (id, f.getSampleRate.toInt, f.getChannels, ns.toLong, mean, rms)
       })
       .toDF("audio_id", "sample_rate", "channels", "n_samples", "mean_amp", "rms")
+  }
+
+  /** Open a WAV container: its format and its PCM bytes. Only mono
+    * 16-bit little-endian PCM is accepted — stereo would be silently
+    * read as interleaved mono (ADVICE r06); the stream is closed after
+    * the read. */
+  private def readWav(bytes: Array[Byte]): (javax.sound.sampled.AudioFormat, Array[Byte]) = {
+    val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(bytes))
+    val f = in.getFormat
+    require(f.getSampleSizeInBits == 16 && !f.isBigEndian &&
+      f.getChannels == 1, "unexpected WAV format")
+    (f, try in.readAllBytes() finally in.close())
+  }
+
+  /** (mean amplitude, RMS) of PCM16 samples [start, end), both rounded
+    * to 4; the sums are exact integers. */
+  private def pcmStats(pcm: Array[Byte], start: Int, end: Int): (Double, Double) = {
+    var sum = 0L; var sumSq = 0L
+    var i = start
+    while (i < end) {
+      val s = ((pcm(2 * i) & 0xff) | (pcm(2 * i + 1) << 8)).toShort.toLong
+      sum += s; sumSq += s * s
+      i += 1
+    }
+    val n = (end - start).toDouble
+    (round4(sum / n), round4(math.sqrt(sumSq / n)))
   }
 
   // ---- video: opaque binary + frame sampling ----
@@ -804,29 +753,14 @@ object Multimodal {
     df.select(col("audio_id").cast("long"), col("wav"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, bytes) =>
-        val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        val f = in.getFormat
-        // mono required + stream closed (ADVICE r06; see wavDecodeStats)
-        require(f.getSampleSizeInBits == 16 && !f.isBigEndian &&
-          f.getChannels == 1, "unexpected WAV format")
-        val rate = f.getSampleRate.toInt
-        val pcm = try in.readAllBytes() finally in.close()
+        val (f, pcm) = readWav(bytes)
         val ns = pcm.length / 2
         val nSegs = (ns + segSamples - 1) / segSamples
         (0 until nSegs).iterator.map { seg =>
           val start = seg * segSamples
           val end = math.min(start + segSamples, ns)
-          var sum = 0L; var sumSq = 0L
-          var i = start
-          while (i < end) {
-            val s = ((pcm(2 * i) & 0xff) | (pcm(2 * i + 1) << 8)).toShort.toLong
-            sum += s; sumSq += s * s
-            i += 1
-          }
-          val n = (end - start).toDouble
-          (id, seg, start, end - start, rate,
-            r4(sum / n), r4(math.sqrt(sumSq / n)))
+          val (mean, rms) = pcmStats(pcm, start, end)
+          (id, seg, start, end - start, f.getSampleRate.toInt, mean, rms)
         }
       })
       .toDF("audio_id", "seg_idx", "start_sample", "seg_len", "sample_rate",

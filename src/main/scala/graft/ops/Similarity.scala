@@ -31,10 +31,17 @@ object Similarity {
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val scored = corpus.crossJoin(broadcast(queries))
       .withColumn("cos", cosine(col("embedding"), col("qvec")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id").asc)
+    topK(scored, "cos", k, "cos_sim")
+  }
+
+  /** The per-query top-k every ANN search ends with: rank candidates by
+    * (score desc, vec_id asc), keep rank ≤ k, round the score to 3 and
+    * name it `outName`. */
+  private def topK(scored: DataFrame, score: String, k: Int, outName: String): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col(score).desc, col("vec_id").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), round(col("cos"), 3).as("cos_sim"))
+      .select(col("qid"), col("vec_id"), col("rank"), round(col(score), 3).as(outName))
   }
 
   /** Seeded random hyperplanes: nBits deterministic pseudo-random unit
@@ -91,6 +98,40 @@ object Similarity {
       .toDF(idName, vecName, "bucket")
   }
 
+  /** Corpus side assigned to its nearest centroid by the KERNEL
+    * (ivfAssignKernel, bit-identical to the columnar ivfAssignWith):
+    * (vec_id, embedding, centroid). */
+  private def assignedKernel(corpus: DataFrame,
+      cents: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    corpus.select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])]
+      .mapPartitions(_.map { case (id, v) => (id, v, ivfAssignKernel(v, cents.value)) })
+      .toDF("vec_id", "embedding", "centroid")
+  }
+
+  /** Capped in-key pairing over (key, vec_id, embedding) rows: a key
+    * with at most `cap` members emits all its pairs; a bigger key pairs
+    * every other member with its min-id member only (O(m), not O(m²)).
+    * The per-key counts are broadcast (one row per key), so the cap
+    * check never shuffles the corpus. Each vector has exactly one key,
+    * so every pair arises once. Returns (key, id1, e1, id2, e2), id1 < id2. */
+  private def cappedPairs(keyed: DataFrame, key: String, cap: Int): DataFrame = {
+    val counts = keyed.groupBy(col(key))
+      .agg(count(lit(1)).as("key_n"), min(col("vec_id")).as("rep"))
+    val withC = keyed.join(broadcast(counts), Seq(key))
+    def side(rows: DataFrame, n: Int) =
+      rows.select(col(key), col("vec_id").as(s"id$n"), col("embedding").as(s"e$n"))
+    val small = withC.filter(col("key_n") <= cap)
+    val allPairs = side(small, 1).join(side(small, 2), Seq(key))
+      .filter(col("id1") < col("id2"))
+    val capped = withC.filter(col("key_n") > cap)
+    val starPairs = side(capped.filter(col("vec_id") =!= col("rep")), 2)
+      .join(side(capped.filter(col("vec_id") === col("rep")), 1), Seq(key))
+    allPairs.unionByName(starPairs)
+  }
+
   /** Bucketed ANN: each query scans only its LSH bucket (plus no
     * multiprobe in this baseline — recall traded for a bucket-local
     * scan; raise nBits for smaller buckets at lower recall). */
@@ -99,10 +140,7 @@ object Similarity {
     val qb = bucketedKernel(queries, "qid", "qvec", dim, nBits)
     val scored = cb.join(broadcast(qb), Seq("bucket"))
       .withColumn("cos", cosine(col("embedding"), col("qvec")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), round(col("cos"), 3).as("cos_sim"))
+    topK(scored, "cos", k, "cos_sim")
   }
 
   /** Multiprobe LSH ANN: each query probes its own bucket PLUS every
@@ -129,10 +167,7 @@ object Similarity {
       .toDF("qid", "qvec", "bucket")
     val scored = cb.join(broadcast(qb), Seq("bucket"))
       .withColumn("cos", cosine(col("embedding"), col("qvec")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), round(col("cos"), 3).as("cos_sim"))
+    topK(scored, "cos", k, "cos_sim")
   }
 
   /** IVF coarse quantizer: deterministic seeded centroid directions
@@ -245,10 +280,7 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(centroids)
-    val cb = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, v) => (id, v, ivfAssignKernel(v, bc.value)) })
-      .toDF("vec_id", "embedding", "centroid")
+    val cb = assignedKernel(corpus, bc)
     val qb = queries.select(col("qid").cast("long"), col("qvec"))
       .as[(Long, Array[Float])]
       .mapPartitions(_.flatMap { case (id, v) =>
@@ -257,10 +289,7 @@ object Similarity {
       .toDF("qid", "qvec", "centroid")
     val scored = cb.join(broadcast(qb), Seq("centroid"))
       .withColumn("cos", cosine(col("embedding"), col("qvec")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), round(col("cos"), 3).as("cos_sim"))
+    topK(scored, "cos", k, "cos_sim")
   }
 
   private[ops] def ivfAssignWith(vec: Column, cents: Array[Array[Double]]): Column = {
@@ -322,36 +351,11 @@ object Similarity {
     * Truncation is observable: count nearDupCappedBuckets next to any
     * capped run. */
   def nearDupPairs(corpus: DataFrame, dim: Int, nBits: Int, threshold: Double,
-      bucketCap: Int = 2000): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cb = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, emb) =>
-        (id, emb, lshBucketKernel(emb, dim, nBits))
-      })
-      .toDF("vec_id", "embedding", "bucket")
-    val counts = cb.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("bkt_n"), min(col("vec_id")).as("rep"))
-    // ≤ 2^nBits rows — broadcast so the cap check never shuffles corpus
-    val withC = cb.join(broadcast(counts), Seq("bucket"))
-    val small = withC.filter(col("bkt_n") <= bucketCap)
-    val a = small.select(col("bucket"), col("vec_id").as("id1"), col("embedding").as("e1"))
-    val b = small.select(col("bucket"), col("vec_id").as("id2"), col("embedding").as("e2"))
-    val allPairs = a.join(b, Seq("bucket"))
-      .filter(col("id1") < col("id2"))
-    val reps = withC.filter(col("bkt_n") > bucketCap && col("vec_id") === col("rep"))
-      .select(col("bucket"), col("vec_id").as("id1"), col("embedding").as("e1"))
-    val starPairs = withC.filter(col("bkt_n") > bucketCap && col("vec_id") =!= col("rep"))
-      .select(col("bucket"), col("vec_id").as("id2"), col("embedding").as("e2"))
-      .join(reps, Seq("bucket"))
-    // no final distinct: each vector lives in exactly ONE bucket, so a
-    // pair can only arise once (unlike banded MinHash)
-    allPairs.unionByName(starPairs.select(allPairs.columns.map(col): _*))
+      bucketCap: Int = 2000): DataFrame =
+    cappedPairs(bucketedKernel(corpus, "vec_id", "embedding", dim, nBits), "bucket", bucketCap)
       .withColumn("cos", cosine(col("e1"), col("e2")))
       .filter(col("cos") >= threshold)
       .select(col("id1"), col("id2"), round(col("cos"), 3).as("cos_sim"))
-  }
 
   // ===== Product quantization (PQ) — the billion-vector MEMORY tier =====
   // Jégou/Douze/Schmid 2011 (public paper): split each dim-d vector into
@@ -629,10 +633,7 @@ object Similarity {
         lit(0.0), (a, x) => a + x)))
       .withColumn("score", when(col("rnorm") * col("qnorm") === 0.0, lit(0.0))
         .otherwise(col("dotq") / (col("qnorm") * col("rnorm"))))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"), round(col("score"), 3).as("pq_score"))
+    topK(scored, "score", k, "pq_score")
   }
 
   /** Kernel form of ivfAssignWith: the same ascending-d double fold per
@@ -673,29 +674,8 @@ object Similarity {
     * `counts`). */
   def semDedup(corpus: DataFrame, centroids: Array[Array[Double]],
       threshold: Double, clusterCap: Int = 2000): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(centroids)
-    val assigned = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, emb) =>
-        (id, emb, ivfAssignKernel(emb, bc.value))
-      })
-      .toDF("vec_id", "embedding", "centroid")
-    val counts = assigned.groupBy(col("centroid"))
-      .agg(count(lit(1)).as("cl_n"), min(col("vec_id")).as("rep"))
-    // ≤ k rows — broadcast, the cap check never shuffles the corpus
-    val withC = assigned.join(broadcast(counts), Seq("centroid"))
-    val small = withC.filter(col("cl_n") <= clusterCap)
-    val a = small.select(col("centroid"), col("vec_id").as("id1"), col("embedding").as("e1"))
-    val b = small.select(col("centroid"), col("vec_id").as("id2"), col("embedding").as("e2"))
-    val allPairs = a.join(b, Seq("centroid")).filter(col("id1") < col("id2"))
-    val reps = withC.filter(col("cl_n") > clusterCap && col("vec_id") === col("rep"))
-      .select(col("centroid"), col("vec_id").as("id1"), col("embedding").as("e1"))
-    val starPairs = withC.filter(col("cl_n") > clusterCap && col("vec_id") =!= col("rep"))
-      .select(col("centroid"), col("vec_id").as("id2"), col("embedding").as("e2"))
-      .join(reps, Seq("centroid"))
-    val dropped = allPairs.unionByName(starPairs.select(allPairs.columns.map(col): _*))
+    val assigned = assignedKernel(corpus, corpus.sparkSession.sparkContext.broadcast(centroids))
+    val dropped = cappedPairs(assigned, "centroid", clusterCap)
       .filter(cosine(col("e1"), col("e2")) >= threshold)
       .select(col("id2").as("vec_id")).distinct()
       .withColumn("dup", lit(true))
@@ -708,15 +688,9 @@ object Similarity {
     * this next to any capped run so the star-pairing lossiness (see
     * nearDupPairs caveat) is never silent. */
   def nearDupCappedBuckets(corpus: DataFrame, dim: Int, nBits: Int,
-      bucketCap: Int = 2000): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions(_.map { case (id, emb) => (id, lshBucketKernel(emb, dim, nBits)) })
-      .toDF("vec_id", "bucket")
+      bucketCap: Int = 2000): DataFrame =
+    bucketedKernel(corpus, "vec_id", "embedding", dim, nBits)
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("bkt_n"))
       .filter(col("bkt_n") > bucketCap)
-  }
 }

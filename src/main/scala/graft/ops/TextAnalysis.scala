@@ -562,15 +562,12 @@ object TextAnalysis {
     val spark = df.sparkSession
     import spark.implicits._
     val sentSep = java.util.regex.Pattern.quote(". ")
-    // the same HALF_UP rounding Spark's round() uses (oracle parity)
-    def r4(x: Double): Double =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     df.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, text0) =>
         val text = if (text0 == null) "" else text0
         val sents = text.split(sentSep, -1)
-        val dupFrac = r4(1.0 - sents.distinct.length.toDouble / sents.length)
+        val dupFrac = Toolbox.round4(1.0 - sents.distinct.length.toDouble / sents.length)
         val toks = text.split(" ", -1)
         val tbf =
           if (toks.length < 2) 0.0
@@ -584,7 +581,7 @@ object TextAnalysis {
               if (c > maxC) maxC = c
               i += 1
             }
-            r4(maxC.toDouble / (toks.length - 1))
+            Toolbox.round4(maxC.toDouble / (toks.length - 1))
           }
         (id, sents.length.toLong, dupFrac, tbf)
       })

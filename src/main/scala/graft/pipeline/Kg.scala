@@ -26,14 +26,16 @@ object Kg {
   def chunk(docs: Dataset[Doc]): Dataset[ChunkRow] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.flatMap { d =>
-      if (Chunker.estimateTokens(d.text) < Chunker.chunkThresholdTokens)
-        Vector(ChunkRow(d.url, 0, d.text, 0L, d.text.length.toLong))
-      else
-        Chunker.default.chunk(d.text).map(c =>
-          ChunkRow(d.url, c.id, c.text, c.startOffset, c.endOffset))
-    }
+    docs.flatMap(d => chunksOf(d.text).map(c =>
+      ChunkRow(d.url, c.id, c.text, c.startOffset, c.endOffset)))
   }
+
+  /** The P2 gate: a document under the chunk threshold is one chunk
+    * (id 0, the whole text), any other goes through the chunker. */
+  private def chunksOf(text: String): Vector[Chunk] =
+    if (Chunker.estimateTokens(text) < Chunker.chunkThresholdTokens)
+      Vector(Chunk(0, text, 0L, text.length.toLong))
+    else Chunker.default.chunk(text)
 
   /** Coref (Stage 0): per-chunk, sequential string semantics stay inside
     * the row function (SURVEY.md §2.5 W3/W4). */
@@ -90,31 +92,22 @@ object Kg {
     val spark = resolved.sparkSession
     import spark.implicits._
     resolved.flatMap { r =>
-      try {
-        Relations.extract(r.resolved_text).iterator
-          .map { rel =>
-            TripleRow(
-              url = r.url,
-              subj = Slug.slug(rel.subj),
-              pred = PredDict.canonical(rel.pred),
-              obj = rel.obj,
-              obj_slug = if (rel.objIsEntity) Slug.slug(rel.obj) else "",
-              subj_surface = rel.subj,
-              obj_is_entity = rel.objIsEntity,
-              subj_type = rel.subjType,
-              obj_type = rel.objType,
-              chunk_id = r.chunk_id,
-              sent_idx = rel.sentIdx,
-              confidence = rel.confidence,
-              method = "rule-based",
-              span_start = rel.sentStart,
-              span_end = rel.sentEnd,
-              source_text = rel.sourceText)
-          }
-          .filterNot(t => Relations.likelyIncorrect(t.pred))
-      } catch { case _: Exception => Iterator.empty }
+      try chunkTriples(r.url, r.chunk_id, r.resolved_text)
+      catch { case _: Exception => Iterator.empty }
     }
   }
+
+  /** One resolved chunk's normalized triples, heuristic filter (P12)
+    * applied. */
+  private def chunkTriples(url: String, chunkId: Int,
+      resolvedText: String): Iterator[TripleRow] =
+    Relations.extract(resolvedText).iterator.map { rel =>
+      TripleRow(url, Slug.slug(rel.subj), PredDict.canonical(rel.pred),
+        rel.obj, if (rel.objIsEntity) Slug.slug(rel.obj) else "",
+        rel.subj, rel.objIsEntity, rel.subjType, rel.objType,
+        chunkId, rel.sentIdx, rel.confidence, "rule-based",
+        rel.sentStart, rel.sentEnd, rel.sourceText)
+    }.filterNot(t => Relations.likelyIncorrect(t.pred))
 
   /** A6 dedup: one row per (url, subj, pred, obj); deterministic
     * min_by tie-break on (chunk_id, sent_idx) — "first mention wins"
@@ -142,12 +135,15 @@ object Kg {
       .as[TripleRow]
   }
 
-  /** One fused flatMap Page→TripleRow for the flagship path: identical
-    * semantics to extractText∘chunk∘resolve∘triples∘dedup (asserted by
-    * PipelineSpec) but a single object-level pass — no intermediate
-    * Dataset encoding between stages, and NO dedup shuffle: all chunks
-    * of a page live in this one row, and the reference's A6 dedup is
-    * per-document (merge_chunks, extractor.rs:495-550), so first-wins
+  /** One fused flatMap Page→TripleRow for the flagship path: the same
+    * (url, subj, pred, obj) rows, each kept at the same first
+    * (chunk_id, sent_idx), as extractText∘chunk∘resolve∘triples∘dedup
+    * (PipelineSpec pins this on the synthesized corpus plus long pages
+    * that restate their facts across chunks), but a single
+    * object-level pass — no intermediate Dataset encoding between
+    * stages, and NO dedup shuffle: all chunks of a page live in this
+    * one row, and the reference's A6 dedup is per-document
+    * (merge_chunks, extractor.rs:495-550), so first-wins
     * (chunk, sentence emission order) dedup inside the row IS the global
     * (url, subj, pred, obj) dedup. The whole pages→triples stage is
     * therefore shuffle-free (verified by PlanSpec). */
@@ -162,21 +158,9 @@ object Kg {
   def extractPage(p: Page): Iterator[TripleRow] = {
     if (p.lang != "en") Iterator.empty
     else try {
-      val text = HtmlText.extract(p.html)
-      val chunks =
-        if (Chunker.estimateTokens(text) < Chunker.chunkThresholdTokens)
-          Vector(Chunk(0, text, 0L, text.length.toLong))
-        else Chunker.default.chunk(text)
       val seen = scala.collection.mutable.HashSet.empty[(String, String, String)]
-      chunks.iterator.flatMap { c =>
-        val resolved = Coref.resolve(c.text).resolvedText
-        Relations.extract(resolved).iterator.map { rel =>
-          TripleRow(p.url, Slug.slug(rel.subj), PredDict.canonical(rel.pred),
-            rel.obj, if (rel.objIsEntity) Slug.slug(rel.obj) else "",
-            rel.subj, rel.objIsEntity, rel.subjType, rel.objType,
-            c.id, rel.sentIdx, rel.confidence, "rule-based",
-            rel.sentStart, rel.sentEnd, rel.sourceText)
-        }.filterNot(t => Relations.likelyIncorrect(t.pred))
+      chunksOf(HtmlText.extract(p.html)).iterator.flatMap { c =>
+        chunkTriples(p.url, c.id, Coref.resolve(c.text).resolvedText)
           .filter(t => seen.add((t.subj, t.pred, t.obj))) // first-wins A6
       }
     } catch { case _: Exception => Iterator.empty } // O4 row tolerance

@@ -155,11 +155,14 @@ object Pipeline {
       broadcastVocabLimit: Long = defaultBroadcastVocabLimit): (DataFrame, DataFrame, () => Unit) = {
     val (surfaceIri, vocabN, release) = surfaceIriReleasable(trip, kb, broadcastVocabLimit)
     val useBroadcast = vocabN <= broadcastVocabLimit
-    val nodes = reduceNodes(surfaceIri.select(col("iri"), col("entity_type"),
-      col("surface").as("name"), col("slug")))
-    val edges = edgesFromVocab(trip.toDF, surfaceIri, useBroadcast)
-    (nodes, edges, release)
+    (nodesFromVocab(surfaceIri), edgesFromVocab(trip.toDF, surfaceIri, useBroadcast), release)
   }
+
+  /** The node table of a vocabulary→IRI table: one row per IRI
+    * (iri, entity_type, name, slug), named by its minimum surface. */
+  def nodesFromVocab(surfaceIri: DataFrame): DataFrame =
+    reduceNodes(surfaceIri.select(col("iri"), col("entity_type"),
+      col("surface").as("name"), col("slug")))
 
   /** The vocabulary → IRI stage of the graph build on its own: ONE
     * big-table rollup (every distinct entity surface with its

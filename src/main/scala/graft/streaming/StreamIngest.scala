@@ -160,9 +160,7 @@ object StreamIngest {
         val surfaceIri = graft.pipeline.Pipeline
           .mintIris(surfaceInfo, links, useBroadcast = true)
           .localCheckpoint(true)
-        val nodes = graft.pipeline.Pipeline.reduceNodes(
-          surfaceIri.select(col("iri"), col("entity_type"),
-            col("surface").as("name"), col("slug")))
+        val nodes = graft.pipeline.Pipeline.nodesFromVocab(surfaceIri)
         val edges = graft.pipeline.Pipeline
           .edgesFromVocab(trip.toDF, surfaceIri, useBroadcast = true)
         try {

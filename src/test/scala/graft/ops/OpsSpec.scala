@@ -1056,6 +1056,16 @@ class OpsSpec extends SparkTestBase {
     assert(capped == (2L to 6L).map(x => (1L, x)).toSet, s"got $capped")
     val full = Similarity.nearDupPairs(corpus, 64, 6, 0.9)
     assert(full.count() == 15) // C(6,2) below the cap
+    // the capped-bucket report names the hot bucket with its size and
+    // no bucket at or under the cap (two copies of -base: another bucket)
+    val hot = Similarity.lshBucketKernel(base.updated(0, base(0) + 0.001f), 64, 6)
+    assert(Similarity.lshBucketKernel(base.map(-_), 64, 6) != hot)
+    val withCold = corpus.union(
+      Seq((7L, base.map(-_)), (8L, base.map(-_))).toDF("vec_id", "embedding"))
+    val cappedBuckets = Similarity.nearDupCappedBuckets(withCold, 64, 6, bucketCap = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(cappedBuckets == Seq((hot, 6L)), s"got $cappedBuckets")
+    assert(Similarity.nearDupCappedBuckets(withCold, 64, 6).isEmpty)
   }
 
   test("LSH ANN returns the true nearest neighbor for in-bucket queries") {

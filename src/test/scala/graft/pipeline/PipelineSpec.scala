@@ -36,6 +36,31 @@ class PipelineSpec extends SparkTestBase {
     assert(m.recall >= 0.95, s"recall ${m.recall}")
   }
 
+  test("fused extraction equals the staged chain: same keys, same first mention") {
+    import spark.implicits._
+    // plus pages that restate their text 20 times: past the chunk
+    // threshold, so their facts recur across sentences and chunks
+    val restated = Corpus.pages(spark, 8, 1).collect().filter(_.lang == "en").map { p =>
+      val text = Seq.fill(20)(p.text).mkString("\n\n")
+      p.copy(url = p.url + "-x20", html = HtmlText.render("x20", text, "en"), text = text)
+    }
+    val pages = Corpus.pages(spark, 200, 4).union(restated.toSeq.toDS())
+    def byKey(t: org.apache.spark.sql.Dataset[TripleRow]) = {
+      val rows = t.collect()
+      val m = rows.map(r => (r.url, r.subj, r.pred, r.obj) -> (r.chunk_id, r.sent_idx)).toMap
+      assert(m.size == rows.length, "one row per (url, subj, pred, obj)")
+      m
+    }
+    val chunks = Kg.chunk(Kg.extractText(pages))
+    assert(chunks.filter(_.chunk_id > 0).count() > 0)
+    val undeduped = Kg.triples(Kg.resolve(chunks))
+    val staged = byKey(Kg.dedup(undeduped))
+    assert(undeduped.count() > staged.size)
+    val fused = byKey(Kg.extractTriplesFused(pages))
+    assert(fused.keySet == staged.keySet)
+    assert(fused == staged)
+  }
+
   test("non-english pages are filtered (no gold, no triples)") {
     import spark.implicits._
     val pages = Corpus.pages(spark, N, 8)
