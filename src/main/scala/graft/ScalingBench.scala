@@ -8,13 +8,14 @@ import graft.pipeline.{Checkpointed, Corpus}
   * page corpus, identical 128-way partitioning) at two parallelism
   * levels — the sandbox analogue of N vs 4N executors. Run:
   *
-  *   sbt "runMain graft.ScalingBench 8 40000"
-  *   sbt "runMain graft.ScalingBench 32 40000"
+  *   sbt "runMain graft.ScalingBench 1 40000"
+  *   sbt "runMain graft.ScalingBench 4 40000"
   *
   * and compare docs/s. Efficiency = (docs_s(4N) / docs_s(N)) / 4.
-  * Prints one JSON line. A warm-up run (same size) precedes the measured
-  * run so JIT/codegen compilation is excluded from the steady-state
-  * number, mirroring a long-running cluster job.
+  * Prints one JSON line, with the part files of each output table. A
+  * warm-up run (1/8 the size) precedes the measured run so JIT/codegen
+  * compilation is excluded from the steady-state number, mirroring a
+  * long-running cluster job.
   */
 object ScalingBench {
   def main(args: Array[String]): Unit = {
@@ -34,7 +35,13 @@ object ScalingBench {
 
     val kb = Corpus.kb(spark)
 
-    def runN(tag: String, nRun: Long): (Double, Long, Long, Long) = {
+    /** The parquet part files under `dir`, at any depth. */
+    def partFiles(dir: java.nio.file.Path): Long = {
+      val s = java.nio.file.Files.walk(dir)
+      try s.filter(p => p.getFileName.toString.startsWith("part-")).count() finally s.close()
+    }
+
+    def runN(tag: String, nRun: Long): (Double, Seq[Long], Seq[Long]) = {
       // a fresh, empty dir per run: in a used one runAll would resume
       // and skip every bucket
       val dir = java.nio.file.Paths.get(outDir, tag)
@@ -42,19 +49,20 @@ object ScalingBench {
       val t0 = System.nanoTime()
       Checkpointed.runAll(Corpus.pages(spark, nRun, partitions = 128), kb, dir.toString)
       val dt = (System.nanoTime() - t0) / 1e9
-      // counts from the written tables, outside the timed build
-      val Seq(nt, nn, ne) = Seq("triples", "nodes", "edges")
-        .map(t => spark.read.parquet(s"$dir/$t").count())
+      // rows and part files of the written tables, outside the timed build
+      val tables = Seq("triples", "nodes", "edges")
+      val rows = tables.map(t => spark.read.parquet(s"$dir/$t").count())
+      val files = tables.map(t => partFiles(dir.resolve(t)))
       System.err.println(f"[scaling] $tag cores=$cores pages=$nRun sec=$dt%.2f")
-      (dt, nt, nn, ne)
+      (dt, rows, files)
     }
 
     // JIT/codegen warmup on the same plan shapes at 1/8 the data.
     runN("warmup", math.max(n / 8, 5000L))
-    val (dt, nt, nn, ne) = runN("measured", n)
+    val (dt, Seq(nt, nn, ne), Seq(ft, fn, fe)) = runN("measured", n)
     val docsPerSec = n / dt
     val triplesPerSec = nt / dt
-    println(f"""{"bench":"scaling","cores":$cores,"pages":$n,"sec":$dt%.3f,"docs_per_sec":$docsPerSec%.1f,"triples_per_sec":$triplesPerSec%.1f,"triples":$nt,"nodes":$nn,"edges":$ne}""")
+    println(f"""{"bench":"scaling","cores":$cores,"pages":$n,"sec":$dt%.3f,"docs_per_sec":$docsPerSec%.1f,"triples_per_sec":$triplesPerSec%.1f,"triples":$nt,"nodes":$nn,"edges":$ne,"triples_files":$ft,"nodes_files":$fn,"edges_files":$fe}""")
     spark.stop()
   }
 }

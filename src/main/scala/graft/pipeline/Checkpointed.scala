@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrameWriter, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.AccumulatorV2
 import java.nio.file.{Files, Path, Paths}
@@ -21,7 +21,13 @@ import scala.jdk.CollectionConverters._
   * Protocol: a run processes only buckets without a manifest, writes
   * their triples with dynamic partition-overwrite (idempotent — a
   * half-written bucket from a killed run is fully replaced on retry,
-  * never appended), then commits one manifest per bucket. Manifests are
+  * never appended), then commits one manifest per bucket. Every bucketed
+  * table is written by `writeBuckets`: rows are laid out by bucket with
+  * one exchange first, so a bucket is one file (or AQE's split of a
+  * skewed one), not one file per (write task, bucket). The manifest
+  * counts are added up in the write's result tasks, after that exchange,
+  * where Spark applies a task's accumulator updates once per partition
+  * however often the task or its parent stage is retried. Manifests are
   * written AFTER the data, so a crash between data and manifest merely
   * re-does that bucket; the deterministic kernel makes the rewrite
   * byte-identical. The graph stage then swaps the node table in by
@@ -151,6 +157,21 @@ object Checkpointed {
     def value: Map[Int, Long] = sums
   }
 
+  /** The one bucketed write. `rows` are laid out by `partitionCols`
+    * with one exchange, so all rows of a bucket meet in one write task;
+    * `finish`, a narrow pass, then runs inside the write's result tasks,
+    * and the result replaces the partitions it holds under `path`
+    * (dynamic partition overwrite: a killed run's partial bucket
+    * directories are replaced wholesale on retry). The mode is a
+    * per-write option, never set on the caller's session (a session
+    * left at dynamic makes every later overwrite + partitionBy there
+    * keep the partitions it does not rewrite). */
+  private[graft] def writeBuckets(rows: DataFrame, path: String, partitionCols: Seq[String],
+      finish: DataFrame => DataFrame = identity): Unit =
+    finish(rows.repartition(partitionCols.map(col): _*))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*).parquet(path)
+
   /** Run (or resume) the triple-extraction stage over `pages` into
     * `baseDir/triples`, bucketed by url-domain. Returns the manifests
     * committed by THIS run (empty when everything was already done). */
@@ -162,28 +183,24 @@ object Checkpointed {
     val todo = pages.select(struct(pages.columns.map(col): _*), bucketOf(col("url"), nBuckets))
       .toDF("_1", "_2").filter(!col("_2").isin(done.toSeq: _*))
       .as[(Page, Int)](Encoders.tuple(pages.encoder, Encoders.scalaInt))
+    // one row per page routed to a pending bucket (non-English ones too,
+    // with no triples): the exchange moves triples, never page html
+    val routed = todo.map { case (p, pk) => (pk, Kg.extractPage(p)) }.toDF("pk", "triples")
 
-    // lineage counted by the write's own tasks: every page routed to a
-    // pending bucket (non-English ones too) and the triples it yields.
-    // Spark applies a result task's accumulator updates once per
-    // partition, so the counts stay exact under task retry only while no
-    // exchange sits between this flatMap and the writer: add none here.
+    // lineage counted by the write's result tasks, after the exchange:
+    // every routed page and the triples it yields. Spark applies a
+    // result task's accumulator updates once per partition, so the
+    // counts stay exact when a write task or the exchange's map stage is
+    // retried; a count taken on the map side of the exchange would not
+    // be. Keep the counting inside `finish`.
     val pageCounts, tripleCounts = new SumByBucket
     Seq(pageCounts, tripleCounts).foreach(spark.sparkContext.register(_))
-    val trip = todo.flatMap { case (p, pk) =>
-      val ts = Kg.extractPage(p).toVector
-      pageCounts.add((pk, 1L))
-      tripleCounts.add((pk, ts.size.toLong))
-      ts
-    }.withColumn("pk", bucketOf(col("url"), nBuckets))
-
-    // idempotent per-partition overwrite: a killed run's partial bucket
-    // directories are replaced wholesale on retry. The mode is a
-    // per-write option, never set on the caller's session (a session
-    // left at dynamic makes every later overwrite + partitionBy there
-    // keep the partitions it does not rewrite).
-    trip.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("pk").parquet(s"$baseDir/triples")
+    writeBuckets(routed, s"$baseDir/triples", Seq("pk"), laidOut =>
+      laidOut.as[(Int, Vector[TripleRow])].mapPartitions(_.flatMap { case (pk, ts) =>
+        pageCounts.add((pk, 1L))
+        tripleCounts.add((pk, ts.size.toLong))
+        ts
+      }).withColumn("pk", bucketOf(col("url"), nBuckets)))
 
     val manifests = pageCounts.value.toSeq.sorted.map { case (pk, nPages) =>
       BucketManifest(pk, nPages, tripleCounts.value(pk), runId)
@@ -285,9 +302,8 @@ object Checkpointed {
       // rows, which would otherwise freeze stale edges in place behind a
       // fresh graph marker (review finding r03).
       if (hadGraph) pending.foreach(pk => deleteDir(Paths.get(baseDir, "edges", s"pk=$pk")))
-      edgesFresh.withColumn("pk", bucketOf(col("url"), nBuckets))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pk").parquet(s"$baseDir/edges")
+      writeBuckets(edgesFresh.withColumn("pk", bucketOf(col("url"), nBuckets)),
+        s"$baseDir/edges", Seq("pk"))
     } finally release()
 
     // graph markers LAST, each stamped with its bucket's TRIPLE-manifest

@@ -87,13 +87,14 @@ object Kg {
     * dictionary-canonicalized + stemmed, obj verbatim — the triple
     * conventions of tests/fixtures/test_cases.json. Per-row failures are
     * tolerated (O4): a throwing row yields no triples, never fails the
-    * job. */
+    * job. The row's triples are finished inside the `try`, so a throw
+    * from the lazy normalization cannot escape while Spark drains them. */
   def triples(resolved: Dataset[ResolvedRow]): Dataset[TripleRow] = {
     val spark = resolved.sparkSession
     import spark.implicits._
     resolved.flatMap { r =>
-      try chunkTriples(r.url, r.chunk_id, r.resolved_text)
-      catch { case _: Exception => Iterator.empty }
+      try chunkTriples(r.url, r.chunk_id, r.resolved_text).toVector
+      catch { case _: Exception => Vector.empty }
     }
   }
 
@@ -154,16 +155,19 @@ object Kg {
   }
 
   /** The per-page fused kernel pass (shared by batch, streaming, and
-    * the ts-preserving streaming variant). */
-  def extractPage(p: Page): Iterator[TripleRow] = {
-    if (p.lang != "en") Iterator.empty
+    * the ts-preserving streaming variant). The whole page is finished
+    * inside the `try`: a throw from any kernel (HTML→text, chunker,
+    * coref, relations, normalization) drops the page, never the task
+    * (O4 row tolerance). */
+  def extractPage(p: Page): Vector[TripleRow] = {
+    if (p.lang != "en") Vector.empty
     else try {
       val seen = scala.collection.mutable.HashSet.empty[(String, String, String)]
-      chunksOf(HtmlText.extract(p.html)).iterator.flatMap { c =>
+      chunksOf(HtmlText.extract(p.html)).flatMap { c =>
         chunkTriples(p.url, c.id, Coref.resolve(c.text).resolvedText)
           .filter(t => seen.add((t.subj, t.pred, t.obj))) // first-wins A6
       }
-    } catch { case _: Exception => Iterator.empty } // O4 row tolerance
+    } catch { case _: Exception => Vector.empty } // O4 row tolerance
   }
 
   /** Per-document entity consolidation (A1-A4): first-wins entity table

@@ -53,13 +53,10 @@ object StreamIngest {
     * twice yields the same rows as writing it once. */
   def writeBatch(batch: Dataset[TripleRow], batchId: Long, outDir: String,
       nBuckets: Int): Unit = {
-    Kg.dedup(batch)
+    Checkpointed.writeBuckets(Kg.dedup(batch)
       .withColumn("batch", lit(batchId))
-      .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch", "pk")
-      .parquet(s"$outDir/triples")
-    ()
+      .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets)),
+      s"$outDir/triples", Seq("batch", "pk"))
   }
 
   /** Windowed throughput monitor: triples per 1-hour warc_ts window with
@@ -164,27 +161,16 @@ object StreamIngest {
         val edges = graft.pipeline.Pipeline
           .edgesFromVocab(trip.toDF, surfaceIri, useBroadcast = true)
         try {
-          // repartition by the partition column before the write: the
-          // edge plan ends with ~32 narrow tasks that would each open a
-          // file in every pk directory (~32×nBuckets tiny files per
-          // batch, and the dynamic-overwrite commit walks them all) —
-          // one pk-keyed shuffle of the batch-sized edges yields one
-          // file per pk (guide §6 small-files; identical rows)
-          edges.withColumn("batch", lit(batchId))
-            .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets))
-            .repartition(col("pk"))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch", "pk")
-            .parquet(s"$outDir/edges")
-          // node delta: this batch's vocabulary-sized node rows (both
-          // writes reuse the build's forced surfaceIri cache). A crash
-          // between the two writes replays the whole batch — both sinks
-          // are partition-idempotent, so the rewrite is byte-identical.
-          nodes.withColumn("batch", lit(batchId))
-            .repartition(1)
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(s"$outDir/nodes")
+          Checkpointed.writeBuckets(edges.withColumn("batch", lit(batchId))
+            .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets)),
+            s"$outDir/edges", Seq("batch", "pk"))
+          // node delta: this batch's vocabulary-sized node rows, one file
+          // (both writes reuse the build's forced surfaceIri cache). A
+          // crash between the two writes replays the whole batch — both
+          // sinks are partition-idempotent, so the rewrite is
+          // byte-identical.
+          Checkpointed.writeBuckets(nodes.withColumn("batch", lit(batchId)),
+            s"$outDir/nodes", Seq("batch"))
         } finally {
           org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(surfaceIri)
           org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(trip)

@@ -49,6 +49,43 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(!plan.contains("Exchange"), "extraction must not shuffle:\n" + plan.take(1000))
   }
 
+  test("the triples write: one exchange, keyed on pk, moving no html; counting runs after it") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Checkpointed.runTriples(Corpus.pages(spark, 60, 2), tempDir("graft_plan"), nBuckets = 8)
+      org.apache.spark.graftbridge.CoreBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val writes = plans.toArray(Array.empty[SparkPlan]).toSeq
+      .filter(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
+    assert(writes.size == 1, writes.mkString("\n"))
+    val write = writes.head
+    val exchanges = collect(write) { case e: ShuffleExchangeLike => e }
+    assert(exchanges.size == 1, write.toString.take(3000))
+    val exchange = exchanges.head
+    exchange.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), _) => assert(a.name == "pk", exchange)
+      case other => fail(s"the exchange must hash-partition on pk alone: $other")
+    }
+    assert(!exchange.child.output.exists(_.name == "html"),
+      s"the exchange must not move page html: ${exchange.child.output}")
+    // the counting pass sits above the exchange, in the write's result tasks
+    val counting = collect(write) { case m: MapPartitionsExec => m }
+    assert(counting.size == 1, write.toString.take(3000))
+    assert(collect(counting.head) { case e: ShuffleExchangeLike => e }.size == 1,
+      "the counting pass must read the exchange's output")
+  }
+
   test("operator-form dedup still combines map-side (partial min_by before exchange)") {
     val trip = Kg.extractTriplesFused(Corpus.pages(spark, 50, 2))
     val plan = Kg.dedup(trip).queryExecution.executedPlan.toString
