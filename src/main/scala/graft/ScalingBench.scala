@@ -12,10 +12,11 @@ import graft.pipeline.{Checkpointed, Corpus}
   *   sbt "runMain graft.ScalingBench 4 40000"
   *
   * and compare docs/s. Efficiency = (docs_s(4N) / docs_s(N)) / 4.
-  * Prints one JSON line, with the part files of each output table. A
-  * warm-up run (1/8 the size) precedes the measured run so JIT/codegen
-  * compilation is excluded from the steady-state number, mirroring a
-  * long-running cluster job.
+  * Prints one JSON line, with the part files of each output table, then
+  * deletes the builds it wrote under the out dir. A warm-up run (1/8
+  * the size) precedes the measured run so JIT/codegen compilation is
+  * excluded from the steady-state number, mirroring a long-running
+  * cluster job.
   */
 object ScalingBench {
   def main(args: Array[String]): Unit = {
@@ -63,6 +64,8 @@ object ScalingBench {
     val docsPerSec = n / dt
     val triplesPerSec = nt / dt
     println(f"""{"bench":"scaling","cores":$cores,"pages":$n,"sec":$dt%.3f,"docs_per_sec":$docsPerSec%.1f,"triples_per_sec":$triplesPerSec%.1f,"triples":$nt,"nodes":$nn,"edges":$ne,"triples_files":$ft,"nodes_files":$fn,"edges_files":$fe}""")
+    Seq("warmup", "measured").foreach(tag =>
+      Checkpointed.deleteDir(java.nio.file.Paths.get(outDir, tag)))
     spark.stop()
   }
 }

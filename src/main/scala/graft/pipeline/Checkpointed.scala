@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.util.AccumulatorV2
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
@@ -36,9 +37,16 @@ import scala.jdk.CollectionConverters._
   * rename, never truncated in place. This is the Iceberg-commit pattern
   * expressed on plain partitioned parquet (no Iceberg jars in this
   * sandbox — `format("iceberg")` + REPLACE PARTITIONS is the one-line
-  * swap, SURVEY.md §7.0).
+  * swap, SURVEY.md §7.0). Every table this object writes is zstd:
+  * snappy leaves the PLAIN-encoded `source_text` column of triples and
+  * edges nearly raw, and each committed byte is stored once and read
+  * back by the graph stage's scans.
   */
 object Checkpointed {
+
+  /** The parquet codec of every table `writeBuckets` and `swapNodes`
+    * write, set per write so the caller's session is left alone. */
+  private val codec = "zstd"
 
   /** Delete `dir` and everything under it; a no-op when it is absent. */
   private[graft] def deleteDir(dir: Path): Unit =
@@ -58,7 +66,7 @@ object Checkpointed {
     * pointer commit instead. */
   private[graft] def swapNodes(baseDir: String, table: DataFrameWriter[Row]): Unit = {
     val (nodes, next, prev) = nodeDirs(baseDir)
-    table.parquet(next.toString)
+    table.option("compression", codec).parquet(next.toString)
     if (Files.exists(nodes)) Files.move(nodes, prev, ATOMIC_MOVE)
     Files.move(next, nodes, ATOMIC_MOVE)
     deleteDir(prev)
@@ -97,7 +105,7 @@ object Checkpointed {
   /** Stable bucket 0..nBuckets-1 from the domain (not Spark's `hash`,
     * whose seed is engine-private: crc32 is portable and stable). */
   def bucketOf(url: org.apache.spark.sql.Column, nBuckets: Int): org.apache.spark.sql.Column =
-    pmod(crc32(domainOf(url)), lit(nBuckets.toLong)).cast("int")
+    pmod(crc32(domainOf(url)), lit(nBuckets.toLong)).cast(IntegerType)
 
   final case class BucketManifest(pk: Int, nPages: Long, nTriples: Long, runId: Long)
 
@@ -170,7 +178,7 @@ object Checkpointed {
       finish: DataFrame => DataFrame = identity): Unit =
     finish(rows.repartition(partitionCols.map(col): _*))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*).parquet(path)
+      .option("compression", codec).partitionBy(partitionCols: _*).parquet(path)
 
   /** Run (or resume) the triple-extraction stage over `pages` into
     * `baseDir/triples`, bucketed by url-domain. Returns the manifests
@@ -180,12 +188,15 @@ object Checkpointed {
     val spark = pages.sparkSession
     import spark.implicits._
     val done = doneBuckets(baseDir)
-    val todo = pages.select(struct(pages.columns.map(col): _*), bucketOf(col("url"), nBuckets))
-      .toDF("_1", "_2").filter(!col("_2").isin(done.toSeq: _*))
-      .as[(Page, Int)](Encoders.tuple(pages.encoder, Encoders.scalaInt))
+    // only the columns the per-page pass reads: the scan never decodes
+    // the page's text or warc_ts
+    val todo = pages
+      .select(col("url"), col("html"), col("lang"), bucketOf(col("url"), nBuckets).as("pk"))
+      .filter(!col("pk").isin(done.toSeq: _*)).as[(String, Array[Byte], String, Int)]
     // one row per page routed to a pending bucket (non-English ones too,
     // with no triples): the exchange moves triples, never page html
-    val routed = todo.map { case (p, pk) => (pk, Kg.extractPage(p)) }.toDF("pk", "triples")
+    val routed = todo.map { case (url, html, lang, pk) => (pk, Kg.extractPage(url, html, lang)) }
+      .toDF("pk", "triples")
 
     // lineage counted by the write's result tasks, after the exchange:
     // every routed page and the triples it yields. Spark applies a
@@ -269,7 +280,7 @@ object Checkpointed {
     val reextracted = hadGraph && pending.exists(pk => graphRuns.contains(pk))
     // partition-pruned read: only pending buckets (everything, when the
     // graph tables don't exist yet or a re-extraction forces a rebuild)
-    val tripAll = spark.read.schema(Encoders.product[TripleRow].schema.add("pk", "int"))
+    val tripAll = spark.read.schema(Encoders.product[TripleRow].schema.add("pk", IntegerType))
       .parquet(s"$baseDir/triples")
     val tripIn =
       if (hadGraph && !reextracted) tripAll.filter(col("pk").isin(pending: _*))

@@ -147,24 +147,27 @@ object Kg {
     * (merge_chunks, extractor.rs:495-550), so first-wins
     * (chunk, sentence emission order) dedup inside the row IS the global
     * (url, subj, pred, obj) dedup. The whole pages→triples stage is
-    * therefore shuffle-free (verified by PlanSpec). */
+    * therefore shuffle-free (verified by PlanSpec). Only the page
+    * columns the pass reads are selected, so a parquet page scan never
+    * decodes `text` or `warc_ts`. */
   def extractTriplesFused(pages: Dataset[Page]): Dataset[TripleRow] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    pages.flatMap(extractPage _)
+    pages.select("url", "html", "lang").as[(String, Array[Byte], String)]
+      .flatMap { case (url, html, lang) => extractPage(url, html, lang) }
   }
 
-  /** The per-page fused kernel pass (shared by batch, streaming, and
-    * the ts-preserving streaming variant). The whole page is finished
-    * inside the `try`: a throw from any kernel (HTML→text, chunker,
-    * coref, relations, normalization) drops the page, never the task
-    * (O4 row tolerance). */
-  def extractPage(p: Page): Vector[TripleRow] = {
-    if (p.lang != "en") Vector.empty
+  /** The per-page fused kernel pass (shared by the checkpointed batch
+    * build, `extractTriplesFused` and streaming), over the only page
+    * fields it reads. The whole page is finished inside the `try`: a
+    * throw from any kernel (HTML→text, chunker, coref, relations,
+    * normalization) drops the page, never the task (O4 row tolerance). */
+  def extractPage(url: String, html: Array[Byte], lang: String): Vector[TripleRow] = {
+    if (lang != "en") Vector.empty
     else try {
       val seen = scala.collection.mutable.HashSet.empty[(String, String, String)]
-      chunksOf(HtmlText.extract(p.html)).flatMap { c =>
-        chunkTriples(p.url, c.id, Coref.resolve(c.text).resolvedText)
+      chunksOf(HtmlText.extract(html)).flatMap { c =>
+        chunkTriples(url, c.id, Coref.resolve(c.text).resolvedText)
           .filter(t => seen.add((t.subj, t.pred, t.obj))) // first-wins A6
       }
     } catch { case _: Exception => Vector.empty } // O4 row tolerance

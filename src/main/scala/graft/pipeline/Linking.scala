@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** Entity-linking constants and join shapes (Stage 3). The linker itself
   * is `Pipeline.linkSurfaces`: the reference's per-name lookup loop
@@ -49,7 +50,7 @@ object Linking {
     * side, so a Zipfian-hot block never lands on one reducer. */
   private[pipeline] def saltedBlockJoin(m: DataFrame, k: DataFrame,
       salts: Int = fuzzyBlockSalts): DataFrame = {
-    val ks = k.withColumn("salt", pmod(hash(col("label_lc")), lit(salts)).cast("int"))
+    val ks = k.withColumn("salt", pmod(hash(col("label_lc")), lit(salts)).cast(IntegerType))
     val ms = m.withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
     ms.join(ks, Seq("block", "salt")).drop("salt")
   }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.storage.StorageLevel
 
 /** Flagship end-to-end pipeline, shaped for 100 TB:
@@ -83,7 +84,8 @@ object Pipeline {
     * no selector is kept for it. */
   def linkSurfaces(surfaces: DataFrame, kb: Dataset[KbEntry],
       useBroadcast: Boolean = true): DataFrame = {
-    val s = surfaces.withColumn("surface_lc", lower(col("surface")))
+    // Spark's `lower`, without its first-use ICU table build (see LowerExpression)
+    val s = surfaces.withColumn("surface_lc", graft.functions.LowerExpression.lower(col("surface")))
     val kbDf = kb.toDF
     def exactRows(joined: DataFrame) =
       joined.select(col("surface"), col("uri"), lit(Linking.exactConfidence).as("confidence"))
@@ -372,7 +374,7 @@ object Pipeline {
             col("iri").as("obj_iri"))), Seq("obj"), "left")
       } else {
         val s = lit(joinBackSalts)
-        val salted = trip.withColumn("salt", pmod(crc32(col("url")), s).cast("int"))
+        val salted = trip.withColumn("salt", pmod(crc32(col("url")), s).cast(IntegerType))
         val vocabSalted = surfaceIri
           .select(col("surface"), col("iri"))
           .withColumn("salt", explode(sequence(lit(0), s - 1)))

@@ -73,7 +73,9 @@ object StreamIngest {
   def transformWithTs(pages: Dataset[Page]): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    pages.flatMap(p => Kg.extractPage(p).map(t => (t, p.warc_ts)))
+    pages.select("url", "html", "lang", "warc_ts")
+      .as[(String, Array[Byte], String, java.sql.Timestamp)]
+      .flatMap { case (url, html, lang, ts) => Kg.extractPage(url, html, lang).map(t => (t, ts)) }
       .select(col("_1.*"), col("_2").as("warc_ts"))
   }
 

@@ -56,6 +56,34 @@ class FunctionsSpec extends SparkTestBase {
     assert(plan.toLowerCase.contains("jaro_winkler"), plan.take(600))
   }
 
+  test("LowerExpression returns what Spark's lower returns, null included") {
+    import spark.implicits._
+    // ASCII, Latin-1, dotted capital I, capital sharp s, a word-final
+    // sigma, a supplementary-plane capital (Deseret) and null
+    val words = Seq(Some("Acme CORP 42"), Some("ÉCOLE Ñandú ÅÆØ"), Some("İstanbul"),
+      Some("GROẞE"), Some("ΟΔΥΣΣΕΥΣ ΚΑΙ"), Some("\ud801\udc00BC"), Some(""), None)
+    val df = words.toDF("w")
+    def run(c: org.apache.spark.sql.Column) = df.select(c).collect().map(r => Option(r.getString(0))).toSeq
+    val native = run(LowerExpression.lower(col("w")))
+    assert(native == run(lower(col("w"))))
+    assert(native.last.isEmpty)
+    assert(native(4).contains("οδυσσευς και")) // the word-final sigma is final
+    assert(native(5).contains("\ud801\udc28bc"))
+  }
+
+  test("the link plan lower-cases surfaces natively: no lower(, no ScalaUDF") {
+    import spark.implicits._
+    // read back from parquet: a local relation would be constant-folded
+    val dir = tempDir("graft_fn")
+    Seq("Acme Corporation", "ÉCOLE").toDF("surface").write.parquet(s"$dir/s")
+    val df = graft.pipeline.Pipeline.linkSurfaces(spark.read.parquet(s"$dir/s"),
+      graft.pipeline.Corpus.kb(spark, 50))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("lower("), plan.take(2000))
+    assert(!plan.contains("ScalaUDF"), plan.take(2000))
+    assert(plan.contains("lowercase("), plan.take(2000))
+  }
+
   test("slug is registered for SQL via extensions and stays in codegen") {
     // register on the shared session the same way the extension does
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -193,6 +193,44 @@ class CheckpointedSpec extends SparkTestBase {
     }
   }
 
+  /** The codecs of the column chunks of every parquet file under `dir`. */
+  private def codecs(dir: Path): Set[String] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val s = Files.walk(dir)
+    val files = try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+      finally s.close()
+    assert(files.nonEmpty, s"no parquet file under $dir")
+    files.flatMap { f =>
+      val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri),
+        spark.sparkContext.hadoopConfiguration)
+      val r = ParquetFileReader.open(in)
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name))
+      finally r.close()
+    }.toSet
+  }
+
+  test("every table a build, a resume or a stream writes is zstd in every column chunk") {
+    val (resumed, added) = resumedBuild()
+    for (dir <- Seq(oneShot, resumed); t <- Seq("triples", "edges", "nodes"))
+      assert(codecs(dir.resolve(t)) == Set("ZSTD"), s"$dir/$t")
+    for (t <- Seq("triples", "edges"); pk <- added)
+      assert(codecs(resumed.resolve(t).resolve(s"pk=$pk")) == Set("ZSTD"), s"resumed $t pk=$pk")
+    // a stream: triples by writeBatch, edges and node deltas by a linked
+    // batch, and the node table its compaction swaps in
+    val work = Paths.get(freshDir())
+    graft.streaming.StreamIngest.writeBatch(Kg.extractTriplesFused(killPages), 0L,
+      work.resolve("stream").toString, nBuckets = 4)
+    killPages.limit(60).write.parquet(work.resolve("pages").toString)
+    val out = work.resolve("out")
+    graft.streaming.StreamIngest.runLinked(spark, work.resolve("pages").toString, out.toString,
+      work.resolve("ckpt").toString, killKb).awaitTermination()
+    for (d <- Seq(work.resolve("stream").resolve("triples"), out.resolve("edges"), out.resolve("nodes")))
+      assert(codecs(d) == Set("ZSTD"), d)
+    graft.streaming.StreamIngest.compactNodes(spark, out.toString)
+    assert(codecs(out.resolve("nodes")) == Set("ZSTD"), "compacted nodes")
+  }
+
   test("manifests stay exact when a triples write task and its exchange's map stage are retried") {
     import spark.implicits._
     val pages = Corpus.pages(spark, 200, 4)
@@ -372,7 +410,7 @@ class CheckpointedSpec extends SparkTestBase {
     val dir = freshDir()
     val ms = Checkpointed.runTriples(spark.createDataset(input), dir, nBuckets = 8, runId = 1)
     val neighbours = en.filter(p => pkOf(p.url) == pk)
-    val expected = neighbours.map(p => p.url -> Kg.extractPage(p).size.toLong).toMap
+    val expected = neighbours.map(p => p.url -> Kg.extractPage(p.url, p.html, p.lang).size.toLong).toMap
     assert(neighbours.nonEmpty && expected.values.sum > 0)
     val written = spark.read.parquet(s"$dir/triples").filter(col("pk") === pk)
       .groupBy("url").count().as[(String, Long)].collect().toMap

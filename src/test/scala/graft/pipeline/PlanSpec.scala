@@ -49,11 +49,9 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(!plan.contains("Exchange"), "extraction must not shuffle:\n" + plan.take(1000))
   }
 
-  test("the triples write: one exchange, keyed on pk, moving no html; counting runs after it") {
-    import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+  /** The executed plan of the one parquet write `runTriples` makes. */
+  private def triplesWritePlan(pages: org.apache.spark.sql.Dataset[Page]): SparkPlan = {
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
@@ -63,13 +61,21 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
     spark.listenerManager.register(listener)
     try {
-      Checkpointed.runTriples(Corpus.pages(spark, 60, 2), tempDir("graft_plan"), nBuckets = 8)
+      Checkpointed.runTriples(pages, tempDir("graft_plan"), nBuckets = 8)
       org.apache.spark.graftbridge.CoreBridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     val writes = plans.toArray(Array.empty[SparkPlan]).toSeq
       .filter(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
     assert(writes.size == 1, writes.mkString("\n"))
-    val write = writes.head
+    writes.head
+  }
+
+  test("the triples write: one exchange, keyed on pk, moving no html; counting runs after it") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val write = triplesWritePlan(Corpus.pages(spark, 60, 2))
     val exchanges = collect(write) { case e: ShuffleExchangeLike => e }
     assert(exchanges.size == 1, write.toString.take(3000))
     val exchange = exchanges.head
@@ -84,6 +90,18 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(counting.size == 1, write.toString.take(3000))
     assert(collect(counting.head) { case e: ShuffleExchangeLike => e }.size == 1,
       "the counting pass must read the exchange's output")
+  }
+
+  test("the triples write scans only the page columns the per-page pass reads") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val dir = tempDir("graft_plan")
+    Corpus.pages(spark, 60, 2).write.parquet(s"$dir/pages")
+    val pages = spark.read.parquet(s"$dir/pages").as(org.apache.spark.sql.Encoders.product[Page])
+    val write = triplesWritePlan(pages)
+    val scans = collect(write) { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, write.toString.take(3000))
+    assert(scans.head.requiredSchema.fieldNames.toSeq == Seq("url", "html", "lang"),
+      scans.head.requiredSchema.catalogString)
   }
 
   test("operator-form dedup still combines map-side (partial min_by before exchange)") {
