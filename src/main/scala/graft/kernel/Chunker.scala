@@ -91,8 +91,6 @@ final class Chunker(val maxChunkSize: Int, val overlapChars: Int) extends Serial
     }
   }
 
-  def needsChunking(text: String): Boolean = text.length > maxChunkSize
-
   /** Chunks a text of `length` chars splits into (chunking.rs:89-96). */
   def estimateChunkCount(length: Long): Long =
     if (length <= maxChunkSize) 1L

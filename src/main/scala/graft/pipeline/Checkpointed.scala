@@ -287,8 +287,8 @@ object Checkpointed {
       else tripAll
     val (nodesFresh, edgesAll, release) =
       Pipeline.graphFromTriples(tripIn.drop("pk").as[TripleRow], kb)
-    // the build's two vocabulary caches live until the edges write, the
-    // last action over them
+    // on the shuffle tier the build's two vocabulary caches live until
+    // the edges write, the last action over them
     try {
       // on the rebuild path only the pending buckets' edge partitions are
       // (re)written — old-bucket edge files stay untouched either way

@@ -1,10 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Flagship end-to-end pipeline, shaped for 100 TB:
   *
@@ -24,14 +25,19 @@ import org.apache.spark.storage.StorageLevel
   *     is a broadcast;
   *  4. graph dedup by IRI / edge key.
   *
-  * Shuffles of the graph build: the big-table rollup exchange; one
-  * vocabulary-sized exchange that lays the rollup out at one partition
-  * per core (see `surfaceRollup`); the fuzzy top-1 window's exchange
-  * over the scored candidates (the KB itself is scanned, never
-  * shuffled, below the broadcast vocabulary limit); the node reduce on
-  * iri. Edges are a projection of the already-deduped triples through
-  * broadcast joins (a salted shuffle join only above the broadcast
-  * vocabulary limit). Zero shuffle of raw text.
+  * Shuffles of the graph build: the big-table rollup exchange, whose
+  * map stage runs once — the vocabulary is counted and, below the
+  * broadcast vocabulary limit, collected from its output; the fuzzy
+  * top-1 window's exchange over the scored candidates (the KB itself
+  * is scanned, never shuffled, below the broadcast vocabulary limit);
+  * the node reduce on iri. Linking and minting run over the
+  * driver-local vocabulary, and edges are a projection of the
+  * already-deduped triples through broadcast joins of the local
+  * vocabulary→IRI table, so the triples are scanned twice (rollup,
+  * edges) and nothing is cached. Above the limit the vocabulary stays
+  * distributed: it is laid out at one partition per core and
+  * persisted, and linking, the mint join and a salted join-back
+  * shuffle. Zero shuffle of raw text.
   */
 object Pipeline {
 
@@ -118,41 +124,58 @@ object Pipeline {
       .withColumnRenamed("confidence", "link_confidence")
   }
 
-  /** Vocabulary row count under which the join-back side is broadcast.
-    * Above it (open-vocabulary web crawl: 10^8-10^9 distinct surfaces)
-    * broadcasting would OOM every executor, so linking, the mint join
-    * and the join-back switch to shuffle joins. ~50M short rows ≈ low
-    * single-digit GB — tune per cluster executor memory. */
-  val defaultBroadcastVocabLimit = 50000000L
+  /** Vocabulary row count up to which the graph build holds the
+    * vocabulary on the driver (the broadcast tier, see
+    * `surfaceIriReleasable`): a bound on the rows the driver collects
+    * and keeps. Spark's SizeEstimator on build-web's 1,800-surface
+    * vocabulary measured 221 B per collected vocabulary row, 305 B per
+    * row of its local relation, 303 B per collected vocabulary→IRI row
+    * and 410 B per row of that local relation: about 1 KB per surface
+    * while the minted table is collected, so 2M rows ≈ 2 GB of driver
+    * heap at the peak. The collects also ship about 200 B of task
+    * results per surface, well inside `spark.driver.maxResultSize`'s
+    * 1 GiB default. Above the bound (open-vocabulary web crawl: 10^8-10^9
+    * distinct surfaces) the vocabulary stays distributed, and linking,
+    * the mint join and the join-back switch to shuffle joins. */
+  val defaultBroadcastVocabLimit = 2000000L
 
   /** Salt count for the shuffle join-back (spreads one Zipfian-hot
     * surface key over this many shuffle partitions). */
   val joinBackSalts = 16
 
   /** The graph build: (nodes, edges, release) from a file-backed (or
-    * cached) triples Dataset. `release` unpersists the two internal
-    * vocabulary-sized caches; every caller MUST call it after its last
-    * action on the returned frames — a long-running caller (a stream's
-    * per-batch build, a resumable build in a long-lived JVM) would
-    * otherwise leak two persisted tables per call for the JVM lifetime
-    * (the pageRank leak pattern, review finding r03).
+    * cached) triples Dataset. On the shuffle tier `release` unpersists
+    * the two internal vocabulary-sized caches; every caller MUST call
+    * it after its last action on the returned frames — a long-running
+    * caller (a stream's per-batch build, a resumable build in a
+    * long-lived JVM) would otherwise leak two persisted tables per call
+    * for the JVM lifetime (the pageRank leak pattern, review finding
+    * r03). On the broadcast tier it is a no-op: nothing is persisted.
     *
     * Cost model (the part that must survive 100 TB): exactly ONE
     * aggregation over the big table (the vocabulary rollup —
-    * surface→(type, slug), Zipfian mentions collapse to single rows);
-    * linking, IRI minting and node dedup are vocabulary-sized. Linking,
-    * the mint join and the join-back are SIZE-TIERED on the measured
-    * vocabulary count (the rollup cache is forced anyway, so the count
-    * is free): a closed-world vocabulary broadcasts (zero shuffle of
-    * the big side); an
-    * open-vocabulary crawl falls back to a salted shuffle join — the
-    * triple side takes a deterministic url-hash salt and the vocabulary
-    * side is replicated across salts, so a Zipfian-hot surface never
-    * lands on one reducer. Edges stay a projection — upstream dedup on
-    * (url, subj, pred, obj) already makes edge rows unique, so there is
-    * no additional dedup shuffle either way. Per-IRI properties are a
-    * separate aggregation (`nodePropsFromVocab`) over the same
-    * vocabulary table. */
+    * surface→(type, slug), Zipfian mentions collapse to single rows),
+    * and two scans of it: the rollup's and the edges'. Linking, IRI
+    * minting and node dedup are vocabulary-sized. Linking, the mint
+    * join and the join-back are SIZE-TIERED on the vocabulary count,
+    * read from the rollup's materialized shuffle output:
+    *  - a closed-world vocabulary (the broadcast tier) is collected to
+    *    the driver, linked and minted there as local relations, and the
+    *    join-back broadcasts the local vocabulary→IRI table (zero
+    *    shuffle of the big side). Jobs: the rollup's map stage, one
+    *    count and one collect over its output, the link jobs (the
+    *    exact hits and fuzzy misses broadcasts, the top-1 window's
+    *    exchange) and the collect of the minted table; then the node
+    *    reduce's exchange and one broadcast per join-back side;
+    *  - an open-vocabulary crawl keeps the vocabulary distributed and
+    *    persisted, and falls back to a salted shuffle join — the triple
+    *    side takes a deterministic url-hash salt and the vocabulary
+    *    side is replicated across salts, so a Zipfian-hot surface never
+    *    lands on one reducer.
+    * Edges stay a projection — upstream dedup on (url, subj, pred, obj)
+    * already makes edge rows unique, so there is no additional dedup
+    * shuffle either way. Per-IRI properties are a separate aggregation
+    * (`nodePropsFromVocab`) over the same vocabulary table. */
   def graphFromTriples(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
       broadcastVocabLimit: Long = defaultBroadcastVocabLimit): (DataFrame, DataFrame, () => Unit) = {
     val (surfaceIri, vocabN, release) = surfaceIriReleasable(trip, kb, broadcastVocabLimit)
@@ -178,59 +201,86 @@ object Pipeline {
     * release); callers must invoke release after their terminal
     * action.
     *
-    * Both persisted tables hold one partition per core: a cached plan
-    * keeps its output partitioning, so the layout is set where the
-    * rollup ends (`surfaceRollup`'s repartition), and `surfaceIri`
-    * inherits it through `mintIris`' broadcast link join (on the
-    * broadcast vocabulary tier). */
+    * The rollup's big-table exchange runs once: its map stage is
+    * materialized when the aggregate's RDD is taken, and every later
+    * job reads that shuffle's (vocabulary-sized) output.
+    *  - broadcast tier (vocabN ≤ `broadcastVocabLimit`): the vocabulary
+    *    is counted and collected from that shuffle, linked and minted
+    *    over the driver-local copy, and the vocabulary→IRI table is
+    *    collected too, so `surfaceIri` is a local relation: nothing is
+    *    persisted, no cache is counted, and every join-back broadcasts
+    *    a `LocalTableScan`. `release` is a no-op. The driver holds both
+    *    tables (see `defaultBroadcastVocabLimit`);
+    *  - shuffle tier: the vocabulary is a DataFrame over the same
+    *    counted RDD, laid out at one partition per core and persisted
+    *    (a cached plan keeps its output partitioning), and `surfaceIri`
+    *    is persisted and counted once; `release` unpersists both. */
   def surfaceIriReleasable(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
       broadcastVocabLimit: Long = defaultBroadcastVocabLimit): (DataFrame, Long, () => Unit) = {
-    val surfaceInfo = surfaceRollup(trip.toDF)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val vocabN = surfaceInfo.count() // forces the cache; sizes the tier
-    val useBroadcast = vocabN <= broadcastVocabLimit
+    val spark = trip.sparkSession
+    val rollup = rollupAggregate(trip.toDF)
+    val vocab = rollup.rdd // runs the big-table exchange's map stage
+    val vocabN = vocab.count()
+    def local(rows: Array[Row], schema: StructType) = spark.createDataFrame(rows.toSeq.asJava, schema)
+    if (vocabN <= broadcastVocabLimit) {
+      val surfaceInfo = local(vocab.collect(), rollup.schema)
+      val surfaceIri = mintIris(surfaceInfo, linkSurfaces(surfaceInfo.select(col("surface")), kb),
+        useBroadcast = true)
+      (local(surfaceIri.collect(), surfaceIri.schema), vocabN, () => ())
+    } else {
+      // links has unique surface keys (barring KB homonym labels, see
+      // linkSurfaces), so the shuffle mint join needs no salt (no skew)
+      val surfaceInfo = spark.createDataFrame(vocab, rollup.schema)
+        .repartition(corePartitions(spark), col("surface"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val links = linkSurfaces(surfaceInfo.select(col("surface")), kb, useBroadcast = false)
+      val surfaceIri = mintIris(surfaceInfo, links, useBroadcast = false)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      surfaceIri.count() // fills both caches; the shuffle join-back reuses them
+      (surfaceIri, vocabN,
+        () => { surfaceIri.unpersist(); surfaceInfo.unpersist(); () })
+    }
+  }
 
-    // Linking + IRI minting, all vocabulary-sized. links has unique
-    // surface keys (barring KB homonym labels, see linkSurfaces), so the
-    // non-broadcast join needs no salt (no skew).
-    val links = linkSurfaces(surfaceInfo.select(col("surface")), kb, useBroadcast)
-    val surfaceIri = mintIris(surfaceInfo, links, useBroadcast)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    surfaceIri.count() // force once; both join-back tiers reuse the cache
-    (surfaceIri, vocabN,
-      () => { surfaceIri.unpersist(); surfaceInfo.unpersist(); () })
+  /** min(defaultParallelism, spark.sql.shuffle.partitions): one
+    * partition per core, the layout of a cached vocabulary table. */
+  private def corePartitions(spark: SparkSession): Int =
+    math.min(spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+
+  /** The rollup's aggregation: ONE scan of the triples, each row
+    * exploded into its subject mention and, when `obj_is_entity`, its
+    * object mention, then min_by (type, slug) per surface, combined
+    * map-side below the big-table exchange. */
+  private def rollupAggregate(trip: DataFrame): DataFrame = {
+    def mention(surface: String, tpe: String, slug: String) =
+      struct(col(surface).as("surface"), col(tpe).as("entity_type"), col(slug).as("slug"))
+    val subj = mention("subj_surface", "subj_type", "subj")
+    trip
+      .select(explode(when(col("obj_is_entity"), array(subj, mention("obj", "obj_type", "obj_slug")))
+        .otherwise(array(subj))).as("m"))
+      .select(col("m.*"))
+      .groupBy(col("surface"))
+      .agg(min_by(struct(col("entity_type"), col("slug")),
+        struct(col("entity_type"), col("slug"))).as("i"))
+      .select(col("surface"), col("i.entity_type").as("entity_type"), col("i.slug").as("slug"))
   }
 
   /** The ONE big-table rollup of the graph build: every distinct entity
     * surface with its deterministic (type, slug) representative.
     *
-    * Ends with a vocabulary-sized repartition to
-    * min(defaultParallelism, spark.sql.shuffle.partitions) partitions.
-    * Callers persist this table, and a cached plan keeps its output
-    * partitioning (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
-    * is false by default), so without it the vocabulary would be cached
-    * at the big-table exchange's partition count (128 under graft.Main:
-    * a few rows per partition on a small vocabulary), and every link /
-    * mint / node / edge job over it would run that many tasks. The
-    * big-table exchange keeps its map-side partial aggregate and its
-    * AQE coalescing; only the layout of the (small) result changes,
-    * never its rows. */
-  def surfaceRollup(trip: DataFrame): DataFrame = {
-    val spark = trip.sparkSession
-    val parts = math.min(spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    trip
-      .select(col("subj_surface").as("surface"), col("subj_type").as("entity_type"),
-        col("subj").as("slug"))
-      .unionByName(trip.filter(col("obj_is_entity"))
-        .select(col("obj").as("surface"), col("obj_type").as("entity_type"),
-          col("obj_slug").as("slug")))
-      .groupBy(col("surface"))
-      .agg(min_by(struct(col("entity_type"), col("slug")),
-        struct(col("entity_type"), col("slug"))).as("i"))
-      .select(col("surface"), col("i.entity_type").as("entity_type"), col("i.slug").as("slug"))
-      .repartition(parts, col("surface"))
-  }
+    * Ends with a vocabulary-sized repartition to one partition per core
+    * (`corePartitions`), for callers that persist or write this table:
+    * a cached plan keeps its output partitioning
+    * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is
+    * false by default), so without it the vocabulary would be cached at
+    * the big-table exchange's partition count (128 under graft.Main: a
+    * few rows per partition on a small vocabulary), and every job over
+    * it would run that many tasks. The big-table exchange keeps its
+    * map-side partial aggregate and its AQE coalescing; only the layout
+    * of the (small) result changes, never its rows. */
+  def surfaceRollup(trip: DataFrame): DataFrame =
+    rollupAggregate(trip).repartition(corePartitions(trip.sparkSession), col("surface"))
 
   /** Attach link URIs and mint IRIs for unlinked surfaces (md5 prefix —
     * portable: identical in DuckDB, so the whole graph build stays

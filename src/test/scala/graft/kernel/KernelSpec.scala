@@ -78,10 +78,8 @@ class KernelSpec extends AnyFunSuite {
     }
   }
 
-  test("needs_chunking / estimate_chunk_count (chunking.rs:151-165)") {
+  test("estimate_chunk_count (chunking.rs:151-165)") {
     val c = new Chunker(100, 20)
-    assert(!c.needsChunking("Short text"))
-    assert(c.needsChunking("x" * 200))
     assert(c.estimateChunkCount("Short".length) == 1)
     assert(c.estimateChunkCount(100) == 1)
     assert(c.estimateChunkCount(200) == 3)

@@ -124,13 +124,14 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     try f finally spark.conf.set(key, old)
   }
 
-  test("vocabulary tables are cached at one partition per core; rollup still combines map-side") {
+  test("shuffle tier: one-partition-per-core vocabulary caches, map-side rollup") {
     withShufflePartitions(128) {
       val want = math.min(spark.sparkContext.defaultParallelism, 128)
       val trip = Kg.extractTriplesFused(Corpus.pages(spark, 100, 4))
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
-      val (_, _, release) = Pipeline.surfaceIriReleasable(trip, Corpus.kb(spark, 500))
+      val (_, _, release) = Pipeline.surfaceIriReleasable(trip, Corpus.kb(spark, 500),
+        broadcastVocabLimit = 0L) // force the open-vocabulary path
       try {
         val cached = sc.getPersistentRDDs.collect { case (id, rdd) if !before(id) => rdd }
         assert(cached.size == 2, s"expected the rollup and surfaceIri caches: $cached")
@@ -150,6 +151,55 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(layout.get < big.get, "the layout exchange must sit above the big-table one")
       assert(plan.indexOf("partial_min_by") > big.get,
         "partial min_by must run below (before) the big-table exchange:\n" + plan.take(1500))
+    }
+  }
+
+  test("broadcast tier: no vocabulary cache; nodes and edges broadcast only local tables") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    val trip = Kg.extractTriplesFused(Corpus.pages(spark, 100, 4))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (nodes, edges, release) = Pipeline.graphFromTriples(trip, Corpus.kb(spark, 500))
+    try {
+      assert(sc.getPersistentRDDs.keySet == before, "the broadcast tier must persist nothing")
+      Seq(nodes, edges).foreach(_.collect()) // AQE final plans
+      val broadcasts = Seq(nodes, edges).flatMap(df =>
+        collectWithSubqueries(df.queryExecution.executedPlan) { case b: BroadcastExchangeExec => b })
+      assert(broadcasts.nonEmpty, "the edges join-back must broadcast")
+      broadcasts.foreach(b => assert(b.child.isInstanceOf[LocalTableScanExec],
+        s"a join-back broadcast must be a LocalTableScan of the vocabulary:\n$b"))
+    } finally release()
+  }
+
+  test("a graph build scans the triples table twice on both tiers") {
+    import org.apache.spark.scheduler.SparkListenerStageCompleted
+    val dir = tempDir("graft_plan")
+    Kg.extractTriplesFused(Corpus.pages(spark, 100, 4)).write.parquet(s"$dir/triples")
+    val trip = spark.read.schema(org.apache.spark.sql.Encoders.product[TripleRow].schema)
+      .parquet(s"$dir/triples").as(org.apache.spark.sql.Encoders.product[TripleRow])
+    val nTriples = trip.count()
+    val kb = Corpus.kb(spark, 500)
+    val sc = spark.sparkContext
+    for (limit <- Seq(Pipeline.defaultBroadcastVocabLimit, 0L)) {
+      // rows read by stages that scan parquet (a cached block read also
+      // counts as input records, so stages without a file scan are left out)
+      val scanned = new java.util.concurrent.atomic.AtomicLong()
+      val listener = new SparkListener {
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+            scanned.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+      }
+      org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      try {
+        val (nodes, edges, release) = Pipeline.graphFromTriples(trip, kb, limit)
+        try Seq(nodes, edges).foreach(_.write.format("noop").mode("overwrite").save())
+        finally release()
+        org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
+      } finally sc.removeSparkListener(listener)
+      assert(scanned.get == 2 * nTriples,
+        s"limit $limit: ${scanned.get} rows read of $nTriples triples: " +
+          "one scan for the rollup, one for the edges")
     }
   }
 
