@@ -293,7 +293,7 @@ object Checkpointed {
       // on the rebuild path only the pending buckets' edge partitions are
       // (re)written — old-bucket edge files stay untouched either way
       val edgesFresh =
-        if (hadGraph && reextracted)
+        if (reextracted)
           edgesAll.withColumn("__pk", bucketOf(col("url"), nBuckets))
             .filter(col("__pk").isin(pending: _*)).drop("__pk")
         else edgesAll

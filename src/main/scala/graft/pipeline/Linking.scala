@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
@@ -11,6 +11,13 @@ import org.apache.spark.sql.types.IntegerType
   * J1-J5), tiered on the vocabulary size: below the broadcast
   * vocabulary limit the surfaces are broadcast and the KB streams past
   * them; above it both sides shuffle.
+  *
+  * Salting policy of the shuffle tier, used by every join whose big
+  * side may carry a Zipfian-hot key (the fuzzy block join, both
+  * join-back sides): split the big side over `salts` salts by a stable
+  * hash of a row column and replicate the small side across all of
+  * them, so one hot key lands on `salts` reducers instead of one
+  * (`saltedJoin`).
   *
   * Scoring replicates entity_linker.rs:367-401: exact (case-insensitive)
   * match ⇒ 0.95; fuzzy ⇒ JW similarity, kept if ≥ fuzzyThreshold (0.8);
@@ -29,8 +36,8 @@ object Linking {
   val fuzzyThreshold = 0.8 // entity_linker.rs config default
   val confidenceThreshold = 0.5 // entity_linker.rs:64 EntityLinker default
 
-  /** Salt count for the shuffle-tier blocked fuzzy join. */
-  val fuzzyBlockSalts = 16
+  /** Salt count of the shuffle tier's salted joins (`saltedJoin`). */
+  val salts = 16
 
   /** KB side of the fuzzy blocked join: one row per DISTINCT token of
     * each label (block = token). Joined against the miss side's FIRST
@@ -43,15 +50,13 @@ object Linking {
   private[pipeline] def kbTokenBlocked(kb: DataFrame): DataFrame =
     kb.withColumn("block", explode(array_distinct(split(col("label_lc"), " "))))
 
-  /** The shuffle-tier blocked fuzzy join shape of Pipeline.linkSurfaces: the
-    * KB side (column `label_lc`, with a `block` key) is SPLIT across
-    * salts by label hash; the surface side (with the same `block` key)
-    * is replicated per salt — replicate the small side, split the big
-    * side, so a Zipfian-hot block never lands on one reducer. */
-  private[pipeline] def saltedBlockJoin(m: DataFrame, k: DataFrame,
-      salts: Int = fuzzyBlockSalts): DataFrame = {
-    val ks = k.withColumn("salt", pmod(hash(col("label_lc")), lit(salts)).cast(IntegerType))
-    val ms = m.withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-    ms.join(ks, Seq("block", "salt")).drop("salt")
-  }
+  /** `big.join(small, on, how)` with the big side split across `salts`
+    * by `pmod(by, salts)` and the small side replicated per salt: every
+    * big row meets exactly the small rows of its key, so for a non-null
+    * `by` the rows are those of the plain join, `inner` or `left`. */
+  def saltedJoin(big: DataFrame, by: Column, small: DataFrame, on: Seq[String],
+      how: String = "inner"): DataFrame =
+    big.withColumn("salt", pmod(by, lit(salts)).cast(IntegerType))
+      .join(small.withColumn("salt", explode(sequence(lit(0), lit(salts - 1)))), on :+ "salt", how)
+      .drop("salt")
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
@@ -80,10 +80,9 @@ object Pipeline {
     *    memory (PlanSpec gates every broadcast at ≤ the surface count);
     *  - shuffle (a vocabulary above the broadcast limit): exact is a
     *    plain shuffle join (labels and surfaces are both near-distinct
-    *    keys — no skew), fuzzy a salted shuffle on the block key with
-    *    the KB side split by `hash(label_lc) % S` and the miss side
-    *    exploded across salts (replicate the small side, split the big
-    *    side).
+    *    keys — no skew), fuzzy a `Linking.saltedJoin` on the block key
+    *    with the token-blocked KB as the big side, salted by
+    *    `hash(label_lc)`.
     * Both tiers are result-identical (PlanSpec). A small KB linked
     * against a vocabulary above the limit takes the shuffle tier,
     * though broadcasting the KB would fit: no caller has that shape, so
@@ -105,7 +104,8 @@ object Pipeline {
         val exact = exactRows(s.join(kbDf, col("surface_lc") === col("label_lc")))
         val misses = s.join(kbDf.select(col("label_lc")),
           col("surface_lc") === col("label_lc"), "left_anti")
-        (exact, Linking.saltedBlockJoin(block(misses), Linking.kbTokenBlocked(kbDf)))
+        (exact, Linking.saltedJoin(Linking.kbTokenBlocked(kbDf), hash(col("label_lc")),
+          block(misses), Seq("block")))
       }
     // only the fuzzy side needs the top-1 window: exact rows are the
     // contract above, one per matching KB entry
@@ -139,12 +139,10 @@ object Pipeline {
     * the mint join and the join-back switch to shuffle joins. */
   val defaultBroadcastVocabLimit = 2000000L
 
-  /** Salt count for the shuffle join-back (spreads one Zipfian-hot
-    * surface key over this many shuffle partitions). */
-  val joinBackSalts = 16
-
   /** The graph build: (nodes, edges, release) from a file-backed (or
-    * cached) triples Dataset. On the shuffle tier `release` unpersists
+    * cached) triples Dataset. Its callers are the resumable batch build
+    * (`Checkpointed.runAll`) and the stream's per-micro-batch build
+    * (`StreamIngest.runLinked`). On the shuffle tier `release` unpersists
     * the two internal vocabulary-sized caches; every caller MUST call
     * it after its last action on the returned frames — a long-running
     * caller (a stream's per-batch build, a resumable build in a
@@ -168,10 +166,9 @@ object Pipeline {
     *    exchange) and the collect of the minted table; then the node
     *    reduce's exchange and one broadcast per join-back side;
     *  - an open-vocabulary crawl keeps the vocabulary distributed and
-    *    persisted, and falls back to a salted shuffle join — the triple
-    *    side takes a deterministic url-hash salt and the vocabulary
-    *    side is replicated across salts, so a Zipfian-hot surface never
-    *    lands on one reducer.
+    *    persisted, and the join-back is a `Linking.saltedJoin` with the
+    *    triples salted by url, so a Zipfian-hot surface never lands on
+    *    one reducer.
     * Edges stay a projection — upstream dedup on (url, subj, pred, obj)
     * already makes edge rows unique, so there is no additional dedup
     * shuffle either way. Per-IRI properties are a separate aggregation
@@ -410,9 +407,9 @@ object Pipeline {
 
   /** Resolve subj/obj surfaces to IRIs on the triple table.
     * Broadcast tier: two broadcast joins, zero shuffle of triples.
-    * Shuffle tier: the triple side carries salt = crc32(url) % S and the
-    * vocabulary side is exploded across all S salts, so each (surface,
-    * salt) shuffle key holds ~1/S of a hot surface's rows. */
+    * Shuffle tier: two `Linking.saltedJoin`s with the triples salted by
+    * crc32(url), so each (surface, salt) shuffle key holds about
+    * 1/`Linking.salts` of a hot surface's rows. */
   def edgesFromVocab(trip: DataFrame, surfaceIri: DataFrame,
       useBroadcast: Boolean): DataFrame = {
     val resolved =
@@ -423,17 +420,13 @@ object Pipeline {
           .join(broadcast(surfaceIri.select(col("surface").as("obj"),
             col("iri").as("obj_iri"))), Seq("obj"), "left")
       } else {
-        val s = lit(joinBackSalts)
-        val salted = trip.withColumn("salt", pmod(crc32(col("url")), s).cast(IntegerType))
-        val vocabSalted = surfaceIri
-          .select(col("surface"), col("iri"))
-          .withColumn("salt", explode(sequence(lit(0), s - 1)))
-        salted
-          .join(vocabSalted.select(col("surface").as("subj_surface"),
-            col("iri").as("src_iri"), col("salt")), Seq("subj_surface", "salt"))
-          .join(vocabSalted.select(col("surface").as("obj"),
-            col("iri").as("obj_iri"), col("salt")), Seq("obj", "salt"), "left")
-          .drop("salt")
+        val vocab = surfaceIri.select(col("surface"), col("iri"))
+        val byUrl = crc32(col("url"))
+        Linking.saltedJoin(
+          Linking.saltedJoin(trip, byUrl, vocab.select(col("surface").as("subj_surface"),
+            col("iri").as("src_iri")), Seq("subj_surface")),
+          byUrl, vocab.select(col("surface").as("obj"), col("iri").as("obj_iri")),
+          Seq("obj"), "left")
       }
     // O6: span provenance rides through to the edge table — every edge
     // can be traced to the sentence (and chunk) that stated it

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.pipeline.{Checkpointed, Kg, Page, TripleRow}
+import graft.pipeline.{Checkpointed, Kg, Page, Pipeline, TripleRow}
 
 /** Structured Streaming extension (SURVEY.md §2.9: the reference is
   * batch-only; this is the natural streaming surface for continuous
@@ -12,8 +12,10 @@ import graft.pipeline.{Checkpointed, Kg, Page, TripleRow}
   *
   * The extraction transform is shared verbatim with the batch path
   * (Kg.extractTriplesFused), so streaming and batch produce identical
-  * triples for identical pages; per-batch dedup happens in foreachBatch
-  * and global dedup is deferred to the graph build (same as batch).
+  * triples for identical pages. Like batch, each page's triples are
+  * deduped in-row by `Kg.extractPage`; the sinks' `Kg.dedup` also
+  * covers a url that repeats inside one micro-batch. A url recrawled in
+  * a later micro-batch is deduped only by `runDeduped`.
   */
 object StreamIngest {
 
@@ -102,7 +104,8 @@ object StreamIngest {
   }
 
   /** Streaming LINKING: the flagship enrichment run continuously — each
-    * micro-batch's triples link against the static KB and materialize
+    * micro-batch's triples go through the batch graph build
+    * (`Pipeline.graphFromTriples`) against the static KB and materialize
     * straight to the edge table (stream-static enrichment inside
     * foreachBatch, where the top-1 link window is legal). Soundness is
     * the same invariant the incremental batch build rests on: a
@@ -136,48 +139,29 @@ object StreamIngest {
     catchUp(Kg.extractTriplesFused(pages), checkpointDir) {
       (batch, batchId) =>
         // Eagerly materialize the batch's deduped triples ONCE: the
-        // graph build references them from four plan branches (the
-        // surfaceInfo union twice, nodes, edges), and in a micro-batch
-        // there is no parquet checkpoint upstream — each branch would
-        // re-run the batch's extraction + dedup shuffle (measured: the
-        // whole slice extracts in ~0.5 s but runLinked paid ~7 s per
-        // batch). Batch-sized, released in the finally below (the
+        // graph build scans them twice (rollup, edges), and in a
+        // micro-batch there is no parquet checkpoint upstream, so each
+        // scan would re-run the batch's extraction + dedup shuffle.
+        // Batch-sized, released in the finally below (the
         // checkpoint-RDD leak the StreamIngestSpec guard watches for).
         val trip = Kg.dedup(batch).localCheckpoint(true)
-        // Per-batch graph build, LEAN because it is batch-bounded: a
-        // micro-batch's surface vocabulary is bounded by the batch
-        // (maxFilesPerTrigger), so the vocabulary→IRI table is built in
-        // ONE eager materialization (no per-batch persist+count pair to
-        // size the broadcast tier — the bound IS the tier decision) and
-        // the link/join-back sides broadcast. Identical rows to
-        // Pipeline.graphFromTriples (same rollup, same linkSurfaces,
-        // same mint — StreamIngestSpec's streamed==batch law pins it);
-        // measured ~2 fewer driver-planned jobs per batch.
-        val surfaceInfo = graft.pipeline.Pipeline.surfaceRollup(trip.toDF)
-        val links = graft.pipeline.Pipeline.linkSurfaces(
-          surfaceInfo.select(col("surface")), kb, useBroadcast = true)
-        val surfaceIri = graft.pipeline.Pipeline
-          .mintIris(surfaceInfo, links, useBroadcast = true)
-          .localCheckpoint(true)
-        val nodes = graft.pipeline.Pipeline.nodesFromVocab(surfaceIri)
-        val edges = graft.pipeline.Pipeline
-          .edgesFromVocab(trip.toDF, surfaceIri, useBroadcast = true)
+        // the batch build itself: it counts the batch's vocabulary and
+        // picks the tier from it, since a micro-batch is not bounded
+        // (without maxFilesPerTrigger the first one is the whole backlog)
         try {
-          Checkpointed.writeBuckets(edges.withColumn("batch", lit(batchId))
-            .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets)),
-            s"$outDir/edges", Seq("batch", "pk"))
-          // node delta: this batch's vocabulary-sized node rows, one file
-          // (both writes reuse the build's forced surfaceIri cache). A
-          // crash between the two writes replays the whole batch — both
-          // sinks are partition-idempotent, so the rewrite is
-          // byte-identical.
-          Checkpointed.writeBuckets(nodes.withColumn("batch", lit(batchId)),
-            s"$outDir/nodes", Seq("batch"))
-        } finally {
-          org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(surfaceIri)
-          org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(trip)
-          ()
-        }
+          val (nodes, edges, release) = Pipeline.graphFromTriples(trip, kb)
+          try {
+            Checkpointed.writeBuckets(edges.withColumn("batch", lit(batchId))
+              .withColumn("pk", Checkpointed.bucketOf(col("url"), nBuckets)),
+              s"$outDir/edges", Seq("batch", "pk"))
+            // node delta: this batch's vocabulary-sized node rows, one
+            // file. A crash between the two writes replays the whole
+            // batch — both sinks are partition-idempotent, so the
+            // rewrite is byte-identical.
+            Checkpointed.writeBuckets(nodes.withColumn("batch", lit(batchId)),
+              s"$outDir/nodes", Seq("batch"))
+          } finally release()
+        } finally org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(trip)
     }
   }
 
@@ -188,8 +172,7 @@ object StreamIngest {
     * row is a pure function of (surface, KB) and the reduce is
     * associative over any batching of the surface set. */
   def streamedNodes(spark: SparkSession, outDir: String): DataFrame =
-    graft.pipeline.Pipeline.reduceNodes(
-      spark.read.parquet(s"$outDir/nodes").drop("batch"))
+    Pipeline.reduceNodes(spark.read.parquet(s"$outDir/nodes").drop("batch"))
 
   /** Bound the node-delta count for a long-lived stream: replace all
     * deltas with ONE compacted delta under batch=-1 (streaming batchIds

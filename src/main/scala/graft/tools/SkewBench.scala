@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 /** North-rule skew demonstration (BASELINE.json: "salted hash joins for
   * head-entity skew ... skew handled explicitly"; VERDICT r04 ask #5):
   * measure the forced-large-tier vocabulary join-back with and without
-  * the salting Pipeline.edgesFromVocab applies, on a Zipfian mention
-  * table where ONE hot surface carries 30% of all mentions (the
+  * `Linking.saltedJoin` (the shuffle tier's salted join, which
+  * Pipeline.edgesFromVocab calls), on a Zipfian mention table where
+  * ONE hot surface carries 30% of all mentions (the
   * "every page mentions Google" shape of a real crawl).
   *
   * Setup mirrors the production decision point: AQE (whose skew-join
@@ -17,9 +18,8 @@ import org.apache.spark.sql.functions._
   * broadcast is off (the forced-large tier: a 10^8-surface vocabulary
   * does not broadcast). The unsalted plan shuffles both sides on
   * `surface`, so the hot key lands on one reducer; the salted plan
-  * (identical to edgesFromVocab's non-broadcast tier) keys on
-  * (surface, salt = crc32(row-key) % 16) with the vocabulary exploded
-  * 16×, splitting the hot key across 16 reducers.
+  * calls `Linking.saltedJoin` with the mentions salted by crc32(row-key),
+  * splitting the hot key across `Linking.salts` reducers.
   *
   * Prints one JSON line per measured run with wall seconds plus
   * max/median per-task shuffle-read records and run times of the
@@ -53,7 +53,6 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(20000000L)
     val tailKeys = 1000000L
-    val salts = graft.pipeline.Pipeline.joinBackSalts
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -82,13 +81,10 @@ object SkewBench {
       mentions(n).join(vocab, Seq("surface"))
         .agg(sum(length(col("iri"))).as("chk"), count(lit(1)).as("n"))
 
-    def salted(n: Long): DataFrame = {
-      val m = mentions(n).withColumn("salt",
-        pmod(crc32(col("id").cast("string")), lit(salts)).cast("int"))
-      val v = vocab.withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-      m.join(v, Seq("surface", "salt"))
+    def salted(n: Long): DataFrame =
+      graft.pipeline.Linking.saltedJoin(mentions(n), crc32(col("id").cast("string")),
+        vocab, Seq("surface"))
         .agg(sum(length(col("iri"))).as("chk"), count(lit(1)).as("n"))
-    }
 
     def measure(tag: String, df: => DataFrame): Unit = {
       // drain BEFORE reset and AFTER the action: TaskEnd events arrive
