@@ -91,19 +91,17 @@ object SparkEntry {
   /** Checkpointed KB link table over the corpus's distinct entity
     * surfaces (surface, uri, link_confidence) — the exact+fuzzy-JW
     * linking stage, run ONCE per JVM and consumed by both the kg_links
-    * query and the vocabulary→IRI build below. */
+    * query and the vocabulary→IRI build below.
+    *
+    * This build, the mint and the join-back take the broadcast tier
+    * (`useBroadcast = true`, see the `Linking` header) at every sf:
+    * `Corpus` is a closed world of 1,600 persons, 140 orgs and the
+    * city-derived names, about 1,800 surfaces at any page count, far
+    * below `Pipeline.defaultBroadcastVocabLimit`. */
   def linksFor(s: SparkSession, dir: String): DataFrame =
     checkpointed(s, s"links_${pagesFor(dir)}")(
       Pipeline.linkSurfaces(vocabFor(s, dir).select(col("surface")), Corpus.kb(s),
-        useBroadcast(s, dir)))
-
-  /** The graph build's size tier at this sf — link, mint and join-back
-    * broadcast while the vocabulary is within the broadcast limit — the
-    * decision graphFromTriples takes, from one count of the vocabulary
-    * checkpoint. */
-  private def useBroadcast(s: SparkSession, dir: String): Boolean =
-    memoized(s"tier_${pagesFor(dir)}")(
-      vocabFor(s, dir).count() <= Pipeline.defaultBroadcastVocabLimit)
+        useBroadcast = true))
 
   /** Checkpointed vocabulary→IRI table (the mint stage of the graph
     * build over the shared vocabulary and link checkpoints):
@@ -111,7 +109,7 @@ object SparkEntry {
     * it. */
   def surfaceIriFor(s: SparkSession, dir: String): DataFrame =
     checkpointed(s, s"surface_iri_${pagesFor(dir)}")(
-      Pipeline.mintIris(vocabFor(s, dir), linksFor(s, dir), useBroadcast(s, dir)))
+      Pipeline.mintIris(vocabFor(s, dir), linksFor(s, dir), useBroadcast = true))
 
   /** Checkpointed deduped triples of the synthesized corpus at this sf.
     * Stays the FUSED pages pass: measured (BenchExtra `warmup` mode),
@@ -180,7 +178,7 @@ object SparkEntry {
     * once and reused by the graph-analytics queries). */
   def edgesFor(s: SparkSession, dir: String): DataFrame =
     checkpointed(s, s"edges_${pagesFor(dir)}")(
-      Pipeline.edgesFromVocab(triplesFor(s, dir), surfaceIriFor(s, dir), useBroadcast(s, dir)))
+      Pipeline.edgesFromVocab(triplesFor(s, dir), surfaceIriFor(s, dir), useBroadcast = true))
 
   /** Checkpointed DISTINCT directed entity-edge view — the multi-hop /
     * iterative graph queries all consume it, and re-deduplicating the
@@ -288,8 +286,7 @@ object SparkEntry {
       // triples use the fused pass)
       "triples+graph" -> (() => {
         triplesFor(s, dir).count()
-        vocabFor(s, dir).count()
-        linksFor(s, dir).count()
+        linksFor(s, dir).count() // writes the vocabulary checkpoint first
         surfaceIriFor(s, dir).count()
         edgesFor(s, dir).count()
         distinctEdgesFor(s, dir).count()

@@ -8,16 +8,20 @@ import org.apache.spark.sql.types.IntegerType
   * is `Pipeline.linkSurfaces`: the reference's per-name lookup loop
   * (entity_linker.rs:486-499) has no document input, so it becomes ONE
   * join of the corpus's DISTINCT SURFACES against the KB (SURVEY.md §2.3
-  * J1-J5), tiered on the vocabulary size: below the broadcast
-  * vocabulary limit the surfaces are broadcast and the KB streams past
-  * them; above it both sides shuffle.
+  * J1-J5).
   *
-  * Salting policy of the shuffle tier, used by every join whose big
-  * side may carry a Zipfian-hot key (the fuzzy block join, both
-  * join-back sides): split the big side over `salts` salts by a stable
-  * hash of a row column and replicate the small side across all of
-  * them, so one hot key lands on `salts` reducers instead of one
-  * (`saltedJoin`).
+  * The graph build's size tier, decided once per build from the
+  * vocabulary count (`Pipeline.surfaceIriReleasable`) and applied by
+  * `tierJoin` to every join whose small side is vocabulary-sized (the
+  * fuzzy block join, both join-back sides):
+  *  - broadcast tier (vocabulary ≤ `Pipeline.defaultBroadcastVocabLimit`
+  *    rows): the vocabulary-sized side is broadcast and the big side
+  *    (the KB, the triples) streams past it, unshuffled;
+  *  - shuffle tier (an open-vocabulary crawl): both sides shuffle, and
+  *    because the big side may carry a Zipfian-hot key it is split over
+  *    `salts` salts by a stable hash of a row column while the small
+  *    side is replicated across all of them, so one hot key lands on
+  *    `salts` reducers instead of one (`saltedJoin`).
   *
   * Scoring replicates entity_linker.rs:367-401: exact (case-insensitive)
   * match ⇒ 0.95; fuzzy ⇒ JW similarity, kept if ≥ fuzzyThreshold (0.8);
@@ -50,13 +54,24 @@ object Linking {
   private[pipeline] def kbTokenBlocked(kb: DataFrame): DataFrame =
     kb.withColumn("block", explode(array_distinct(split(col("label_lc"), " "))))
 
+  /** `big.join(small, on, how)` on the graph build's size tier (see the
+    * header): `big.join(broadcast(small), on, how)` on the broadcast
+    * tier, `saltedJoin(big, by, small, on, how)` on the shuffle tier.
+    * `by` is read on the shuffle tier only. Both tiers give the rows of
+    * the plain join. */
+  def tierJoin(useBroadcast: Boolean, big: DataFrame, by: Column, small: DataFrame,
+      on: Seq[String], how: String = "inner"): DataFrame =
+    if (useBroadcast) big.join(broadcast(small), on, how)
+    else saltedJoin(big, by, small, on, how)
+
   /** `big.join(small, on, how)` with the big side split across `salts`
     * by `pmod(by, salts)` and the small side replicated per salt: every
-    * big row meets exactly the small rows of its key, so for a non-null
-    * `by` the rows are those of the plain join, `inner` or `left`. */
+    * big row meets exactly the small rows of its key, so the rows are
+    * those of the plain join, `inner` or `left`. A null `by` salts to 0:
+    * a null salt would join nothing. */
   def saltedJoin(big: DataFrame, by: Column, small: DataFrame, on: Seq[String],
       how: String = "inner"): DataFrame =
-    big.withColumn("salt", pmod(by, lit(salts)).cast(IntegerType))
+    big.withColumn("salt", coalesce(pmod(by, lit(salts)), lit(0)).cast(IntegerType))
       .join(small.withColumn("salt", explode(sequence(lit(0), lit(salts - 1)))), on :+ "salt", how)
       .drop("salt")
 }

@@ -20,24 +20,19 @@ import scala.jdk.CollectionConverters._
   *     link results depend only on the surface (the reference's
   *     per-name lookup, entity_linker.rs:486-499, has no document
   *     input), so the link table shrinks from O(docs×mentions) to
-  *     O(vocabulary) — Zipfian mention skew collapses into single rows,
-  *     the KB streams past the broadcast vocabulary, and the join-back
-  *     is a broadcast;
+  *     O(vocabulary) — Zipfian mention skew collapses into single rows;
   *  4. graph dedup by IRI / edge key.
   *
-  * Shuffles of the graph build: the big-table rollup exchange, whose
-  * map stage runs once — the vocabulary is counted and, below the
-  * broadcast vocabulary limit, collected from its output; the fuzzy
-  * top-1 window's exchange over the scored candidates (the KB itself
-  * is scanned, never shuffled, below the broadcast vocabulary limit);
-  * the node reduce on iri. Linking and minting run over the
-  * driver-local vocabulary, and edges are a projection of the
-  * already-deduped triples through broadcast joins of the local
-  * vocabulary→IRI table, so the triples are scanned twice (rollup,
-  * edges) and nothing is cached. Above the limit the vocabulary stays
-  * distributed: it is laid out at one partition per core and
-  * persisted, and linking, the mint join and a salted join-back
-  * shuffle. Zero shuffle of raw text.
+  * Linking, the mint join and the join-back take the graph build's one
+  * size tier, decided once from the vocabulary count and applied by
+  * `Linking.tierJoin` (the `Linking` header describes both tiers).
+  * Shuffles of the broadcast-tier build: the big-table rollup
+  * exchange, whose map stage runs once — the vocabulary is counted and
+  * collected from its output; the fuzzy top-1 window's exchange over
+  * the scored candidates (the KB is scanned, never shuffled); the node
+  * reduce on iri. Edges are a projection of the already-deduped
+  * triples, so the triples are scanned twice (rollup, edges) on both
+  * tiers. Zero shuffle of raw text.
   */
 object Pipeline {
 
@@ -69,20 +64,23 @@ object Pipeline {
     * surfaces also fail JW ≥ 0.8 against much-longer labels in all but
     * adversarial cases.
     *
-    * TIERED on the VOCABULARY size, which the graph build already
-    * measures (the same decision `mintIris` and `edgesFromVocab` take),
-    * so no KB count is ever run:
-    *  - broadcast (`useBroadcast`, the default): the surface vocabulary
-    *    is the build side of every join and the KB streams past it —
-    *    exact = KB ⋈ broadcast(surfaces), misses = surfaces ▷
-    *    broadcast(exact hits' surfaces), fuzzy = token-blocked KB ⋈
-    *    broadcast(misses). Nothing KB-sized is ever hashed or held in
-    *    memory (PlanSpec gates every broadcast at ≤ the surface count);
-    *  - shuffle (a vocabulary above the broadcast limit): exact is a
-    *    plain shuffle join (labels and surfaces are both near-distinct
-    *    keys — no skew), fuzzy a `Linking.saltedJoin` on the block key
-    *    with the token-blocked KB as the big side, salted by
-    *    `hash(label_lc)`.
+    * TIERED on the graph build's vocabulary tier (`useBroadcast`, see
+    * the `Linking` header), so no KB count is ever run. The KB is the
+    * big side of every join:
+    *  - exact = KB ⋈ surfaces, with the surfaces broadcast on the
+    *    broadcast tier; on the shuffle tier it is a plain shuffle join
+    *    (labels and surfaces are both near-distinct keys — no skew);
+    *  - fuzzy = token-blocked KB ⋈ misses through `Linking.tierJoin`,
+    *    the KB salted by `hash(label_lc)` on the shuffle tier;
+    *  - misses stay per tier. The broadcast tier takes them as surfaces
+    *    ▷ broadcast(exact hits' surfaces), so nothing KB-sized is ever
+    *    hashed or held in memory (PlanSpec gates every broadcast at ≤
+    *    the surface count). The shuffle tier takes them as surfaces ▷
+    *    KB labels: an anti-join on the exact hits would run the exact
+    *    join a second time, and column pruning gives that run's KB
+    *    exchange other columns than the exact side's, so Spark does not
+    *    reuse it and the plan gains two exchanges (PlanSpec counts the
+    *    KB scans and KB-fed exchanges per tier).
     * Both tiers are result-identical (PlanSpec). A small KB linked
     * against a vocabulary above the limit takes the shuffle tier,
     * though broadcasting the KB would fit: no caller has that shape, so
@@ -92,21 +90,13 @@ object Pipeline {
     // Spark's `lower`, without its first-use ICU table build (see LowerExpression)
     val s = surfaces.withColumn("surface_lc", graft.functions.LowerExpression.lower(col("surface")))
     val kbDf = kb.toDF
-    def exactRows(joined: DataFrame) =
-      joined.select(col("surface"), col("uri"), lit(Linking.exactConfidence).as("confidence"))
-    def block(df: DataFrame) = df.withColumn("block", split(col("surface_lc"), " ").getItem(0))
-    val (exact, fuzzyCands) =
-      if (useBroadcast) {
-        val exact = exactRows(kbDf.join(broadcast(s), col("label_lc") === col("surface_lc")))
-        val misses = s.join(broadcast(exact.select(col("surface"))), Seq("surface"), "left_anti")
-        (exact, Linking.kbTokenBlocked(kbDf).join(broadcast(block(misses)), "block"))
-      } else {
-        val exact = exactRows(s.join(kbDf, col("surface_lc") === col("label_lc")))
-        val misses = s.join(kbDf.select(col("label_lc")),
-          col("surface_lc") === col("label_lc"), "left_anti")
-        (exact, Linking.saltedJoin(Linking.kbTokenBlocked(kbDf), hash(col("label_lc")),
-          block(misses), Seq("block")))
-      }
+    val exact = kbDf.join(if (useBroadcast) broadcast(s) else s, col("label_lc") === col("surface_lc"))
+      .select(col("surface"), col("uri"), lit(Linking.exactConfidence).as("confidence"))
+    val misses =
+      if (useBroadcast) s.join(broadcast(exact.select(col("surface"))), Seq("surface"), "left_anti")
+      else s.join(kbDf.select(col("label_lc")), col("surface_lc") === col("label_lc"), "left_anti")
+    val fuzzyCands = Linking.tierJoin(useBroadcast, Linking.kbTokenBlocked(kbDf), hash(col("label_lc")),
+      misses.withColumn("block", split(col("surface_lc"), " ").getItem(0)), Seq("block"))
     // only the fuzzy side needs the top-1 window: exact rows are the
     // contract above, one per matching KB entry
     val w = Window.partitionBy(col("surface"))
@@ -155,28 +145,22 @@ object Pipeline {
     * surface→(type, slug), Zipfian mentions collapse to single rows),
     * and two scans of it: the rollup's and the edges'. Linking, IRI
     * minting and node dedup are vocabulary-sized. Linking, the mint
-    * join and the join-back are SIZE-TIERED on the vocabulary count,
-    * read from the rollup's materialized shuffle output:
-    *  - a closed-world vocabulary (the broadcast tier) is collected to
-    *    the driver, linked and minted there as local relations, and the
-    *    join-back broadcasts the local vocabulary→IRI table (zero
-    *    shuffle of the big side). Jobs: the rollup's map stage, one
-    *    count and one collect over its output, the link jobs (the
-    *    exact hits and fuzzy misses broadcasts, the top-1 window's
-    *    exchange) and the collect of the minted table; then the node
-    *    reduce's exchange and one broadcast per join-back side;
-    *  - an open-vocabulary crawl keeps the vocabulary distributed and
-    *    persisted, and the join-back is a `Linking.saltedJoin` with the
-    *    triples salted by url, so a Zipfian-hot surface never lands on
-    *    one reducer.
+    * join and the join-back take the size tier `surfaceIriReleasable`
+    * returns, decided once from the vocabulary count (the tiers are
+    * described in the `Linking` header); the join-back's two
+    * `Linking.tierJoin`s salt the triples by url on the shuffle tier.
+    * Jobs of the broadcast tier: the rollup's map stage, one count and
+    * one collect over its output, the link jobs (the exact hits and
+    * fuzzy misses broadcasts, the top-1 window's exchange) and the
+    * collect of the minted table; then the node reduce's exchange and
+    * one broadcast per join-back side.
     * Edges stay a projection — upstream dedup on (url, subj, pred, obj)
     * already makes edge rows unique, so there is no additional dedup
     * shuffle either way. Per-IRI properties are a separate aggregation
     * (`nodePropsFromVocab`) over the same vocabulary table. */
   def graphFromTriples(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
       broadcastVocabLimit: Long = defaultBroadcastVocabLimit): (DataFrame, DataFrame, () => Unit) = {
-    val (surfaceIri, vocabN, release) = surfaceIriReleasable(trip, kb, broadcastVocabLimit)
-    val useBroadcast = vocabN <= broadcastVocabLimit
+    val (surfaceIri, useBroadcast, release) = surfaceIriReleasable(trip, kb, broadcastVocabLimit)
     (nodesFromVocab(surfaceIri), edgesFromVocab(trip.toDF, surfaceIri, useBroadcast), release)
   }
 
@@ -194,48 +178,49 @@ object Pipeline {
     * that builds nodes, edges AND node-props over the same corpus can
     * CHECKPOINT this table once instead of re-running the rollup and
     * the link joins per consumer (guide §2.4 — two operations keyed
-    * the same way share one build). Returns (surfaceIri, vocabN,
-    * release); callers must invoke release after their terminal
-    * action.
+    * the same way share one build). Returns (surfaceIri, useBroadcast,
+    * release): `useBroadcast` is the build's size tier (see the
+    * `Linking` header), for the caller's join-back; callers must invoke
+    * release after their terminal action.
     *
     * The rollup's big-table exchange runs once: its map stage is
     * materialized when the aggregate's RDD is taken, and every later
-    * job reads that shuffle's (vocabulary-sized) output.
-    *  - broadcast tier (vocabN ≤ `broadcastVocabLimit`): the vocabulary
-    *    is counted and collected from that shuffle, linked and minted
-    *    over the driver-local copy, and the vocabulary→IRI table is
-    *    collected too, so `surfaceIri` is a local relation: nothing is
-    *    persisted, no cache is counted, and every join-back broadcasts
-    *    a `LocalTableScan`. `release` is a no-op. The driver holds both
-    *    tables (see `defaultBroadcastVocabLimit`);
+    * job reads that shuffle's (vocabulary-sized) output. The tier is
+    * the one decision taken here: the vocabulary count against
+    * `broadcastVocabLimit`. Only the vocabulary's layout differs per
+    * tier; linking and minting are one call either way.
+    *  - broadcast tier: the vocabulary is collected from that shuffle,
+    *    linked and minted over the driver-local copy, and the
+    *    vocabulary→IRI table is collected too, so `surfaceIri` is a
+    *    local relation: nothing is persisted, no cache is counted, and
+    *    every join-back broadcasts a `LocalTableScan`. `release` is a
+    *    no-op. The driver holds both tables (see
+    *    `defaultBroadcastVocabLimit`);
     *  - shuffle tier: the vocabulary is a DataFrame over the same
     *    counted RDD, laid out at one partition per core and persisted
     *    (a cached plan keeps its output partitioning), and `surfaceIri`
     *    is persisted and counted once; `release` unpersists both. */
   def surfaceIriReleasable(trip: Dataset[TripleRow], kb: Dataset[KbEntry],
-      broadcastVocabLimit: Long = defaultBroadcastVocabLimit): (DataFrame, Long, () => Unit) = {
+      broadcastVocabLimit: Long = defaultBroadcastVocabLimit): (DataFrame, Boolean, () => Unit) = {
     val spark = trip.sparkSession
     val rollup = rollupAggregate(trip.toDF)
     val vocab = rollup.rdd // runs the big-table exchange's map stage
-    val vocabN = vocab.count()
+    val useBroadcast = vocab.count() <= broadcastVocabLimit
     def local(rows: Array[Row], schema: StructType) = spark.createDataFrame(rows.toSeq.asJava, schema)
-    if (vocabN <= broadcastVocabLimit) {
-      val surfaceInfo = local(vocab.collect(), rollup.schema)
-      val surfaceIri = mintIris(surfaceInfo, linkSurfaces(surfaceInfo.select(col("surface")), kb),
-        useBroadcast = true)
-      (local(surfaceIri.collect(), surfaceIri.schema), vocabN, () => ())
-    } else {
-      // links has unique surface keys (barring KB homonym labels, see
-      // linkSurfaces), so the shuffle mint join needs no salt (no skew)
-      val surfaceInfo = spark.createDataFrame(vocab, rollup.schema)
+    val surfaceInfo =
+      if (useBroadcast) local(vocab.collect(), rollup.schema)
+      else spark.createDataFrame(vocab, rollup.schema)
         .repartition(corePartitions(spark), col("surface"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val links = linkSurfaces(surfaceInfo.select(col("surface")), kb, useBroadcast = false)
-      val surfaceIri = mintIris(surfaceInfo, links, useBroadcast = false)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      surfaceIri.count() // fills both caches; the shuffle join-back reuses them
-      (surfaceIri, vocabN,
-        () => { surfaceIri.unpersist(); surfaceInfo.unpersist(); () })
+    // links has unique surface keys (barring KB homonym labels, see
+    // linkSurfaces), so the shuffle mint join needs no salt (no skew)
+    val surfaceIri = mintIris(surfaceInfo,
+      linkSurfaces(surfaceInfo.select(col("surface")), kb, useBroadcast), useBroadcast)
+    if (useBroadcast) (local(surfaceIri.collect(), surfaceIri.schema), true, () => ())
+    else {
+      surfaceIri.persist(StorageLevel.MEMORY_AND_DISK)
+        .count() // fills both caches; the shuffle join-back reuses them
+      (surfaceIri, false, () => { surfaceIri.unpersist(); surfaceInfo.unpersist(); () })
     }
   }
 
@@ -405,29 +390,19 @@ object Pipeline {
     }.toDF("url", "chunk_id", "jsonld")
   }
 
-  /** Resolve subj/obj surfaces to IRIs on the triple table.
-    * Broadcast tier: two broadcast joins, zero shuffle of triples.
-    * Shuffle tier: two `Linking.saltedJoin`s with the triples salted by
-    * crc32(url), so each (surface, salt) shuffle key holds about
-    * 1/`Linking.salts` of a hot surface's rows. */
+  /** Resolve subj/obj surfaces to IRIs on the triple table: two
+    * `Linking.tierJoin`s of the triples against the vocabulary→IRI
+    * table — broadcasts on the broadcast tier, zero shuffle of triples;
+    * salted by crc32(url) on the shuffle tier, so each (surface, salt)
+    * shuffle key holds about 1/`Linking.salts` of a hot surface's rows. */
   def edgesFromVocab(trip: DataFrame, surfaceIri: DataFrame,
       useBroadcast: Boolean): DataFrame = {
-    val resolved =
-      if (useBroadcast) {
-        trip
-          .join(broadcast(surfaceIri.select(col("surface").as("subj_surface"),
-            col("iri").as("src_iri"))), Seq("subj_surface"))
-          .join(broadcast(surfaceIri.select(col("surface").as("obj"),
-            col("iri").as("obj_iri"))), Seq("obj"), "left")
-      } else {
-        val vocab = surfaceIri.select(col("surface"), col("iri"))
-        val byUrl = crc32(col("url"))
-        Linking.saltedJoin(
-          Linking.saltedJoin(trip, byUrl, vocab.select(col("surface").as("subj_surface"),
-            col("iri").as("src_iri")), Seq("subj_surface")),
-          byUrl, vocab.select(col("surface").as("obj"), col("iri").as("obj_iri")),
-          Seq("obj"), "left")
-      }
+    def side(surface: String, iri: String) =
+      surfaceIri.select(col("surface").as(surface), col("iri").as(iri))
+    val byUrl = crc32(col("url"))
+    val resolved = Linking.tierJoin(useBroadcast,
+      Linking.tierJoin(useBroadcast, trip, byUrl, side("subj_surface", "src_iri"), Seq("subj_surface")),
+      byUrl, side("obj", "obj_iri"), Seq("obj"), "left")
     // O6: span provenance rides through to the edge table — every edge
     // can be traced to the sentence (and chunk) that stated it
     resolved.select(

@@ -171,35 +171,70 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     } finally release()
   }
 
-  test("a graph build scans the triples table twice on both tiers") {
+  /** Rows read while `body` runs by the stages that scan parquet (a
+    * cached block read also counts as input records, so stages without
+    * a file scan are left out). */
+  private def parquetRowsRead(body: => Unit): Long = {
     import org.apache.spark.scheduler.SparkListenerStageCompleted
+    val sc = spark.sparkContext
+    val scanned = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scanned.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }
+    org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    scanned.get
+  }
+
+  test("a graph build scans the triples table twice on both tiers") {
     val dir = tempDir("graft_plan")
     Kg.extractTriplesFused(Corpus.pages(spark, 100, 4)).write.parquet(s"$dir/triples")
     val trip = spark.read.schema(org.apache.spark.sql.Encoders.product[TripleRow].schema)
       .parquet(s"$dir/triples").as(org.apache.spark.sql.Encoders.product[TripleRow])
     val nTriples = trip.count()
     val kb = Corpus.kb(spark, 500)
-    val sc = spark.sparkContext
     for (limit <- Seq(Pipeline.defaultBroadcastVocabLimit, 0L)) {
-      // rows read by stages that scan parquet (a cached block read also
-      // counts as input records, so stages without a file scan are left out)
-      val scanned = new java.util.concurrent.atomic.AtomicLong()
-      val listener = new SparkListener {
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-          if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
-            scanned.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
-      }
-      org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
-      sc.addSparkListener(listener)
-      try {
+      val scanned = parquetRowsRead {
         val (nodes, edges, release) = Pipeline.graphFromTriples(trip, kb, limit)
         try Seq(nodes, edges).foreach(_.write.format("noop").mode("overwrite").save())
         finally release()
-        org.apache.spark.graftbridge.CoreBridge.drainListenerBus(sc)
-      } finally sc.removeSparkListener(listener)
-      assert(scanned.get == 2 * nTriples,
-        s"limit $limit: ${scanned.get} rows read of $nTriples triples: " +
+      }
+      assert(scanned == 2 * nTriples,
+        s"limit $limit: $scanned rows read of $nTriples triples: " +
           "one scan for the rollup, one for the edges")
+    }
+  }
+
+  test("linkSurfaces scans the KB twice on the broadcast tier, three times on the shuffle tier") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = tempDir("graft_plan")
+    Corpus.kb(spark, 500).write.parquet(s"$dir/kb")
+    val kb = spark.read.schema(org.apache.spark.sql.Encoders.product[KbEntry].schema)
+      .parquet(s"$dir/kb").as(org.apache.spark.sql.Encoders.product[KbEntry])
+    val nKb = kb.count()
+    import spark.implicits._
+    // a local vocabulary, as the broadcast-tier graph build links, so
+    // every exchange below is one of linkSurfaces' own
+    val surfaces = corpusSurfaces(100).as[String].collect().toSeq.toDF("surface")
+    // (tier, KB scans, exchanges with a KB scan below them)
+    for ((useBroadcast, scans, kbExchanges) <- Seq((true, 2, 1), (false, 3, 5))) withoutAutoBroadcast {
+      val df = Pipeline.linkSurfaces(surfaces, kb, useBroadcast)
+      val exchanges = collect(df.queryExecution.executedPlan) { // the plan before AQE re-plans it
+        case e: ShuffleExchangeExec if e.exists(_.isInstanceOf[FileSourceScanExec]) => e
+      }.size
+      val scanned = parquetRowsRead(df.write.format("noop").mode("overwrite").save())
+      assert(scanned == scans * nKb,
+        s"useBroadcast $useBroadcast: $scanned rows read of a $nKb-row KB, expected $scans scans")
+      assert(exchanges == kbExchanges,
+        s"useBroadcast $useBroadcast: $exchanges KB-fed exchanges, expected $kbExchanges " +
+          "(the shuffle tier's misses anti-join the KB's labels, see linkSurfaces)")
     }
   }
 
@@ -235,21 +270,27 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("saltedJoin returns exactly the plain join's rows, inner and left") {
     // 40% of the big side on one hot key; keys k40..k49 have no small
-    // row, so the left join keeps nulls
+    // row, so the left join keeps nulls; one hot row has a null id, so
+    // a null salt source
     val big = spark.range(0, 2000, 1, 4).select(col("id"),
       when(pmod(col("id"), lit(10)) < 4, lit("hot"))
         .otherwise(concat(lit("k"), pmod(col("id"), lit(50)))).as("key"))
+      .unionByName(spark.range(1).select(lit(null).cast("long").as("id"), lit("hot").as("key")))
     val small = spark.range(0, 40).select(concat(lit("k"), col("id")).as("key"),
         col("id").as("v"))
       .unionByName(spark.range(2).select(lit("hot").as("key"), col("id").as("v")))
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(df.columns.map(col).toSeq: _*).collect().map(_.toSeq).toSeq
+    val by = crc32(col("id").cast("string"))
     for (how <- Seq("inner", "left")) {
-      val salted = sorted(Linking.saltedJoin(big, crc32(col("id").cast("string")),
-        small, Seq("key"), how))
-      assert(salted == sorted(big.join(small, Seq("key"), how)), how)
-      assert(salted.count(_(0) == "hot") == 2 * 800, how)
-      assert(salted.exists(_(2) == null) == (how == "left"), how)
+      val plain = sorted(big.join(small, Seq("key"), how))
+      assert(plain.count(_(0) == "hot") == 2 * 801, how)
+      assert(plain.exists(_(2) == null) == (how == "left"), how)
+      for ((name, joined) <- Seq(
+          "saltedJoin" -> Linking.saltedJoin(big, by, small, Seq("key"), how),
+          "tierJoin broadcast" -> Linking.tierJoin(true, big, by, small, Seq("key"), how),
+          "tierJoin shuffle" -> Linking.tierJoin(false, big, by, small, Seq("key"), how)))
+        assert(sorted(joined) == plain, s"$name $how")
     }
   }
 
@@ -350,12 +391,21 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("shuffle vocabulary tier: linking never broadcasts, fuzzy join is salted") {
-    // kill every auto-broadcast path so the plan shows the honest shuffle shape
+  /** Runs `f` with every auto-broadcast path off, so a shuffle-tier plan
+    * shows the honest shuffle shape of a vocabulary above the broadcast
+    * limit (which is never small enough to auto-broadcast). */
+  private def withoutAutoBroadcast[T](f: => T): T = {
     val prevStatic = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
+    try f finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevStatic)
+      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+    }
+  }
+
+  test("shuffle vocabulary tier: linking never broadcasts, fuzzy join is salted") {
+    withoutAutoBroadcast {
       val df = Pipeline.linkSurfaces(corpusSurfaces(100), Corpus.kb(spark, 500),
         useBroadcast = false) // the above-the-vocabulary-limit path
       df.collect() // AQE final plan
@@ -369,24 +419,36 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       // tiny test KB is a LocalRelation — so gate on the join keys.)
       assert(plan.contains("salt#"), "salt key missing from the fuzzy join:\n" + plan.take(1500))
       assert(plan.contains("explode"), "miss side should replicate across salts")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevStatic)
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
   }
 
   test("tiered linking: both vocabulary tiers give identical links") {
+    import spark.implicits._
     val trip = Kg.extractTriplesFused(Corpus.pages(spark, 120, 4))
     val kb = Corpus.kb(spark, 500)
     val surfaces = trip.toDF.select(col("subj_surface").as("surface"))
       .unionByName(trip.toDF.filter(col("obj_is_entity")).select(col("obj").as("surface")))
       .distinct()
-    def sortedL(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("surface", "uri").collect().map(_.toSeq).toSeq
-    val lB = Pipeline.linkSurfaces(surfaces, kb)
-    val lS = Pipeline.linkSurfaces(surfaces, kb, useBroadcast = false)
-    assert(sortedL(lB) == sortedL(lS))
-    assert(lB.count() > 0)
+    def bothTiers(kb: org.apache.spark.sql.Dataset[KbEntry]) = {
+      def sortedL(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("surface", "uri").collect().map(_.toSeq).toSeq
+      val lB = sortedL(Pipeline.linkSurfaces(surfaces, kb))
+      assert(lB == sortedL(Pipeline.linkSurfaces(surfaces, kb, useBroadcast = false)))
+      lB
+    }
+    val links = bothTiers(kb)
+    assert(links.nonEmpty)
+    // a KB homonym: a second entry with an exactly linked surface's
+    // label, and a label containing that surface which fuzzy scoring
+    // would keep. The frozen kg_links contract: one exact row per
+    // matching KB entry, and no fuzzy row for an exactly linked surface
+    val name = links.collectFirst { case Seq(s: String, _, Linking.exactConfidence) => s }.get
+    val homonym = KbEntry("https://kb.local/e/homonym", name, name.toLowerCase, Seq("Thing"))
+    val near = KbEntry("https://kb.local/e/near", name + "s", name.toLowerCase + "s", Seq("Thing"))
+    assert(graft.kernel.Jaro.jaroWinkler(near.label_lc, name.toLowerCase) >= Linking.fuzzyThreshold)
+    val rows = bothTiers(kb.union(Seq(homonym, near).toDS())).filter(_(0) == name)
+    assert(rows.size == 2 && rows.forall(_(2) == Linking.exactConfidence) &&
+      rows.exists(_(1) == homonym.uri), rows.toString)
   }
 
   test("jwSimilarityJoin plans a hash join on the length bucket, never a cartesian") {
