@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.IntegerType
   * The graph build's size tier, decided once per build from the
   * vocabulary count (`Pipeline.surfaceIriReleasable`) and applied by
   * `tierJoin` to every join whose small side is vocabulary-sized (the
-  * fuzzy block join, both join-back sides):
+  * KB block join, both join-back sides):
   *  - broadcast tier (vocabulary ≤ `Pipeline.defaultBroadcastVocabLimit`
   *    rows): the vocabulary-sized side is broadcast and the big side
   *    (the KB, the triples) streams past it, unshuffled;
@@ -43,8 +43,8 @@ object Linking {
   /** Salt count of the shuffle tier's salted joins (`saltedJoin`). */
   val salts = 16
 
-  /** KB side of the fuzzy blocked join: one row per DISTINCT token of
-    * each label (block = token). Joined against the miss side's FIRST
+  /** KB side of the blocked link join: one row per DISTINCT token of
+    * each label (block = token). Joined against the surface side's FIRST
     * surface token, this admits every containing label that shares a
     * whole token with the surface — the scalable re-expression of the
     * reference's CONTAINS(LCASE(label), LCASE(name)) candidate query

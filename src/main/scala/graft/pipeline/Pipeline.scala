@@ -28,11 +28,11 @@ import scala.jdk.CollectionConverters._
   * `Linking.tierJoin` (the `Linking` header describes both tiers).
   * Shuffles of the broadcast-tier build: the big-table rollup
   * exchange, whose map stage runs once — the vocabulary is counted and
-  * collected from its output; the fuzzy top-1 window's exchange over
-  * the scored candidates (the KB is scanned, never shuffled); the node
-  * reduce on iri. Edges are a projection of the already-deduped
-  * triples, so the triples are scanned twice (rollup, edges) on both
-  * tiers. Zero shuffle of raw text.
+  * collected from its output; the top-1 window's exchange over the
+  * scored candidates of the one KB block join (the KB is scanned once,
+  * never shuffled); the node reduce on iri. Edges are a projection of
+  * the already-deduped triples, so the triples are scanned twice
+  * (rollup, edges) on both tiers. Zero shuffle of raw text.
   */
 object Pipeline {
 
@@ -49,10 +49,10 @@ object Pipeline {
     * one surface); a surface with no exact row gets at most one fuzzy
     * row, the top-1 by (confidence desc, uri asc).
     *
-    * Fuzzy candidates replicate the reference's substring pre-filter
+    * Candidates replicate the reference's substring pre-filter
     * (entity_linker.rs:296-312: CONTAINS(LCASE(label), LCASE(name)))
     * made joinable at scale: the KB side is exploded by its DISTINCT
-    * label tokens, the miss side blocks on its FIRST token, and the
+    * label tokens, the surface side blocks on its FIRST token, and the
     * exact `contains` predicate runs after the equi-join — so a surface
     * sharing ANY whole token with a containing label is a candidate
     * ("garcía" ↦ "josé garcía", which first-token blocking missed —
@@ -64,54 +64,40 @@ object Pipeline {
     * surfaces also fail JW ≥ 0.8 against much-longer labels in all but
     * adversarial cases.
     *
-    * TIERED on the graph build's vocabulary tier (`useBroadcast`, see
-    * the `Linking` header), so no KB count is ever run. The KB is the
-    * big side of every join:
-    *  - exact = KB ⋈ surfaces, with the surfaces broadcast on the
-    *    broadcast tier; on the shuffle tier it is a plain shuffle join
-    *    (labels and surfaces are both near-distinct keys — no skew);
-    *  - fuzzy = token-blocked KB ⋈ misses through `Linking.tierJoin`,
-    *    the KB salted by `hash(label_lc)` on the shuffle tier;
-    *  - misses stay per tier. The broadcast tier takes them as surfaces
-    *    ▷ broadcast(exact hits' surfaces), so nothing KB-sized is ever
-    *    hashed or held in memory (PlanSpec gates every broadcast at ≤
-    *    the surface count). The shuffle tier takes them as surfaces ▷
-    *    KB labels: an anti-join on the exact hits would run the exact
-    *    join a second time, and column pruning gives that run's KB
-    *    exchange other columns than the exact side's, so Spark does not
-    *    reuse it and the plan gains two exchanges (PlanSpec counts the
-    *    KB scans and KB-fed exchanges per tier).
-    * Both tiers are result-identical (PlanSpec). A small KB linked
-    * against a vocabulary above the limit takes the shuffle tier,
-    * though broadcasting the KB would fit: no caller has that shape, so
-    * no selector is kept for it. */
+    * The reference's exact lookup needs no join of its own: a label
+    * equal to the surface splits the same way, so the surface's first
+    * token is one of the label's distinct tokens and each exact pair
+    * meets exactly once in its block and passes `contains`. So ONE
+    * join, `Linking.tierJoin` on the graph build's vocabulary tier
+    * (`useBroadcast`, see the `Linking` header; the KB is the big side,
+    * salted by `hash(label_lc)` on the shuffle tier), feeds one top-1
+    * window per surface ordered by (exact desc, confidence desc, then,
+    * for fuzzy rows only, uri and the KB row's id). Every exact row of
+    * a surface ties at rank 1; a fuzzy row wins alone, even when the KB
+    * lists its (uri, label) twice. The KB is scanned once and no KB
+    * count is ever run; both tiers are result-identical (PlanSpec). A
+    * small KB linked against a vocabulary above the limit takes the
+    * shuffle tier, though broadcasting the KB would fit: no caller has
+    * that shape, so no selector is kept for it. */
   def linkSurfaces(surfaces: DataFrame, kb: Dataset[KbEntry],
       useBroadcast: Boolean = true): DataFrame = {
     // Spark's `lower`, without its first-use ICU table build (see LowerExpression)
     val s = surfaces.withColumn("surface_lc", graft.functions.LowerExpression.lower(col("surface")))
-    val kbDf = kb.toDF
-    val exact = kbDf.join(if (useBroadcast) broadcast(s) else s, col("label_lc") === col("surface_lc"))
-      .select(col("surface"), col("uri"), lit(Linking.exactConfidence).as("confidence"))
-    val misses =
-      if (useBroadcast) s.join(broadcast(exact.select(col("surface"))), Seq("surface"), "left_anti")
-      else s.join(kbDf.select(col("label_lc")), col("surface_lc") === col("label_lc"), "left_anti")
-    val fuzzyCands = Linking.tierJoin(useBroadcast, Linking.kbTokenBlocked(kbDf), hash(col("label_lc")),
-      misses.withColumn("block", split(col("surface_lc"), " ").getItem(0)), Seq("block"))
-    // only the fuzzy side needs the top-1 window: exact rows are the
-    // contract above, one per matching KB entry
+      .withColumn("block", split(col("surface_lc"), " ").getItem(0))
+    val kbRows = Linking.kbTokenBlocked(kb.toDF.withColumn("kb_row", monotonically_increasing_id()))
+    val exact = col("label_lc") === col("surface_lc")
+    def fuzzyOnly(c: String) = when(!exact, col(c))
     val w = Window.partitionBy(col("surface"))
-      .orderBy(col("confidence").desc, col("uri").asc)
-    val fuzzy = fuzzyCands
+      .orderBy(exact.desc, col("confidence").desc, fuzzyOnly("uri").asc, fuzzyOnly("kb_row").asc)
+    Linking.tierJoin(useBroadcast, kbRows, hash(col("label_lc")), s, Seq("block"))
       .filter(col("label_lc").contains(col("surface_lc"))) // reference CONTAINS pre-filter
-      .withColumn("confidence", jw(col("label_lc"), col("surface_lc")))
+      .withColumn("confidence",
+        when(exact, lit(Linking.exactConfidence)).otherwise(jw(col("label_lc"), col("surface_lc"))))
       .filter(col("confidence") >= Linking.fuzzyThreshold &&
         col("confidence") >= Linking.confidenceThreshold)
-      .select(col("surface"), col("uri"), col("confidence"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-    exact.unionByName(fuzzy)
-      .withColumnRenamed("confidence", "link_confidence")
+      .withColumn("rk", rank().over(w))
+      .filter(col("rk") === 1)
+      .select(col("surface"), col("uri"), col("confidence").as("link_confidence"))
   }
 
   /** Vocabulary row count up to which the graph build holds the
@@ -150,8 +136,8 @@ object Pipeline {
     * described in the `Linking` header); the join-back's two
     * `Linking.tierJoin`s salt the triples by url on the shuffle tier.
     * Jobs of the broadcast tier: the rollup's map stage, one count and
-    * one collect over its output, the link jobs (the exact hits and
-    * fuzzy misses broadcasts, the top-1 window's exchange) and the
+    * one collect over its output, the link job (the top-1 window's
+    * exchange; the surfaces it broadcasts are a local table) and the
     * collect of the minted table; then the node reduce's exchange and
     * one broadcast per join-back side.
     * Edges stay a projection — upstream dedup on (url, subj, pred, obj)
@@ -319,6 +305,15 @@ object Pipeline {
       .select(col("iri"), col("n.entity_type").as("entity_type"),
         col("n.name").as("name"), col("n.slug").as("slug"))
 
+  /** The narrow projection of TripleRow that document assembly reads —
+    * shuffling the full row would drag source_text (the whole source
+    * sentence, the widest column) and the span/confidence provenance
+    * through the url exchange for nothing (guide §2.3: project before
+    * the exchange). */
+  final case class JsonLdIn(url: String, subj: String, pred: String,
+      obj: String, obj_is_entity: Boolean, subj_surface: String,
+      subj_type: String, obj_type: String, chunk_id: Int, sent_idx: Int)
+
   /** JSON-LD document emission (the reference's NATIVE output format:
     * RdfDocument @context/@graph, types.rs:170-196) — one JSON document
     * per url, entities in first-appearance order, each with @type/name
@@ -330,15 +325,6 @@ object Pipeline {
     * Shape: one groupByKey shuffle on url (the document key), then pure
     * per-group string assembly — O(doc) memory per group, no driver
     * collection. */
-  /** The narrow projection of TripleRow that document assembly reads —
-    * shuffling the full row would drag source_text (the whole source
-    * sentence, the widest column) and the span/confidence provenance
-    * through the url exchange for nothing (guide §2.3: project before
-    * the exchange). */
-  final case class JsonLdIn(url: String, subj: String, pred: String,
-      obj: String, obj_is_entity: Boolean, subj_surface: String,
-      subj_type: String, obj_type: String, chunk_id: Int, sent_idx: Int)
-
   def jsonLdDocuments(trip: Dataset[TripleRow]): DataFrame = {
     val spark = trip.sparkSession
     import spark.implicits._

@@ -159,17 +159,17 @@ class CheckpointedSpec extends SparkTestBase {
   // the triples and edges writes each add one map-stage job under AQE:
   // the exchange that lays their rows out by bucket; the broadcast-tier
   // graph build fills and counts no cache
-  test("a cold runAll runs 15 Spark jobs") {
+  test("a cold runAll runs 14 Spark jobs") {
     val pages = Corpus.pages(spark, 200, 4)
     val kb = Corpus.kb(spark, 300)
     val n = jobsDuring(Checkpointed.runAll(pages, kb, freshDir(), nBuckets = 8, runId = 1))
-    assert(n == 15)
+    assert(n == 14)
   }
 
-  test("an append-only resume runs 16 Spark jobs") {
+  test("an append-only resume runs 15 Spark jobs") {
     val dir = resumable()
     val n = jobsDuring(Checkpointed.runAll(killPages, killKb, dir.toString, nBuckets = 8, runId = 2))
-    assert(n == 16)
+    assert(n == 15)
   }
 
   /** The part files in each `pk=` directory of `dir/table`. */

@@ -125,6 +125,57 @@ class PipelineSpec extends SparkTestBase {
       Seq(("Alan Bean", "https://kb.local/e/bean", Linking.exactConfidence)), rows.toString)
   }
 
+  test("linkSurfaces equals a plain-Scala reference of the link contract on both tiers") {
+    import org.scalacheck.{Gen, Prop}
+    import spark.implicits._
+    // a small alphabet, so labels contain surfaces, share tokens and
+    // tie; an empty token makes leading, trailing and double spaces
+    val tok = Gen.oneOf("a", "b", "ab", "ba", "aab", "")
+    def text(maxToks: Int) = Gen.choose(1, maxToks).flatMap(Gen.listOfN(_, tok)).map(_.mkString(" "))
+    val surface = text(3).flatMap(t => Gen.listOfN(t.length, Gen.oneOf(true, false))
+      .map(up => t.zip(up).map { case (c, u) => if (u) c.toUpper else c }.mkString))
+    // few uris: homonyms (one label, several uris) and aliases (one uri,
+    // several labels, some listed twice) are common
+    def entry(label: Gen[String]) = for (u <- Gen.choose(0, 5); l <- label)
+      yield KbEntry(s"https://kb.local/e/u$u", l.toUpperCase, l, Seq("Thing"))
+    val world = for {
+      ss <- Gen.choose(1, 12).flatMap(Gen.listOfN(_, surface))
+      // a surface, or a surface and a suffix, as a label: exact links,
+      // and fuzzy candidates that outscore the exact confidence
+      grown = for (s <- Gen.oneOf(ss); t <- Gen.oneOf("", " ", "b", " a", " ab"))
+        yield s.toLowerCase(java.util.Locale.ROOT) + t
+      kb <- Gen.choose(1, 16).flatMap(Gen.listOfN(_, Gen.frequency(2 -> entry(text(4)), 1 -> entry(grown))))
+    } yield (ss.distinct, kb)
+    // the contract: one exact row per KB entry whose label equals the
+    // lower-cased surface (so a KB listing it twice gives two), else the
+    // top-1 by (JW desc, uri asc) among labels that contain the surface
+    // and hold its first token as a whole token (Spark's `split` keeps
+    // trailing empty tokens, as `split(" ", -1)` does)
+    def reference(ss: Seq[String], kb: Seq[KbEntry]): Seq[(String, String, Double)] =
+      ss.flatMap { s =>
+        val lc = s.toLowerCase(java.util.Locale.ROOT)
+        val exact = kb.filter(_.label_lc == lc)
+        if (exact.nonEmpty) exact.map(e => (s, e.uri, Linking.exactConfidence))
+        else kb.filter(e => e.label_lc.contains(lc) &&
+            e.label_lc.split(" ", -1).contains(lc.split(" ", -1)(0)))
+          .map(e => (s, e.uri, graft.kernel.Jaro.jaroWinkler(e.label_lc, lc)))
+          .filter(c => c._3 >= Linking.fuzzyThreshold && c._3 >= Linking.confidenceThreshold)
+          .sortBy(c => (-c._3, c._2)).take(1)
+      }
+    def counts[T](xs: Seq[T]) = xs.groupBy(identity).view.mapValues(_.size).toMap
+    val prop = Prop.forAllNoShrink(world) { case (ss, kb) =>
+      val want = counts(reference(ss, kb))
+      Seq(true, false).forall { useBroadcast =>
+        val got = Pipeline.linkSurfaces(ss.toDF("surface"), kb.toDS(), useBroadcast).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
+        counts(got) == want
+      }
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(40), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   test("stage-0 engine switch: none/coref/coreference all run; coref recovers the It-facts") {
     import spark.implicits._
     val chunks = Kg.chunk(Kg.extractText(Corpus.pages(spark, 100, 4)))

@@ -211,7 +211,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("linkSurfaces scans the KB twice on the broadcast tier, three times on the shuffle tier") {
+  test("linkSurfaces scans the KB once on both tiers") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val dir = tempDir("graft_plan")
@@ -224,7 +224,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // every exchange below is one of linkSurfaces' own
     val surfaces = corpusSurfaces(100).as[String].collect().toSeq.toDF("surface")
     // (tier, KB scans, exchanges with a KB scan below them)
-    for ((useBroadcast, scans, kbExchanges) <- Seq((true, 2, 1), (false, 3, 5))) withoutAutoBroadcast {
+    for ((useBroadcast, scans, kbExchanges) <- Seq((true, 1, 1), (false, 1, 2))) withoutAutoBroadcast {
       val df = Pipeline.linkSurfaces(surfaces, kb, useBroadcast)
       val exchanges = collect(df.queryExecution.executedPlan) { // the plan before AQE re-plans it
         case e: ShuffleExchangeExec if e.exists(_.isInstanceOf[FileSourceScanExec]) => e
@@ -234,7 +234,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         s"useBroadcast $useBroadcast: $scanned rows read of a $nKb-row KB, expected $scans scans")
       assert(exchanges == kbExchanges,
         s"useBroadcast $useBroadcast: $exchanges KB-fed exchanges, expected $kbExchanges " +
-          "(the shuffle tier's misses anti-join the KB's labels, see linkSurfaces)")
+          "(the window's exchange, and on the shuffle tier the salted join's KB side)")
     }
   }
 
@@ -413,12 +413,12 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(!plan.contains("BroadcastExchange"),
         "the shuffle tier must not broadcast:\n" + plan.take(1500))
       assert(!plan.contains("CartesianProduct"))
-      // the fuzzy blocked join must carry the salt key and the replicated
-      // (exploded) miss side. (The pmod(hash) salt itself gets
+      // the blocked link join must carry the salt key and the replicated
+      // (exploded) surface side. (The pmod(hash) salt itself gets
       // constant-folded into the LocalTableScan at this KB size — the
       // tiny test KB is a LocalRelation — so gate on the join keys.)
-      assert(plan.contains("salt#"), "salt key missing from the fuzzy join:\n" + plan.take(1500))
-      assert(plan.contains("explode"), "miss side should replicate across salts")
+      assert(plan.contains("salt#"), "salt key missing from the block join:\n" + plan.take(1500))
+      assert(plan.contains("explode"), "surface side should replicate across salts")
     }
   }
 
@@ -426,8 +426,10 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     import spark.implicits._
     val trip = Kg.extractTriplesFused(Corpus.pages(spark, 120, 4))
     val kb = Corpus.kb(spark, 500)
+    val fuzzyOnly = "Quorz" // links only to the `twice` entries below
     val surfaces = trip.toDF.select(col("subj_surface").as("surface"))
       .unionByName(trip.toDF.filter(col("obj_is_entity")).select(col("obj").as("surface")))
+      .unionByName(Seq(fuzzyOnly).toDF("surface"))
       .distinct()
     def bothTiers(kb: org.apache.spark.sql.Dataset[KbEntry]) = {
       def sortedL(df: org.apache.spark.sql.DataFrame) =
@@ -437,7 +439,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       lB
     }
     val links = bothTiers(kb)
-    assert(links.nonEmpty)
+    assert(links.nonEmpty && !links.exists(_(0) == fuzzyOnly))
     // a KB homonym: a second entry with an exactly linked surface's
     // label, and a label containing that surface which fuzzy scoring
     // would keep. The frozen kg_links contract: one exact row per
@@ -446,9 +448,15 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val homonym = KbEntry("https://kb.local/e/homonym", name, name.toLowerCase, Seq("Thing"))
     val near = KbEntry("https://kb.local/e/near", name + "s", name.toLowerCase + "s", Seq("Thing"))
     assert(graft.kernel.Jaro.jaroWinkler(near.label_lc, name.toLowerCase) >= Linking.fuzzyThreshold)
-    val rows = bothTiers(kb.union(Seq(homonym, near).toDS())).filter(_(0) == name)
+    // and the fuzzy winner's (uri, label) listed twice: still one row
+    val twice = KbEntry("https://kb.local/e/quorz", "Quorz Q", "quorz q", Seq("Thing"))
+    val withKb = bothTiers(kb.union(Seq(homonym, near, twice, twice).toDS()))
+    val rows = withKb.filter(_(0) == name)
     assert(rows.size == 2 && rows.forall(_(2) == Linking.exactConfidence) &&
       rows.exists(_(1) == homonym.uri), rows.toString)
+    val fuzzy = withKb.filter(_(0) == fuzzyOnly)
+    assert(fuzzy.map(_(1)) == Seq(twice.uri) &&
+      fuzzy.head(2) == graft.kernel.Jaro.jaroWinkler(twice.label_lc, "quorz"), fuzzy.toString)
   }
 
   test("jwSimilarityJoin plans a hash join on the length bucket, never a cartesian") {
